@@ -594,10 +594,10 @@ def q_embed_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster canonicalization: connected components over the
-    MinHash-LSH near-dup pair graph (min-label propagation, one shuffle per
-    round, isEmpty-scalar convergence) → (doc_id, cluster_id = min id in
-    component). The oracle computes the same components from the exact
-    brute-force pair set with a recursive CTE."""
+    MinHash-LSH near-dup pair graph (``graph.connected_components``: one
+    count, then an exact driver solve at this size) → (doc_id, cluster_id
+    = min id in component). The oracle computes the same components from
+    the exact brute-force pair set with a recursive CTE."""
     from nettopologysuite_spark.engine.dedup import dup_clusters, minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -773,9 +773,10 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_raster_polygonize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster → vector polygonize (gdal_polygonize / ST_DumpAsPolygons
     analog): equal-value 4-connected pixel regions become polygons via
-    star-CC labels + two-level coverage union. geom_area re-measures the
-    ASSEMBLED polygon with the shoelace kernel — the oracle's closed-form
-    region area must survive the whole geometry pipeline."""
+    connected-components labels + a fan-in-bounded coverage-union tree.
+    geom_area re-measures the ASSEMBLED polygon with the shoelace kernel —
+    the oracle's closed-form region area must survive the whole geometry
+    pipeline."""
     from nettopologysuite_spark.engine.zonal import (
         raster_polygonize,
         synthetic_striped_raster,
@@ -942,7 +943,7 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cluster_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PostGIS ST_ClusterWithin analog: transitive closure of the
     within-0.5 relation over the event points (DBSCAN without the density
-    gate) — eps-grid candidates + hierarchical star CC."""
+    gate) — eps-grid candidates + ``graph.connected_components``."""
     from nettopologysuite_spark.engine.cluster import cluster_within
 
     pts = _event_points(spark, sf_dir)

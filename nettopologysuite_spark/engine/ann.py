@@ -306,23 +306,6 @@ def _cent_hash(id_col: str) -> str:
     lcg = f"(({id_col} * {_LCG}) % 4294967296)"
     return f"(CAST({lcg} AS BIGINT) ^ CAST(shiftright({lcg}, 16) AS BIGINT))"
 
-_QDOT = ("aggregate(zip_with({a}, {b}, (x, y) -> "
-         "floor(CAST(x AS DOUBLE) * 1024D) * floor(CAST(y AS DOUBLE) * 1024D)), "
-         "0D, (a, v) -> a + v)")
-_QNORM = ("sqrt(aggregate(transform({a}, x -> floor(CAST(x AS DOUBLE) * 1024D)), "
-          "0D, (a, v) -> a + v * v))")
-
-
-def _sim_expr(a: str, b: str) -> str:
-    """Exact quantized cosine with a -2 sentinel for zero/NULL norms (same
-    tree as the SQL oracle — NaN never reaches a sort, whose NaN placement
-    differs between engines)."""
-    dot = _QDOT.format(a=a, b=b)
-    na = _QNORM.format(a=a)
-    nb = _QNORM.format(a=b)
-    return (f"(CASE WHEN coalesce({na}, 0D) = 0D OR coalesce({nb}, 0D) = 0D "
-            f"THEN -2D ELSE ({dot}) / ({na} * {nb}) END)")
-
 
 def ivf_topk(emb: DataFrame, n_queries: int, k: int,
              nprobe: int = IVF_NPROBE,

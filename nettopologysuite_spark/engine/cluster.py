@@ -17,10 +17,11 @@ Distributed shape (every stage native Spark, zero Python):
    its own cell — each ordered pair appears exactly once, the exact
    ``dist² ≤ eps²`` refine stays in whole-stage codegen.
 3. Degrees / core flags: one groupBy count over the pairs.
-4. Cluster labels: connected components over core–core edges via the
-   alternating large-star/small-star dataflow (O(log n) rounds on any
-   graph shape — a giant percolation cluster at high density cannot make
-   the round count explode). Label = min core id in the component.
+4. Cluster labels: ``graph.connected_components`` over the core–core
+   edges (an exact driver solve when they fit, contraction levels and
+   star rounds above that — a giant percolation cluster at high density
+   cannot make the round count explode). Label = min core id in the
+   component.
 5. Border assignment: min neighbor-core label per non-core point — one
    join + groupBy min.
 
@@ -35,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _cc_star
+from .graph import connected_components
 
 
 def kmeans(points: DataFrame, k: int, max_iters: int = 10,
@@ -79,9 +80,15 @@ def kmeans(points: DataFrame, k: int, max_iters: int = 10,
         # iteration wall). `D` suffix keeps every centre literal a DOUBLE
         # (a bare decimal literal would parse as DECIMAL); repr() round-
         # trips the exact IEEE value, so the arithmetic is bit-identical.
+        # A non-finite centre (NaN input coordinates reach it through avg)
+        # has no such literal and goes through a string cast instead.
+        def lit(v):
+            return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+
         def d2(cx_, cy_):
-            return (f"((_x - {cx_!r}D) * (_x - {cx_!r}D) "
-                    f"+ (_y - {cy_!r}D) * (_y - {cy_!r}D))")
+            cx_, cy_ = lit(cx_), lit(cy_)
+            return (f"((_x - {cx_}) * (_x - {cx_}) "
+                    f"+ (_y - {cy_}) * (_y - {cy_}))")
 
         best_d = d2(*cs[0])
         cur = "0"
@@ -170,20 +177,14 @@ def cluster_within(points: DataFrame, eps: float, id_col: str = "pid",
     within-``eps`` relation — every point gets (id, cluster_id) with
     cluster_id = min id in its component (singletons label themselves).
     DBSCAN without the density gate: same eps-grid candidate join, then
-    hierarchical star CC (precontraction + driver union-find terminal
-    solve) over ALL within-eps pairs.
+    ``connected_components`` over ALL within-eps pairs.
     """
     # half-neighborhood candidates: each unordered pair materializes ONCE
-    # (half the join volume), then both orientations derive from the
-    # checkpointed narrow pair table — no distinct needed anywhere (the
-    # former union+distinct re-symmetrization was a pure extra shuffle)
+    # (half the join volume) into the cheap-to-re-read table the CC reads
     half = _eps_pairs_half(points, eps, id_col, x, y).filter(
         F.col("a") != F.col("b")
     ).localCheckpoint(eager=True)
-    sym = half.union(
-        half.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    lab = _cc_star(sym, precontract=2, materialized=True)
+    lab = connected_components(half)
     return (
         points.select(F.col(id_col).alias("_id"))
         .join(lab.withColumnRenamed("node", "_id"), "_id", "left")
@@ -214,17 +215,15 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     deg = pairs.groupBy("a").agg(F.count(F.lit(1)).alias("_deg"))
     core = deg.filter(F.col("_deg") >= min_pts).select("a").persist()
 
+    # each core-core pair once: it derives from the CACHED half-pair table
+    # through two cheap semi-joins, so the CC re-reads the cache instead of
+    # paying an eager checkpoint write of the (quadratic) core-edge set
     core_edges = (
-        pairs.join(core, "a", "left_semi")
+        half.join(core, "a", "left_semi")
         .join(core.select(F.col("a").alias("b")), "b", "left_semi")
         .filter(F.col("a") != F.col("b"))
-        .select("a", "b")
     )
-    # materialized=True: core_edges derives from the CACHED half-pair table
-    # through two cheap semi-joins, so the precontract passes re-read the
-    # cache instead of paying an eager checkpoint write of the (quadratic)
-    # core-edge set — at 10x scale the checkpoint write was the regression
-    cc = _cc_star(core_edges, precontract=2, materialized=True).select(
+    cc = connected_components(core_edges).select(
         F.col("node").alias("a"), F.col("label").alias("_cl")
     )
     # singleton cores (no core neighbor) label themselves

@@ -20,6 +20,8 @@ import logging
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .graph import connected_components
+
 log = logging.getLogger(__name__)
 
 #: metrics of the last `minhash_lsh_pairs` run (populated post-materialize):
@@ -86,6 +88,9 @@ def word_bigrams(docs: DataFrame, text_col: str = "text",
             F.col(id_col).alias("_id"),
             F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"),
         )
+        # NULL text has no grams (the index sequence below would still
+        # yield one NULL gram for it)
+        .where(F.col("_ws").isNotNull())
         .select(
             "_id", "_ws",
             F.explode(
@@ -481,275 +486,16 @@ def simhash_fingerprints(docs: DataFrame, n: int = 3, bits: int = 60,
     return votes.select(F.col("_id").alias(id_col), fp.alias("simhash"))
 
 
-def _cc_precontract(edges: DataFrame, rounds: int = 2):
-    """Local min-label contraction before the star loop: ``rounds`` passes
-    of l(u) ← min(l(u), min over neighbors l(v)) collapse every dense
-    local neighborhood to its minimum, then edges contract to the label
-    quotient graph. Exact (labels stay inside their component), and the
-    contraction typically shrinks a high-density graph by orders of
-    magnitude before the O(log n) star rounds pay their per-round fixed
-    cost — the standard two-phase trick of large-scale CC systems.
-
-    Returns (node_map, contracted_edges): node_map (node, l) with l the
-    node's post-propagation label; contracted edges (a, b) distinct,
-    self-loop-free, symmetric-in, on label ids.
-    """
-    # input contract (see _cc_star): edges arrive symmetric, so the former
-    # internal union-with-swap doubled every groupBy/join input for nothing
-    sym = edges
-    lab = sym.groupBy("a").agg(F.min("b").alias("_mn")).select(
-        "a", F.least(F.col("a"), F.col("_mn")).alias("l")
-    ).localCheckpoint(eager=True)
-    for _ in range(rounds - 1):
-        nbr_min = (
-            sym.join(lab.select(F.col("a").alias("b"), F.col("l").alias("_nl")),
-                     "b")
-            .groupBy("a").agg(F.min("_nl").alias("_nm"))
-        )
-        lab = (
-            lab.join(nbr_min, "a", "left")
-            .select("a", F.least(
-                F.col("l"), F.coalesce(F.col("_nm"), F.col("l"))).alias("l"))
-            .localCheckpoint(eager=True)
-        )
-    la = lab.select(F.col("a"), F.col("l").alias("_la"))
-    lb = lab.select(F.col("a").alias("b"), F.col("l").alias("_lb"))
-    contracted = (
-        edges.join(la, "a").join(lb, "b")
-        .select(F.col("_la").alias("a"), F.col("_lb").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    return lab.withColumnRenamed("a", "node"), contracted
-
-
-def _cc_local_labels(edge_rows, spark) -> DataFrame:
-    """Exact union-find over a COLLECTED edge list (driver-side numpy) —
-    the terminal solve of hierarchical CC once contraction has shrunk the
-    graph below the driver threshold. Returns (node, label=component min).
-    """
-    import numpy as np
-    import pandas as pd
-
-    a = pd.factorize(pd.Series([r[0] for r in edge_rows]
-                               + [r[1] for r in edge_rows]))
-    codes, uniques = a
-    m = len(edge_rows)
-    ua, ub = codes[:m], codes[m:]
-    parent = np.arange(len(uniques), dtype=np.int64)
-
-    def find(i):
-        root = i
-        while parent[root] != root:
-            root = parent[root]
-        while parent[i] != root:
-            parent[i], i = root, parent[i]
-        return root
-
-    for i in range(m):
-        ra, rb = find(ua[i]), find(ub[i])
-        if ra != rb:
-            parent[rb] = ra
-    roots = np.array([find(i) for i in range(len(uniques))])
-    lab = pd.Series(uniques).groupby(roots).transform("min")
-    return spark.createDataFrame(
-        pd.DataFrame({"node": uniques, "label": lab})
-    )
-
-
-def _cc_star(edges: DataFrame, max_iters: int = 40,
-             precontract: int = 0, local_threshold: int = 200_000,
-             materialized: bool = False) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds
-    (the MapReduce CC dataflow of Kiveris et al., "Connected Components in
-    MapReduce and Beyond") — O(log n) rounds on ANY graph shape, including
-    the long-path components min-label propagation needs O(diameter) for.
-
-    Per round over the symmetrized adjacency: m(u) = min(Γ(u) ∪ {u});
-    large-star rewires every GREATER neighbour v > u to m(u); small-star
-    rewires every v ≤ u (and u itself) to m(u). Each half-round is one
-    groupBy-min + one equi-join — two shuffles, no driver-side data.
-    Converged when a full cycle leaves the edge set unchanged (exact
-    except/isEmpty check, same per-round scalar cost as the label variant).
-
-    ``edges``: symmetric, distinct, self-loop-free (a, b) pairs.
-    Returns (node, label) with label = component minimum.
-
-    ``precontract`` > 0 runs that many min-label propagation rounds first
-    and RECURSIVELY stars the contracted label-quotient graph (see
-    :func:`_cc_precontract`): contraction repeats while the edge set keeps
-    shrinking geometrically (< 0.7×), so a dense percolation graph
-    collapses 660k → 29k → …  edges before the star loop pays its
-    per-cycle fixed costs on what remains. Same output (property-tested);
-    measured 16.1 → 10.2 s (one contraction) → 5.7 s (recursive) on the
-    sf0.1 DBSCAN core graph.
-    """
-    if precontract > 0:
-        # materialize the edge relation ONCE before the contraction passes:
-        # _cc_precontract references it from several independent jobs (label
-        # checkpoint, neighbour-min round, quotient-edge build), and without
-        # this the upstream candidate pipeline (an eps-grid join or a window
-        # adjacency pass) re-executes per reference — measured 6 reads of
-        # the cluster_within eps join at sf0.1 (guide §2.4: do the work
-        # once, reuse the exchange/materialization). ``materialized=True``
-        # promises the caller already checkpointed/persisted the edge
-        # pipeline (cheap re-reads) — skip the double materialization.
-        if not materialized:
-            edges = edges.localCheckpoint(eager=True)
-        node_map, contracted = _cc_precontract(edges, rounds=precontract)
-        contracted = contracted.localCheckpoint(eager=True)
-        n_con = contracted.count()  # materialized by the checkpoint — cheap
-        if n_con == 0:
-            return node_map.select("node", F.col("l").alias("label"))
-        if n_con <= local_threshold:
-            # hierarchical-CC terminal solve: the contracted graph fits the
-            # driver → ONE exact union-find instead of O(log n) more
-            # distributed rounds (each round's fixed latency dwarfs the
-            # compute at this size). At 100 TB contraction levels keep
-            # running until this bound is met — the standard two-phase CC.
-            roots = _cc_local_labels(
-                [(r["a"], r["b"]) for r in contracted.collect()],
-                edges.sparkSession,
-            )
-        else:
-            n_in = edges.count()
-            if n_con < 0.7 * n_in:
-                roots = _cc_star(contracted, max_iters=max_iters,
-                                 precontract=precontract,
-                                 local_threshold=local_threshold)
-            else:  # contraction stalled (already a local-min-free structure)
-                roots = _cc_star(contracted, max_iters=max_iters)
-        return (
-            node_map.join(
-                roots.select(F.col("node").alias("l"), "label"), "l", "left"
-            )
-            .select("node", F.coalesce(F.col("label"), F.col("l")).alias("label"))
-        )
-    E = edges.filter(F.col("a") != F.col("b")).localCheckpoint(eager=True)
-    # derive the node set from the checkpointed edge table (input contract:
-    # symmetric + self-loop-free, so the sets agree) instead of re-running
-    # the caller's edge pipeline a second time
-    all_nodes = E.select(F.col("a").alias("node")).distinct() \
-        .localCheckpoint(eager=True)
-
-    def half_round(cur: DataFrame, large: bool) -> DataFrame:
-        sym = cur.union(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        m = sym.groupBy("a").agg(F.min("b").alias("_mn")) \
-            .select("a", F.least(F.col("a"), F.col("_mn")).alias("_m"))
-        sel = sym.filter(F.col("b") > F.col("a")) if large \
-            else sym.filter(F.col("b") <= F.col("a"))
-        out = sel.join(m, "a").select(F.col("b").alias("a"), F.col("_m").alias("b"))
-        if not large:
-            out = out.union(m.select("a", F.col("_m").alias("b")))
-        return out.filter(F.col("a") != F.col("b")).distinct() \
-            .localCheckpoint(eager=True)  # truncate per-round lineage
-
-    for _ in range(max_iters):
-        new = half_round(half_round(E, large=True), large=False)
-        stable = new.exceptAll(E).isEmpty() and E.exceptAll(new).isEmpty()
-        E = new
-        if stable:
-            break
-    star = E.groupBy("a").agg(F.min("b").alias("label")) \
-        .withColumnRenamed("a", "node")
-    return all_nodes.join(star, "node", "left").select(
-        "node", F.coalesce(F.col("label"), F.col("node")).alias("label")
-    )
-
-
-def dup_clusters(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
-                 max_iters: int = 25, method: str = "auto",
-                 star_after: int = 4) -> DataFrame:
+def dup_clusters(pairs: DataFrame, d1: str = "d1",
+                 d2: str = "d2") -> DataFrame:
     """Connected components over a near-duplicate pair graph →
     (doc_id, cluster_id) with cluster_id = min doc id in the component —
     the canonical-representative step every dedup sweep ends with (keep one
-    doc per cluster, drop the rest).
-
-    Min-label propagation: every node starts as its own label; each round
-    takes the min of its own and its neighbours' labels; convergence in
-    O(component diameter) rounds — near-dup components are overwhelmingly
-    small cliques (diameter ≤ 2), so 2-3 rounds in practice, each ONE
-    shuffle (join + groupBy min). Driver coordination is a single isEmpty
-    scalar per round.
-
-    ``method``: "label" forces propagation, "star" forces the alternating
-    large-star/small-star dataflow (O(log n) rounds regardless of
-    diameter, see :func:`_cc_star`), "auto" (default) starts with
-    propagation and switches to star rounds if ``star_after`` rounds pass
-    without converging — the high-diameter escape hatch a pathological
-    chain-shaped component needs at 100 TB.
+    doc per cluster, drop the rest). Each pair counts once in either
+    orientation; a (d, d) pair keeps doc d as its own cluster. ``pairs``
+    is read more than once, so hand in a cheap-to-re-read frame
+    (``minhash_lsh_pairs`` output already is one).
     """
-    e = pairs.select(F.col(d1).alias("a"), F.col(d2).alias("b"))
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))) \
-        .distinct().persist()
-    if method == "auto" and 0 < edges.count() <= 200_000:
-        # the same hierarchical-CC terminal rule as _cc_star: when the pair
-        # graph already fits the driver threshold, ONE exact union-find
-        # replaces 2-3 distributed label rounds whose per-round fixed
-        # latency dwarfs their compute at this size (near-dup graphs are
-        # tiny relative to the corpus; at 100 TB a larger graph takes the
-        # distributed path below unchanged)
-        rows = [(r["a"], r["b"]) for r in edges.collect()]
-        edges.unpersist()
-        return _cc_local_labels(rows, pairs.sparkSession).select(
-            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-        )
-    if method == "star":
-        out = _cc_star(edges).select(
-            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-        )
-        edges.unpersist()
-        return out
-    labels = (
-        edges.select(F.col("a").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    for _ in range(max_iters):
-        nbr = (
-            edges.join(
-                labels.select(F.col("node").alias("b"), F.col("label").alias("_nl")),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("_nl").alias("_nbl"))
-            .withColumnRenamed("a", "node")
-        )
-        # convergence is observed DURING the checkpoint materialization
-        # (old label carried alongside, sum of changes as an Observation
-        # metric) — no separate change-detection join/job per round
-        obs = Observation()
-        new = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("_nbl"), F.col("label")))
-                .alias("label"),
-                F.col("label").alias("_old"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("label") != F.col("_old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .select("node", "label")
-            .localCheckpoint(eager=True)  # truncate per-round lineage
-        )
-        stable = (obs.get["changed"] or 0) == 0
-        labels = new
-        rounds += 1
-        if stable:
-            break
-        if method == "auto" and rounds >= star_after:
-            # still moving after star_after rounds → a high-diameter
-            # component; the star dataflow finishes in O(log n) rounds
-            out = _cc_star(edges).select(
-                F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-            )
-            edges.unpersist()
-            return out
-    edges.unpersist()
-    return labels.select(F.col("node").alias("doc_id"),
-                         F.col("label").alias("cluster_id"))
+    return connected_components(
+        pairs.select(F.col(d1).alias("a"), F.col(d2).alias("b"))
+    ).select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))

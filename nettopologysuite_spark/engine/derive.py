@@ -134,11 +134,6 @@ def nation_rect_sql_pred(x: str, y: str, nk: str) -> str:
     )
 
 
-def event_rect_dims_sql(pid: str) -> tuple[str, str]:
-    """(w, h) half-extent SQL expressions of the event-derived rectangle."""
-    return f"(1 + {pid} % 3)", f"(1 + {pid} % 2)"
-
-
 def event_rect_dims(pid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     pid = np.asarray(pid, dtype=np.int64)
     return (1 + pid % 3).astype(np.float64), (1 + pid % 2).astype(np.float64)

@@ -28,10 +28,6 @@ def write_bucketed(df: DataFrame, table: str, n_buckets: int,
     )
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def join_bucketed(spark: SparkSession, left_table: str, right_table: str,
                   on: str = "cell_id") -> DataFrame:
     """Equi-join two tables bucketed on the same key with the same bucket

@@ -14,9 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..kernels.cells import Grid, hilbert_encode
+from ..kernels.cells import Grid
 from ..kernels.envelope import envelopes_of_wkb
-from ..kernels.geom import wkb_to_points
 from .derive import morton_sql_expr
 
 
@@ -42,32 +41,6 @@ def morton_col(grid: Grid, x: str = "x", y: str = "y") -> Column:
     ix = f"GREATEST(0, LEAST({n - 1}, CAST(FLOOR(({x} - {grid.minx!r}) / {grid.cell_w!r}) AS BIGINT)))"
     iy = f"GREATEST(0, LEAST({n - 1}, CAST(FLOOR(({y} - {grid.miny!r}) / {grid.cell_h!r}) AS BIGINT)))"
     return F.expr(morton_sql_expr(ix, iy, grid.level))
-
-
-def hilbert_udf(grid: Grid):
-    """Hilbert curve position from cell id (pandas UDF; ordering only)."""
-
-    level = grid.level
-    n = grid.n
-
-    @pandas_udf("long")
-    def _hilbert(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy("int64")
-        iy, ix = divmod(c, n)
-        return pd.Series(hilbert_encode(ix, iy, level))
-
-    return _hilbert
-
-
-def cell_of_wkb_udf(grid: Grid):
-    """Cell id of point-WKB geometries (envelope center for non-points)."""
-
-    @pandas_udf("long")
-    def _cell(wkb: pd.Series) -> pd.Series:
-        xy, _ = wkb_to_points(wkb.to_list())
-        return pd.Series(grid.cell_ids(xy[:, 0], xy[:, 1]))
-
-    return _cell
 
 
 def envelope_struct_udf():

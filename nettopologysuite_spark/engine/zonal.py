@@ -74,11 +74,11 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
     → (region_id, value, n_pixels, area, geom_wkb) with region_id = min
     pixel id (iy·n + ix) in the region.
 
-    Scale shape: adjacency edges from two lead()-window passes; region
-    labels via the star connected-components dataflow with local
-    precontraction (``dedup._cc_star``); geometry via a BOUNDED-FAN-IN
-    coverage-union tree — pixel squares union per (region,
-    2^tile_shift-square tile) first, then tile partials merge in rounds of
+    Scale shape: adjacency edges from two lead()-window passes,
+    checkpointed once; region labels via ``graph.connected_components``
+    over them; geometry via a BOUNDED-FAN-IN coverage-union tree — pixel
+    squares union per (region, 2^tile_shift-square tile; ``n`` need not be
+    a multiple of the tile size) first, then tile partials merge in rounds of
     ``fanin`` (tile id integer-divides by ``fanin`` per round) until one
     task per region unions at most ``fanin`` partials. ``coverage_union``
     removes only duplicated edges and never merges collinear segments, so
@@ -94,7 +94,7 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
 
     from ..kernels.coverage import coverage_union
     from ..kernels.geom import Geom, POLYGON, wkb_dumps, wkb_loads
-    from .dedup import _cc_star
+    from .graph import connected_components
 
     w = extent / n
     base = pixels.select(
@@ -133,17 +133,13 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
                 & (F.col("nv") == F.col("value")))
         .select(F.col("pid").alias("a"), "b")
     )
-    edges = e_right.union(e_up)
-    # right/up edges all have b > a and each appears once, so edges and
-    # their swaps are disjoint and duplicate-free — the symmetrized union
-    # needs no distinct shuffle
-    sym = edges.union(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    # each 4-adjacency appears once (right/up edges have b > a); the CC
+    # re-reads its input, so the window passes run once into a checkpoint
+    edges = e_right.union(e_up).localCheckpoint(eager=True)
     # labels materialize once: both downstream consumers (stats and the
     # tile-union pass) re-read this small table instead of re-joining the
     # CC output pieces per consumer
-    lab = _cc_star(sym, precontract=2).withColumnRenamed("node", "pid") \
+    lab = connected_components(edges).withColumnRenamed("node", "pid") \
         .localCheckpoint(eager=True)
     reg = base.join(lab, "pid", "left").withColumn(
         "region_id", F.coalesce(F.col("label"), F.col("pid"))
@@ -168,9 +164,13 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
             "w": [wkb_dumps(coverage_union(squares))],
         })
 
+    # a partial last tile row/column counts as a tile: the stride must
+    # cover ix >> tile_shift = (n - 1) >> tile_shift, or tile ids collide
+    # across rows and outnumber the static merge-round bound below
+    tiles_per_side = ((n - 1) >> tile_shift) + 1
     tiled = reg.withColumn(
         "tile",
-        (F.shiftright(F.col("iy"), tile_shift) * (n >> tile_shift)
+        (F.shiftright(F.col("iy"), tile_shift) * tiles_per_side
          + F.shiftright(F.col("ix"), tile_shift)),
     )
     part_schema = "region_id long, tile long, value long, n_px long, w binary"
@@ -194,7 +194,7 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
     # merge rounds until any region's partial count fits one task: the
     # worst case is a region covering the whole tile grid, so the round
     # count derives statically from the grid size — no counting jobs
-    groups = (n >> tile_shift) ** 2
+    groups = tiles_per_side ** 2
     while groups > fanin:
         partials = partials.withColumn(
             "tile", F.floor(F.col("tile") / fanin).cast("long")

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .geom import Geom, wkb_loads
+from .geom import wkb_loads
 
 
 def envelopes_of_wkb(blobs) -> np.ndarray:
@@ -71,34 +71,6 @@ def envelopes_of_wkb(blobs) -> np.ndarray:
         g = wkb_loads(bytes(b))
         out[i] = g.envelope()
     return out
-
-
-def envelope_of(g: Geom) -> np.ndarray:
-    return np.asarray(g.envelope(), dtype=np.float64)
-
-
-def env_intersects(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Closed-interval box intersection (Envelope.cs Intersects)."""
-    a = np.atleast_2d(a)
-    b = np.atleast_2d(b)
-    return ~(
-        (b[:, 0] > a[:, 2])
-        | (b[:, 2] < a[:, 0])
-        | (b[:, 1] > a[:, 3])
-        | (b[:, 3] < a[:, 1])
-    )
-
-
-def env_contains(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """a covers b (Envelope.cs Covers)."""
-    a = np.atleast_2d(a)
-    b = np.atleast_2d(b)
-    return (
-        (b[:, 0] >= a[:, 0])
-        & (b[:, 2] <= a[:, 2])
-        & (b[:, 1] >= a[:, 1])
-        & (b[:, 3] <= a[:, 3])
-    )
 
 
 def env_expand(env: np.ndarray, dist: float) -> np.ndarray:

@@ -1162,28 +1162,6 @@ def _touch_points(emap, a, b, polys, line_parts):
     return sorted(set(out))
 
 
-def _rebuilt_areas(raw, inp: _Input, side: int, offset: int) -> list[Geom]:
-    """Reconstruct the pass-through area side from its NODED ring chains —
-    OverlayNG retains the noding vertices in unchanged-area results."""
-    ring_verts: dict[int, list] = {}
-    for u, v, s, kind, ci in raw:
-        if s != side or kind != "ring":
-            continue
-        lst = ring_verts.setdefault(ci, [])
-        if not lst:
-            lst.append(u)
-        lst.append(v)
-    polys: dict[int, dict[int, np.ndarray]] = {}
-    for ci, verts in ring_verts.items():
-        _kind, poly_idx, ring_idx = inp.chain_meta[ci - offset]
-        polys.setdefault(poly_idx, {})[ring_idx] = np.array(verts, dtype=np.float64)
-    out = []
-    for poly_idx in sorted(polys):
-        rings = [polys[poly_idx][ri] for ri in sorted(polys[poly_idx])]
-        out.append(Geom(POLYGON, rings=rings))
-    return out
-
-
 def _lineal_overlay(emap, raw, node_points, a: _Input, b: _Input, op: str):
     """Both sides lineal (or puntal handled separately)."""
     point_parts: list[tuple[float, float]] = []

@@ -181,7 +181,3 @@ class PreparedConvex:
         cross = (x2 - x1) * (py[:, None] - y1) - (y2 - y1) * (px[:, None] - x1)
         return (cross > 0.0).all(axis=1)
 
-
-def locate_point_in_polygon(g: Geom, x: float, y: float) -> int:
-    """Single-shot convenience (SimplePointInAreaLocator.cs analog)."""
-    return int(PreparedPolygon(g).locate(np.array([x]), np.array([y]))[0])

@@ -170,13 +170,6 @@ def _point_on_polyline(x: float, y: float, ln: np.ndarray) -> bool:
     return False
 
 
-def _point_on_polyline_interior(x: float, y: float, ln: np.ndarray) -> bool:
-    """On the line but not at an (odd-degree) endpoint — caller checks that."""
-    if not _point_on_polyline(x, y, ln):
-        return False
-    return not ((x == ln[0, 0] and y == ln[0, 1]) or (x == ln[-1, 0] and y == ln[-1, 1]))
-
-
 # ---------------------------------------------------------------------------
 # noding: split a polyline at intersections with a segment soup
 # ---------------------------------------------------------------------------

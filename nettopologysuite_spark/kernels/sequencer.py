@@ -21,10 +21,6 @@ def _endpoints(c: np.ndarray) -> tuple[tuple, tuple]:
     )
 
 
-def is_sequenceable(lines: list[Geom]) -> bool:
-    return sequence_lines(lines) is not None
-
-
 def sequence_lines(lines: list[Geom]) -> Geom | None:
     """MULTILINESTRING of the sequenced lines (each input line once,
     possibly reversed), or None when no sequence exists."""

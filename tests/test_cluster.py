@@ -1,5 +1,5 @@
-"""DBSCAN correctness vs a brute-force reference implementation, plus the
-precontract CC equivalence."""
+"""DBSCAN, ST_ClusterWithin and k-means correctness: brute-force
+references plus degenerate inputs."""
 
 import sys
 from pathlib import Path
@@ -86,21 +86,48 @@ def test_dbscan_all_native_plan(spark):
     assert got == {1: (1, True), 2: (1, True), 3: (None, False)}
 
 
-def test_cc_star_precontract_equivalence(spark):
-    """precontract must not change the clustering — path graph (worst case
-    for propagation) and a clique-plus-chain mix."""
-    from nettopologysuite_spark.engine.dedup import _cc_star
+def test_dbscan_no_core_points_and_isolated_cores(spark):
+    """No point reaches min_pts → every point is noise (the core-edge set
+    is empty). min_pts=1 → every point is core through its own self-pair,
+    and an isolated core labels itself."""
+    df = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 0.25, 0.0), (3, 9.0, 9.0)],
+        "pid long, x double, y double",
+    )
+    got = {r["pid"]: (r["cluster_id"], r["is_core"])
+           for r in dbscan(df, eps=0.5, min_pts=5).collect()}
+    assert got == {1: (None, False), 2: (None, False), 3: (None, False)}
+    got = {r["pid"]: (r["cluster_id"], r["is_core"])
+           for r in dbscan(df, eps=0.5, min_pts=1).collect()}
+    assert got == {1: (1, True), 2: (1, True), 3: (3, True)}
 
-    n = 500
-    rows = [(f"n-{i:04d}", f"n-{i+1:04d}") for i in range(n - 1)]
-    rows += [("c-1", "c-2"), ("c-2", "c-3"), ("c-1", "c-3")]
-    edges = spark.createDataFrame(rows, "a string, b string")
-    sym = edges.union(edges.selectExpr("b AS a", "a AS b")).distinct()
-    base = {(r["node"], r["label"]) for r in _cc_star(sym).collect()}
-    pc = {(r["node"], r["label"])
-          for r in _cc_star(sym, precontract=2).collect()}
-    assert base == pc
-    assert ("n-0499", "n-0000") in pc and ("c-3", "c-1") in pc
+
+def test_cluster_within_no_pairs(spark):
+    """No two points within eps → the pair graph is empty and every point
+    is its own cluster."""
+    from nettopologysuite_spark.engine.cluster import cluster_within
+
+    df = spark.createDataFrame(
+        [(5, 0.0, 0.0), (2, 3.0, 0.0), (8, 0.0, 3.0)],
+        "pid long, x double, y double",
+    )
+    got = {r["pid"]: r["cluster_id"]
+           for r in cluster_within(df, eps=1.0).collect()}
+    assert got == {5: 5, 2: 2, 8: 8}
+
+
+def test_kmeans_non_finite_centre(spark):
+    """A NaN coordinate poisons its cluster's centre; the next iteration
+    must still build its SQL (a NaN centre once rendered as `nanD`) and
+    return one row per point."""
+    from nettopologysuite_spark.engine.cluster import kmeans
+
+    rows = [(0, float("nan"), 0.0), (1, 10.0, 10.0), (2, 10.5, 10.0),
+            (3, 11.0, 10.0), (4, 30.0, 30.0)]
+    df = spark.createDataFrame(rows, "pid long, x double, y double")
+    got = {r["pid"]: r["cluster_id"] for r in kmeans(df, k=2).collect()}
+    assert set(got) == {0, 1, 2, 3, 4}
+    assert set(got.values()) <= {0, 1}
 
 
 def test_kmeans_properties(spark):

@@ -178,8 +178,8 @@ def test_snapshot_log_commit_travel_and_failed_commit_resume(spark, tmp_path):
 
 
 def test_dup_clusters_chain_and_cliques(spark):
-    """Min-label propagation handles chains (diameter > 1, multiple
-    rounds), cliques, and isolated pairs; labels = min id per component."""
+    """Chains (diameter > 1), cliques, and isolated pairs; labels = min id
+    per component."""
     from nettopologysuite_spark.engine.dedup import dup_clusters
 
     pairs = [
@@ -194,6 +194,35 @@ def test_dup_clusters_chain_and_cliques(spark):
     got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(df).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
                    10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def test_dup_clusters_empty_and_self_pairs(spark):
+    """No pairs → an empty, typed result; a (d, d) pair keeps doc d as its
+    own cluster instead of dropping it."""
+    from nettopologysuite_spark.engine.dedup import dup_clusters
+
+    empty = dup_clusters(spark.createDataFrame([], "d1 long, d2 long"))
+    assert empty.schema.simpleString() == "struct<doc_id:bigint,cluster_id:bigint>"
+    assert empty.collect() == []
+    df = spark.createDataFrame([(7, 7), (3, 1), (1, 3), (9, 9), (9, 4)],
+                               "d1 long, d2 long")
+    got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(df).collect()}
+    assert got == {7: 7, 1: 1, 3: 1, 4: 4, 9: 4}
+
+
+def test_word_bigrams_null_text_has_no_grams(spark):
+    """A NULL-text doc yields no gram rows (not one NULL gram), so it never
+    gets a MinHash signature or LSH candidacy."""
+    from nettopologysuite_spark.engine.dedup import word_bigrams
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, None), (3, "solo")],
+        "doc_id long, text string",
+    )
+    for distinct in (True, False):
+        got = sorted((r["_id"], r["gram"])
+                     for r in word_bigrams(docs, distinct=distinct).collect())
+        assert got == [(1, "alpha beta"), (1, "beta gamma"), (3, "solo")]
 
 
 def test_sample_and_quantiles_semantics(spark):
@@ -303,45 +332,6 @@ def test_minhash_hot_bucket_cap_counts_drops(spark):
     assert dict(dedup.last_lsh_metrics) == m  # None leaves metrics untouched
     # capped output == uncapped minus the mega-clique's pairs
     assert uncapped - capped == {(a, b) for a, _ in mega for b, _ in mega if a < b}
-
-
-def test_cc_star_path_graph_matches_label_propagation(spark):
-    """10k-node PATH graph (diameter 10k): the alternating large-star /
-    small-star dataflow converges within its O(log n) round budget — label
-    propagation would need O(diameter) rounds — and produces the same
-    clustering as the label method does on a graph it CAN finish."""
-    from nettopologysuite_spark.engine.dedup import dup_clusters
-
-    n = 10_000
-    path = [(f"n-{i:05d}", f"n-{i+1:05d}") for i in range(n - 1)]
-    pairs = spark.createDataFrame(path, "d1 string, d2 string")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dup_clusters(pairs, method="star").collect()}
-    assert len(got) == n
-    assert set(got.values()) == {"n-00000"}
-
-    # star == label on a mixed small graph (cliques + a short chain)
-    mixed = [("a1", "a2"), ("a2", "a3"), ("a1", "a3"),
-             ("b1", "b2"), ("c1", "c2"), ("c2", "c3"), ("c3", "c4")]
-    mp = spark.createDataFrame(mixed, "d1 string, d2 string")
-    lab = {(r["doc_id"], r["cluster_id"])
-           for r in dup_clusters(mp, method="label").collect()}
-    star = {(r["doc_id"], r["cluster_id"])
-            for r in dup_clusters(mp, method="star").collect()}
-    assert lab == star and ("c4", "c1") in star
-
-
-def test_dup_clusters_auto_switches_on_high_diameter(spark):
-    """method='auto' on a long chain must yield the exact same clustering
-    (the switch to star rounds is invisible in the output)."""
-    from nettopologysuite_spark.engine.dedup import dup_clusters
-
-    n = 64
-    path = [(f"p-{i:03d}", f"p-{i+1:03d}") for i in range(n - 1)]
-    pairs = spark.createDataFrame(path, "d1 string, d2 string")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dup_clusters(pairs, method="auto", star_after=3).collect()}
-    assert len(got) == n and set(got.values()) == {"p-000"}
 
 
 def test_window_dedup_planted_duplicates(spark):
@@ -538,3 +528,23 @@ def test_raster_polygonize_bounded_fanin_giant_region(spark):
     g = wkb_loads(bytes(r["geom_wkb"]))
     assert abs(karea(g) - n * n * w * w) < 1e-9
     assert abs(r["area"] - n * n * w * w) < 1e-9
+
+
+def test_raster_polygonize_partial_edge_tiles(spark):
+    """n not a multiple of the tile size: the last tile row/column is
+    partial, and a whole-raster region spans 9x9 = 81 tiles — more than
+    fanin=64, so one merge round must run before the final union."""
+    from nettopologysuite_spark.engine.zonal import raster_polygonize
+    from nettopologysuite_spark.kernels.geom import wkb_loads
+    from nettopologysuite_spark.kernels.measures import area as karea
+
+    n = 130
+    w = 100.0 / n
+    px = spark.range(n * n).selectExpr(
+        f"id % {n} AS ix", f"id DIV {n} AS iy", "CAST(3 AS LONG) AS value"
+    )
+    out = raster_polygonize(px, n=n, tile_shift=4, fanin=64).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r["region_id"], r["value"], r["n_pixels"]) == (0, 3, n * n)
+    assert abs(karea(wkb_loads(bytes(r["geom_wkb"]))) - n * n * w * w) < 1e-6
