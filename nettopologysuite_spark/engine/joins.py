@@ -16,7 +16,7 @@ Physical strategy (SURVEY.md §7, BASELINE.json north rule):
 4. Pair dedup: a point lies in exactly one cell, so point joins emit
    uniques by construction. Extended-geometry joins use the reference-cell
    rule (pair reported only in the cell containing the envelope-intersection
-   corner) — ``dedup_ref_cell``.
+   corner) — ``_pair_filter``.
 
 Every step is DataFrame + Arrow; zero per-row Python.
 """
@@ -25,13 +25,19 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..kernels.cells import Grid
 from .polygons import PolygonPack
-from .tiling import with_cell_id
+from .tiling import (
+    cell_col,
+    cell_xy,
+    envelope_struct_udf,
+    explode_cover_native,
+    with_cell_id,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -228,11 +234,8 @@ def pip_join_points_adaptive(
     if not levels:
         empty = points.limit(0).withColumn("poly_id", F.lit(None).cast("string"))
         return empty
-    L, n = grid.level, grid.n
-    ix = F.floor((F.col(x) - F.lit(grid.minx)) / F.lit(grid.cell_w)).cast("long")
-    iy = F.floor((F.col(y) - F.lit(grid.miny)) / F.lit(grid.cell_h)).cast("long")
-    ix = F.greatest(F.lit(0), F.least(F.lit(n - 1), ix))
-    iy = F.greatest(F.lit(0), F.least(F.lit(n - 1), iy))
+    L = grid.level
+    ix, iy = cell_xy(grid, x, y)
     pts = points.withColumn("_ix", ix).withColumn("_iy", iy)
     lvl_cells = F.array(*[
         F.struct(
@@ -411,8 +414,6 @@ def within_distance_join_table(
     a codegen squared-distance comparison. No Python anywhere.
     (IsWithinDistance semantics, Geometry.cs:468.)
     """
-    from .tiling import explode_cover_native
-
     q = queries.select(
         F.col(q_id), F.col(cx), F.col(cy), F.col(radius),
         F.struct(
@@ -441,7 +442,6 @@ def knn_join_table(
     q_id: str = "q_id",
     qx: str = "qx",
     qy: str = "qy",
-    r0: int = 2,
 ) -> DataFrame:
     """kNN join with the query side a DATAFRAME — no collect() of query
     rows, ever; the driver coordinates only round counters (scalars).
@@ -479,20 +479,17 @@ def knn_join_table(
         .repartition(F.col("cell_id"))
         .persist()
     )
-    col_of = F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(
-        (F.col(qx) - F.lit(grid.minx)) / F.lit(grid.cell_w)).cast("long")))
-    row_of = F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(
-        (F.col(qy) - F.lit(grid.miny)) / F.lit(grid.cell_h)).cast("long")))
+    col_of, row_of = cell_xy(grid, qx, qy)
     active = queries.select(
         F.col(q_id), F.col(qx), F.col(qy),
         col_of.alias("_qc"), row_of.alias("_qr"),
     ).localCheckpoint()
     w = Window.partitionBy(q_id).orderBy(F.col("d2").asc(), F.col(id_col).asc())
     survivors: DataFrame | None = None
-    # first window spans radii [0, r0] at once: every round costs several
+    # first window spans radii [0, 2] at once: every round costs several
     # fixed-overhead jobs, and a query with ≥k local points retires in
     # round one when the window already clears its margin bound
-    r_lo, r_hi = 0, max(0, r0)
+    r_lo, r_hi = 0, 2
     while r_lo <= n and not active.isEmpty():
         ring = (
             active
@@ -565,169 +562,160 @@ def knn_join_table(
 
 
 # ---------------------------------------------------------------------------
-# generic WKB × polygon-pack join (extended geometries)
+# the WKB joins' shared pieces: one tiled side, one envelope-pair rule, one
+# grouped refine
 # ---------------------------------------------------------------------------
 
-def _ref_cell_col(grid: Grid, rx, ry):
-    """Native (JVM) cell id of a reference corner — same arithmetic as
-    ``tiling.cell_col`` but over arbitrary Column expressions."""
-    n = grid.n
-    ix = F.floor((rx - F.lit(grid.minx)) / F.lit(grid.cell_w)).cast("long")
-    iy = F.floor((ry - F.lit(grid.miny)) / F.lit(grid.cell_h)).cast("long")
-    ix = F.greatest(F.lit(0), F.least(F.lit(n - 1), ix))
-    iy = F.greatest(F.lit(0), F.least(F.lit(n - 1), iy))
-    return (iy * n + ix).cast("long")
+_ENV = ("minx", "miny", "maxx", "maxy")
 
+
+def _tiled(df: DataFrame, id_col: str, wkb_col: str, grid: Grid, tag: str,
+           expand: float = 0.0) -> DataFrame:
+    """One side of a WKB cell join: rows (id, wkb, {tag}minx … {tag}maxy,
+    cell_id). The envelope comes from ONE vectorized envelope UDF call; the
+    cover explode is native ``sequence()`` arithmetic over the envelope
+    widened by ``expand`` (a distance or kNN radius), while the carried
+    envelope columns stay unwidened. Empty geometries explode to no rows."""
+    base = df.select(F.col(id_col), F.col(wkb_col),
+                     envelope_struct_udf()(F.col(wkb_col)).alias("_e0"))
+    env = "_e0"
+    if expand:
+        base = base.withColumn(
+            "_env",
+            F.struct(
+                (F.col("_e0.minx") - F.lit(expand)).alias("minx"),
+                (F.col("_e0.miny") - F.lit(expand)).alias("miny"),
+                (F.col("_e0.maxx") + F.lit(expand)).alias("maxx"),
+                (F.col("_e0.maxy") + F.lit(expand)).alias("maxy"),
+            ),
+        )
+        env = "_env"
+    return explode_cover_native(base, grid, env=env).select(
+        id_col, wkb_col, *[F.col(f"_e0.{k}").alias(tag + k) for k in _ENV], "cell_id",
+    )
+
+
+def _pair_filter(grid: Grid, a: str, b: str, d: float = 0.0) -> Column:
+    """The envelope-pair rule of every WKB cell join, over cell-joined rows
+    carrying envelopes ``{a}minx … {a}maxy`` and ``{b}minx … {b}maxy``:
+
+    - the envelopes lie within distance ``d``: for ``d == 0`` the closed
+      four-comparison overlap (``Envelope.cs`` Intersects), otherwise the
+      sum of squared per-axis gaps ≤ d²;
+    - reference-cell dedup: the pair is kept only in the cell holding the
+      corner ``greatest(a_min − d, b_min)``, the lower-left corner of b's
+      envelope intersected with a's envelope widened by ``d`` — a pair that
+      shares several cells surfaces exactly once.
+
+    Pure Catalyst: it runs inside the join stage, before any Python.
+    """
+    A = {k: F.col(a + k) for k in _ENV}
+    B = {k: F.col(b + k) for k in _ENV}
+    if d == 0:
+        near = (
+            (A["minx"] <= B["maxx"]) & (A["maxx"] >= B["minx"])
+            & (A["miny"] <= B["maxy"]) & (A["maxy"] >= B["miny"])
+        )
+        cx = F.greatest(A["minx"], B["minx"])
+        cy = F.greatest(A["miny"], B["miny"])
+    else:
+        gapx = F.greatest(F.lit(0.0), F.greatest(A["minx"] - B["maxx"], B["minx"] - A["maxx"]))
+        gapy = F.greatest(F.lit(0.0), F.greatest(A["miny"] - B["maxy"], B["miny"] - A["maxy"]))
+        near = gapx * gapx + gapy * gapy <= F.lit(d * d)
+        cx = F.greatest(A["minx"] - F.lit(d), B["minx"])
+        cy = F.greatest(A["miny"] - F.lit(d), B["miny"])
+    return near & (cell_col(grid, cx, cy) == F.col("cell_id"))
+
+
+def _grouped_refine(kernel, container_left: bool = False, returns: str = "boolean"):
+    """Pandas UDF (left_wkb, right_wkb) → one kernel value per pair — the one
+    refine shape of the big×big WKB joins.
+
+    Per Arrow batch both sides factorize to uniques. The ROW side decodes
+    into one columnar ``GeomBatch`` with one cached ``geom_of`` parse for
+    the kernels' scalar residues; each distinct CONTAINER (the right side
+    unless ``container_left``) prepares once as a ``PreparedRight``; and
+    ``kernel(gb, row_idx, prepared, geom_of)`` evaluates that container's
+    whole group in array passes. Pairs with a NULL side yield False / NaN.
+    """
+    from ..kernels.batchgeom import GeomBatch, PreparedRight
+    from ..kernels.geom import wkb_loads
+
+    @pandas_udf(returns)
+    def _refine(lwkb: pd.Series, rwkb: pd.Series) -> pd.Series:
+        cwkb, xwkb = (lwkb, rwkb) if container_left else (rwkb, lwkb)
+        out = np.full(len(lwkb), np.nan if returns == "double" else False)
+        if not len(out):
+            return pd.Series(out)
+        ccodes, cuniq = pd.factorize(cwkb.to_numpy(object))
+        rcodes, runiq = pd.factorize(xwkb.to_numpy(object))
+        gb = GeomBatch.from_wkb([bytes(b) for b in runiq])
+        parsed: dict = {}
+
+        def geom_of(k: int):
+            g = parsed.get(k)
+            if g is None:
+                g = parsed[k] = wkb_loads(bytes(runiq[k]))
+            return g
+
+        has_row = rcodes >= 0
+        for j, blob in enumerate(cuniq):
+            sel = (ccodes == j) & has_row
+            out[sel] = kernel(gb, rcodes[sel], PreparedRight(wkb_loads(bytes(blob))), geom_of)
+        return pd.Series(out)
+
+    return _refine
+
+
+# ---------------------------------------------------------------------------
+# generic WKB × polygon-pack join (extended geometries)
+# ---------------------------------------------------------------------------
 
 def _batched_pair_eval(pack: PolygonPack, predicate: str):
     """Boolean pandas UDF (wkb, poly_id) → predicate(poly, geom) — the pack
     polygon is the CONTAINER argument, matching ``pip_refine_udf``'s
-    "predicate(poly, point)" convention — batched: WKB parsed once per row,
-    point-typed rows evaluated via the vectorized prepared-PIP kernel per
-    poly group, extended rows via the vectorized batch-intersects /
-    batch-covers / batch-II kernels (whole-array PIP/parity/segment
-    passes). The DE-9IM predicates vectorize too: for point rows they are
-    closed-form in the prepared locate (touches ⇔ on boundary; crosses /
-    overlaps / equalsTopo ⇔ False by the dimension rules), for
-    pure-polygonal rows they compose from the batched II and covers
-    passes; only mixed-dimension extended rows fall back to the per-pair
-    relate kernel.
+    "predicate(poly, point)" convention. WKB parses once per row. Point rows
+    evaluate through the pack's per-executor ``prepared()`` structure per
+    poly group (covers ≡ intersects, contains = interior-only, touches ⇔ on
+    the boundary, crosses / overlaps / equalsTopo ≡ False by the dimension
+    rules); extended rows go through ``batch_predicate`` over one columnar
+    batch of the Arrow batch's rows.
     """
-    from ..kernels.batchgeom import (
-        GeomBatch,
-        PreparedRight,
-        batch_covers_right,
-        batch_covers_rights,
-        batch_interiors_intersect,
-        batch_intersects,
-        batch_line_im_probes,
-    )
+    from ..kernels.batchgeom import _IM_PREDICATES, GeomBatch, PreparedRight, batch_predicate
     from ..kernels.geom import POINT, wkb_loads
     from ..kernels.pip import BOUNDARY
-    from ..kernels.predicates import _polygon_leaves, evaluate_predicate
-
-    im_preds = ("touches", "overlaps", "equalstopo", "equals", "crosses")
 
     @pandas_udf("boolean")
     def _eval(wkb: pd.Series, poly_id: pd.Series) -> pd.Series:
-        blobs = wkb.to_list()
-        geoms_list = [wkb_loads(bytes(b)) if b is not None else None for b in blobs]
+        geoms_list = [wkb_loads(bytes(b)) if b is not None else None for b in wkb.to_list()]
         out = np.zeros(len(geoms_list), dtype=bool)
         prepared = pack.prepared()
-        pgeoms = None
         is_pt = np.array(
             [g is not None and g.gtype == POINT for g in geoms_list], dtype=bool
         )
-        ext_gb = None  # lazily-built columnar batch over ALL rows
+        ext_gb = pgeoms = None  # built on the first extended row
         codes, uniques = pd.factorize(poly_id.to_numpy(object))
         for j, pid in enumerate(uniques):
             sel = codes == j
-            # vectorized fast path: point probes against the prepared polygon
-            # (covers ≡ intersects for points; contains = interior-only)
-            pt_sel = sel & is_pt
-            if pt_sel.any():
-                idx = np.flatnonzero(pt_sel)
+            idx = np.flatnonzero(sel & is_pt)
+            if len(idx):
                 xs = np.array([geoms_list[i].coords[0, 0] for i in idx])
                 ys = np.array([geoms_list[i].coords[0, 1] for i in idx])
                 prep = prepared[pid]
                 if predicate == "contains":
                     out[idx] = prep.contains_points(xs, ys)
                 elif predicate == "touches":
-                    # touches(areal, point) ⇔ point ON the boundary
                     out[idx] = prep.locate(xs, ys) == BOUNDARY
-                elif predicate in im_preds:
-                    pass  # crosses/overlaps/equalsTopo(areal, point) ≡ False
-                else:
+                elif predicate not in _IM_PREDICATES:
                     out[idx] = prep.covers_points(xs, ys)
-            ext_sel = sel & ~is_pt
-            if ext_sel.any():
-                if pgeoms is None:
-                    pgeoms = pack.geoms()
-                pg = pgeoms[pid]
-                idx = np.flatnonzero(ext_sel)
-                if predicate == "intersects":
-                    # vectorized extended path (already-parsed geoms, no
-                    # second WKB decode)
-                    if ext_gb is None:
-                        ext_gb = GeomBatch(geoms_list)
-                    out[idx] = batch_intersects(ext_gb, idx, PreparedRight(pg))
-                elif predicate in ("covers", "contains") and _polygon_leaves(pg):
-                    # vectorized covers/contains(pack polygon, row geometry):
-                    # the polygon prepares once per group, the rows' vertices
-                    # and segment midpoints locate through the whole-array
-                    # prepared-PIP passes — no per-pair Python
-                    if ext_gb is None:
-                        ext_gb = GeomBatch(geoms_list)
-                    out[idx] = batch_covers_rights(
-                        ext_gb, idx, PreparedRight(pg),
-                        contains=(predicate == "contains"),
-                        geom_of=lambda k: geoms_list[k],
-                    )
-                elif predicate in im_preds:
-                    # DE-9IM predicates, predicate(pg, row): batched II +
-                    # covers composition for pure-polygonal rows (see
-                    # pair_refine_udf), scalar relate for mixed rows
-                    if ext_gb is None:
-                        ext_gb = GeomBatch(geoms_list)
-                    pr_pg = PreparedRight(pg)
-                    purity = (
-                        ext_gb.pure_poly[idx] if pr_pg.pure_poly
-                        else np.zeros(len(idx), dtype=bool)
-                    )
-                    vi = idx[purity]
-                    if len(vi) and predicate == "touches":
-                        inter = batch_intersects(ext_gb, vi, pr_pg)
-                        hit = vi[inter]
-                        if len(hit):
-                            ii = batch_interiors_intersect(
-                                ext_gb, hit, pr_pg,
-                                geom_of=lambda k: geoms_list[k],
-                            )
-                            out[hit] = ~ii
-                    elif len(vi) and predicate in ("equalstopo", "equals"):
-                        c_lr = batch_covers_rights(ext_gb, vi, pr_pg)
-                        hit = vi[c_lr]
-                        if len(hit):
-                            out[hit] = batch_covers_right(ext_gb, hit, pg)
-                    elif len(vi) and predicate == "overlaps":
-                        ii = batch_interiors_intersect(
-                            ext_gb, vi, pr_pg,
-                            geom_of=lambda k: geoms_list[k],
-                        )
-                        hit = vi[ii]
-                        if len(hit):
-                            out[hit] = ~batch_covers_rights(
-                                ext_gb, hit, pr_pg
-                            ) & ~batch_covers_right(ext_gb, hit, pg)
-                    # crosses(areal, areal) ≡ False — nothing to set
-                    # pure-LINE rows: overlaps/equalsTopo constant False
-                    # (dim rule); touches/crosses through the batched line
-                    # probes, scalar only for probe-ambiguous rows
-                    lmask = (
-                        ext_gb.pure_line[idx] if pr_pg.pure_poly
-                        else np.zeros(len(idx), dtype=bool)
-                    )
-                    vl = idx[lmask]
-                    amb_rows = np.zeros(0, dtype=np.int64)
-                    if len(vl) and predicate in ("touches", "crosses"):
-                        ii_l, ei_l, amb_l = batch_line_im_probes(
-                            ext_gb, vl, pr_pg
-                        )
-                        dec = ~amb_l
-                        if predicate == "touches":
-                            inter = batch_intersects(ext_gb, vl[dec], pr_pg)
-                            out[vl[dec]] = inter & ~ii_l[dec]
-                        else:
-                            out[vl[dec]] = ii_l[dec] & ei_l[dec]
-                        amb_rows = vl[amb_l]
-                    for i in np.concatenate([idx[~purity & ~lmask], amb_rows]):
-                        if geoms_list[i] is not None:
-                            out[i] = evaluate_predicate(predicate, pg, geoms_list[i])
-                else:
-                    # general path: full relate kernel per surviving pair
-                    for i in idx:
-                        if geoms_list[i] is not None:
-                            out[i] = evaluate_predicate(predicate, pg, geoms_list[i])
+            idx = np.flatnonzero(sel & ~is_pt)
+            if len(idx):
+                if ext_gb is None:
+                    ext_gb, pgeoms = GeomBatch(geoms_list), pack.geoms()
+                out[idx] = batch_predicate(
+                    ext_gb, idx, PreparedRight(pgeoms[pid]), predicate,
+                    geoms_list.__getitem__,
+                )
         return pd.Series(out)
 
     return _eval
@@ -743,47 +731,32 @@ def spatial_join_wkb(
     """Join arbitrary-WKB rows against the pack with multi-cell replication
     and reference-cell dedup (each pair emitted exactly once).
 
-    The reference-cell test (pair belongs only to the cell containing the
-    lower-left corner of the envelope intersection) runs as a NATIVE column
-    predicate before any Python refine: the geometry envelope is computed
-    once (vectorized pandas UDF), the cover explode is native ``sequence()``
-    arithmetic (no per-row Python list), the polygon envelope rides on the
-    broadcast cover relation, and the corner/cell arithmetic is pure
-    Catalyst. A geometry replicated to k cells therefore reaches the Python
-    refine exactly once, already matched to its reference cell.
+    The geometry envelope is computed once (vectorized pandas UDF), the
+    cover explode is native ``sequence()`` arithmetic (no per-row Python
+    list), and the polygon envelope rides on the broadcast cover relation.
+    The envelope-pair rule (``_pair_filter``: envelope overlap + the
+    reference cell holding the lower-left corner of the envelope
+    intersection) is pure Catalyst, so a geometry replicated to k cells
+    reaches the Python refine at most once per polygon, already matched to
+    its reference cell.
     """
     from ..kernels.geom import wkb_loads
-    from .tiling import envelope_struct_udf, explode_cover_native
 
     spark = geoms.sparkSession
-
-    # broadcast cover relation carrying the polygon envelope mins
-    rows = []
-    env_by_pid = {
-        e.poly_id: np.asarray(wkb_loads(e.wkb).envelope()) for e in pack.entries
-    }
-    for cell, poly_id in pack.cover_rows(grid):
-        env = env_by_pid[poly_id]
-        rows.append((cell, poly_id, float(env[0]), float(env[1])))
+    env_by_pid = {e.poly_id: wkb_loads(e.wkb).envelope() for e in pack.entries}
     cover = spark.createDataFrame(
-        rows, "cell_id long, poly_id string, p_minx double, p_miny double"
+        [(cell, pid, *map(float, env_by_pid[pid])) for cell, pid in pack.cover_rows(grid)],
+        "cell_id long, poly_id string, " + ", ".join(f"_p{k} double" for k in _ENV),
     )
-
     tagged = geoms.withColumn("_env", envelope_struct_udf()(F.col(wkb_col)))
     cand = (
         explode_cover_native(tagged, grid)
-        .withColumn("g_minx", F.col("_env.minx"))
-        .withColumn("g_miny", F.col("_env.miny"))
+        .select("*", *[F.col(f"_env.{k}").alias(f"_g{k}") for k in _ENV])
         .drop("_env")
         .join(F.broadcast(cover), "cell_id")
+        .filter(_pair_filter(grid, "_g", "_p"))
+        .drop(*[t + k for t in ("_g", "_p") for k in _ENV])
     )
-    # native reference-cell pre-filter (JVM, whole-stage codegen)
-    ref = _ref_cell_col(
-        grid,
-        F.greatest(F.col("g_minx"), F.col("p_minx")),
-        F.greatest(F.col("g_miny"), F.col("p_miny")),
-    )
-    cand = cand.filter(ref == F.col("cell_id")).drop("g_minx", "g_miny", "p_minx", "p_miny")
     return cand.filter(_batched_pair_eval(pack, predicate)(F.col(wkb_col), F.col("poly_id")))
 
 
@@ -791,239 +764,32 @@ def spatial_join_wkb(
 # big × big spatial join: both sides DataFrames (no driver-held pack)
 # ---------------------------------------------------------------------------
 
-def pair_refine_udf(predicate: str = "intersects", exact_relate: bool = False):
+# predicate(left, right) → (predicate(container, row), container is the left)
+_CONTAINER_ROLE = {
+    "covers": ("covers", True),
+    "contains": ("contains", True),
+    "coveredby": ("covers", False),
+    "within": ("contains", False),
+}
+
+
+def pair_refine_udf(predicate: str = "intersects"):
     """Boolean pandas UDF (left_wkb, right_wkb) → predicate(left, right).
 
-    Per Arrow batch both sides factorize to uniques (each geometry parsed /
-    prepared / columnar-decoded ONCE), then the whole-array kernels
-    evaluate per group:
-
-    - ``intersects``              → ``batch_intersects`` grouped by right
-      (``PreparedPolygonIntersects.cs:38-60`` batched)
-    - ``covers`` / ``contains``   → ``batch_covers_rights`` grouped by the
-      LEFT container (``AbstractPreparedPolygonContains.cs`` role split)
-    - ``within`` / ``coveredby``  → same kernel grouped by the RIGHT
-      container (the symmetric predicates)
-
-    The boundary-sensitive DE-9IM predicates (``touches`` / ``crosses`` /
-    ``overlaps`` / ``equalstopo``) vectorize too whenever BOTH sides of a
-    pair are pure-polygonal — the join workload's shape — through the
-    batched interior/interior kernel (``batch_interiors_intersect``) and
-    the two batched covers orientations:
-
-    - ``touches``    → intersects ∧ ¬II
-    - ``overlaps``   → II ∧ ¬covers(l,r) ∧ ¬covers(r,l)
-    - ``equalstopo`` → covers(l,r) ∧ covers(r,l)
-    - ``crosses``    → constant False for areal × areal (dim rule)
-
-    Pure-LINE rows against a polygonal side batch as well: overlaps /
-    equalsTopo are constant False by the dimension rule, and touches /
-    crosses decide through the batched interior/exterior line probes
-    (``batch_line_im_probes``: vertex + proper-crossing + midpoint
-    evidence with an explicit ambiguity escape). Only probe-ambiguous
-    line rows (boundary-collinear / multi-contact segments),
-    GeometryCollection-mixed rows, and ``exact_relate`` evaluate per pair
-    through the full relate-matrix kernel — the (already envelope- and
-    cell-filtered) survivor set of those is tiny.
+    The grouped refine with ``batch_predicate`` as its kernel; the
+    predicate only picks the container side (the
+    ``AbstractPreparedPolygonContains.cs`` role split): the LEFT for
+    covers / contains, the RIGHT for within (→ contains) and coveredby
+    (→ covers), and the right for the symmetric predicates (intersects,
+    touches, overlaps, equalstopo, crosses, disjoint).
     """
-    from ..kernels.batchgeom import (
-        GeomBatch,
-        PreparedRight,
-        batch_covers_right,
-        batch_covers_rights,
-        batch_interiors_intersect,
-        batch_intersects,
-        batch_line_im_probes,
+    from ..kernels.batchgeom import batch_predicate
+
+    pred, container_left = _CONTAINER_ROLE.get(predicate, (predicate, False))
+    return _grouped_refine(
+        lambda gb, rows, pc, geom_of: batch_predicate(gb, rows, pc, pred, geom_of),
+        container_left=container_left,
     )
-    from ..kernels.geom import wkb_loads
-    from ..kernels.predicates import contains as p_contains
-    from ..kernels.predicates import covers as p_covers
-    from ..kernels.predicates import evaluate_predicate
-
-    vector_fast = (not exact_relate) and predicate == "intersects"
-    vector_cover = (not exact_relate) and predicate in ("covers", "contains")
-    # within/coveredby are covers/contains with the roles swapped: the
-    # RIGHT is the container — same vectorized kernel, grouped by right
-    vector_within = (not exact_relate) and predicate in ("within", "coveredby")
-    # DE-9IM predicates batch for pure-polygonal pairs (II + covers passes)
-    vector_im = (not exact_relate) and predicate in (
-        "touches", "overlaps", "equalstopo", "equals", "crosses"
-    )
-    if exact_relate:
-        pair_eval = lambda a, b: evaluate_predicate(predicate, a, b)  # noqa: E731
-    else:
-        fast = {
-            "covers": p_covers,
-            "contains": p_contains,
-            "coveredby": lambda a, b: p_covers(b, a),
-            "within": lambda a, b: p_contains(b, a),
-        }
-        pair_eval = fast.get(predicate)
-        if pair_eval is None:
-            pair_eval = lambda a, b: evaluate_predicate(predicate, a, b)  # noqa: E731
-
-    @pandas_udf("boolean")
-    def _refine(lwkb: pd.Series, rwkb: pd.Series) -> pd.Series:
-        n = len(lwkb)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        rcodes, runiq = pd.factorize(rwkb.to_numpy(object))
-        if vector_fast:
-            # factorize lefts too: a geometry in m candidate pairs of this
-            # batch decodes into the columnar batch once, not m times
-            # (batch_intersects accepts repeated indices)
-            lcodes, luniq = pd.factorize(lwkb.to_numpy(object))
-            gb_left = GeomBatch.from_wkb([bytes(b) for b in luniq])
-            for j, blob in enumerate(runiq):
-                sel = rcodes == j
-                pr = PreparedRight(wkb_loads(bytes(blob)))
-                out[sel] = batch_intersects(gb_left, lcodes[sel], pr)
-        elif vector_cover:
-            # covers/contains(left, right): group by LEFT — each left
-            # prepares ONCE (the AbstractPreparedPolygonContains.cs:150-200
-            # role split), rights decode into one columnar batch, and every
-            # group evaluates through the whole-array vertex-coverage /
-            # strict-crossing / midpoint passes. Non-polygonal lefts (which
-            # cover only lower-dimensional rights) keep the scalar kernel.
-            lcodes, luniq = pd.factorize(lwkb.to_numpy(object))
-            gb_right = GeomBatch.from_wkb([bytes(b) for b in runiq])
-            rgeom_cache: dict = {}
-
-            def _rgeom(k: int):
-                g = rgeom_cache.get(k)
-                if g is None:
-                    g = rgeom_cache[k] = wkb_loads(bytes(runiq[k]))
-                return g
-
-            for j, blob in enumerate(luniq):
-                sel = lcodes == j
-                pl = PreparedRight(wkb_loads(bytes(blob)))
-                if pl.preps:
-                    out[sel] = batch_covers_rights(
-                        gb_right, rcodes[sel], pl,
-                        contains=(predicate == "contains"), geom_of=_rgeom,
-                    )
-                else:
-                    for i in np.flatnonzero(sel):
-                        out[i] = pair_eval(pl.geom, _rgeom(int(rcodes[i])))
-        elif vector_within:
-            # within/coveredby(left, right) ≡ contains/covers(right, left):
-            # group by the RIGHT container, batch the lefts
-            lcodes, luniq = pd.factorize(lwkb.to_numpy(object))
-            gb_left = GeomBatch.from_wkb([bytes(b) for b in luniq])
-            lgeom_cache: dict = {}
-
-            def _lgeom(k: int):
-                g = lgeom_cache.get(k)
-                if g is None:
-                    g = lgeom_cache[k] = wkb_loads(bytes(luniq[k]))
-                return g
-
-            for j, blob in enumerate(runiq):
-                sel = rcodes == j
-                pr = PreparedRight(wkb_loads(bytes(blob)))
-                if pr.preps:
-                    out[sel] = batch_covers_rights(
-                        gb_left, lcodes[sel], pr,
-                        contains=(predicate == "within"), geom_of=_lgeom,
-                    )
-                else:
-                    for i in np.flatnonzero(sel):
-                        out[i] = pair_eval(_lgeom(int(lcodes[i])), pr.geom)
-        elif vector_im:
-            # touches / overlaps / equalstopo / crosses over pure-polygonal
-            # pairs: batched II + covers passes, grouped by right; rows
-            # with any non-areal part keep the scalar relate kernel
-            lcodes, luniq = pd.factorize(lwkb.to_numpy(object))
-            gb_left = GeomBatch.from_wkb([bytes(b) for b in luniq])
-            lgeom_cache: dict = {}
-
-            def _lgeom(k: int):
-                g = lgeom_cache.get(k)
-                if g is None:
-                    g = lgeom_cache[k] = wkb_loads(bytes(luniq[k]))
-                return g
-
-            for j, blob in enumerate(runiq):
-                sel = rcodes == j
-                pr = PreparedRight(wkb_loads(bytes(blob)))
-                vec = sel & gb_left.pure_poly[lcodes] if pr.pure_poly \
-                    else np.zeros(n, dtype=bool)
-                vidx_ = np.flatnonzero(vec)
-                lsel = lcodes[vidx_]
-                if len(vidx_):
-                    if predicate == "crosses":
-                        pass  # areal × areal never crosses (dim rule)
-                    elif predicate == "touches":
-                        inter = batch_intersects(gb_left, lsel, pr)
-                        hit = np.flatnonzero(inter)
-                        if len(hit):
-                            ii = batch_interiors_intersect(
-                                gb_left, lsel[hit], pr, geom_of=_lgeom,
-                            )
-                            out[vidx_[hit]] = ~ii
-                    elif predicate in ("equalstopo", "equals"):
-                        c_lr = batch_covers_right(gb_left, lsel, pr.geom)
-                        hit = np.flatnonzero(c_lr)
-                        if len(hit):
-                            c_rl = batch_covers_rights(
-                                gb_left, lsel[hit], pr, geom_of=_lgeom,
-                            )
-                            out[vidx_[hit]] = c_rl
-                    else:  # overlaps
-                        ii = batch_interiors_intersect(
-                            gb_left, lsel, pr, geom_of=_lgeom,
-                        )
-                        hit = np.flatnonzero(ii)
-                        if len(hit):
-                            not_cov = ~batch_covers_right(
-                                gb_left, lsel[hit], pr.geom,
-                            ) & ~batch_covers_rights(
-                                gb_left, lsel[hit], pr, geom_of=_lgeom,
-                            )
-                            out[vidx_[hit]] = not_cov
-                # pure-LINE rows × polygonal right: the mixed-dimension
-                # DE-9IM pair — overlaps/equalsTopo are constant False by
-                # the dimension rule; touches = intersects ∧ ¬II and
-                # crosses = II ∧ EI decide through the batched line probes
-                # (kernels/batchgeom.py::batch_line_im_probes); only rows
-                # the probe pass marks ambiguous (multi-contact /
-                # boundary-collinear segments) reach the scalar kernel
-                vl = sel & gb_left.pure_line[lcodes] if pr.pure_poly \
-                    else np.zeros(n, dtype=bool)
-                vlidx = np.flatnonzero(vl)
-                escalate = np.zeros(0, dtype=np.int64)
-                if len(vlidx):
-                    llsel = lcodes[vlidx]
-                    if predicate in ("overlaps", "equalstopo", "equals"):
-                        pass  # dim(1) vs dim(2): constant False
-                    else:
-                        ii_l, ei_l, amb_l = batch_line_im_probes(
-                            gb_left, llsel, pr
-                        )
-                        dec = ~amb_l
-                        if predicate == "touches":
-                            inter = batch_intersects(gb_left, llsel[dec], pr)
-                            out[vlidx[dec]] = inter & ~ii_l[dec]
-                        else:  # crosses
-                            out[vlidx[dec]] = ii_l[dec] & ei_l[dec]
-                        escalate = vlidx[amb_l]
-                # scalar relate: mixed-dimension rows + ambiguous line rows
-                rest = np.flatnonzero(sel & ~vec & ~vl)
-                for i in np.concatenate([rest, escalate]):
-                    out[i] = pair_eval(_lgeom(int(lcodes[i])), pr.geom)
-        else:
-            rgeoms = [wkb_loads(bytes(b)) for b in runiq]
-            # factorize lefts too: a geometry in m candidate pairs of this
-            # batch parses once, not m times
-            lcodes, luniq = pd.factorize(lwkb.to_numpy(object))
-            lgeoms = [wkb_loads(bytes(b)) for b in luniq]
-            for i in range(n):
-                out[i] = pair_eval(lgeoms[lcodes[i]], rgeoms[rcodes[i]])
-        return pd.Series(out)
-
-    return _refine
 
 
 def choose_grid(
@@ -1058,8 +824,6 @@ def choose_grid(
     - point-dominated data (span ≈ 0) clamps to ``max_level`` — points
       never explode, so the finest grid only adds parallelism."""
     import math
-
-    from .tiling import envelope_struct_udf
 
     env_udf = envelope_struct_udf()
     min_rows = 64
@@ -1107,7 +871,6 @@ def spatial_join_bigbig(
     right_id: str = "r_id",
     left_wkb: str = "l_wkb",
     right_wkb: str = "r_wkb",
-    exact_relate: bool = False,
 ) -> DataFrame:
     """Distributed spatial join of TWO DataFrames of WKB geometries.
 
@@ -1118,7 +881,8 @@ def spatial_join_bigbig(
        (uniform WKB batches decode via a single buffer reinterpretation),
        then explodes to covering cells in pure Catalyst — two ``sequence()``
        ranges per row (a grid cover is a rectangle of cell indices). No
-       Python list per row; the envelope rides along as four double columns.
+       Python list per row; the envelope rides along as four double columns
+       (``_tiled``).
     2. Candidates come from a NATIVE equi-join on ``cell_id`` — Catalyst
        picks broadcast vs shuffled hash vs sort-merge, and AQE handles
        skewed cells (hot-cell splitting) and coalesces post-shuffle
@@ -1126,94 +890,29 @@ def spatial_join_bigbig(
     3. Envelope overlap AND reference-cell dedup (pair reported only in the
        cell containing the lower-left corner of the envelope intersection —
        each pair surfaces exactly once across all cells) are whole-stage-
-       codegen'd column predicates applied INSIDE the join stage, so the
-       exploded rows never reach Python.
+       codegen'd column predicates applied INSIDE the join stage
+       (``_pair_filter``), so the exploded rows never reach Python.
     4. Only surviving candidate pairs (true envelope hits) cross the Arrow
-       boundary once, through the boolean ``pair_refine_udf`` — vectorized
-       exact ``intersects`` (grouped by right geometry, whole-array
-       PIP/parity/segment passes) or the per-pair DE-9IM relate fallback.
+       boundary once, through ``pair_refine_udf``: grouped by the container
+       side, each group evaluates through ``batch_predicate`` — whole-array
+       passes for intersects, covers / contains / within / coveredby and the
+       DE-9IM predicates over polygonal and line rows, the exact relate
+       kernel for mixed or probe-ambiguous rows.
 
     Scale notes: shuffle volume is cover-explode amplified (rows × cells
     covered), proportional to geometry extent over cell size — the grid
     level is the knob. Output is property-tested equal to the broadcast-
     pack path.
     """
-    from .tiling import envelope_struct_udf, explode_cover_native
-
-    env_udf = envelope_struct_udf()
-
-    def _side(df: DataFrame, id_col: str, wkb_col: str, tag: str) -> DataFrame:
-        return explode_cover_native(
-            df.select(F.col(id_col), F.col(wkb_col),
-                      env_udf(F.col(wkb_col)).alias("_env")),
-            grid,
-        ).select(
-            id_col, wkb_col,
-            F.col("_env.minx").alias(f"{tag}minx"), F.col("_env.miny").alias(f"{tag}miny"),
-            F.col("_env.maxx").alias(f"{tag}maxx"), F.col("_env.maxy").alias(f"{tag}maxy"),
-            "cell_id",
-        )
-
-    lc = _side(left, left_id, left_wkb, "_l")
-    rc = _side(right, right_id, right_wkb, "_r")
+    lc = _tiled(left, left_id, left_wkb, grid, "_l")
+    rc = _tiled(right, right_id, right_wkb, grid, "_r")
     # shuffle-hash hint: compile-time size stats are meaningless below a
     # Python UDF + explode (Catalyst was observed broadcasting the BIG
     # exploded side); AQE still converts to broadcast at runtime when one
     # side's true size is small, and splits skewed cells
-    cand = (
-        lc.join(rc.hint("shuffle_hash"), "cell_id")
-        # envelope overlap (closed intervals, Envelope.cs Intersects)
-        .filter(
-            (F.col("_lminx") <= F.col("_rmaxx")) & (F.col("_lmaxx") >= F.col("_rminx"))
-            & (F.col("_lminy") <= F.col("_rmaxy")) & (F.col("_lmaxy") >= F.col("_rminy"))
-        )
-        # reference-cell dedup — native corner/cell arithmetic
-        .filter(
-            _ref_cell_col(
-                grid,
-                F.greatest(F.col("_lminx"), F.col("_rminx")),
-                F.greatest(F.col("_lminy"), F.col("_rminy")),
-            ) == F.col("cell_id")
-        )
-    )
-    refined = cand.filter(
-        pair_refine_udf(predicate, exact_relate)(F.col(left_wkb), F.col(right_wkb))
-    )
+    cand = lc.join(rc.hint("shuffle_hash"), "cell_id").filter(_pair_filter(grid, "_l", "_r"))
+    refined = cand.filter(pair_refine_udf(predicate)(F.col(left_wkb), F.col(right_wkb)))
     return refined.select(left_id, right_id, "cell_id")
-
-
-def within_distance_refine_udf(dist: float):
-    """Boolean pandas UDF (left_wkb, right_wkb) → distance(left, right) ≤ d.
-
-    Rights factorize to uniques (each prepared once), lefts decode into one
-    columnar ``GeomBatch``; each right group evaluates through
-    ``batch_within_distance`` — the batched analog of
-    ``Operation/Distance/IndexedFacetDistance.cs`` (facet tree → whole-array
-    vertex/facet passes, intersects short-circuit first). No per-pair
-    Python."""
-    from ..kernels.batchgeom import (
-        GeomBatch,
-        PreparedRight,
-        batch_within_distance,
-    )
-    from ..kernels.geom import wkb_loads
-
-    @pandas_udf("boolean")
-    def _refine(lwkb: pd.Series, rwkb: pd.Series) -> pd.Series:
-        n = len(lwkb)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        rcodes, runiq = pd.factorize(rwkb.to_numpy(object))
-        lcodes, luniq = pd.factorize(lwkb.to_numpy(object))
-        gb_left = GeomBatch.from_wkb([bytes(b) for b in luniq])
-        for j, blob in enumerate(runiq):
-            sel = rcodes == j
-            pr = PreparedRight(wkb_loads(bytes(blob)))
-            out[sel] = batch_within_distance(gb_left, lcodes[sel], pr, dist)
-        return pd.Series(out)
-
-    return _refine
 
 
 def within_distance_join_geom(
@@ -1241,91 +940,22 @@ def within_distance_join_geom(
        tighter than expanded-box overlap.
     3. reference-cell dedup over the expanded-envelope intersection corner
        (each pair refines exactly once).
-    4. surviving candidates cross the Arrow boundary once into the
-       vectorized facet-distance refine.
+    4. surviving candidates cross the Arrow boundary once into the grouped
+       refine: rights prepare once, lefts decode into one columnar batch,
+       and ``batch_within_distance`` (the batched analog of
+       ``Operation/Distance/IndexedFacetDistance.cs``) scores each group.
     """
-    from .tiling import envelope_struct_udf, explode_cover_native
+    from ..kernels.batchgeom import batch_within_distance
 
-    env_udf = envelope_struct_udf()
     d = float(dist)
-
-    def _side(df: DataFrame, id_col: str, wkb_col: str, tag: str,
-              expand: float) -> DataFrame:
-        base = df.select(F.col(id_col), F.col(wkb_col),
-                         env_udf(F.col(wkb_col)).alias("_e0"))
-        if expand:
-            base = base.withColumn(
-                "_env",
-                F.struct(
-                    (F.col("_e0.minx") - F.lit(expand)).alias("minx"),
-                    (F.col("_e0.miny") - F.lit(expand)).alias("miny"),
-                    (F.col("_e0.maxx") + F.lit(expand)).alias("maxx"),
-                    (F.col("_e0.maxy") + F.lit(expand)).alias("maxy"),
-                ),
-            )
-        else:
-            base = base.withColumn("_env", F.col("_e0"))
-        return explode_cover_native(base, grid).select(
-            id_col, wkb_col,
-            F.col("_e0.minx").alias(f"{tag}minx"), F.col("_e0.miny").alias(f"{tag}miny"),
-            F.col("_e0.maxx").alias(f"{tag}maxx"), F.col("_e0.maxy").alias(f"{tag}maxy"),
-            "cell_id",
-        )
-
-    lc = _side(left, left_id, left_wkb, "_l", d)
-    rc = _side(right, right_id, right_wkb, "_r", 0.0)
-    gapx = F.greatest(
-        F.lit(0.0),
-        F.greatest(F.col("_lminx") - F.col("_rmaxx"), F.col("_rminx") - F.col("_lmaxx")),
+    lc = _tiled(left, left_id, left_wkb, grid, "_l", expand=d)
+    rc = _tiled(right, right_id, right_wkb, grid, "_r")
+    cand = lc.join(rc.hint("shuffle_hash"), "cell_id").filter(_pair_filter(grid, "_l", "_r", d))
+    within = _grouped_refine(
+        lambda gb, rows, pc, geom_of: batch_within_distance(gb, rows, pc, d)
     )
-    gapy = F.greatest(
-        F.lit(0.0),
-        F.greatest(F.col("_lminy") - F.col("_rmaxy"), F.col("_rminy") - F.col("_lmaxy")),
-    )
-    cand = (
-        lc.join(rc.hint("shuffle_hash"), "cell_id")
-        .filter(gapx * gapx + gapy * gapy <= F.lit(d * d))
-        .filter(
-            _ref_cell_col(
-                grid,
-                F.greatest(F.col("_lminx") - F.lit(d), F.col("_rminx")),
-                F.greatest(F.col("_lminy") - F.lit(d), F.col("_rminy")),
-            ) == F.col("cell_id")
-        )
-    )
-    refined = cand.filter(
-        within_distance_refine_udf(d)(F.col(left_wkb), F.col(right_wkb))
-    )
+    refined = cand.filter(within(F.col(left_wkb), F.col(right_wkb)))
     return refined.select(left_id, right_id, "cell_id")
-
-
-def distance2_refine_udf():
-    """Double pandas UDF (data_wkb, query_wkb) → squared facet distance.
-
-    Queries factorize to uniques (each prepared once), data geometries
-    decode into one columnar ``GeomBatch``; each query group evaluates
-    through ``batch_distance2`` (intersects short-circuit to 0, else the
-    exact vertex/facet sweep whose value tree matches the SQL oracles
-    term for term)."""
-    from ..kernels.batchgeom import GeomBatch, PreparedRight, batch_distance2
-    from ..kernels.geom import wkb_loads
-
-    @pandas_udf("double")
-    def _dist2(dwkb: pd.Series, qwkb: pd.Series) -> pd.Series:
-        n = len(dwkb)
-        out = np.zeros(n, dtype=np.float64)
-        if n == 0:
-            return pd.Series(out)
-        qcodes, quniq = pd.factorize(qwkb.to_numpy(object))
-        dcodes, duniq = pd.factorize(dwkb.to_numpy(object))
-        gb = GeomBatch.from_wkb([bytes(b) for b in duniq])
-        for j, blob in enumerate(quniq):
-            sel = qcodes == j
-            pq = PreparedRight(wkb_loads(bytes(blob)))
-            out[sel] = batch_distance2(gb, dcodes[sel], pq)
-        return pd.Series(out)
-
-    return _dist2
 
 
 def knn_join_geom(
@@ -1337,8 +967,6 @@ def knn_join_geom(
     q_wkb: str = "q_wkb",
     d_id: str = "d_id",
     d_wkb: str = "d_wkb",
-    r0: float | None = None,
-    max_rounds: int = 16,
 ) -> DataFrame:
     """k nearest DATA geometries per QUERY geometry by facet distance —
     the extended-geometry kNN join (WKB × WKB; the distributed analog of
@@ -1348,88 +976,48 @@ def knn_join_geom(
     Doubling-radius rounds on the big×big machinery: active queries
     explode to cells within radius R of their envelope, candidates come
     from the native cell equi-join with the codegen envelope-distance
-    prefilter + reference-cell dedup, and the vectorized ``batch_distance2``
-    refine scores each surviving pair. A query RETIRES once it holds k
-    neighbors with k-th distance² ≤ R² — every unexamined geometry is
-    provably farther (its envelope distance alone exceeds R). Remaining
-    queries re-join at 2R. Driver coordination is one boolean ``isEmpty``
-    scalar per round, O(log(domain/cell)) rounds; no geometry ever
-    reaches the driver.
+    prefilter + reference-cell dedup, and the grouped ``batch_distance2``
+    refine (queries prepared once per batch) scores each surviving pair. A
+    query RETIRES once it holds k neighbors with k-th distance² ≤ R² —
+    every unexamined geometry is provably farther (its envelope distance
+    alone exceeds R). Remaining queries re-join at 2R until none is left or
+    R reaches the grid diagonal, where every query retires with what it
+    has: R starts at two cells, so there are at most
+    log2(diagonal / 2·cell) + 1 rounds. Driver coordination is one boolean
+    ``isEmpty`` scalar per round; no geometry ever reaches the driver.
     """
     import math
 
     from pyspark.sql import Window
-    from .tiling import envelope_struct_udf, explode_cover_native
 
-    env_udf = envelope_struct_udf()
-    cell = min(grid.cell_w, grid.cell_h)
-    R = float(r0) if r0 else 2.0 * cell
+    from ..kernels.batchgeom import batch_distance2
+
+    R = 2.0 * min(grid.cell_w, grid.cell_h)
     diag = math.hypot(grid.maxx - grid.minx, grid.maxy - grid.miny)
     active = queries.select(q_id, q_wkb)
     chunks: list[DataFrame] = []
     w = Window.partitionBy(q_id).orderBy(F.col("dist2").asc(), F.col(d_id).asc())
+    dist2 = _grouped_refine(
+        lambda gb, rows, pc, geom_of: batch_distance2(gb, rows, pc), returns="double"
+    )
 
     # data side tiled ONCE (radius-independent); reused every round.
     # Cached ALREADY HASH-PARTITIONED on the join key: every round's cell
     # join then only shuffles the (tiny) query cover — the big exploded
     # relation was previously re-exchanged per round (guide §2.4: two
     # operations keyed the same way share one exchange).
-    dc = explode_cover_native(
-        data.select(F.col(d_id), F.col(d_wkb), env_udf(F.col(d_wkb)).alias("_env")),
-        grid,
-    ).select(
-        d_id, d_wkb,
-        F.col("_env.minx").alias("_dminx"), F.col("_env.miny").alias("_dminy"),
-        F.col("_env.maxx").alias("_dmaxx"), F.col("_env.maxy").alias("_dmaxy"),
-        "cell_id",
-    ).repartition("cell_id").persist()
+    dc = _tiled(data, d_id, d_wkb, grid, "_d").repartition("cell_id").persist()
 
-    for _ in range(max_rounds):
+    while True:
         last = R >= diag
-        qc = explode_cover_native(
-            active.select(
-                F.col(q_id), F.col(q_wkb),
-                env_udf(F.col(q_wkb)).alias("_e0"),
-            ).withColumn(
-                "_env",
-                F.struct(
-                    (F.col("_e0.minx") - F.lit(R)).alias("minx"),
-                    (F.col("_e0.miny") - F.lit(R)).alias("miny"),
-                    (F.col("_e0.maxx") + F.lit(R)).alias("maxx"),
-                    (F.col("_e0.maxy") + F.lit(R)).alias("maxy"),
-                ),
-            ),
-            grid,
-        ).select(
-            q_id, q_wkb,
-            F.col("_e0.minx").alias("_qminx"), F.col("_e0.miny").alias("_qminy"),
-            F.col("_e0.maxx").alias("_qmaxx"), F.col("_e0.maxy").alias("_qmaxy"),
-            "cell_id",
-        )
-        gapx = F.greatest(
-            F.lit(0.0),
-            F.greatest(F.col("_qminx") - F.col("_dmaxx"),
-                       F.col("_dminx") - F.col("_qmaxx")),
-        )
-        gapy = F.greatest(
-            F.lit(0.0),
-            F.greatest(F.col("_qminy") - F.col("_dmaxy"),
-                       F.col("_dminy") - F.col("_qmaxy")),
-        )
         cand = (
             # hash-build on the QUERY side (small per round; the data side
             # is the big exploded relation — building its hash relation ran
             # out of executor build memory at sf0.1)
-            qc.hint("shuffle_hash").join(dc, "cell_id")
-            .filter(gapx * gapx + gapy * gapy <= F.lit(R * R))
-            .filter(
-                _ref_cell_col(
-                    grid,
-                    F.greatest(F.col("_qminx") - F.lit(R), F.col("_dminx")),
-                    F.greatest(F.col("_qminy") - F.lit(R), F.col("_dminy")),
-                ) == F.col("cell_id")
-            )
-            .withColumn("dist2", distance2_refine_udf()(F.col(d_wkb), F.col(q_wkb)))
+            _tiled(active, q_id, q_wkb, grid, "_q", expand=R)
+            .hint("shuffle_hash").join(dc, "cell_id")
+            .filter(_pair_filter(grid, "_q", "_d", R))
+            .withColumn("dist2", dist2(F.col(d_wkb), F.col(q_wkb)))
         )
         # materialize the round's candidate pipeline ONCE: retirement
         # stats, the done chunk, and the active-set update all read this

@@ -19,14 +19,23 @@ from ..kernels.envelope import envelopes_of_wkb
 from .derive import morton_sql_expr
 
 
-def cell_col(grid: Grid, x: str = "x", y: str = "y") -> Column:
+def cell_xy(grid: Grid, x: str | Column, y: str | Column) -> tuple[Column, Column]:
+    """Native (JVM) clamped floor cell indices (ix, iy) of a coordinate
+    pair; ``x``/``y`` are column names or Column expressions. Coordinates
+    outside the grid extent clamp into the edge cells."""
+
+    def _index(v, origin: float, size: float) -> Column:
+        v = F.col(v) if isinstance(v, str) else v
+        i = F.floor((v - F.lit(origin)) / F.lit(size)).cast("long")
+        return F.greatest(F.lit(0), F.least(F.lit(grid.n - 1), i))
+
+    return _index(x, grid.minx, grid.cell_w), _index(y, grid.miny, grid.cell_h)
+
+
+def cell_col(grid: Grid, x: str | Column = "x", y: str | Column = "y") -> Column:
     """Native (JVM) cell-id projection: iy * n + ix with clamping."""
-    n = grid.n
-    ix = F.floor((F.col(x) - F.lit(grid.minx)) / F.lit(grid.cell_w)).cast("long")
-    iy = F.floor((F.col(y) - F.lit(grid.miny)) / F.lit(grid.cell_h)).cast("long")
-    ix = F.greatest(F.lit(0), F.least(F.lit(n - 1), ix))
-    iy = F.greatest(F.lit(0), F.least(F.lit(n - 1), iy))
-    return (iy * n + ix).cast("long")
+    ix, iy = cell_xy(grid, x, y)
+    return (iy * grid.n + ix).cast("long")
 
 
 def with_cell_id(df: DataFrame, grid: Grid, x: str = "x", y: str = "y",
@@ -82,14 +91,8 @@ def explode_cover_native(df: DataFrame, grid: Grid, env: str = "_env",
     envelope UDF (observed in the physical plan).
     """
     n = grid.n
-
-    def _clamp(c):
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), c))
-
-    ix_lo = _clamp(F.floor((F.col(f"{env}.minx") - F.lit(grid.minx)) / F.lit(grid.cell_w)).cast("long"))
-    ix_hi = _clamp(F.floor((F.col(f"{env}.maxx") - F.lit(grid.minx)) / F.lit(grid.cell_w)).cast("long"))
-    iy_lo = _clamp(F.floor((F.col(f"{env}.miny") - F.lit(grid.miny)) / F.lit(grid.cell_h)).cast("long"))
-    iy_hi = _clamp(F.floor((F.col(f"{env}.maxy") - F.lit(grid.miny)) / F.lit(grid.cell_h)).cast("long"))
+    ix_lo, iy_lo = cell_xy(grid, f"{env}.minx", f"{env}.miny")
+    ix_hi, iy_hi = cell_xy(grid, f"{env}.maxx", f"{env}.maxy")
     is_nan = F.isnan(F.col(f"{env}.minx"))
     empty = F.array().cast("array<bigint>")
     return (

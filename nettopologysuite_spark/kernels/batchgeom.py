@@ -22,6 +22,11 @@ then segment intersection).
 little-endian points / linestrings / single-ring polygons — the shape
 synthetic tiles and rects take) with one numpy buffer reinterpretation,
 zero per-row Python; mixed batches fall back to the per-row parser.
+
+The join refines call one entry point, ``batch_predicate``: it routes each
+DE-9IM predicate to these passes (intersects, covers/contains, the
+interior/interior and line-probe compositions) and leaves only mixed or
+ambiguous rows to the exact relate kernel.
 """
 
 from __future__ import annotations
@@ -736,10 +741,11 @@ def batch_interiors_intersect(
     Exact except for the measure-zero configuration where boundaries cross
     transversally ONLY through shared vertices with every vertex/midpoint
     probe landing exactly on the other boundary — the noded-midpoint case
-    of the scalar relate kernel (``kernels/relate.py``), which remains the
-    exact path via ``exact_relate=True``. The join workloads' snapped
-    rectangles and octagons never produce it (corners properly cross or a
-    midpoint lands interior); property-tested against the scalar kernel.
+    of the scalar relate kernel (``kernels/relate.py``), which
+    ``evaluate_predicate`` still answers exactly. The join workloads'
+    snapped rectangles and octagons never produce it (corners properly
+    cross or a midpoint lands interior); property-tested against the
+    scalar kernel through ``batch_predicate``.
     """
     from .pip import INTERIOR
     from .predicates import interior_point
@@ -1167,3 +1173,128 @@ def batch_line_im_probes(
     amb[(scnt == 0) & (vcnt > 0)] = True
     amb &= ~(ii & ei)  # fully-decided rows never need escalation
     return ii, ei, amb
+
+
+# ---------------------------------------------------------------------------
+# one batched predicate: predicate(container, row) for the WKB join refines
+# ---------------------------------------------------------------------------
+
+_IM_PREDICATES = ("touches", "overlaps", "equalstopo", "equals", "crosses")
+
+
+def _shares_segment(gb: GeomBatch, rows: np.ndarray, pc: PreparedRight) -> np.ndarray:
+    """Per row: some DIAGONAL segment of the row equals (in either
+    direction) a segment of the container. The midpoint of a shared edge
+    lies on both boundaries, but on a diagonal with non-representable
+    coordinates the computed midpoint falls an ulp to either side, so the
+    midpoint probes of the covers / II passes cannot classify it. An
+    axis-parallel midpoint keeps the shared ordinate exactly and stays on
+    the edge."""
+    out = np.zeros(len(rows), dtype=bool)
+    scnt = gb.s_start[rows + 1] - gb.s_start[rows]
+    sidx, sowner = _ranges_concat(gb.s_start[rows], scnt)
+    diag = (gb.sax[sidx] != gb.sbx[sidx]) & (gb.say[sidx] != gb.sby[sidx])
+    sidx, sowner = sidx[diag], sowner[diag]
+    nb = len(pc.rax)
+    if not len(sidx) or not nb:
+        return out
+    bx1 = pc.rax[None, :]; by1 = pc.ray[None, :]
+    bx2 = pc.rbx[None, :]; by2 = pc.rby[None, :]
+    same = np.zeros(len(sidx), dtype=bool)
+    step = max(1, _SEG_CHUNK // nb)
+    for s in range(0, len(sidx), step):
+        k = sidx[s:s + step]
+        ax1 = gb.sax[k][:, None]; ay1 = gb.say[k][:, None]
+        ax2 = gb.sbx[k][:, None]; ay2 = gb.sby[k][:, None]
+        eq = ((ax1 == bx1) & (ay1 == by1) & (ax2 == bx2) & (ay2 == by2)) | (
+            (ax1 == bx2) & (ay1 == by2) & (ax2 == bx1) & (ay2 == by1))
+        same[s:s + step] = eq.any(axis=1)
+    out[sowner[same]] = True
+    return out
+
+
+def _areal_im(gb: GeomBatch, rows: np.ndarray, pc: PreparedRight,
+              predicate: str, geom_of) -> np.ndarray:
+    """predicate(pc, gb[i]) for pure-polygonal rows against a pure-polygonal
+    container, composed from the batched II and covers passes."""
+    res = np.zeros(len(rows), dtype=bool)
+    if predicate == "touches":
+        hit = np.flatnonzero(batch_intersects(gb, rows, pc))
+        res[hit] = ~batch_interiors_intersect(gb, rows[hit], pc, geom_of=geom_of)
+    elif predicate in ("equalstopo", "equals"):
+        hit = np.flatnonzero(batch_covers_rights(gb, rows, pc))
+        res[hit] = batch_covers_right(gb, rows[hit], pc.geom)
+    elif predicate == "overlaps":
+        hit = np.flatnonzero(batch_interiors_intersect(gb, rows, pc, geom_of=geom_of))
+        res[hit] = (~batch_covers_rights(gb, rows[hit], pc)
+                    & ~batch_covers_right(gb, rows[hit], pc.geom))
+    # crosses(areal, areal) ≡ False by the dimension rule
+    return res
+
+
+def batch_predicate(
+    gb: GeomBatch,
+    idx: np.ndarray,
+    container: PreparedRight,
+    predicate: str,
+    geom_of,
+) -> np.ndarray:
+    """predicate(container, gb[i]) for every row index in ``idx`` — the one
+    batched predicate behind every WKB join refine. As in NTS each
+    predicate has one meaning (``relate`` plus its DE-9IM pattern); the
+    container plays the prepared role of ``Geometries/Prepared`` and the
+    rows are probed in whole-array passes:
+
+    - ``intersects``          → ``batch_intersects``
+    - ``covers``/``contains`` against a pure-polygonal container →
+      ``batch_covers_rights``
+    - ``touches``/``overlaps``/``equalstopo``/``crosses`` against a
+      pure-polygonal container:
+
+      - pure-polygonal rows compose from the II and covers passes:
+        touches = intersects ∧ ¬II, overlaps = II ∧ ¬covers either way,
+        equalstopo = covers both ways, crosses = False (dimension rule);
+      - pure-line rows: overlaps/equalstopo = False (dimension rule);
+        touches = intersects ∧ ¬II and crosses = II ∧ EI decide through
+        ``batch_line_im_probes``.
+
+    Everything else — mixed or point rows, probe-ambiguous lines, rows
+    sharing a diagonal edge with the container (``_shares_segment``), a
+    non-polygonal or mixed container, any other predicate — is answered by
+    the exact relate kernel, ``evaluate_predicate(predicate, container.geom,
+    geom_of(i))``; a row whose ``geom_of`` is None stays False. The
+    touches, overlaps, equalstopo and crosses answers are symmetric, so
+    callers may put either side of a pair in the container role.
+    """
+    from .predicates import evaluate_predicate
+
+    idx = np.asarray(idx, dtype=np.int64)
+    if predicate == "intersects":
+        return batch_intersects(gb, idx, container)
+    out = np.zeros(len(idx), dtype=bool)
+    scalar = np.ones(len(idx), dtype=bool)  # rows left to the relate kernel
+    if container.pure_poly and predicate in ("covers", "contains", *_IM_PREDICATES):
+        batched = ~_shares_segment(gb, idx, container)
+        if predicate in ("covers", "contains"):
+            k = np.flatnonzero(batched)
+            out[k] = batch_covers_rights(gb, idx[k], container,
+                                         contains=predicate == "contains", geom_of=geom_of)
+            scalar[k] = False
+        else:
+            poly = np.flatnonzero(gb.pure_poly[idx] & batched)
+            out[poly] = _areal_im(gb, idx[poly], container, predicate, geom_of)
+            line = np.flatnonzero(gb.pure_line[idx])
+            scalar[poly] = scalar[line] = False
+            if len(line) and predicate in ("touches", "crosses"):
+                ii, ei, amb = batch_line_im_probes(gb, idx[line], container)
+                dec = line[~amb]
+                if predicate == "touches":
+                    out[dec] = batch_intersects(gb, idx[dec], container) & ~ii[~amb]
+                else:
+                    out[dec] = ii[~amb] & ei[~amb]
+                scalar[line[amb]] = True
+    for k in np.flatnonzero(scalar):
+        g = geom_of(int(idx[k]))
+        if g is not None:
+            out[k] = evaluate_predicate(predicate, container.geom, g)
+    return out

@@ -7,6 +7,7 @@ import sys
 from pathlib import Path
 
 import numpy as np
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -301,7 +302,10 @@ def test_batch_distance2_matches_facet_distance():
 
 from nettopologysuite_spark.kernels.batchgeom import (  # noqa: E402
     batch_interiors_intersect,
+    batch_predicate,
 )
+from nettopologysuite_spark.kernels.geom import MULTIPOLYGON, wkt_dumps  # noqa: E402
+from nettopologysuite_spark.kernels.relate import relate_predicate  # noqa: E402
 
 
 def _snapped_rect(rng):
@@ -338,55 +342,97 @@ def test_batch_interiors_intersect_matches_relate_kernel():
         for i, g in enumerate(lefts):
             exp = (evaluate_predicate("intersects", g, right)
                    and not evaluate_predicate("touches", g, right))
-            assert bool(got[i]) == exp, (trial, i, g.wkt(), right.wkt())
+            assert bool(got[i]) == exp, (trial, i, wkt_dumps(g), wkt_dumps(right))
             total += 1
             hits += bool(exp)
     assert total > 1000 and hits > 50
 
 
-def test_batched_im_compositions_match_scalar_predicates():
-    """touches = intersects ∧ ¬II; overlaps = II ∧ ¬covers either way;
-    equalstopo = covers both ways — the compositions pair_refine_udf /
-    _batched_pair_eval run for pure-polygonal pairs, vs the scalar
-    relate kernel."""
+def _rect(x, y, w, h):
+    return polygon([(x, y), (x + w, y), (x + w, y + h), (x, y + h), (x, y)])
+
+
+def _multipolygon(rng):
+    """Two disjoint snapped rects: one valid two-part MULTIPOLYGON."""
+    x, y = (float(v) for v in rng.integers(0, 14, 2))
+    w, h = 1 + int(rng.integers(0, 3)), 1 + int(rng.integers(0, 2))
+    return multi(MULTIPOLYGON, [_rect(x, y, w, h), _rect(x + w + 2, y, 2, h + 1)])
+
+
+def _collection(rng):
+    """GC(polygon, line, point) — a mixed-dimension row or container."""
+    return multi(GEOMETRYCOLLECTION, [
+        _snapped_rect(rng), _rand_geom(rng, 1), _rand_geom(rng, 0),
+    ])
+
+
+_ROW_KINDS = {
+    "point": lambda rng: _rand_geom(rng, 0),
+    "line": lambda rng: _rand_geom(rng, 1),
+    "polygon": lambda rng: _rand_poly(rng, int(rng.integers(1, 4))),
+    "holed": _poly_with_hole,
+    "multipolygon": _multipolygon,
+    "collection": _collection,
+}
+_CONTAINERS = {  # polygonal first, then non-polygonal
+    "rect": _snapped_rect,
+    "holed": _poly_with_hole,
+    "octagon": lambda rng: _rand_geom(rng, 3),
+    "multipolygon": _multipolygon,
+    "line": lambda rng: _rand_geom(rng, 1),
+    "point": lambda rng: _rand_geom(rng, 0),
+    "collection": _collection,
+}
+_SYMMETRIC = ("intersects", "touches", "overlaps", "equalstopo", "crosses")
+
+
+def _planted_rows(c):
+    """Rows in exact contact with container ``c``: c itself (equal), rects
+    sharing c's right envelope edge and its upper-right envelope corner
+    (edge and corner touches for rect containers), its envelope edge as a
+    line (boundary-collinear), and its first vertex as a point (on the
+    boundary)."""
+    x0, y0, x1, y1 = c.envelope()
+    v = c.all_coords()[0]
+    return [
+        c,
+        _rect(x1, y0, 2.0, max(y1 - y0, 1.0)),
+        _rect(x1, y1, 1.0, 1.0),
+        linestring([(x1, y0), (x1, y1)]) if y1 > y0 else linestring([(x0, y0), (x1 + 1, y0)]),
+        point(float(v[0]), float(v[1])),
+    ]
+
+
+@pytest.mark.parametrize("predicate", [
+    "intersects", "covers", "contains", "touches", "overlaps", "equalstopo", "crosses",
+])
+def test_batch_predicate_matches_relate(predicate):
+    """batch_predicate(container, row) ≡ relate_predicate(container, row)
+    for every row kind (point, line, polygon, holed polygon, multipolygon,
+    mixed collection) against polygonal and non-polygonal containers; the
+    symmetric predicates also equal relate_predicate(row, container). Folds
+    in the pure-polygonal compositions (touches = intersects ∧ ¬II,
+    overlaps = II ∧ ¬covers either way, equalstopo = covers both ways)."""
     rng = np.random.default_rng(67)
-    counts = {"touches": 0, "overlaps": 0, "equalstopo": 0}
-    for trial in range(30):
-        lefts = [_rand_poly(rng, trial) for _ in range(25)]
-        if trial % 5 == 0:
-            lefts += [lefts[0]]  # planted topological equal
-        right = lefts[0] if trial % 5 == 0 else _rand_poly(rng, trial)
-        if trial % 5 == 2:
-            # planted touch pairs: snapped right + edge/corner neighbours
-            x1, y1 = float(rng.integers(0, 20)), float(rng.integers(0, 20))
-            w, h = 1 + int(rng.integers(0, 3)), 1 + int(rng.integers(0, 2))
-            right = polygon([(x1, y1), (x1 + w, y1), (x1 + w, y1 + h),
-                             (x1, y1 + h), (x1, y1)])
-            lefts += [
-                polygon([(x1 + w, y1), (x1 + w + 2, y1), (x1 + w + 2, y1 + 1),
-                         (x1 + w, y1 + 1), (x1 + w, y1)]),          # edge
-                polygon([(x1 + w, y1 + h), (x1 + w + 1, y1 + h),
-                         (x1 + w + 1, y1 + h + 1), (x1 + w, y1 + h + 1),
-                         (x1 + w, y1 + h)]),                         # corner
-            ]
-        gb = GeomBatch.from_wkb([wkb_dumps(g) for g in lefts])
-        idx = np.arange(len(lefts), dtype=np.int64)
-        geom_of = lambda k: lefts[k]  # noqa: E731
-        inter = batch_intersects(gb, idx, right)
-        ii = batch_interiors_intersect(gb, idx, right, geom_of=geom_of)
-        cov_lr = batch_covers_right(gb, idx, right)      # left covers right
-        cov_rl = batch_covers_rights(gb, idx, right)     # right covers left
-        got = {
-            "touches": inter & ~ii,
-            "overlaps": ii & ~cov_lr & ~cov_rl,
-            "equalstopo": cov_lr & cov_rl,
-        }
-        for pred, vec in got.items():
-            for i, g in enumerate(lefts):
-                exp = evaluate_predicate(pred, g, right)
-                assert bool(vec[i]) == exp, (pred, trial, i, g.wkt(), right.wkt())
-                counts[pred] += bool(exp)
-    assert all(v > 5 for v in counts.values()), counts
+    hits = total = 0
+    for trial in range(3):
+        for cname, make in _CONTAINERS.items():
+            c = make(rng)
+            rows = [kind(rng) for _ in range(3) for kind in _ROW_KINDS.values()]
+            rows += _planted_rows(c)
+            gb = GeomBatch.from_wkb([wkb_dumps(g) for g in rows])
+            got = batch_predicate(
+                gb, np.arange(len(rows), dtype=np.int64), PreparedRight(c),
+                predicate, lambda k: rows[k],
+            )
+            for i, g in enumerate(rows):
+                exp = relate_predicate(c, g, predicate)
+                assert bool(got[i]) == exp, (predicate, cname, i, wkt_dumps(g), wkt_dumps(c))
+                if predicate in _SYMMETRIC:
+                    assert relate_predicate(g, c, predicate) == exp, (cname, wkt_dumps(g))
+                hits += exp
+                total += 1
+    assert hits >= 5, (predicate, hits, total)
 
 
 def test_batch_interiors_intersect_edge_cases():

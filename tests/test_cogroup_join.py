@@ -5,6 +5,8 @@ exactly once."""
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E  # noqa: E402
@@ -43,16 +45,19 @@ def test_cogroup_join_matches_bruteforce_and_broadcast(spark, sf_dir):
     assert got == bc_got
 
 
-def test_cogroup_join_mixed_types_exact_relate(spark):
-    """Points/lines/polygons on the left, polygons on the right, full relate
-    kernel — touch and containment cases covered."""
+@pytest.mark.parametrize(
+    "predicate", ["intersects", "touches", "crosses", "covers", "within", "overlaps"]
+)
+def test_cogroup_join_mixed_types(spark, predicate):
+    """Points/lines/polygons on the left, polygons on the right: the batched
+    refine must equal the relate kernel per predicate — touch, crossing,
+    overlap and containment cases covered."""
     from nettopologysuite_spark.engine.joins import spatial_join_bigbig
     from nettopologysuite_spark.kernels.geom import (
         linestring,
         point,
         polygon,
         wkb_dumps,
-        wkb_loads,
     )
     from nettopologysuite_spark.kernels.relate import relate_predicate
     from nettopologysuite_spark.kernels.cells import Grid
@@ -64,8 +69,11 @@ def test_cogroup_join_mixed_types_exact_relate(spark):
         ("p-out", point(90.0, 90.0)),
         ("l-cross", linestring([(0.0, 10.0), (20.0, 10.0)])),
         ("l-touch", linestring([(14.0, 6.0), (14.0, 14.0)])),
+        ("l-inside", linestring([(8.0, 8.0), (12.0, 12.0)])),
         ("pg-overlap", polygon([(12.0, 8.0), (20.0, 8.0), (20.0, 12.0), (12.0, 12.0)])),
         ("pg-inside", polygon([(9.0, 9.0), (11.0, 9.0), (11.0, 11.0), (9.0, 11.0)])),
+        ("pg-edge", polygon([(14.0, 6.0), (18.0, 6.0), (18.0, 14.0), (14.0, 14.0)])),
+        ("pg-cover", polygon([(56.0, 56.0), (68.0, 56.0), (68.0, 68.0), (56.0, 68.0)])),
         ("pg-far", polygon([(60.0, 60.0), (62.0, 60.0), (62.0, 62.0), (60.0, 62.0)])),
     ]
     rights = [
@@ -78,17 +86,17 @@ def test_cogroup_join_mixed_types_exact_relate(spark):
     rdf = spark.createDataFrame(
         [(i, wkb_dumps(g)) for i, g in rights], "r_id string, r_wkb binary"
     )
-    out = spatial_join_bigbig(ldf, rdf, grid, "intersects", exact_relate=True)
-    got = {(r["l_id"], r["r_id"]) for r in out.collect()}
+    out = spatial_join_bigbig(ldf, rdf, grid, predicate)
+    got_rows = [(r["l_id"], r["r_id"]) for r in out.collect()]
     expect = {
         (li, ri)
         for li, lg in lefts
         for ri, rg in rights
-        if relate_predicate(lg, rg, "intersects")
+        if relate_predicate(lg, rg, predicate)
     }
-    assert got == expect
-    assert ("p-bnd", "sq-a") in got and ("l-touch", "sq-a") in got
-    assert ("pg-far", "sq-b") in got
+    assert len(got_rows) == len(set(got_rows))
+    assert set(got_rows) == expect
+    assert expect, predicate  # every predicate has at least one true pair
 
 
 def test_bigbig_join_shuffle_path_exact(spark):
