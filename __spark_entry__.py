@@ -146,14 +146,19 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-local kNN with ring expansion — the scale path (work per query
-    bounded by local density); same result set and oracle as knn_join."""
-    from nettopologysuite_spark.engine.joins import knn_join_ring
+    bounded by local density): the driver-side query list lifted into a
+    DataFrame for ``knn_join_table``; same result set and oracle as
+    knn_join."""
+    from nettopologysuite_spark.engine.joins import knn_join_table
 
     pts = _event_points(spark, sf_dir)
     keys = _nation_keys(spark, sf_dir)
-    queries = [(k, float(derive.nation_center(k)[0]), float(derive.nation_center(k)[1]))
-               for k in keys]
-    return knn_join_ring(pts, queries, KNN_K, GRID)
+    queries = spark.createDataFrame(
+        [(k, float(derive.nation_center(k)[0]), float(derive.nation_center(k)[1]))
+         for k in keys],
+        "q_id long, qx double, qy double",
+    )
+    return knn_join_table(pts, queries, KNN_K, GRID)
 
 
 def _nation_queries_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,39 +44,61 @@ from .tiling import (
 # point-in-polygon join (the hot path)
 # ---------------------------------------------------------------------------
 
+# the predicates a candidate join answers: disjoint is not one, its pairs
+# are the envelope-disjoint ones that the cell join never generates
+_JOIN_PREDICATES = ("intersects", "covers", "contains", "touches", "within",
+                    "coveredby", "crosses", "overlaps", "equals", "equalstopo")
+
+
+def _check_predicate(predicate: str) -> None:
+    if predicate not in _JOIN_PREDICATES:
+        raise ValueError(f"a candidate join does not answer {predicate!r}")
+
+
+def _probe_points(prep, xs: np.ndarray, ys: np.ndarray, predicate: str) -> np.ndarray:
+    """predicate(polygon, point) for point arrays against one pack polygon's
+    ``PreparedPolygon`` / ``PreparedConvex`` — the one map of a predicate
+    onto the prepared probes (NTS ``PreparedGeometryFactory``'s one
+    contract): intersects / covers → covers, contains → contains, touches →
+    covers ∧ ¬contains; within, coveredby, crosses, overlaps and equals(topo)
+    are False by the dimension rule."""
+    if predicate in ("intersects", "covers"):
+        return prep.covers_points(xs, ys)
+    if predicate == "contains":
+        return prep.contains_points(xs, ys)
+    if predicate == "touches":
+        return prep.covers_points(xs, ys) & ~prep.contains_points(xs, ys)
+    return np.zeros(len(xs), dtype=bool)
+
+
 def pip_refine_udf(pack: PolygonPack, predicate: str = "covers"):
-    """Boolean pandas UDF (x, y, poly_id) → predicate(poly, point).
+    """Boolean pandas UDF (x, y, poly_id) → predicate(poly, point) for any
+    predicate of ``_JOIN_PREDICATES`` (``_probe_points``).
 
     Rows are grouped by poly_id inside each Arrow batch; each polygon's
     prepared structure evaluates its whole group in one vectorized call.
     """
-    if predicate not in ("covers", "contains", "intersects"):
-        raise ValueError(f"unsupported point predicate {predicate!r}")
+    _check_predicate(predicate)
 
     @pandas_udf("boolean")
     def _refine(x: pd.Series, y: pd.Series, poly_id: pd.Series) -> pd.Series:
         prepared = pack.prepared()
         xs = x.to_numpy(np.float64)
         ys = y.to_numpy(np.float64)
-        pids = poly_id.to_numpy(object)
         out = np.zeros(len(xs), dtype=bool)
-        codes, uniques = pd.factorize(pids)
+        codes, uniques = pd.factorize(poly_id.to_numpy(object))
         for j, pid in enumerate(uniques):
-            prep = prepared[pid]
             sel = codes == j
-            if predicate == "contains":
-                out[sel] = prep.contains_points(xs[sel], ys[sel])
-            else:  # covers / intersects coincide for point probes
-                out[sel] = prep.covers_points(xs[sel], ys[sel])
+            out[sel] = _probe_points(prepared[pid], xs[sel], ys[sel], predicate)
         return pd.Series(out)
 
     return _refine
 
 
-def cover_cells_df(spark: SparkSession, pack: PolygonPack, grid: Grid,
-                   expand: float = 0.0) -> DataFrame:
-    rows = pack.cover_rows(grid, expand=expand)
-    return spark.createDataFrame(rows, "cell_id long, poly_id string")
+def cover_cells_df(spark: SparkSession, pack: PolygonPack, grid: Grid) -> DataFrame:
+    """The (cell_id, poly_id) cover relation of the pack — every cell whose
+    box meets a polygon's envelope; the small side of the PIP joins."""
+    return spark.createDataFrame(pack.cover_rows(grid), "cell_id long, poly_id string")
 
 
 def pip_join_points(
@@ -103,23 +125,21 @@ def pip_join_points_sortmerge(
     x: str = "x",
     y: str = "y",
     hot_cell_threshold: int = 50_000,
-    id_col: str | None = None,
+    *,
+    id_col: str,
 ) -> DataFrame:
     """Shuffle-based variant of the PIP join with explicit hot-cell salting.
 
     For polygon packs too large to broadcast, both sides shuffle on cell_id.
     Skewed cells (urban-hotspot analog) would then hammer single reducers,
     so cells whose point count exceeds ``hot_cell_threshold`` are salted:
-    points get salt = pmod(hash(id), k) with k = ceil(count/threshold), and
-    the cover rows of hot cells replicate once per salt — output is
+    points get salt = pmod(hash(id_col), k) with k = ceil(count/threshold),
+    and the cover rows of hot cells replicate once per salt — output is
     IDENTICAL to the broadcast path (property-tested), each pair still
     produced exactly once. AQE skew-join remains on as backstop.
     """
     spark = points.sparkSession
-    # persist the tiled projection: the hot-cell sampling pass and the join
-    # probe the SAME materialization — the big side is scanned from source
-    # exactly once, instead of two full parquet scans
-    pts = with_cell_id(points, grid, x, y).persist()
+    pts = with_cell_id(points, grid, x, y)
     # 1. salt factors from a SAMPLED sketch (fixed seed → deterministic),
     #    kept as a DataFrame — no exact count, no collect to the driver.
     #    Correctness never depends on the estimate: both sides derive salt
@@ -139,22 +159,19 @@ def pip_join_points_sortmerge(
     )
     # 2. salted cover relation built as a DATAFRAME: replicate hot cells
     #    with a native sequence() explode, not a driver loop
-    cover_base = spark.createDataFrame(
-        list(pack.cover_rows(grid)), "cell_id long, poly_id string"
-    )
     cover = (
-        cover_base.join(F.broadcast(hot), "cell_id", "left")
+        cover_cells_df(spark, pack, grid)
+        .join(F.broadcast(hot), "cell_id", "left")
         .withColumn("_k", F.coalesce(F.col("k"), F.lit(1)))
         .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_k") - 1)))
         .withColumn("salt", F.col("_salt").cast("int"))
         .drop("k", "_k", "_salt")
     )
     # 3. salted points (same hot relation → consistent salt domain)
-    salt_src = F.xxhash64(F.col(id_col)) if id_col else F.xxhash64(F.col(x), F.col(y))
     pts_salted = (
         pts.join(F.broadcast(hot), "cell_id", "left")
         .withColumn("salt", F.when(F.col("k").isNull(), F.lit(0))
-                    .otherwise(F.pmod(salt_src, F.col("k"))).cast("int"))
+                    .otherwise(F.pmod(F.xxhash64(F.col(id_col)), F.col("k"))).cast("int"))
         .drop("k")
     )
     # 4. shuffle join on (cell_id, salt) — sort-merge, no broadcast
@@ -165,8 +182,10 @@ def pip_join_points_sortmerge(
     return out.drop("salt")
 
 
-def _adaptive_cover_rows(pack: PolygonPack, grid: Grid,
-                         max_cells: int = 1024) -> list[tuple]:
+def _adaptive_cover_rows(pack: PolygonPack, grid: Grid) -> list[tuple]:
+    """(level, cell, poly_id, interior) rows of the multi-level cover — the
+    S2 RegionCoverer analog (see ``kernels.adaptive``), built on the driver:
+    the polygon pack is the small broadcast side."""
     from ..kernels.adaptive import adaptive_cover
     from ..kernels.geom import wkb_loads
 
@@ -174,24 +193,12 @@ def _adaptive_cover_rows(pack: PolygonPack, grid: Grid,
     rows: list[tuple] = []
     for e in pack.entries:
         lv, cl, it = adaptive_cover(
-            wkb_loads(e.wkb), grid, max_cells=max_cells,
-            prep=prepared[e.poly_id],
+            wkb_loads(e.wkb), grid, prep=prepared[e.poly_id],
         )
         rows.extend(
             (int(l), int(c), e.poly_id, bool(i)) for l, c, i in zip(lv, cl, it)
         )
     return rows
-
-
-def adaptive_cover_df(spark: SparkSession, pack: PolygonPack, grid: Grid,
-                      max_cells: int = 1024) -> DataFrame:
-    """Multi-level (level, cell, poly_id, interior) cover relation — the S2
-    RegionCoverer analog (see ``kernels.adaptive``). Driver-side like
-    ``cover_cells_df``: the polygon pack is the small broadcast side."""
-    return spark.createDataFrame(
-        _adaptive_cover_rows(pack, grid, max_cells),
-        "level int, cell long, poly_id string, interior boolean",
-    )
 
 
 def pip_join_points_adaptive(
@@ -201,7 +208,6 @@ def pip_join_points_adaptive(
     predicate: str = "covers",
     x: str = "x",
     y: str = "y",
-    max_cells: int = 1024,
 ) -> DataFrame:
     """PIP join through the adaptive multi-level cover: candidates falling
     in INTERIOR cover cells are accepted with zero Python — only boundary-
@@ -217,16 +223,22 @@ def pip_join_points_adaptive(
     At 100 TB this converts the refine cost from O(all candidates) to
     O(boundary-cell candidates) — for large polygons the overwhelming
     majority of matches are interior and never cross into Python — while
-    bounding the cover size of arbitrarily large polygons to ``max_cells``
-    rows (the envelope cover grows with polygon area).
+    bounding the cover size of arbitrarily large polygons to
+    ``adaptive_cover``'s 1024-cell budget (the envelope cover grows with
+    polygon area).
 
     The interior fast path additionally requires the point to lie inside
     the grid extent (a native range condition): out-of-extent points clamp
     into edge cells during assignment, so only the exact refine may accept
     them.
+
+    The fast path answers intersects / covers / contains; any other
+    predicate raises ``ValueError``.
     """
+    if predicate not in ("intersects", "covers", "contains"):
+        raise ValueError(f"the adaptive PIP join does not answer {predicate!r}")
     spark = points.sparkSession
-    rows = _adaptive_cover_rows(pack, grid, max_cells=max_cells)
+    rows = _adaptive_cover_rows(pack, grid)
     cover = spark.createDataFrame(
         rows, "level int, cell long, poly_id string, interior boolean"
     )
@@ -282,11 +294,14 @@ def within_distance_join_points(
     tiny) broadcast-joined on the point's cell. Refinement is a *native*
     squared-distance comparison — stays in whole-stage codegen, no Python.
     (IsWithinDistance semantics, Geometry.cs:468; distance join = envelope-
-    expanded cell join per SURVEY.md §2.8.)
+    expanded cell join per SURVEY.md §2.8.) A center with a negative radius
+    matches nothing: its envelope distance to any point is ≥ 0 > r.
     """
     spark = points.sparkSession
     rows = []
     for q_id, cx, cy, r in centers:
+        if r < 0:
+            continue
         for c in grid.cover_envelope(cx - r, cy - r, cx + r, cy + r):
             rows.append((int(c), q_id, float(cx), float(cy), float(r)))
     cover = spark.createDataFrame(
@@ -313,13 +328,15 @@ def knn_join_points(
 ) -> DataFrame:
     """k nearest points per query, ties broken by (distance², id).
 
+    Points or queries with a NULL or NaN coordinate join nothing.
+
     Two-phase top-k: a mapInPandas pass keeps the per-partition best k per
     query (vectorized; exact tie handling at the k-th distance), then a
     window over the tiny survivor set ranks globally. The survivor set is
     ≤ partitions × |queries| × k rows — the shuffle is negligible at any
     scale, and the big side is scanned exactly once.
     """
-    qarr = np.array([(q[1], q[2]) for q in queries], dtype=np.float64)
+    qarr = np.array([(q[1], q[2]) for q in queries], dtype=np.float64).reshape(-1, 2)
     qids = np.array([q[0] for q in queries], dtype=np.int64)
     nq = len(qids)
     schema = f"q_id long, {id_col} long, d2 double"
@@ -334,9 +351,12 @@ def knn_join_points(
             dx = px[:, None] - qarr[None, :, 0]
             dy = py[:, None] - qarr[None, :, 1]
             d2 = dx * dx + dy * dy  # (B, nq)
+            # a NULL / NaN coordinate has no distance: its NaN would sort
+            # into the partition and hide every real candidate
+            has_d = ~np.isnan(d2)
             for j in range(nq):
-                cd = np.concatenate([best_d2[j], d2[:, j]])
-                ci = np.concatenate([best_id[j], pid])
+                cd = np.concatenate([best_d2[j], d2[has_d[:, j], j]])
+                ci = np.concatenate([best_id[j], pid[has_d[:, j]]])
                 if len(cd) > k:
                     # exact k-th with ties: keep strictly-smaller + all equal
                     kth = np.partition(cd, k - 1)[k - 1]
@@ -364,35 +384,6 @@ def knn_join_points(
     )
 
 
-def knn_join_ring(
-    points: DataFrame,
-    queries: list[tuple[int, float, float]],  # (q_id, qx, qy)
-    k: int,
-    grid: Grid,
-    id_col: str = "pid",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
-    """Cell-local kNN for a driver-side query LIST — a thin wrapper over
-    the fully-native annulus engine (:func:`knn_join_table`), kept for API
-    parity (SURVEY §7 P6; the distributed analog of STRtree.cs:556
-    branch-and-bound).
-
-    The original implementation generated each Chebyshev ring's cell ids in
-    a driver-side Python loop (O(r²) cells per query per round plus a
-    ``createDataFrame`` per round); the table path explodes the same annuli
-    with native ``sequence()`` arithmetic, retires queries with a native
-    margin test, and returns the identical (q_id, rank, id, d²) rows — so
-    the list form now just lifts the queries into a DataFrame and
-    delegates."""
-    spark = points.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(q), float(a), float(b)) for q, a, b in queries],
-        "q_id long, qx double, qy double",
-    )
-    return knn_join_table(points, qdf, k, grid, id_col=id_col, x=x, y=y)
-
-
 def within_distance_join_table(
     points: DataFrame,
     queries: DataFrame,  # (q_id, cx, cy, r)
@@ -412,9 +403,10 @@ def within_distance_join_table(
     (a grid cover is a rectangle of cell indices — pure Catalyst), the
     candidate join is a native equi-join on cell_id, and the refinement is
     a codegen squared-distance comparison. No Python anywhere.
-    (IsWithinDistance semantics, Geometry.cs:468.)
+    (IsWithinDistance semantics, Geometry.cs:468: a query with a negative
+    or NULL radius matches nothing.)
     """
-    q = queries.select(
+    q = queries.filter(F.col(radius) >= 0).select(
         F.col(q_id), F.col(cx), F.col(cy), F.col(radius),
         F.struct(
             (F.col(cx) - F.col(radius)).alias("minx"),
@@ -446,8 +438,8 @@ def knn_join_table(
     """kNN join with the query side a DATAFRAME — no collect() of query
     rows, ever; the driver coordinates only round counters (scalars).
 
-    Distributed ring expansion (the table form of ``knn_join_ring``; the
-    analog of ``Index/Strtree/STRtree.cs:556`` branch-and-bound, per query):
+    Distributed ring expansion (the analog of ``Index/Strtree/STRtree.cs:556``
+    branch-and-bound, per query):
 
     - Points tile once, repartition by cell_id and persist: every round's
       candidate join reuses that partitioning, so only the (shrinking)
@@ -468,7 +460,8 @@ def knn_join_table(
       production scale use a reliable checkpoint dir for fault tolerance.
 
     Work per query is proportional to LOCAL density; shuffles per round are
-    proportional to the active query set, never the point table.
+    proportional to the active query set, never the point table. Points or
+    queries with a NULL or NaN coordinate join nothing.
     """
     from pyspark.sql import Window
 
@@ -505,8 +498,11 @@ def knn_join_table(
         )
         dx = F.col(x) - F.col(qx)
         dy = F.col(y) - F.col(qy)
-        cand = pts.join(ring, "cell_id").select(
-            q_id, F.col(id_col), (dx * dx + dy * dy).alias("d2")
+        # a NULL / NaN coordinate has no distance (NULL would rank first)
+        cand = (
+            pts.join(ring, "cell_id")
+            .select(q_id, F.col(id_col), (dx * dx + dy * dy).alias("d2"))
+            .filter(F.col("d2").isNotNull() & ~F.isnan("d2"))
         )
         merged = cand if survivors is None else survivors.unionByName(cand)
         # localCheckpoint truncates lineage each round (constant planning
@@ -676,14 +672,11 @@ def _batched_pair_eval(pack: PolygonPack, predicate: str):
     polygon is the CONTAINER argument, matching ``pip_refine_udf``'s
     "predicate(poly, point)" convention. WKB parses once per row. Point rows
     evaluate through the pack's per-executor ``prepared()`` structure per
-    poly group (covers ≡ intersects, contains = interior-only, touches ⇔ on
-    the boundary, crosses / overlaps / equalsTopo ≡ False by the dimension
-    rules); extended rows go through ``batch_predicate`` over one columnar
-    batch of the Arrow batch's rows.
+    poly group (``_probe_points``); extended rows go through
+    ``batch_predicate`` over one columnar batch of the Arrow batch's rows.
     """
-    from ..kernels.batchgeom import _IM_PREDICATES, GeomBatch, PreparedRight, batch_predicate
+    from ..kernels.batchgeom import GeomBatch, PreparedRight, batch_predicate
     from ..kernels.geom import POINT, wkb_loads
-    from ..kernels.pip import BOUNDARY
 
     @pandas_udf("boolean")
     def _eval(wkb: pd.Series, poly_id: pd.Series) -> pd.Series:
@@ -701,13 +694,7 @@ def _batched_pair_eval(pack: PolygonPack, predicate: str):
             if len(idx):
                 xs = np.array([geoms_list[i].coords[0, 0] for i in idx])
                 ys = np.array([geoms_list[i].coords[0, 1] for i in idx])
-                prep = prepared[pid]
-                if predicate == "contains":
-                    out[idx] = prep.contains_points(xs, ys)
-                elif predicate == "touches":
-                    out[idx] = prep.locate(xs, ys) == BOUNDARY
-                elif predicate not in _IM_PREDICATES:
-                    out[idx] = prep.covers_points(xs, ys)
+                out[idx] = _probe_points(prepared[pid], xs, ys, predicate)
             idx = np.flatnonzero(sel & ~is_pt)
             if len(idx):
                 if ext_gb is None:
@@ -739,9 +726,13 @@ def spatial_join_wkb(
     intersection) is pure Catalyst, so a geometry replicated to k cells
     reaches the Python refine at most once per polygon, already matched to
     its reference cell.
+
+    ``predicate`` is any of ``_JOIN_PREDICATES``; disjoint raises
+    ``ValueError``.
     """
     from ..kernels.geom import wkb_loads
 
+    _check_predicate(predicate)
     spark = geoms.sparkSession
     env_by_pid = {e.poly_id: wkb_loads(e.wkb).envelope() for e in pack.entries}
     cover = spark.createDataFrame(
@@ -781,10 +772,12 @@ def pair_refine_udf(predicate: str = "intersects"):
     ``AbstractPreparedPolygonContains.cs`` role split): the LEFT for
     covers / contains, the RIGHT for within (→ contains) and coveredby
     (→ covers), and the right for the symmetric predicates (intersects,
-    touches, overlaps, equalstopo, crosses, disjoint).
+    touches, overlaps, equals / equalstopo, crosses). Disjoint and unknown
+    names raise ``ValueError`` (``_JOIN_PREDICATES``).
     """
     from ..kernels.batchgeom import batch_predicate
 
+    _check_predicate(predicate)
     pred, container_left = _CONTAINER_ROLE.get(predicate, (predicate, False))
     return _grouped_refine(
         lambda gb, rows, pc, geom_of: batch_predicate(gb, rows, pc, pred, geom_of),

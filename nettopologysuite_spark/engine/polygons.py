@@ -14,9 +14,6 @@ from __future__ import annotations
 import hashlib
 from dataclasses import dataclass
 
-import numpy as np
-
-from ..kernels.envelope import env_expand
 from ..kernels.geom import Geom, wkb_dumps, wkb_loads
 from ..kernels.pip import PreparedConvex, PreparedPolygon
 from ..kernels.cells import Grid
@@ -52,17 +49,13 @@ class PolygonPack:
         return len(self.entries)
 
     # -- driver-side: covering cells for the candidate join -----------------
-    def cover_rows(self, grid: Grid, expand: float = 0.0) -> list[tuple[int, str]]:
+    def cover_rows(self, grid: Grid) -> list[tuple[int, str]]:
         """(cell_id, poly_id) rows: every tile whose box intersects the
-        polygon's (optionally expanded) envelope. Over-coverage is fine —
-        the exact kernel refines; under-coverage would lose pairs."""
+        polygon's envelope. Over-coverage is fine — the exact kernel
+        refines; under-coverage would lose pairs."""
         rows: list[tuple[int, str]] = []
         for e in self.entries:
-            g = wkb_loads(e.wkb)
-            env = np.asarray(g.envelope())
-            if expand:
-                env = env_expand(env, expand)[0]
-            for c in grid.cover_envelope(env[0], env[1], env[2], env[3]):
+            for c in grid.cover_envelope(*wkb_loads(e.wkb).envelope()):
                 rows.append((int(c), e.poly_id))
         return rows
 

@@ -71,12 +71,3 @@ def envelopes_of_wkb(blobs) -> np.ndarray:
         g = wkb_loads(bytes(b))
         out[i] = g.envelope()
     return out
-
-
-def env_expand(env: np.ndarray, dist: float) -> np.ndarray:
-    env = np.atleast_2d(env).copy()
-    env[:, 0] -= dist
-    env[:, 1] -= dist
-    env[:, 2] += dist
-    env[:, 3] += dist
-    return env

@@ -307,27 +307,19 @@ def stream_pip_join(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Stream-static spatial ENRICHMENT join: a point stream against the
-    broadcast polygon pack — the streaming form of ``engine.joins.
-    pip_join_points`` and the most common ingest shape (tag each arriving
-    event with its containing zones). Stateless: tile-assign is the same
-    codegen projection, candidates come from the broadcast (cell_id →
-    poly_id) cover relation, and the exact refine is the same prepared-PIP
-    pandas UDF as the batch path — batch and stream agree row-for-row
-    (pytest gate), and a restart resumes from the source offsets with no
-    state store at all."""
-    from pyspark.sql import functions as F
-
-    from ..engine.joins import cover_cells_df, pip_refine_udf
+    broadcast polygon pack — ``engine.joins.pip_join_points`` applied to
+    the stream reader, the most common ingest shape (tag each arriving
+    event with its containing zones). Stateless: the tile-assign
+    projection, broadcast cover relation and prepared-PIP refine are the
+    batch path's own, so batch and stream agree row-for-row (pytest gate),
+    and a restart resumes from the source offsets with no state store at
+    all."""
+    from ..engine.joins import pip_join_points
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pts = reader.parquet(src_dir).withColumn("cell_id", cell_col(grid, x, y))
-    cover = cover_cells_df(spark, pack, grid)
-    cand = pts.join(F.broadcast(cover), "cell_id")
-    return cand.filter(
-        pip_refine_udf(pack, predicate)(F.col(x), F.col(y), F.col("poly_id"))
-    )
+    return pip_join_points(reader.parquet(src_dir), pack, grid, predicate, x, y)
 
 
 def stream_near_dedup(

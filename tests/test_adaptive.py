@@ -10,7 +10,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E  # noqa: E402
 from nettopologysuite_spark.engine.joins import (  # noqa: E402
-    adaptive_cover_df,
+    _adaptive_cover_rows,
     pip_join_points,
     pip_join_points_adaptive,
 )
@@ -147,7 +147,10 @@ def test_adaptive_interior_fraction(spark, sf_dir):
 
     pts = E._event_points(spark, sf_dir)
     pack = E._octagon_pack(E._nation_keys(spark, sf_dir))
-    cover = adaptive_cover_df(spark, pack, E.GRID)
+    cover = spark.createDataFrame(
+        _adaptive_cover_rows(pack, E.GRID),
+        "level int, cell long, poly_id string, interior boolean",
+    )
     n_int = cover.filter("interior").count()
     assert n_int > 0
     grid = E.GRID

@@ -1,6 +1,6 @@
 """DataFrame-query-side kNN / within-distance joins: exact vs brute force,
 including sparse regions that force multi-round ring expansion, and cache
-hygiene (no persisted frames left behind)."""
+hygiene (no persisted frames left behind by any point or pack join)."""
 
 import sys
 from pathlib import Path
@@ -338,3 +338,25 @@ def test_poly_poly_touches_matches_bruteforce(spark, sf_dir):
                 expect.add((r["pid"], pid))
     assert got == expect
     assert len(got) > 0
+
+
+# every __spark_entry__ query built on a point join or a polygon-pack join
+POINT_AND_PACK_JOIN_QUERIES = [
+    "pip_rect_join", "pip_convex_join", "pip_join_salted", "pip_join_adaptive",
+    "centroid_agg", "within_dist_join", "within_dist_join_df", "knn_join",
+    "knn_join_ring", "knn_join_df", "docs_pip_join", "docs_mixed_join",
+    "seg_cross_join", "zonal_stats",
+]
+
+
+def test_point_and_pack_join_queries_leave_no_cache(spark, sf_dir):
+    """A returned plan is lazy, so a join that persists an intermediate
+    cannot unpersist it; the cache manager must be empty after each query."""
+    import __spark_entry__ as E
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    queries = E.queries()
+    for name in POINT_AND_PACK_JOIN_QUERIES:
+        queries[name](spark, sf_dir).count()
+        assert cache.isEmpty(), name
