@@ -145,9 +145,9 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-local kNN with ring expansion — the scale path (work per query
-    bounded by local density): the driver-side query list lifted into a
-    DataFrame for ``knn_join_table``; same result set and oracle as
+    """Cell-local kNN in radius-doubling rounds — the scale path (work per
+    query bounded by local density): the driver-side query list lifted into
+    a DataFrame for ``knn_join_table``; same result set and oracle as
     knn_join."""
     from nettopologysuite_spark.engine.joins import knn_join_table
 
@@ -175,8 +175,9 @@ def _nation_queries_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_join_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN join with the QUERY SIDE A DATAFRAME (distributed ring expansion,
-    no collect of query rows) — same result set and oracle as knn_join."""
+    """kNN join with the QUERY SIDE A DATAFRAME (radius-doubling rounds over
+    the within-distance table join, no collect of query rows) — same result
+    set and oracle as knn_join."""
     from nettopologysuite_spark.engine.joins import knn_join_table
 
     pts = _event_points(spark, sf_dir)
@@ -612,9 +613,10 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_join_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extended-geometry kNN join: for each nation octagon (query), the 5
-    nearest event rectangles by facet distance — doubling-radius rounds on
-    the big×big machinery, vectorized batch_distance2 refine, STRtree-style
-    retirement (k-th distance ≤ examined radius)."""
+    nearest event rectangles by facet distance — the radius-doubling rounds
+    shared with ``knn_join_table`` over the big×big machinery, vectorized
+    batch_distance2 refine, STRtree-style retirement (k-th distance ≤
+    examined radius)."""
     from nettopologysuite_spark.engine.joins import knn_join_geom
     from nettopologysuite_spark.kernels.geom import wkb_dumps
 
@@ -1096,7 +1098,7 @@ def _grams_cte() -> str:
     return (
         "WITH g AS (SELECT DISTINCT d.doc_id, substr(d.text, i.i, 3) AS gram "
         "FROM documents d JOIN generate_series(1, 1000) i(i) "
-        "ON i.i <= GREATEST(LENGTH(d.text) - 2, 1)), "
+        "ON i.i <= GREATEST(LENGTH(d.text) - 2, 1) WHERE d.text IS NOT NULL), "
         "sizes AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY 1)"
     )
 

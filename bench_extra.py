@@ -80,20 +80,26 @@ def cmd_plans(outdir: str, names: list[str]) -> None:
 
 
 def cmd_profile(name: str) -> None:
-    """Single query with the UI's underlying metrics: run once warm, then
-    timed, printing per-job wall via a listener-free approach (job ids +
-    wall between actions show up in the app's status tracker)."""
+    """Single query, REPS times in one session: per rep, the wall time of
+    building the DataFrame (including any eager jobs the query function
+    runs) and of executing it into the noop sink, plus the number of Spark
+    jobs the rep ran (each rep runs under its own job group, counted from
+    the status tracker)."""
     import __spark_entry__ as E
 
     spark = _spark()
+    sc = spark.sparkContext
     fn = E.queries()[name]
     for rep in range(REPS):
+        group = f"profile-{name}-{rep}"
+        sc.setJobGroup(group, name)
         t0 = time.time()
         df = fn(spark, SF_DIR)
         t1 = time.time()
         df.write.format("noop").mode("overwrite").save()
         t2 = time.time()
-        print(f"rep{rep}: build {t1 - t0:.3f}s  execute {t2 - t1:.3f}s")
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        print(f"rep{rep}: build {t1 - t0:.3f}s  execute {t2 - t1:.3f}s  jobs {jobs}")
     spark.stop()
 
 

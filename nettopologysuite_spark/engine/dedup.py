@@ -55,6 +55,10 @@ def char_ngrams(docs: DataFrame, n: int = 3, text_col: str = "text",
     docs = widen_input(docs)
     out = docs.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
+    ).where(
+        # NULL text has no grams (the index sequence below would still
+        # yield one NULL gram for it)
+        F.col("_t").isNotNull()
     ).select(
         "_id",
         F.explode(
@@ -108,25 +112,17 @@ def word_bigrams(docs: DataFrame, text_col: str = "text",
     return out.distinct() if distinct else out
 
 
-def _jaccard_counts(grams: DataFrame, pairs: DataFrame,
-                    method: str = "join") -> DataFrame:
+def _jaccard_counts(grams: DataFrame, pairs: DataFrame) -> DataFrame:
     """(d1, d2, ni, nu) exact intersection/union gram counts per candidate
-    pair, with two physical strategies (both: candidate ids semi-join the
-    gram table first — at 100 TB candidates are a vanishing fraction):
-
-    - ``"sets"``: per-doc gram set as ONE array (collect_set dedups), then
-      a native ``array_intersect`` per pair — two id equi-joins total.
-      Wins when candidate pairs are few and sets small (the LSH shape:
-      post-banding survivors; measured 6.0 → <2 s on minhash_lsh's verify).
-    - ``"join"``: explode the intersection by gram ((d2, gram) equi-join +
-      regroup). Wins when pairs are many and sets wide — each doc's grams
-      shuffle once and join against every partner, instead of every PAIR
-      row carrying both full arrays (measured ~25% faster than "sets" on
-      ngram_jaccard's 8.7k-pair / 150-gram-set workload, and it degrades
-      gracefully as pair multiplicity grows).
+    pair. The candidate ids semi-join the gram table first (at 100 TB
+    candidates are a vanishing fraction); each candidate doc's gram set
+    becomes ONE array (collect_set dedups, so ``grams`` may repeat), and a
+    native ``array_intersect`` scores each pair — two id equi-joins total.
+    Measured against a per-gram intersection join (round 6, sf0.1): 2.5 s
+    against 3.8 s on ngram_jaccard's 8.7k-pair blocked workload.
 
     EAGER: this function executes the whole candidate pipeline at call time
-    (``localCheckpoint(eager=True)``) so the intermediate persists can be
+    (``localCheckpoint(eager=True)``) so the intermediate persist can be
     released before returning — the returned frame is the small
     materialized pair table, not a lazy plan. It also persists/unpersists
     ``pairs`` internally; callers should pass an unpersisted frame (an
@@ -143,55 +139,25 @@ def _jaccard_counts(grams: DataFrame, pairs: DataFrame,
         pairs.select(F.col("d1").alias("_id"))
         .union(pairs.select(F.col("d2").alias("_id")))
     )
-    cached = []
-    if method == "sets":
-        docgrams = (
-            grams.join(cand_ids, "_id", "left_semi")
-            .groupBy("_id")
-            .agg(F.collect_set("gram").alias("_gs"))
+    docgrams = (
+        grams.join(cand_ids, "_id", "left_semi")
+        .groupBy("_id")
+        .agg(F.collect_set("gram").alias("_gs"))
+    )
+    g1 = docgrams.select(F.col("_id").alias("d1"), F.col("_gs").alias("_g1"))
+    g2 = docgrams.select(F.col("_id").alias("d2"), F.col("_gs").alias("_g2"))
+    out = (
+        pairs.join(g1, "d1")
+        .join(g2, "d2")
+        .withColumn("ni", F.size(F.array_intersect("_g1", "_g2")).cast("long"))
+        .withColumn(
+            "nu", (F.size("_g1") + F.size("_g2")).cast("long") - F.col("ni")
         )
-        g1 = docgrams.select(F.col("_id").alias("d1"), F.col("_gs").alias("_g1"))
-        g2 = docgrams.select(F.col("_id").alias("d2"), F.col("_gs").alias("_g2"))
-        out = (
-            pairs.join(g1, "d1")
-            .join(g2, "d2")
-            .withColumn("ni", F.size(F.array_intersect("_g1", "_g2")).cast("long"))
-            .withColumn(
-                "nu", (F.size("_g1") + F.size("_g2")).cast("long") - F.col("ni")
-            )
-            .select("d1", "d2", "ni", "nu")
-        )
-    else:
-        # dedup AFTER the semi-join: only candidate docs' grams pay the
-        # distinct shuffle (callers may pass non-distinct grams); persisted
-        # because the sizes aggregate and BOTH join sides read it
-        grams = grams.join(cand_ids, "_id", "left_semi").distinct().persist()
-        cached.append(grams)
-        sizes = grams.groupBy("_id").agg(F.count("*").alias("sz"))
-        g1 = grams.withColumnRenamed("_id", "d1")
-        g2 = grams.withColumnRenamed("_id", "d2")
-        inter = (
-            pairs.join(g1, "d1").join(g2, ["d2", "gram"])
-            .groupBy("d1", "d2")
-            .agg(F.count("*").alias("ni"))
-        )
-        s1 = sizes.withColumnRenamed("_id", "d1").withColumnRenamed("sz", "s1")
-        s2 = sizes.withColumnRenamed("_id", "d2").withColumnRenamed("sz", "s2")
-        out = (
-            pairs.join(inter, ["d1", "d2"], "left")
-            .na.fill({"ni": 0})
-            .join(s1, "d1")
-            .join(s2, "d2")
-            .select(
-                "d1", "d2", F.col("ni").cast("long").alias("ni"),
-                (F.col("s1") + F.col("s2") - F.col("ni")).cast("long").alias("nu"),
-            )
-        )
+        .select("d1", "d2", "ni", "nu")
+    )
     # materialize the (small) verified-pair result, then RELEASE the
-    # intermediate caches — persisted frames must not outlive the query
+    # intermediate cache — persisted frames must not outlive the query
     out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
     pairs.unpersist()
     return out
 
@@ -205,20 +171,14 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """(d1, d2, ni, nu): exact intersection/union n-gram counts per pair.
     EAGER — executes at call time and returns the materialized pair table
-    (see ``_jaccard_counts``).
+    (see ``_jaccard_counts``). A doc with NULL text has no grams, so no
+    pair of it is returned.
 
-    Grams pass through NON-distinct: ``_jaccard_counts`` dedups after its
-    candidate semi-join anyway, so a pre-distinct here would pay the
-    full-corpus shuffle twice.
-
-    Verify strategy: ``sets`` — re-measured in round 6 after the gram
-    explode rework (interleaved reps at sf0.1: sets 2.5 s vs join 3.8 s on
-    the 8.7k-pair blocked workload; the round-4 25%-for-join reading
-    predates the cheaper gram pipeline). Both strategies produce identical
-    (d1, d2, ni, nu) rows."""
+    Grams pass through NON-distinct: ``_jaccard_counts`` dedups per doc
+    after its candidate semi-join anyway, so a pre-distinct here would pay
+    the full-corpus shuffle twice."""
     return _jaccard_counts(
-        char_ngrams(docs, n, text_col, id_col, distinct=False), pairs,
-        method="sets",
+        char_ngrams(docs, n, text_col, id_col, distinct=False), pairs
     )
 
 
@@ -346,7 +306,7 @@ def minhash_lsh_pairs(
         .select("p.d1", "p.d2")
         .distinct()
     )
-    verified = _jaccard_counts(grams, cand, method="sets")  # materializes, then releases caches
+    verified = _jaccard_counts(grams, cand)  # materializes, then releases caches
     grams.unpersist()
     if obs is not None:
         # _jaccard_counts already executed the candidate pipeline, so the

@@ -23,9 +23,11 @@ Every step is DataFrame + Arrow; zero per-row Python.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -374,8 +376,6 @@ def knn_join_points(
         yield pd.DataFrame(out)
 
     survivors = points.select(id_col, x, y).mapInPandas(partial_topk, schema)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("q_id").orderBy(F.col("d2").asc(), F.col(id_col).asc())
     return (
         survivors.withColumn("rank", F.row_number().over(w))
@@ -396,7 +396,8 @@ def within_distance_join_table(
     radius: str = "r",
 ) -> DataFrame:
     """All points within distance r of each query center — BOTH sides
-    DataFrames, zero driver-side query state.
+    DataFrames, zero driver-side query state. Rows carry the point and
+    query columns plus the squared distance ``d2``.
 
     The query side explodes to the cells covering its expanded envelope
     with the same native ``sequence()`` arithmetic as the spatial joins
@@ -404,7 +405,9 @@ def within_distance_join_table(
     candidate join is a native equi-join on cell_id, and the refinement is
     a codegen squared-distance comparison. No Python anywhere.
     (IsWithinDistance semantics, Geometry.cs:468: a query with a negative
-    or NULL radius matches nothing.)
+    or NULL radius matches nothing, and so does a NULL or NaN coordinate.
+    An infinite radius covers every cell and keeps every point with
+    finite coordinates.)
     """
     q = queries.filter(F.col(radius) >= 0).select(
         F.col(q_id), F.col(cx), F.col(cy), F.col(radius),
@@ -417,10 +420,69 @@ def within_distance_join_table(
     )
     qc = explode_cover_native(q, grid).drop("_env")
     pts = with_cell_id(points, grid, x, y)
-    cand = pts.join(qc, "cell_id")
     dx = F.col(x) - F.col(cx)
     dy = F.col(y) - F.col(cy)
-    return cand.filter(dx * dx + dy * dy <= F.col(radius) * F.col(radius))
+    return (
+        pts.join(qc, "cell_id")
+        .withColumn("d2", dx * dx + dy * dy)
+        .filter(F.col("d2") <= F.col(radius) * F.col(radius))
+    )
+
+
+def _knn_rounds(queries: DataFrame, k: int, grid: Grid, candidates,
+                q_id: str, d_id: str, dist: str) -> DataFrame:
+    """The one kNN loop: the distributed analog of the STRtree
+    branch-and-bound (``STRtree.cs:556``), where only the candidate step
+    differs between points and geometries. Returns (q_id, rank, d_id, dist)
+    with at most k rows per query, ranked by (dist, d_id).
+
+    ``candidates(active, R)`` gives (q_id, d_id, dist) rows, ``dist`` the
+    squared distance, for the rows of ``active`` (a subset of ``queries``):
+    every data row within distance R of its query, and possibly farther
+    ones.
+
+    - Radius schedule: R starts at two cells and doubles. The round whose
+      R reaches the grid diagonal is the last, and it runs with R = ∞: it
+      ranks every remaining query against every data row, so rows outside
+      the grid extent are still found.
+    - Retirement: a query retires once it holds k rows whose k-th dist is
+      ≤ R² — every row it has not seen lies farther than R. Every query
+      retires on the last round.
+    - Jobs: each round writes the retired rows so far into ONE eager
+      ``localCheckpoint`` (lineage stays one round deep, and the result is
+      a scan of the last checkpoint, no ``Union``), then runs one
+      ``isEmpty`` stop test over the queries still active. The driver
+      sees only that boolean.
+    """
+    diag = math.hypot(grid.maxx - grid.minx, grid.maxy - grid.miny)
+    by_q = Window.partitionBy(q_id)
+    by_dist = by_q.orderBy(F.col(dist).asc(), F.col(d_id).asc())
+    R = 2.0 * min(grid.cell_w, grid.cell_h)
+    active, retired = queries, None
+    while True:
+        last = R >= diag
+        if last:
+            R = math.inf
+        ranked = (
+            candidates(active, R)
+            .withColumn("rank", F.row_number().over(by_dist))
+            .filter(F.col("rank") <= k)
+        )
+        kth_within = (F.col("rank") == k) & (F.col(dist) <= F.lit(R * R))
+        rows = (
+            ranked.withColumn("_retire", F.lit(last) | F.bool_or(kth_within).over(by_q))
+            .filter("_retire")
+            .select(q_id, "rank", d_id, dist)
+        )
+        if retired is not None:
+            rows = retired.unionByName(rows)
+        retired = rows.localCheckpoint(eager=True)
+        if last:
+            return retired
+        active = queries.join(retired.select(q_id), q_id, "left_anti")
+        if active.isEmpty():
+            return retired
+        R *= 2.0
 
 
 def knn_join_table(
@@ -435,126 +497,28 @@ def knn_join_table(
     qx: str = "qx",
     qy: str = "qy",
 ) -> DataFrame:
-    """kNN join with the query side a DATAFRAME — no collect() of query
-    rows, ever; the driver coordinates only round counters (scalars).
+    """k nearest points per query, ties broken by (distance², id), with the
+    query side a DATAFRAME — no collect() of query rows, ever; the driver
+    coordinates only round scalars.
 
-    Distributed ring expansion (the analog of ``Index/Strtree/STRtree.cs:556``
-    branch-and-bound, per query):
-
-    - Points tile once, repartition by cell_id and persist: every round's
-      candidate join reuses that partitioning, so only the (shrinking)
-      query side shuffles per round.
-    - Round t explodes each still-active query to the Chebyshev ANNULUS
-      of radii [r_lo, r_hi] around its cell — native ``sequence()``
-      explodes + an abs filter, no literal arrays, no Python. Annulus
-      radii grow geometrically (0; 1–2; 3–6; 7–14; …) so the number of
-      rounds is O(log n) even for queries in empty regions.
-    - Candidates fold into a running per-query top-k (window rank). A
-      query retires when its k-th distance is ≤ its distance to the
-      boundary of the examined cell square (every unexamined cell is
-      provably farther) — evaluated NATIVELY per query row; the driver
-      sees only the active-count scalar.
-    - Survivor/active frames ``localCheckpoint`` each round: the plan
-      lineage is TRUNCATED, not just cached, so per-round planning cost
-      stays constant (a persisted-only loop re-plans a growing DAG). At
-      production scale use a reliable checkpoint dir for fault tolerance.
-
-    Work per query is proportional to LOCAL density; shuffles per round are
-    proportional to the active query set, never the point table. Points or
-    queries with a NULL or NaN coordinate join nothing.
+    The rounds are ``_knn_rounds``; each one's candidates are the
+    ``within_distance_join_table`` rows of the still-active queries at the
+    round's radius (native cover explode, cell equi-join and codegen d²,
+    no Python). The points are read once: persisted on the first round and
+    released before returning. Work per query is proportional to LOCAL
+    density. Points or queries with a NULL or NaN coordinate join nothing.
     """
-    from pyspark.sql import Window
+    pts = points.select(id_col, x, y).persist()
 
-    n = grid.n
-    pts = (
-        with_cell_id(points, grid, x, y)
-        .select(id_col, x, y, "cell_id")
-        .repartition(F.col("cell_id"))
-        .persist()
-    )
-    col_of, row_of = cell_xy(grid, qx, qy)
-    active = queries.select(
-        F.col(q_id), F.col(qx), F.col(qy),
-        col_of.alias("_qc"), row_of.alias("_qr"),
-    ).localCheckpoint()
-    w = Window.partitionBy(q_id).orderBy(F.col("d2").asc(), F.col(id_col).asc())
-    survivors: DataFrame | None = None
-    # first window spans radii [0, 2] at once: every round costs several
-    # fixed-overhead jobs, and a query with ≥k local points retires in
-    # round one when the window already clears its margin bound
-    r_lo, r_hi = 0, 2
-    while r_lo <= n and not active.isEmpty():
-        ring = (
-            active
-            .withColumn("_dx", F.explode(F.sequence(F.lit(-r_hi), F.lit(r_hi))))
-            .withColumn("_dy", F.explode(F.sequence(F.lit(-r_hi), F.lit(r_hi))))
-            .filter(F.greatest(F.abs(F.col("_dx")), F.abs(F.col("_dy"))) >= r_lo)
-            .withColumn("_ix", F.col("_qc") + F.col("_dx"))
-            .withColumn("_iy", F.col("_qr") + F.col("_dy"))
-            .filter((F.col("_ix") >= 0) & (F.col("_ix") < n)
-                    & (F.col("_iy") >= 0) & (F.col("_iy") < n))
-            .select(q_id, qx, qy,
-                    (F.col("_iy") * n + F.col("_ix")).cast("long").alias("cell_id"))
-        )
-        dx = F.col(x) - F.col(qx)
-        dy = F.col(y) - F.col(qy)
-        # a NULL / NaN coordinate has no distance (NULL would rank first)
-        cand = (
-            pts.join(ring, "cell_id")
-            .select(q_id, F.col(id_col), (dx * dx + dy * dy).alias("d2"))
-            .filter(F.col("d2").isNotNull() & ~F.isnan("d2"))
-        )
-        merged = cand if survivors is None else survivors.unionByName(cand)
-        # localCheckpoint truncates lineage each round (constant planning
-        # cost); superseded rounds' checkpoint blocks are released by the
-        # ContextCleaner once this rebinding drops the last reference —
-        # survivor frames are per-query top-k rows, so the transient overlap
-        # is k·|queries| rows, not point-table-sized
-        survivors = (
-            merged.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= k)
-            .drop("_rk")
-            .localCheckpoint()
-        )
-        # native retire test: margin from query point to the boundary of the
-        # examined (2·r_hi+1)² cell square; done iff k found AND dk ≤ margin²
-        stats = survivors.groupBy(q_id).agg(
-            F.count("*").alias("_cnt"), F.max("d2").alias("_dk")
-        )
-        x_lo = F.lit(grid.minx) + (F.col("_qc") - r_hi) * F.lit(grid.cell_w)
-        x_hi = F.lit(grid.minx) + (F.col("_qc") + r_hi + 1) * F.lit(grid.cell_w)
-        y_lo = F.lit(grid.miny) + (F.col("_qr") - r_hi) * F.lit(grid.cell_h)
-        y_hi = F.lit(grid.miny) + (F.col("_qr") + r_hi + 1) * F.lit(grid.cell_h)
-        margin = F.least(F.col(qx) - x_lo, x_hi - F.col(qx),
-                         F.col(qy) - y_lo, y_hi - F.col(qy))
-        covered_all = (
-            ((F.col("_qc") - r_hi) < 0) & ((F.col("_qc") + r_hi) >= n)
-            & ((F.col("_qr") - r_hi) < 0) & ((F.col("_qr") + r_hi) >= n)
-        )
-        done = (F.col("_cnt") >= k) & (
-            covered_all | ((margin >= 0) & (F.col("_dk") <= margin * margin))
-        )
-        active = (
-            active.join(stats, q_id, "left")
-            .filter(~F.coalesce(done, F.lit(False)))
-            .select(q_id, qx, qy, "_qc", "_qr")
-            .localCheckpoint()
-        )
-        r_lo = r_hi + 1
-        r_hi = min(max(2 * r_hi, 2), n)
-    pts.unpersist()
-    if survivors is None:  # empty query table → empty, correctly-typed result
-        qt = dict(queries.dtypes)[q_id]
-        it = dict(points.dtypes)[id_col]
-        return points.sparkSession.createDataFrame(
-            [], f"{q_id} {qt}, rank int, {id_col} {it}, d2 double"
-        )
-    out = (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", id_col, "d2")
-    )
-    return out
+    def within(active: DataFrame, R: float) -> DataFrame:
+        return within_distance_join_table(
+            pts, active.withColumn("_r", F.lit(R)), grid, x, y, q_id, qx, qy, "_r"
+        ).select(q_id, id_col, "d2")
+
+    try:
+        return _knn_rounds(queries.select(q_id, qx, qy), k, grid, within, q_id, id_col, "d2")
+    finally:
+        pts.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -816,8 +780,6 @@ def choose_grid(
       silently fit the grid to the big side alone.
     - point-dominated data (span ≈ 0) clamps to ``max_level`` — points
       never explode, so the finest grid only adds parallelism."""
-    import math
-
     env_udf = envelope_struct_udf()
     min_rows = 64
     spans = []
@@ -964,36 +926,23 @@ def knn_join_geom(
     """k nearest DATA geometries per QUERY geometry by facet distance —
     the extended-geometry kNN join (WKB × WKB; the distributed analog of
     ``Operation/Distance/IndexedFacetDistance.cs`` under the STRtree
-    branch-and-bound ``STRtree.cs:556`` retirement rule).
+    branch-and-bound ``STRtree.cs:556``), ties broken by (dist2, d_id).
 
-    Doubling-radius rounds on the big×big machinery: active queries
-    explode to cells within radius R of their envelope, candidates come
-    from the native cell equi-join with the codegen envelope-distance
-    prefilter + reference-cell dedup, and the grouped ``batch_distance2``
-    refine (queries prepared once per batch) scores each surviving pair. A
-    query RETIRES once it holds k neighbors with k-th distance² ≤ R² —
-    every unexamined geometry is provably farther (its envelope distance
-    alone exceeds R). Remaining queries re-join at 2R until none is left or
-    R reaches the grid diagonal, where every query retires with what it
-    has: R starts at two cells, so there are at most
-    log2(diagonal / 2·cell) + 1 rounds. Driver coordination is one boolean
-    ``isEmpty`` scalar per round; no geometry ever reaches the driver.
+    The rounds are ``_knn_rounds``; each one's candidates come from the
+    big×big machinery at the round's radius R: active queries explode to
+    the cells within R of their envelope, join the data cover on cell_id
+    under the codegen envelope-distance prefilter + reference-cell dedup,
+    and the grouped ``batch_distance2`` refine (queries prepared once per
+    batch) scores each surviving pair. A geometry whose envelope lies
+    farther than R is farther than R, so the retirement rule of
+    ``_knn_rounds`` holds; its last round (R = ∞) also reaches data
+    outside the grid extent. No geometry ever reaches the driver.
     """
-    import math
-
-    from pyspark.sql import Window
-
     from ..kernels.batchgeom import batch_distance2
 
-    R = 2.0 * min(grid.cell_w, grid.cell_h)
-    diag = math.hypot(grid.maxx - grid.minx, grid.maxy - grid.miny)
-    active = queries.select(q_id, q_wkb)
-    chunks: list[DataFrame] = []
-    w = Window.partitionBy(q_id).orderBy(F.col("dist2").asc(), F.col(d_id).asc())
     dist2 = _grouped_refine(
         lambda gb, rows, pc, geom_of: batch_distance2(gb, rows, pc), returns="double"
     )
-
     # data side tiled ONCE (radius-independent); reused every round.
     # Cached ALREADY HASH-PARTITIONED on the join key: every round's cell
     # join then only shuffles the (tiny) query cover — the big exploded
@@ -1001,41 +950,18 @@ def knn_join_geom(
     # operations keyed the same way share one exchange).
     dc = _tiled(data, d_id, d_wkb, grid, "_d").repartition("cell_id").persist()
 
-    while True:
-        last = R >= diag
-        cand = (
+    def near(active: DataFrame, R: float) -> DataFrame:
+        return (
             # hash-build on the QUERY side (small per round; the data side
             # is the big exploded relation — building its hash relation ran
             # out of executor build memory at sf0.1)
             _tiled(active, q_id, q_wkb, grid, "_q", expand=R)
             .hint("shuffle_hash").join(dc, "cell_id")
             .filter(_pair_filter(grid, "_q", "_d", R))
-            .withColumn("dist2", dist2(F.col(d_wkb), F.col(q_wkb)))
+            .select(q_id, d_id, dist2(F.col(d_wkb), F.col(q_wkb)).alias("dist2"))
         )
-        # materialize the round's candidate pipeline ONCE: retirement
-        # stats, the done chunk, and the active-set update all read this
-        # tiny checkpointed top-k table instead of re-running the join +
-        # Python refine (which they each did — measured ~2× per round)
-        ranked = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(q_id, "rank", d_id, "dist2")
-            .localCheckpoint(eager=True)
-        )
-        stats = ranked.groupBy(q_id).agg(
-            F.count("*").alias("_n"), F.max("dist2").alias("_dk")
-        )
-        done_ids = stats if last else stats.filter(
-            (F.col("_n") == k) & (F.col("_dk") <= F.lit(R * R))
-        )
-        done = ranked.join(done_ids.select(q_id), q_id, "left_semi")
-        chunks.append(done)
-        active = active.join(done_ids.select(q_id), q_id, "left_anti")
-        if last or active.isEmpty():
-            break
-        R *= 2.0
-    dc.unpersist()
-    out = chunks[0]
-    for c in chunks[1:]:
-        out = out.unionByName(c)
-    return out
+
+    try:
+        return _knn_rounds(queries.select(q_id, q_wkb), k, grid, near, q_id, d_id, "dist2")
+    finally:
+        dc.unpersist()

@@ -225,6 +225,29 @@ def test_word_bigrams_null_text_has_no_grams(spark):
         assert got == [(1, "alpha beta"), (1, "beta gamma"), (3, "solo")]
 
 
+def test_char_ngrams_null_text_has_no_grams(spark):
+    """A NULL-text doc yields no character gram rows, so it gets no SimHash
+    fingerprint and no Jaccard pair (two NULL-text docs used to share one
+    NULL gram: fingerprint 0 each, and a pair with ni = nu = 0 that passes
+    any ``ni*100 >= nu*pct`` threshold)."""
+    from nettopologysuite_spark.engine.dedup import (
+        char_ngrams,
+        ngram_jaccard_pairs,
+        simhash_fingerprints,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, "abcd"), (4, "abce")],
+        "doc_id long, text string",
+    )
+    got = sorted((r["_id"], r["gram"]) for r in char_ngrams(docs).collect())
+    assert got == [(3, "abc"), (3, "bcd"), (4, "abc"), (4, "bce")]
+    assert {r["doc_id"] for r in simhash_fingerprints(docs).collect()} == {3, 4}
+    pairs = spark.createDataFrame([(1, 2), (3, 4), (1, 3)], "d1 long, d2 long")
+    got = sorted(tuple(r) for r in ngram_jaccard_pairs(docs, pairs).collect())
+    assert got == [(3, 4, 1, 3)]
+
+
 def test_sample_and_quantiles_semantics(spark):
     from nettopologysuite_spark.engine.text import length_quantiles, sample_per_source
 

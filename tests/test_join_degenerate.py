@@ -8,6 +8,7 @@ import pytest
 
 from nettopologysuite_spark.engine.derive import nation_octagon_geom
 from nettopologysuite_spark.engine.joins import (
+    knn_join_geom,
     knn_join_points,
     knn_join_table,
     pair_refine_udf,
@@ -270,3 +271,27 @@ def test_knn_joins_degenerate(spark, join):
     ]
     assert _ranked(join(spark, _points(spark, []), queries, 3)) == []
     assert _ranked(join(spark, _points(spark), [], 3)) == []
+
+
+def _knn_geom(spark, pts, queries, k):
+    """The geometry kNN join over the same rows as WKB points."""
+    data = spark.createDataFrame(
+        [(r["pid"], wkb_dumps(point(r["x"], r["y"]))) for r in pts.collect()],
+        "pid long, geom_wkb binary",
+    )
+    q = spark.createDataFrame(
+        [(q_id, wkb_dumps(point(qx, qy))) for q_id, qx, qy in queries],
+        "q_id long, q_wkb binary",
+    )
+    out = knn_join_geom(q, data, GRID, k, d_id="pid", d_wkb="geom_wkb")
+    return out.withColumnRenamed("dist2", "d2")
+
+
+@pytest.mark.parametrize("join", [_knn_table, _knn_geom], ids=["table", "geom"])
+def test_knn_joins_find_neighbours_outside_the_grid(spark, join):
+    """The last round ranks against every data row: the second neighbour
+    of (50, 50) lies at (400, 400), past the grid diagonal (0..100)."""
+    pts = _points(spark, [(1, 50.0, 50.0), (2, 400.0, 400.0)])
+    assert _ranked(join(spark, pts, [(0, 50.0, 50.0)], 2)) == [
+        (0, 1, 1, 0.0), (0, 2, 2, 2 * 350.0 ** 2),
+    ]

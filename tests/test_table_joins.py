@@ -1,6 +1,6 @@
 """DataFrame-query-side kNN / within-distance joins: exact vs brute force,
-including sparse regions that force multi-round ring expansion, and cache
-hygiene (no persisted frames left behind by any point or pack join)."""
+including sparse regions that force several radius rounds, and cache
+hygiene (no persisted frames left behind by any query that persists)."""
 
 import sys
 from pathlib import Path
@@ -67,6 +67,32 @@ def test_knn_join_table_lineage_truncated(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
     assert "Scan ExistingRDD" in plan  # checkpointed survivors, not raw lineage
+    assert out.count() == 6
+
+
+def test_knn_join_geom_lineage_truncated(spark):
+    """The geometry form shares the round driver: its result is one
+    checkpoint scan, not a union of per-round chunks — here query "a"
+    retires in the first round and "b", far from the data, rounds later."""
+    from nettopologysuite_spark.engine.joins import knn_join_geom
+    from nettopologysuite_spark.kernels.cells import Grid
+    from nettopologysuite_spark.kernels.geom import point, wkb_dumps
+
+    rng = np.random.default_rng(1)
+    ddf = spark.createDataFrame(
+        [(i, wkb_dumps(point(float(px), float(py))))
+         for i, (px, py) in enumerate(rng.uniform(0, 30, (200, 2)))],
+        "pid long, geom_wkb binary",
+    )
+    qdf = spark.createDataFrame(
+        [("a", wkb_dumps(point(10.0, 10.0))), ("b", wkb_dumps(point(90.0, 90.0)))],
+        "q string, q_wkb binary",
+    )
+    out = knn_join_geom(qdf, ddf, Grid(0.0, 0.0, 100.0, 100.0, level=4), k=3,
+                        q_id="q", q_wkb="q_wkb", d_id="pid", d_wkb="geom_wkb")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan
+    assert "Scan ExistingRDD" in plan
     assert out.count() == 6
 
 
@@ -340,23 +366,25 @@ def test_poly_poly_touches_matches_bruteforce(spark, sf_dir):
     assert len(got) > 0
 
 
-# every __spark_entry__ query built on a point join or a polygon-pack join
-POINT_AND_PACK_JOIN_QUERIES = [
+# every __spark_entry__ query built on a point join or a polygon-pack join,
+# and every query whose engine code calls persist
+CACHE_CHECKED_QUERIES = [
     "pip_rect_join", "pip_convex_join", "pip_join_salted", "pip_join_adaptive",
     "centroid_agg", "within_dist_join", "within_dist_join_df", "knn_join",
     "knn_join_ring", "knn_join_df", "docs_pip_join", "docs_mixed_join",
-    "seg_cross_join", "zonal_stats",
+    "seg_cross_join", "zonal_stats", "knn_join_geom", "dup_clusters",
+    "minhash_lsh", "ngram_jaccard", "geo_cluster", "geo_kmeans",
 ]
 
 
-def test_point_and_pack_join_queries_leave_no_cache(spark, sf_dir):
-    """A returned plan is lazy, so a join that persists an intermediate
+def test_queries_leave_no_cache(spark, sf_dir):
+    """A returned plan is lazy, so a query that persists an intermediate
     cannot unpersist it; the cache manager must be empty after each query."""
     import __spark_entry__ as E
 
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     queries = E.queries()
-    for name in POINT_AND_PACK_JOIN_QUERIES:
+    for name in CACHE_CHECKED_QUERIES:
         queries[name](spark, sf_dir).count()
         assert cache.isEmpty(), name
