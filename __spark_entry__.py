@@ -601,8 +601,8 @@ def q_embed_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster canonicalization: connected components over the
     MinHash-LSH near-dup pair graph (``graph.connected_components``: one
-    count, then an exact driver solve at this size) → (doc_id, cluster_id
-    = min id in component). The oracle computes the same components from
+    bounded collect, then an exact driver solve at this size) → (doc_id,
+    cluster_id = min id in component). The oracle computes the same components from
     the exact brute-force pair set with a recursive CTE."""
     from nettopologysuite_spark.engine.dedup import dup_clusters, minhash_lsh_pairs
 
@@ -714,8 +714,8 @@ def q_knn_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed ANN: random-hyperplane LSH signatures (JVM higher-order
-    functions), band bucket join for candidates, exact quantized-cosine
-    re-rank on candidates only — the scale path next to the brute-force
+    functions), broadcast join of the query buckets for bare id candidate
+    pairs, exact quantized-cosine re-rank on candidates only — the scale path next to the brute-force
     knn_embedding baseline."""
     from nettopologysuite_spark.engine.ann import ann_lsh_topk
 
@@ -726,8 +726,8 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN GRAPH over the whole embedding table (SemDeDup / graph-cluster
     primitive): every vector's top-5 LSH-bucket candidates by exact
-    quantized cosine — bucket self-join on bare ids, arrays join back
-    once."""
+    quantized cosine — bare id pairs from ``lsh.bucket_pairs``, arrays
+    join back once."""
     from nettopologysuite_spark.engine.ann import knn_graph
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -735,8 +735,9 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_embed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs: LSH-bucket self-join candidates +
-    exact quantized-cosine threshold (the embedding analog of minhash_lsh)."""
+    """Embedding-cosine near-dup pairs: LSH-bucket candidate pairs
+    (``lsh.bucket_pairs``) + exact quantized-cosine threshold (the
+    embedding analog of minhash_lsh)."""
     from nettopologysuite_spark.engine.ann import embed_cosine_dedup
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

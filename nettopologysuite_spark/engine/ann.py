@@ -1,14 +1,22 @@
-"""Approximate nearest neighbour over embedding columns.
+"""Approximate nearest neighbour and near-duplicate search over embedding
+columns.
 
-Scale path: random-hyperplane LSH. One linear JVM-side pass computes sign
-bits per vector (sign of ⟨quantized embedding, integer hyperplane⟩ — Spark
-higher-order functions, zero Python), packed into LSH band buckets —
-8×4-bit bands for the ANN query (recall banding) and 4×8-bit bands for the
-embedding dedup (selectivity banding); candidate pairs come from a bucket
-equi-join against the query signatures; the exact cosine re-rank runs only
-on candidates. At 100 TB this
-is the standard sweep: one scan to signatures, one shuffle-free broadcast
-bucket join (query side is small), exact re-rank on a vanishing fraction.
+LSH path (``ann_lsh_topk``, ``knn_graph``, ``embed_cosine_dedup``):
+random-hyperplane LSH. One linear JVM-side pass computes sign bits per
+vector (sign of ⟨quantized embedding, integer hyperplane⟩ — Spark
+higher-order functions, zero Python), packed into band buckets by
+``lsh.band_buckets`` — 8×4-bit bands for the ANN query and the kNN graph
+(recall banding), 4×8-bit bands for the embedding dedup (selectivity
+banding). Candidates are bare id pairs: the ANN query joins its few query
+buckets (broadcast) against all buckets, the kNN graph and the dedup take
+every pair sharing a bucket from ``lsh.bucket_pairs``. One scorer
+(``_pair_cosine``) re-ranks candidates by exact quantized cosine, joining
+each vector's quantized array and norm back by id, and one window
+(``_top_k``) keeps the k best per query.
+
+IVF path (``ivf_topk``): inverted lists over deterministic coarse
+centroids, see its docstring. ``project_embeddings`` is the
+Johnson-Lindenstrauss compression ahead of either index.
 
 Everything is exact integer arithmetic on floor(x·1024) quantized values, so
 an external SQL engine reproduces the result bit-for-bit (the driver oracle
@@ -18,8 +26,10 @@ pytest). The brute-force baseline lives in ``__spark_entry__.q_knn_embedding``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .lsh import band_buckets, bucket_pairs
 
 DIM = 64
 N_PLANES = 32
@@ -28,6 +38,11 @@ BANDS = 8  # 4 bits per band: many narrow bands — RECALL banding for the
 # similar (cos 0.26–0.39; see test_ann.py). Collision for a cos≈0.31
 # neighbour ≈ 1-(1-0.6⁴)⁸ ≈ 0.67 while the exact re-rank still runs on
 # candidates only. The DEDUP banding below is the opposite tradeoff.
+DEDUP_PLANES = 32  # 4 bands × 8 bits — near-dup banding (see embed_cosine_dedup)
+DEDUP_BANDS = 4
+#: hot-bucket cap of the kNN graph and the embedding dedup (see
+#: ``lsh.bucket_pairs``); their oracles replicate it
+MAX_BUCKET = 10_000
 _LCG = 2654435761
 
 
@@ -67,45 +82,45 @@ def _sig_cols(emb_col: str, planes: list[list[int]], bands: int = BANDS):
         # embedding must land in the same bucket on both engines
         bits.append(f"(CASE WHEN coalesce({dot}, 0D) >= 0 THEN 1 ELSE 0 END)")
     n_per_band = len(planes) // bands
-    cols = []
-    for b in range(bands):
-        terms = [
+    return [
+        F.expr("(" + " + ".join(
             f"({bits[b * n_per_band + i]} * {1 << i})" for i in range(n_per_band)
-        ]
-        cols.append(F.expr("(" + " + ".join(terms) + ")").alias(f"band{b}"))
-    return cols
+        ) + ")")
+        for b in range(bands)
+    ]
 
 
-def ann_lsh_topk(emb: DataFrame, n_queries: int, k: int,
-                 id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
-    """Top-k by exact quantized cosine among LSH-bucket candidates of each
-    query (query set = ids < n_queries). Returns (q_id, rank, nbr_id, sim)."""
-    planes = hyperplanes()
-    sig = emb.select(F.col(id_col), F.col(emb_col), *_sig_cols(emb_col, planes))
-    buckets = sig.select(
-        id_col, emb_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("val"))
-            for b in range(BANDS)
-        ])).alias("bk"),
-    ).select(id_col, emb_col, "bk.band", "bk.val")
-    qb = (
-        buckets.filter(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb"),
-                "band", "val")
+def _pair_cosine(pairs: DataFrame, emb: DataFrame, id_col: str,
+                 emb_col: str) -> DataFrame:
+    """(d1, d2) id pairs → (d1, d2, sim), the exact cosine of the two
+    floor(x·1024)-quantized vectors. Each vector's quantized array and norm
+    are computed once per ROW and joined back by id, so embedding arrays
+    never travel with the candidate generation. A zero quantized norm gives
+    sim NULL (``try_divide``: 0/0 is NULL in DuckDB too, and ANSI mode would
+    raise DIVIDE_BY_ZERO), as does a NULL embedding."""
+    qe = f"transform({emb_col}, x -> floor(CAST(x AS DOUBLE) * 1024D))"
+    qv = emb.select(
+        F.col(id_col),
+        F.expr(qe).alias("qv"),
+        F.expr(f"sqrt(aggregate({qe}, 0D, (a, v) -> a + v * v))").alias("nrm"),
     )
-    cand = (
-        buckets.join(F.broadcast(qb), ["band", "val"])
-        .filter(F.col(id_col) != F.col("q_id"))
-        .select("q_id", "q_emb", F.col(id_col).alias("nbr_id"), F.col(emb_col).alias("n_emb"))
-        .dropDuplicates(["q_id", "nbr_id"])
+    return (
+        pairs
+        .join(qv.select(F.col(id_col).alias("d1"), F.col("qv").alias("v1"),
+                        F.col("nrm").alias("n1")), "d1")
+        .join(qv.select(F.col(id_col).alias("d2"), F.col("qv").alias("v2"),
+                        F.col("nrm").alias("n2")), "d2")
+        .select("d1", "d2", F.expr(
+            "try_divide(aggregate(zip_with(v1, v2, (x, y) -> x * y), 0D, "
+            "(a, v) -> a + v), n1 * n2)"
+        ).alias("sim"))
     )
-    qdot = "aggregate(zip_with(q_emb, n_emb, (x, y) -> floor(CAST(x AS DOUBLE) * 1024D) * floor(CAST(y AS DOUBLE) * 1024D)), 0D, (a, v) -> a + v)"
-    qn = "sqrt(aggregate(transform(q_emb, x -> floor(CAST(x AS DOUBLE) * 1024D)), 0D, (a, v) -> a + v * v))"
-    nn = "sqrt(aggregate(transform(n_emb, x -> floor(CAST(x AS DOUBLE) * 1024D)), 0D, (a, v) -> a + v * v))"
-    scored = cand.withColumn("sim", F.expr(f"({qdot}) / ({qn} * {nn})"))
-    from pyspark.sql import Window
 
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, nbr_id, sim) → (q_id, rank, nbr_id, sim): the k best
+    neighbours per query by sim descending (NULL last, as in DuckDB), ties
+    by nbr_id."""
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("nbr_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -114,25 +129,40 @@ def ann_lsh_topk(emb: DataFrame, n_queries: int, k: int,
     )
 
 
-DEDUP_PLANES = 32  # 4 bands × 8 bits — near-dup banding (see docstring)
-DEDUP_BANDS = 4
+def ann_lsh_topk(emb: DataFrame, n_queries: int, k: int,
+                 id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
+    """Top-k by exact quantized cosine among LSH-bucket candidates of each
+    query (query set = ids < n_queries). Returns (q_id, rank, nbr_id, sim).
+
+    The query buckets are few, so they broadcast against the whole bucket
+    table; the candidates are distinct bare (query, neighbour) id pairs,
+    scored once each. No hot-bucket cap: the oracle has none."""
+    buckets = band_buckets(emb, id_col, _sig_cols(emb_col, hyperplanes()))
+    qb = buckets.filter(F.col(id_col) < n_queries) \
+        .select(F.col(id_col).alias("d1"), "band", "sig")
+    pairs = (
+        buckets.join(F.broadcast(qb), ["band", "sig"])
+        .filter(F.col(id_col) != F.col("d1"))
+        .select("d1", F.col(id_col).alias("d2"))
+        .distinct()
+    )
+    scored = _pair_cosine(pairs, emb, id_col, emb_col)
+    return _top_k(scored.select(F.col("d1").alias("q_id"),
+                                F.col("d2").alias("nbr_id"), "sim"), k)
 
 
 def embed_cosine_dedup(emb: DataFrame, threshold_pct: int = 40,
-                       id_col: str = "vec_id", emb_col: str = "embedding",
-                       n_planes: int = DEDUP_PLANES,
-                       bands: int = DEDUP_BANDS,
-                       max_bucket: int | None = 10_000) -> DataFrame:
-    """Embedding-cosine near-duplicate PAIRS: LSH-bucket self-join for
-    candidates, exact quantized cosine ≥ threshold on candidates only.
+                       id_col: str = "vec_id",
+                       emb_col: str = "embedding") -> DataFrame:
+    """Embedding-cosine near-duplicate PAIRS (d1, d2, sim), d1 < d2: LSH
+    bucket candidates (``lsh.bucket_pairs``), exact quantized cosine ≥
+    threshold on candidates only.
 
     The 100-TB dedup shape: one linear signature pass (JVM higher-order
-    functions), a bucket self-join on BARE IDS (candidate dedup shuffles id
-    pairs only — never the embedding arrays), then embeddings join back by
-    id for the exact re-check on the deduped candidates. Quantized vectors
-    and norms are computed once per ROW, not per pair. Like every LSH
-    dedup, candidacy is approximate (a qualifying pair missing every band is
-    not reported); the oracle mirrors the identical candidacy definition, so
+    functions), candidate pairs on BARE IDS (never the embedding arrays),
+    then ``_pair_cosine`` on the distinct candidates. Like every LSH dedup,
+    candidacy is approximate (a qualifying pair missing every band is not
+    reported); the oracle mirrors the identical candidacy definition, so
     the result is bit-reproducible.
 
     Scale knob: candidate volume is Σ_buckets c². Bands here are 8-bit
@@ -143,130 +173,144 @@ def embed_cosine_dedup(emb: DataFrame, threshold_pct: int = 40,
     4-bit bands because its corpus's true neighbours are only weakly
     similar. Wider bands → exponentially more buckets, exactly as MinHash
     raises its band count; the plan shape is unchanged."""
-    planes = hyperplanes(n_planes=n_planes)
-    sig = emb.select(F.col(id_col), *_sig_cols(emb_col, planes, bands))
-    buckets = sig.select(
-        id_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("val"))
-            for b in range(bands)
-        ])).alias("bk"),
-    ).select(id_col, "bk.band", "bk.val")
-    # one signature pass + parallel pair generation from the checkpointed
-    # bucket table (see _bucket_pairs; the former lazy plan re-ran the
-    # 32-plane signature scan once per reference). Same candidate set.
-    pairs = _bucket_pairs(buckets, id_col, max_bucket)
-    qe = f"transform({emb_col}, x -> floor(CAST(x AS DOUBLE) * 1024D))"
-    qv = emb.select(
-        F.col(id_col),
-        F.expr(qe).alias("qv"),
-        F.expr(f"sqrt(aggregate({qe}, 0D, (a, v) -> a + v * v))").alias("nrm"),
-    )
-    scored = (
-        pairs
-        .join(qv.select(F.col(id_col).alias("d1"), F.col("qv").alias("v1"),
-                        F.col("nrm").alias("n1")), "d1")
-        .join(qv.select(F.col(id_col).alias("d2"), F.col("qv").alias("v2"),
-                        F.col("nrm").alias("n2")), "d2")
-        .withColumn("sim", F.expr(
-            "aggregate(zip_with(v1, v2, (x, y) -> x * y), 0D, (a, v) -> a + v)"
-            " / (n1 * n2)"
-        ))
-    )
-    return (
-        scored.filter(F.col("sim") * 100 >= threshold_pct)
-        .select("d1", "d2", "sim")
-    )
+    sig = _sig_cols(emb_col, hyperplanes(n_planes=DEDUP_PLANES), DEDUP_BANDS)
+    pairs = bucket_pairs(band_buckets(emb, id_col, sig), id_col, MAX_BUCKET)
+    return _pair_cosine(pairs, emb, id_col, emb_col) \
+        .filter(F.col("sim") * 100 >= threshold_pct)
 
 
-def _sig_sql_exprs(planes: list[list[int]], bands: int, tbl: str) -> list[str]:
-    """DuckDB band-signature expressions — the single SQL twin of
-    ``_sig_cols``; shared by both oracle builders so the bit-reproducibility
-    contract has exactly one definition per engine."""
+def knn_graph(emb: DataFrame, k: int, id_col: str = "vec_id",
+              emb_col: str = "embedding") -> DataFrame:
+    """kNN GRAPH over the whole embedding table — every vector's top-k
+    most-similar LSH-bucket candidates by exact quantized cosine, the
+    primitive under SemDeDup-style semantic dedup and kNN-graph
+    clustering. Returns (q_id, rank, nbr_id, sim).
+
+    Scale shape: the ``embed_cosine_dedup`` candidate dataflow with the
+    ``ann_lsh_topk`` banding. Exact quantized cosine is SYMMETRIC, so each
+    unordered candidate pair is scored once and the graph's two
+    orientations explode from the scored row. Candidacy is LSH-approximate
+    exactly as ``ann_lsh_topk`` (recall floor pytest-pinned there); the SQL
+    oracle mirrors the same candidacy, so results are bit-reproducible.
+    """
+    buckets = band_buckets(emb, id_col, _sig_cols(emb_col, hyperplanes()))
+    scored = _pair_cosine(bucket_pairs(buckets, id_col, MAX_BUCKET),
+                          emb, id_col, emb_col)
+    both = scored.select(
+        F.explode(F.array(
+            F.struct(F.col("d1").alias("q_id"), F.col("d2").alias("nbr_id")),
+            F.struct(F.col("d2").alias("q_id"), F.col("d1").alias("nbr_id")),
+        )).alias("e"),
+        "sim",
+    ).select("e.q_id", "e.nbr_id", "sim")
+    return _top_k(both, k)
+
+
+# ---------------------------------------------------------------------------
+# DuckDB twins of the LSH operators
+# ---------------------------------------------------------------------------
+
+
+def _sql_buckets(planes: list[list[int]], bands: int, capped: bool) -> str:
+    """Leading CTEs ending in ``bk`` (vec_id, embedding, band, val): the
+    SQL twin of ``band_buckets`` over ``_sig_cols``, shared by every LSH
+    oracle so the bit-reproducibility contract has exactly one definition
+    per engine. ``capped`` keeps only buckets of at most ``MAX_BUCKET``
+    rows, as ``lsh.bucket_pairs`` does."""
     bits = []
     for plane in planes:
         arr = "[" + ", ".join(f"CAST({h} AS DOUBLE)" for h in plane) + "]"
         dot = (
-            f"list_sum(list_transform(list_zip(list_transform({tbl}.embedding, "
+            f"list_sum(list_transform(list_zip(list_transform(e.embedding, "
             f"x -> floor(CAST(x AS DOUBLE) * 1024)), {arr}), p -> p[1] * p[2]))"
         )
         bits.append(f"(CASE WHEN COALESCE({dot}, 0) >= 0 THEN 1 ELSE 0 END)")
     n_per_band = len(planes) // bands
-    return [
+    sig = [
         "(" + " + ".join(
             f"({bits[b * n_per_band + i]} * {1 << i})" for i in range(n_per_band)
         ) + ")"
         for b in range(bands)
     ]
-
-
-def embed_cosine_dedup_oracle_sql(threshold_pct: int = 40,
-                                  n_planes: int = DEDUP_PLANES,
-                                  bands: int = DEDUP_BANDS,
-                                  max_bucket: int = 10_000) -> str:
-    """The identical definition in ANSI SQL (DuckDB) over the embeddings
-    view — bit-for-bit comparable with :func:`embed_cosine_dedup`."""
-    BANDS = bands  # local name for the shared query body below
-    e_bands = _sig_sql_exprs(hyperplanes(n_planes=n_planes), bands, "e")
-    return (
+    out = (
         "WITH s AS (SELECT e.vec_id, e.embedding, "
-        + ", ".join(f"{e_bands[b]} AS band{b}" for b in range(BANDS))
+        + ", ".join(f"{sig[b]} AS band{b}" for b in range(bands))
         + " FROM embeddings e), "
-        "bk0 AS ("
+        + ("bk0" if capped else "bk") + " AS ("
         + " UNION ALL ".join(
             f"SELECT vec_id, embedding, {b} AS band, band{b} AS val FROM s"
-            for b in range(BANDS)
+            for b in range(bands)
         )
         + "), "
-        "bkc AS (SELECT band, val FROM bk0 GROUP BY band, val "
-        f"HAVING COUNT(*) <= {max_bucket}), "
-        "bk AS (SELECT bk0.* FROM bk0 JOIN bkc USING (band, val)), "
-        "cand AS (SELECT DISTINCT a.vec_id AS d1, b.vec_id AS d2, "
-        "a.embedding AS e1, b.embedding AS e2 FROM bk a JOIN bk b "
-        "ON a.band = b.band AND a.val = b.val AND a.vec_id < b.vec_id), "
-        "scored AS (SELECT d1, d2, "
+    )
+    if capped:
+        out += (
+            "bkc AS (SELECT band, val FROM bk0 GROUP BY band, val "
+            f"HAVING COUNT(*) <= {MAX_BUCKET}), "
+            "bk AS (SELECT bk0.* FROM bk0 JOIN bkc USING (band, val)), "
+        )
+    return out
+
+
+def _sql_cosine(a: str, b: str) -> str:
+    """Exact quantized cosine of the embedding columns ``a`` and ``b``."""
+    return (
         "  list_sum(list_transform(list_zip("
-        "    list_transform(e1, x -> floor(CAST(x AS DOUBLE) * 1024)), "
-        "    list_transform(e2, x -> floor(CAST(x AS DOUBLE) * 1024))), "
+        f"    list_transform({a}, x -> floor(CAST(x AS DOUBLE) * 1024)), "
+        f"    list_transform({b}, x -> floor(CAST(x AS DOUBLE) * 1024))), "
         "    p -> p[1] * p[2])) "
-        "  / (sqrt(list_sum(list_transform(e1, x -> floor(CAST(x AS DOUBLE) * 1024) * floor(CAST(x AS DOUBLE) * 1024)))) "
-        "   * sqrt(list_sum(list_transform(e2, x -> floor(CAST(x AS DOUBLE) * 1024) * floor(CAST(x AS DOUBLE) * 1024))))) AS sim "
-        "FROM cand) "
-        f"SELECT d1, d2, sim FROM scored WHERE sim * 100 >= {threshold_pct}"
+        f"  / (sqrt(list_sum(list_transform({a}, x -> floor(CAST(x AS DOUBLE) * 1024) * floor(CAST(x AS DOUBLE) * 1024)))) "
+        f"   * sqrt(list_sum(list_transform({b}, x -> floor(CAST(x AS DOUBLE) * 1024) * floor(CAST(x AS DOUBLE) * 1024))))) AS sim "
+    )
+
+
+def _sql_top_k(k: int) -> str:
+    """The ``_top_k`` window over a ``scored`` (q_id, nbr_id, sim) CTE."""
+    return (
+        "SELECT q_id, rank, nbr_id, sim FROM ("
+        "SELECT q_id, nbr_id, sim, ROW_NUMBER() OVER ("
+        "PARTITION BY q_id ORDER BY sim DESC, nbr_id ASC) AS rank FROM scored) t "
+        f"WHERE rank <= {k}"
     )
 
 
 def ann_lsh_oracle_sql(n_queries: int, k: int) -> str:
     """The identical definition in ANSI SQL (DuckDB) over the embeddings
     view — bit-for-bit comparable with :func:`ann_lsh_topk`."""
-    e_bands = _sig_sql_exprs(hyperplanes(), BANDS, "e")
     return (
-        "WITH s AS (SELECT e.vec_id, e.embedding, "
-        + ", ".join(f"{e_bands[b]} AS band{b}" for b in range(BANDS))
-        + " FROM embeddings e), "
-        "bk AS ("
-        + " UNION ALL ".join(
-            f"SELECT vec_id, embedding, {b} AS band, band{b} AS val FROM s"
-            for b in range(BANDS)
-        )
-        + "), "
-        f"qb AS (SELECT vec_id AS q_id, embedding AS q_emb, band, val FROM bk "
+        _sql_buckets(hyperplanes(), BANDS, capped=False)
+        + f"qb AS (SELECT vec_id AS q_id, embedding AS q_emb, band, val FROM bk "
         f"WHERE vec_id < {n_queries}), "
         "cand AS (SELECT DISTINCT qb.q_id, qb.q_emb, bk.vec_id AS nbr_id, "
         "bk.embedding AS n_emb FROM bk JOIN qb ON bk.band = qb.band "
         "AND bk.val = qb.val AND bk.vec_id <> qb.q_id), "
-        "scored AS (SELECT q_id, nbr_id, "
-        "  list_sum(list_transform(list_zip("
-        "    list_transform(q_emb, x -> floor(CAST(x AS DOUBLE) * 1024)), "
-        "    list_transform(n_emb, x -> floor(CAST(x AS DOUBLE) * 1024))), "
-        "    p -> p[1] * p[2])) "
-        "  / (sqrt(list_sum(list_transform(q_emb, x -> floor(CAST(x AS DOUBLE) * 1024) * floor(CAST(x AS DOUBLE) * 1024)))) "
-        "   * sqrt(list_sum(list_transform(n_emb, x -> floor(CAST(x AS DOUBLE) * 1024) * floor(CAST(x AS DOUBLE) * 1024))))) AS sim "
-        "FROM cand) "
-        f"SELECT q_id, rank, nbr_id, sim FROM ("
-        f"SELECT q_id, nbr_id, sim, ROW_NUMBER() OVER ("
-        f"PARTITION BY q_id ORDER BY sim DESC, nbr_id ASC) AS rank FROM scored) t "
-        f"WHERE rank <= {k}"
+        "scored AS (SELECT q_id, nbr_id, " + _sql_cosine("q_emb", "n_emb")
+        + "FROM cand) " + _sql_top_k(k)
+    )
+
+
+def embed_cosine_dedup_oracle_sql(threshold_pct: int = 40) -> str:
+    """The identical definition in ANSI SQL (DuckDB) over the embeddings
+    view — bit-for-bit comparable with :func:`embed_cosine_dedup`."""
+    return (
+        _sql_buckets(hyperplanes(n_planes=DEDUP_PLANES), DEDUP_BANDS, capped=True)
+        + "cand AS (SELECT DISTINCT a.vec_id AS d1, b.vec_id AS d2, "
+        "a.embedding AS e1, b.embedding AS e2 FROM bk a JOIN bk b "
+        "ON a.band = b.band AND a.val = b.val AND a.vec_id < b.vec_id), "
+        "scored AS (SELECT d1, d2, " + _sql_cosine("e1", "e2") + "FROM cand) "
+        f"SELECT d1, d2, sim FROM scored WHERE sim * 100 >= {threshold_pct}"
+    )
+
+
+def knn_graph_oracle_sql(k: int) -> str:
+    """The identical kNN-graph definition in ANSI SQL (DuckDB)."""
+    return (
+        _sql_buckets(hyperplanes(), BANDS, capped=True)
+        + "cand AS (SELECT DISTINCT a.vec_id AS q_id, b.vec_id AS nbr_id, "
+        "a.embedding AS q_emb, b.embedding AS n_emb FROM bk a JOIN bk b "
+        "ON a.band = b.band AND a.val = b.val AND a.vec_id <> b.vec_id), "
+        "scored AS (SELECT q_id, nbr_id, " + _sql_cosine("q_emb", "n_emb")
+        + "FROM cand) " + _sql_top_k(k)
     )
 
 
@@ -335,8 +379,6 @@ def ivf_topk(emb: DataFrame, n_queries: int, k: int,
     measured ~3× on the assignment pass; the per-pair values are
     bit-identical to the oracle's inline form (same per-element ops,
     merely factored out of the pair loop)."""
-    from pyspark.sql import Window
-
     qarr = f"transform({emb_col}, x -> floor(CAST(x AS DOUBLE) * 1024D))"
     qnorm = f"sqrt(aggregate({qarr}, 0D, (a, v) -> a + v * v))"
     quant = (
@@ -391,15 +433,9 @@ def ivf_topk(emb: DataFrame, n_queries: int, k: int,
         "aggregate(zip_with(_qq, _q, (x, y) -> x * y), 0D, (a, v) -> a + v) "
         "/ (_qn * _n) END)"
     )
-    scored = cand.select(
+    return _top_k(cand.select(
         "q_id", F.col(id_col).alias("nbr_id"), F.expr(nbr_sim).alias("sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "nbr_id", "sim")
-    )
+    ), k)
 
 
 _SQL_QDOT = ("list_sum(list_transform(list_zip("
@@ -448,11 +484,7 @@ def ivf_oracle_sql(n_queries: int, k: int, nprobe: int = IVF_NPROBE) -> str:
         "AND a.vec_id <> p.q_id), "
         "scored AS (SELECT q_id, nbr_id, "
         + _sim_sql("q_emb", "n_emb")
-        + " AS sim FROM cand) "
-        f"SELECT q_id, rank, nbr_id, sim FROM ("
-        f"SELECT q_id, nbr_id, sim, ROW_NUMBER() OVER ("
-        f"PARTITION BY q_id ORDER BY sim DESC, nbr_id ASC) AS rank FROM scored) t "
-        f"WHERE rank <= {k}"
+        + " AS sim FROM cand) " + _sql_top_k(k)
     )
 
 
@@ -507,144 +539,4 @@ def project_oracle_sql(out_dim: int = PROJ_DIM) -> str:
         "FROM embeddings) "
         "SELECT vec_id, CAST(i.i AS INT) AS comp, proj[i.i + 1] AS value "
         f"FROM p JOIN generate_series(0, {out_dim - 1}) i(i) ON TRUE"
-    )
-
-
-def _bucket_pairs(buckets: DataFrame, id_col: str,
-                  max_bucket: int | None) -> DataFrame:
-    """DISTINCT unordered candidate pairs (d1 < d2) from an LSH bucket
-    table: the (id, band, val) rows materialize ONCE (eager checkpoint —
-    the former lazy plan re-executed the 32-plane signature scan for every
-    reference: cap sizes, both self-join sides), then the pairs come from
-    a bucket SELF-JOIN on the checkpointed narrow table.
-
-    The self-join — not in-bucket collect_list+explode — is deliberate:
-    these LSH buckets are FAT by construction (a 4-bit band holds ~n/16 of
-    the table), so in-bucket generation caps parallelism at the bucket
-    count and serializes each bucket's c²/2 explode in one task (measured
-    1.7x SLOWER at 10x scale), while the join's pair generation streams
-    inside ordinary shuffle partitions with AQE skew-splitting as backstop.
-    MinHash keeps the in-bucket form: its buckets are near-dup cliques
-    bounded by a 1k cap, the opposite shape.
-
-    ``max_bucket`` drops buckets above the cap (candidate volume is
-    Σ_buckets c²; a degenerate mega-bucket would swamp the join). Dropped
-    buckets cost recall, never correctness, and the SQL oracles replicate
-    the identical bound (HAVING COUNT(*) <= cap) so results stay
-    bit-reproducible."""
-    bk = buckets.localCheckpoint(eager=True)
-    if max_bucket is not None:
-        sizes = bk.groupBy("band", "val").agg(
-            F.count(F.lit(1)).alias("_bsz")
-        ).filter(F.col("_bsz") <= max_bucket).drop("_bsz")
-        bk = bk.join(sizes, ["band", "val"], "left_semi")
-    right = bk.select(F.col(id_col).alias("_id2"), "band", "val")
-    return (
-        bk.join(right, ["band", "val"])
-        .filter(F.col(id_col) < F.col("_id2"))
-        .select(F.col(id_col).alias("d1"), F.col("_id2").alias("d2"))
-        .distinct()
-    )
-
-
-def knn_graph(emb: DataFrame, k: int, id_col: str = "vec_id",
-              emb_col: str = "embedding",
-              max_bucket: int | None = 10_000) -> DataFrame:
-    """kNN GRAPH over the whole embedding table — every vector's top-k
-    most-similar LSH-bucket candidates by exact quantized cosine, the
-    primitive under SemDeDup-style semantic dedup and kNN-graph
-    clustering. Returns (q_id, rank, nbr_id, sim).
-
-    Scale shape (the ``embed_cosine_dedup`` candidate dataflow + the
-    ``ann_lsh_topk`` re-rank): one JVM signature pass, candidate
-    generation as a bucket SELF-join on BARE IDS (embedding arrays never
-    shuffle during candidate generation), per-row quantized arrays and
-    norms computed once and joined back by id, dense top-k window per
-    query. Candidacy is LSH-approximate exactly as ``ann_lsh_topk``
-    (recall floor pytest-pinned there); the SQL oracle mirrors the same
-    candidacy, so results are bit-reproducible.
-    """
-    planes = hyperplanes()
-    sig = emb.select(F.col(id_col), *_sig_cols(emb_col, planes))
-    buckets = sig.select(
-        id_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("val"))
-            for b in range(BANDS)
-        ])).alias("bk"),
-    ).select(id_col, "bk.band", "bk.val")
-    # ONE signature pass (see _bucket_pairs — the former lazy plan scanned
-    # the embedding table four times), parallel pair generation via the
-    # checkpointed bucket self-join
-    upairs = _bucket_pairs(buckets, id_col, max_bucket)
-    qe = f"transform({emb_col}, x -> floor(CAST(x AS DOUBLE) * 1024D))"
-    qv = emb.select(
-        F.col(id_col),
-        F.expr(qe).alias("qv"),
-        F.expr(f"sqrt(aggregate({qe}, 0D, (a, v) -> a + v * v))").alias("nrm"),
-    )
-    # exact quantized cosine is SYMMETRIC, so each unordered pair is scored
-    # once and the kNN graph's two orientations explode from the scored row
-    # — half the re-rank joins and half the higher-order dot products of
-    # the per-orientation form, bit-identical sim per direction
-    scored_u = (
-        upairs
-        .join(qv.select(F.col(id_col).alias("d1"), F.col("qv").alias("v1"),
-                        F.col("nrm").alias("n1")), "d1")
-        .join(qv.select(F.col(id_col).alias("d2"), F.col("qv").alias("v2"),
-                        F.col("nrm").alias("n2")), "d2")
-        .withColumn("sim", F.expr(
-            "aggregate(zip_with(v1, v2, (x, y) -> x * y), 0D, (a, v) -> a + v)"
-            " / (n1 * n2)"
-        ))
-    )
-    scored = scored_u.select(
-        F.explode(F.array(
-            F.struct(F.col("d1").alias("q_id"), F.col("d2").alias("nbr_id")),
-            F.struct(F.col("d2").alias("q_id"), F.col("d1").alias("nbr_id")),
-        )).alias("e"),
-        "sim",
-    ).select("e.q_id", "e.nbr_id", "sim")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(),
-                                           F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "nbr_id", "sim")
-    )
-
-
-def knn_graph_oracle_sql(k: int, max_bucket: int = 10_000) -> str:
-    """The identical kNN-graph definition in ANSI SQL (DuckDB)."""
-    e_bands = _sig_sql_exprs(hyperplanes(), BANDS, "e")
-    return (
-        "WITH s AS (SELECT e.vec_id, e.embedding, "
-        + ", ".join(f"{e_bands[b]} AS band{b}" for b in range(BANDS))
-        + " FROM embeddings e), "
-        "bk0 AS ("
-        + " UNION ALL ".join(
-            f"SELECT vec_id, embedding, {b} AS band, band{b} AS val FROM s"
-            for b in range(BANDS)
-        )
-        + "), "
-        "bkc AS (SELECT band, val FROM bk0 GROUP BY band, val "
-        f"HAVING COUNT(*) <= {max_bucket}), "
-        "bk AS (SELECT bk0.* FROM bk0 JOIN bkc USING (band, val)), "
-        "cand AS (SELECT DISTINCT a.vec_id AS q_id, b.vec_id AS nbr_id, "
-        "a.embedding AS q_emb, b.embedding AS n_emb FROM bk a JOIN bk b "
-        "ON a.band = b.band AND a.val = b.val AND a.vec_id <> b.vec_id), "
-        "scored AS (SELECT q_id, nbr_id, "
-        "  list_sum(list_transform(list_zip("
-        "    list_transform(q_emb, x -> floor(CAST(x AS DOUBLE) * 1024)), "
-        "    list_transform(n_emb, x -> floor(CAST(x AS DOUBLE) * 1024))), "
-        "    p -> p[1] * p[2])) "
-        "  / (sqrt(list_sum(list_transform(q_emb, x -> floor(CAST(x AS DOUBLE) * 1024) * floor(CAST(x AS DOUBLE) * 1024)))) "
-        "   * sqrt(list_sum(list_transform(n_emb, x -> floor(CAST(x AS DOUBLE) * 1024) * floor(CAST(x AS DOUBLE) * 1024))))) AS sim "
-        "FROM cand) "
-        f"SELECT q_id, rank, nbr_id, sim FROM ("
-        f"SELECT q_id, nbr_id, sim, ROW_NUMBER() OVER ("
-        f"PARTITION BY q_id ORDER BY sim DESC, nbr_id ASC) AS rank FROM scored) t "
-        f"WHERE rank <= {k}"
     )

@@ -8,26 +8,27 @@ All hot paths are native Spark expressions (JVM, whole-stage codegen):
   verification primitive.
 - ``minhash_lsh_pairs``: MinHash signatures as ``min(xxhash64(seed, gram))``
   aggregates (one column per hash — pure JVM), banded into LSH buckets,
-  bucket-join for candidates, exact-Jaccard verification. At 100 TB this is
-  the standard near-dup sweep: one shuffle to signatures, one to buckets,
-  one broadcast-ish verify join over candidates only.
+  candidate pairs from ``lsh.bucket_pairs`` (in-bucket for these small
+  near-dup buckets), exact-Jaccard verification. At 100 TB this is the
+  standard near-dup sweep: one shuffle to signatures, one to buckets, one
+  verify join over candidates only.
+- ``dup_clusters``: connected components over the verified pair graph.
 """
 
 from __future__ import annotations
 
-import logging
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import connected_components
+from .lsh import band_buckets, bucket_pairs
 
-log = logging.getLogger(__name__)
-
-#: metrics of the last `minhash_lsh_pairs` run (populated post-materialize):
-#: {"dropped_buckets": int, "max_bucket_size": int} — the ops/test hook for
-#: the hot-bucket cap.
-last_lsh_metrics: dict = {}
+#: MinHash functions per signature
+NUM_HASHES = 64
+#: hot-bucket cap of ``minhash_lsh_pairs`` (see ``lsh.bucket_pairs``): a
+#: bucket over it is a duplicate clique already caught in its members'
+#: other bands
+MAX_BUCKET = 1000
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -198,12 +199,9 @@ def blocked_pairs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    num_hashes: int = 64,
-    bands: int | None = None,
     threshold_pct: int = 80,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_bucket: int | None = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash over word-bigram shingles + banded
     LSH, verified exactly.
@@ -212,7 +210,7 @@ def minhash_lsh_pairs(
     compared in exact integer arithmetic (ni*100 >= nu*pct) so any SQL
     engine reproduces the same set bit-for-bit.
 
-    ``bands`` defaults from the threshold: high thresholds use b=16/r=4
+    The band count follows the threshold: high thresholds use b=16/r=4
     (S-curve knee at (1/b)^(1/r) = 0.5 — 2-row bands admitted 16% of ALL
     pairs on the synthetic corpus from its heavy j ≈ 0.05 mass, making the
     verify join the cost; miss at j=0.8 is (1-0.8⁴)^16 ≈ 3e-4, and the
@@ -221,14 +219,13 @@ def minhash_lsh_pairs(
     at j=0.6 is (1-0.36)^32 ≈ 6e-7 — r=4 there would silently drop ~11%
     of threshold-grazing pairs.
     """
-    if bands is None:
-        bands = 16 if threshold_pct >= 75 else 32
+    bands = 16 if threshold_pct >= 75 else 32
     # signatures are duplicate-insensitive → skip the full-corpus distinct;
     # the exact verify below deduplicates candidate grams only. Persisted:
     # the signature pass and the verify both shingle from this frame.
     # Signature functions use Kirsch-Mitzenmacher double hashing:
     # h_i = (h1 + i·h2) mod p from TWO independent seeded string hashes —
-    # 2 string hashes + num_hashes adds per row instead of num_hashes full
+    # 2 string hashes + NUM_HASHES adds per row instead of NUM_HASHES full
     # string hashes (measured ~2× on the whole query), pairwise-independent
     # per function, and a gram pair collides across ALL functions only if
     # both bases collide mod p (~2⁻⁶²). Candidates are verified with exact
@@ -246,80 +243,21 @@ def minhash_lsh_pairs(
     sig = hashed.groupBy("_id").agg(
         *[
             F.expr(f"min(pmod(_h1 + {i} * _h2, {P}))").alias(f"h{i}")
-            for i in range(num_hashes)
+            for i in range(NUM_HASHES)
         ]
     )
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // bands
     band_cols = [
         F.expr(
             f"xxhash64({bi}, "
             + ", ".join(f"h{bi * rows_per_band + r}" for r in range(rows_per_band))
             + ")"
-        ).alias(f"b{bi}")
+        )
         for bi in range(bands)
     ]
-    banded = sig.select("_id", *band_cols)
-    buckets = banded.select(
-        "_id",
-        F.explode(
-            F.array(*[F.struct(F.lit(bi).alias("band"), F.col(f"b{bi}").alias("sig"))
-                      for bi in range(bands)])
-        ).alias("bk"),
-    ).select("_id", "bk.band", "bk.sig")
-    # Candidate pairs by IN-BUCKET generation: groupBy (band, sig) +
-    # collect_list + a native pair-combination explode — ONE shuffle of the
-    # bucket table, where the former bucket self-join shuffled it twice and
-    # paid a join. A/B at sf0.1 (5 interleaved reps, min-of, steal-spiked
-    # host): in-bucket 3.8 s vs self-join 6.5 s; settled-host medians 5.2 s
-    # vs 8.3 s (BENCH/NOTES.md). Output pair set is identical. At 100 TB a
-    # pathological hot bucket (near-identical shards) buffers its id list
-    # in one task: ``max_bucket`` drops buckets above the cap — such
-    # buckets are duplicate cliques already caught in their other bands.
-    bl = buckets.groupBy("band", "sig").agg(
-        F.sort_array(F.collect_list("_id")).alias("ids")
-    ).where(F.size("ids") > 1)
-    obs: Observation | None = None
-    if max_bucket is not None:
-        # hot-bucket cap ON by default (a near-identical shard family at
-        # 100 TB otherwise buffers one giant id list — and a quadratic pair
-        # explode — in a single task). Dropped buckets are counted by a
-        # zero-extra-action `observe` on the executed plan and surfaced via
-        # `last_lsh_metrics` + a warning log; a dropped bucket is a
-        # duplicate CLIQUE larger than the cap, already re-discoverable
-        # from its members' other bands.
-        obs = Observation()
-        bl = bl.observe(
-            obs,
-            F.count(F.when(F.size("ids") > max_bucket, 1)).alias("dropped_buckets"),
-            F.coalesce(F.max(F.size("ids")), F.lit(0)).alias("max_bucket_size"),
-        ).where(F.size("ids") <= max_bucket)
-    cand = (
-        bl.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), "
-                    "y -> struct(x as d1, y as d2))))"
-                )
-            ).alias("p")
-        )
-        .select("p.d1", "p.d2")
-        .distinct()
-    )
+    cand = bucket_pairs(band_buckets(sig, "_id", band_cols), "_id", MAX_BUCKET)
     verified = _jaccard_counts(grams, cand)  # materializes, then releases caches
     grams.unpersist()
-    if obs is not None:
-        # _jaccard_counts already executed the candidate pipeline, so the
-        # observed metrics are final — no extra job
-        m = dict(obs.get)
-        last_lsh_metrics.clear()
-        last_lsh_metrics.update(m)
-        if m.get("dropped_buckets"):
-            log.warning(
-                "minhash_lsh: dropped %s bucket(s) over max_bucket=%s "
-                "(largest bucket: %s ids)",
-                m["dropped_buckets"], max_bucket, m["max_bucket_size"],
-            )
     return verified.where(F.col("ni") * 100 >= F.col("nu") * threshold_pct)
 
 

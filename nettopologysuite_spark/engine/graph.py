@@ -6,9 +6,9 @@ One rule at every level, chosen from a measured size instead of caller
 options (the driver-vs-distributed choice *To Partition, or Not to
 Partition* argues for joins):
 
-1. count the edges;
-2. at most ``LOCAL_MAX_EDGES`` → one exact solve on the driver (numpy
-   min-hooking + pointer jumping over the collected edge list);
+1. collect at most ``LOCAL_MAX_EDGES + 1`` edges (one bounded job);
+2. all of them fit → one exact solve on the driver (numpy min-hooking +
+   pointer jumping over the collected edge list);
 3. otherwise two rounds of min-label propagation collapse every dense
    neighbourhood to its minimum and the edges contract to the label
    quotient graph, which is checkpointed;
@@ -47,33 +47,33 @@ def connected_components(edges: DataFrame) -> DataFrame:
     callers hand in a frame that is cheap to re-read (cached,
     checkpointed, or derived from one).
     """
-    return _components(edges, edges.count())
+    return _components(edges)
 
 
-def _components(edges: DataFrame, n: int) -> DataFrame:
-    if n <= LOCAL_MAX_EDGES:
-        return _solve_local(edges, n)
+def _components(edges: DataFrame) -> DataFrame:
+    pdf = edges.select("a", "b").limit(LOCAL_MAX_EDGES + 1).toPandas()
+    if len(pdf) <= LOCAL_MAX_EDGES:
+        return _solve_local(edges, pdf)
+    n = edges.count()  # only the stall test below needs it
     node_map, quotient = _contract(edges)
     n_q = quotient.count()  # materialized by the checkpoint — cheap
     if n_q > LOCAL_MAX_EDGES and n_q >= STALL_RATIO * n:
         roots = _star_rounds(quotient)
     else:
-        roots = _components(quotient, n_q)
+        roots = _components(quotient)
     # nodes absent from ``roots`` are their own component minimum
     return node_map.join(
         roots.select(F.col("node").alias("l"), "label"), "l", "left"
     ).select("node", F.coalesce(F.col("label"), F.col("l")).alias("label"))
 
 
-def _solve_local(edges: DataFrame, n: int) -> DataFrame:
-    """Exact driver-side solve of an edge table already counted at ``n``
-    rows (≤ ``LOCAL_MAX_EDGES``): Arrow collect, ids factorized in sorted
-    order so that the smallest code of a component is its minimum id."""
+def _solve_local(edges: DataFrame, pdf: pd.DataFrame) -> DataFrame:
+    """Exact driver-side solve of ``edges``, collected whole as ``pdf``:
+    ids factorized in sorted order so that the smallest code of a
+    component is its minimum id."""
     typ = edges.schema["a"].dataType
     schema = StructType([StructField("node", typ), StructField("label", typ)])
-    pdf = edges.select("a", "b").toPandas()
-    assert len(pdf) == n, \
-        f"edge table changed between count and collect: {n} != {len(pdf)}"
+    n = len(pdf)
     codes, ids = pd.factorize(
         pd.concat([pdf["a"], pdf["b"]], ignore_index=True), sort=True
     )

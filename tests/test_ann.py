@@ -196,10 +196,11 @@ def test_knn_graph_planted_twins_and_shape(spark, sf_dir):
     assert top_src[1] == 100000
 
 
-def test_knn_graph_hot_bucket_cap(spark, sf_dir):
+def test_knn_graph_hot_bucket_cap(spark, sf_dir, monkeypatch):
     """A planted mega-bucket (many identical vectors → every band
-    collides) is dropped when it exceeds max_bucket; vectors outside it
+    collides) is dropped when it exceeds the cap; vectors outside it
     keep their neighbors. Dropping costs recall, never correctness."""
+    from nettopologysuite_spark.engine import ann, lsh
     from nettopologysuite_spark.engine.ann import knn_graph
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(40)
@@ -208,11 +209,14 @@ def test_knn_graph_hot_bucket_cap(spark, sf_dir):
     mega = [(50_000 + i, clone) for i in range(30)]
     df = spark.createDataFrame(base + mega,
                                "vec_id long, embedding array<float>")
-    capped = knn_graph(df, k=3, max_bucket=20)
+    monkeypatch.setattr(ann, "MAX_BUCKET", 20)
+    capped = knn_graph(df, k=3)
+    assert lsh.last_metrics["dropped_buckets"] > 0  # counted at build time
     got = {r["q_id"] for r in capped.collect()}
     # the 30 clones + original share every 4-bit band bucket → all their
     # buckets blow the cap; they can only appear via OTHER buckets
-    uncapped = {r["q_id"] for r in knn_graph(df, k=3, max_bucket=None).collect()}
+    monkeypatch.setattr(ann, "MAX_BUCKET", 10**9)
+    uncapped = {r["q_id"] for r in knn_graph(df, k=3).collect()}
     assert got <= uncapped
     clone_ids = {50_000 + i for i in range(30)}
     assert len(uncapped & clone_ids) == 30

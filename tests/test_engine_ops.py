@@ -323,12 +323,12 @@ def test_decontaminate_semantics(spark):
     assert got[3] == (1, 1, True)
 
 
-def test_minhash_hot_bucket_cap_counts_drops(spark):
+def test_minhash_hot_bucket_cap_counts_drops(spark, monkeypatch):
     """A planted mega-clique (identical docs) overflows every one of its
     LSH buckets: with a small cap its buckets are dropped, the drop count
     surfaces through the zero-extra-action observe metrics, and pairs among
     ordinary docs are untouched."""
-    from nettopologysuite_spark.engine import dedup
+    from nettopologysuite_spark.engine import dedup, lsh
     from nettopologysuite_spark.engine.dedup import minhash_lsh_pairs
 
     mega = [(f"m-{i:03d}", "the quick brown fox jumps over the lazy dog again")
@@ -341,18 +341,19 @@ def test_minhash_hot_bucket_cap_counts_drops(spark):
              for i in range(10)]
     docs = spark.createDataFrame(mega + near + other, "doc_id string, text string")
 
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 10)
     capped = {(r["d1"], r["d2"])
-              for r in minhash_lsh_pairs(docs, threshold_pct=60, max_bucket=10).collect()}
-    m = dict(dedup.last_lsh_metrics)
+              for r in minhash_lsh_pairs(docs, threshold_pct=60).collect()}
+    m = dict(lsh.last_metrics)
     assert m["dropped_buckets"] > 0
     assert m["max_bucket_size"] == 40
     assert ("n-1", "n-2") in capped          # ordinary near-dups survive
     assert not any(a.startswith("m-") for a, _ in capped)  # clique dropped
 
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 10**9)
     uncapped = {(r["d1"], r["d2"])
-                for r in minhash_lsh_pairs(docs, threshold_pct=60,
-                                           max_bucket=None).collect()}
-    assert dict(dedup.last_lsh_metrics) == m  # None leaves metrics untouched
+                for r in minhash_lsh_pairs(docs, threshold_pct=60).collect()}
+    assert lsh.last_metrics["dropped_buckets"] == 0
     # capped output == uncapped minus the mega-clique's pairs
     assert uncapped - capped == {(a, b) for a, _ in mega for b, _ in mega if a < b}
 

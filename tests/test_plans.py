@@ -84,8 +84,9 @@ def test_media_stats_is_native(spark, sf_dir):
 
 
 def test_embed_dedup_is_native(spark, sf_dir):
-    """LSH signatures, bucket self-join, and exact cosine re-check are all
-    JVM higher-order expressions — zero Python in the plan."""
+    """LSH signatures and the exact cosine re-check are JVM higher-order
+    expressions, and the candidate pairs come from a checkpointed bucket
+    table — zero Python in the plan."""
     plan = _plan(E.q_embed_dedup(spark, sf_dir))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
