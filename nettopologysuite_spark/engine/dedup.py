@@ -8,10 +8,10 @@ All hot paths are native Spark expressions (JVM, whole-stage codegen):
   verification primitive.
 - ``minhash_lsh_pairs``: MinHash signatures as ``min(xxhash64(seed, gram))``
   aggregates (one column per hash — pure JVM), banded into LSH buckets,
-  candidate pairs from ``lsh.bucket_pairs`` (in-bucket for these small
-  near-dup buckets), exact-Jaccard verification. At 100 TB this is the
-  standard near-dup sweep: one shuffle to signatures, one to buckets, one
-  verify join over candidates only.
+  candidate pairs from ``lsh.bucket_pairs`` (a bucket self-join),
+  exact-Jaccard verification. At 100 TB this is the
+  standard near-dup sweep: one shuffle to signatures, one to buckets, the
+  bucket self-join, one verify join over candidates only.
 - ``dup_clusters``: connected components over the verified pair graph.
 """
 

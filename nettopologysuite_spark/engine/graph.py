@@ -6,7 +6,9 @@ One rule at every level, chosen from a measured size instead of caller
 options (the driver-vs-distributed choice *To Partition, or Not to
 Partition* argues for joins):
 
-1. collect at most ``LOCAL_MAX_EDGES + 1`` edges (one bounded job);
+1. collect at most ``LOCAL_MAX_EDGES + 1`` edges (one bounded job; a
+   quotient graph, whose edge count is already known, skips it when it
+   is larger);
 2. all of them fit → one exact solve on the driver (numpy min-hooking +
    pointer jumping over the collected edge list);
 3. otherwise two rounds of min-label propagation collapse every dense
@@ -50,17 +52,19 @@ def connected_components(edges: DataFrame) -> DataFrame:
     return _components(edges)
 
 
-def _components(edges: DataFrame) -> DataFrame:
-    pdf = edges.select("a", "b").limit(LOCAL_MAX_EDGES + 1).toPandas()
-    if len(pdf) <= LOCAL_MAX_EDGES:
-        return _solve_local(edges, pdf)
-    n = edges.count()  # only the stall test below needs it
+def _components(edges: DataFrame, n: int | None = None) -> DataFrame:
+    """``n``: the edge count of ``edges`` when already known."""
+    if n is None or n <= LOCAL_MAX_EDGES:
+        pdf = edges.select("a", "b").limit(LOCAL_MAX_EDGES + 1).toPandas()
+        if len(pdf) <= LOCAL_MAX_EDGES:
+            return _solve_local(edges, pdf)
+        n = edges.count()  # only the stall test below needs it
     node_map, quotient = _contract(edges)
     n_q = quotient.count()  # materialized by the checkpoint — cheap
     if n_q > LOCAL_MAX_EDGES and n_q >= STALL_RATIO * n:
         roots = _star_rounds(quotient)
     else:
-        roots = _components(quotient)
+        roots = _components(quotient, n_q)
     # nodes absent from ``roots`` are their own component minimum
     return node_map.join(
         roots.select(F.col("node").alias("l"), "label"), "l", "left"

@@ -4,19 +4,14 @@ graph and LSH ANN.
 
 - ``band_buckets``: per-band signature columns → (id, band, sig) rows.
 - ``bucket_pairs``: the distinct unordered pairs (d1 < d2) that share a
-  bucket. It owns the hot-bucket cap, the dropped-bucket counter
-  (``last_metrics``) and the choice between in-bucket and self-join pair
-  generation.
+  bucket. It owns the hot-bucket cap and the dropped-bucket counter
+  (``last_metrics``).
 
-The choice follows *To Partition, or Not to Partition* (SIGMOD 2021): it
-comes from the measured bucket sizes, not from the caller. The bucket id
-lists materialize once (one eager checkpoint, which also carries the
-counter's ``observe``); when the largest kept bucket holds at most
-``IN_BUCKET_MAX`` ids, each bucket's pairs explode from its own list (no
-join, fewer Spark jobs). Above it, each bucket's c²/2 explode builds one
-large array in one task, so the lists explode back to rows and the pairs
-come from a bucket self-join instead, whose pair generation streams. Both
-produce the identical pair set.
+The bucket id lists materialize once (one eager checkpoint, which also
+carries the counter's ``observe``) and the pairs come from a self-join of
+the lists exploded back to rows, whose pair generation streams. Generating
+each bucket's pairs from its own list instead (no join) measured level to
+slower on every bucket size tried: see CHANGES.md.
 """
 
 from __future__ import annotations
@@ -28,20 +23,9 @@ from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
-#: largest kept bucket (ids) for which pairs are generated in-bucket. A/B
-#: on local[4], each strategy forced, warm medians of 3 interleaved pairs:
-#: largest kept bucket 5 (MinHash, sf0.01) and 31 (MinHash, sf0.1) level
-#: within host noise, 102 (embedding dedup, sf0.1) 2.88 vs 2.81 s, 268
-#: (kNN graph, sf0.1) 6.47 vs 5.39 s, 837 (kNN graph, 6k random vectors)
-#: 44.8 vs 35.2 s, 2759 (20k random vectors, one run) 524 vs 454 s. In-bucket
-#: runs 1-3 fewer Spark jobs (no join), so it keeps the buckets where it
-#: measured level; any value in [102, 268) makes the same choices there.
-IN_BUCKET_MAX = 128
-
 #: hot-bucket metrics of the last ``bucket_pairs`` call: dropped_buckets
-#: (buckets over the cap), max_bucket_size (largest bucket of ≥ 2 ids,
-#: dropped or kept), max_kept_size, and strategy ("in_bucket" or
-#: "self_join")
+#: (buckets over the cap) and max_bucket_size (largest bucket of ≥ 2 ids,
+#: dropped or kept)
 last_metrics: dict = {}
 
 
@@ -58,9 +42,14 @@ def band_buckets(df: DataFrame, id_col: str, bands: list[Column]) -> DataFrame:
 
 
 def _observed(obs: Observation) -> dict:
-    """The observation's metrics, or {} when the observed node never ran
-    (adaptive execution prunes a subtree it has seen to be empty, and the
-    JVM then holds an empty row, which ``Observation.get`` cannot read)."""
+    """The observation's metrics, or {} when the observed node never ran.
+
+    Relies on classic (non-Connect) PySpark 4.1: adaptive execution prunes
+    a subtree it has seen to be empty, observed node included, and the
+    JVM observation then holds an empty row, which ``Observation.get``
+    fails to convert (``PythonSQLUtils.toPyRow: assertion failed``).
+    ``Observation.get`` reads the same ``_jo`` handle; the empty-input
+    cases of ``tests/test_lsh_degenerate.py`` pin this behaviour."""
     return obs.get if obs._jo.getRow().length() else {}
 
 
@@ -79,32 +68,19 @@ def bucket_pairs(buckets: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
     size = F.size("ids")
     lists = (
         buckets.groupBy("band", "sig")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.collect_list(id_col).alias("ids"))
         .where(size > 1)
         .observe(
             obs,
             F.count(F.when(size > max_bucket, 1)).alias("dropped_buckets"),
             F.max(size).alias("max_bucket_size"),
-            F.max(F.when(size <= max_bucket, size)).alias("max_kept_size"),
         )
         .where(size <= max_bucket)
         .localCheckpoint(eager=True)
     )
-    # no bucket at all leaves the maxima NULL, or the whole row unset
-    m = {"dropped_buckets": 0, "max_bucket_size": 0, "max_kept_size": 0}
+    # no bucket at all leaves the maximum NULL, or the whole row unset
+    m = {"dropped_buckets": 0, "max_bucket_size": 0}
     m.update((k, v) for k, v in _observed(obs).items() if v is not None)
-    if m["max_kept_size"] <= IN_BUCKET_MAX:
-        m["strategy"] = "in_bucket"
-        pairs = lists.select(F.explode(F.expr(
-            "flatten(transform(ids, (x, i) -> "
-            "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS d1, y AS d2))))"
-        )).alias("_p")).select("_p.d1", "_p.d2")
-    else:
-        m["strategy"] = "self_join"
-        rows = lists.select("band", "sig", F.explode("ids").alias("d1"))
-        pairs = rows.join(
-            rows.select("band", "sig", F.col("d1").alias("d2")), ["band", "sig"]
-        ).select("d1", "d2")
     last_metrics.clear()
     last_metrics.update(m)
     if m["dropped_buckets"]:
@@ -112,6 +88,10 @@ def bucket_pairs(buckets: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
             "lsh: dropped %s bucket(s) over max_bucket=%s (largest bucket: %s ids)",
             m["dropped_buckets"], max_bucket, m["max_bucket_size"],
         )
-    # the self-join yields both orders and self-pairs, in-bucket a self-pair
-    # for an id repeated in one bucket; the oracles pair d1 < d2 only
-    return pairs.where(F.col("d1") < F.col("d2")).distinct()
+    rows = lists.select("band", "sig", F.explode("ids").alias("d1"))
+    pairs = rows.join(
+        rows.select("band", "sig", F.col("d1").alias("d2")), ["band", "sig"]
+    )
+    # the self-join yields both orders and self-pairs; the oracles pair
+    # d1 < d2 only
+    return pairs.where(F.col("d1") < F.col("d2")).select("d1", "d2").distinct()
