@@ -34,6 +34,7 @@ from nettopologysuite_spark.engine.joins import (
     within_distance_join_points,
 )
 from nettopologysuite_spark.engine.polygons import PolygonPack
+from nettopologysuite_spark.engine.session import local_frame
 from nettopologysuite_spark.engine.tiling import morton_col, with_cell_id
 from nettopologysuite_spark.kernels.cells import Grid
 
@@ -153,7 +154,8 @@ def q_knn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = _event_points(spark, sf_dir)
     keys = _nation_keys(spark, sf_dir)
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(k, float(derive.nation_center(k)[0]), float(derive.nation_center(k)[1]))
          for k in keys],
         "q_id long, qx double, qy double",
@@ -379,7 +381,8 @@ def q_subdivide_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nettopologysuite_spark.kernels.geom import wkb_dumps
 
     keys = _nation_keys(spark, sf_dir)
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(f"oct-{k}",
           bytearray(wkb_dumps(densify(derive.nation_octagon_geom(k), 0.1))))
          for k in keys],
@@ -410,7 +413,8 @@ def q_poly_poly_touches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rects = _event_rects_snapped(spark, sf_dir)
     keys = _nation_keys(spark, sf_dir)
-    nrects = spark.createDataFrame(
+    nrects = local_frame(
+        spark,
         [(f"rect-{k}", wkb_dumps(derive.nation_rect_geom(k))) for k in keys],
         "poly_id string, rect_wkb binary",
     )
@@ -431,7 +435,8 @@ def q_poly_poly_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rects = _event_rects(spark, sf_dir)
     keys = _nation_keys(spark, sf_dir)
-    octs = spark.createDataFrame(
+    octs = local_frame(
+        spark,
         [(f"oct-{k}", wkb_dumps(nation_octagon_geom(k))) for k in keys],
         "poly_id string, oct_wkb binary",
     )
@@ -458,7 +463,8 @@ def q_poly_poly_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rects = _event_rects(spark, sf_dir)
     keys = _nation_keys(spark, sf_dir)
-    octs = spark.createDataFrame(
+    octs = local_frame(
+        spark,
         [(f"oct-{k}", wkb_dumps(nation_octagon_geom(k))) for k in keys],
         "poly_id string, oct_wkb binary",
     )
@@ -479,7 +485,8 @@ def q_within_dist_join_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rects = _event_rects(spark, sf_dir)
     keys = _nation_keys(spark, sf_dir)
-    octs = spark.createDataFrame(
+    octs = local_frame(
+        spark,
         [(f"oct-{k}", wkb_dumps(nation_octagon_geom(k))) for k in keys],
         "poly_id string, oct_wkb binary",
     )
@@ -622,7 +629,8 @@ def q_knn_join_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rects = _event_rects(spark, sf_dir)
     keys = _nation_keys(spark, sf_dir)
-    octs = spark.createDataFrame(
+    octs = local_frame(
+        spark,
         [(f"oct-{k}", wkb_dumps(nation_octagon_geom(k))) for k in keys],
         "poly_id string, oct_wkb binary",
     )
@@ -755,7 +763,7 @@ def q_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     keys = _nation_keys(spark, sf_dir)
     rows = [(k, wkb_dumps(nation_rect_geom(k))) for k in keys]
-    df = spark.createDataFrame(rows, "k long, geom_wkb binary").repartition(8)
+    df = local_frame(spark, rows, "k long, geom_wkb binary").repartition(8)
     u = distributed_union(df)
 
     from pyspark.sql.functions import pandas_udf
@@ -849,7 +857,7 @@ def q_hull_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in keys:
         for vx, vy in derive.nation_octagon_vertices(k):
             rows.append((float(vx), float(vy)))
-    pts = spark.createDataFrame(rows, "x double, y double").repartition(8)
+    pts = local_frame(spark, rows, "x double, y double").repartition(8)
     hull = distributed_convex_hull(pts)
 
     from pyspark.sql.functions import pandas_udf

@@ -7,6 +7,8 @@ Modes:
   python bench_extra.py plans <outdir> [q..] dump .explain("formatted") per query
   python bench_extra.py profile <query>      one query, event-log enabled, per-job
                                              wall breakdown via job descriptions
+  python bench_extra.py pytasks <query ...>  per rep and query, the Python worker
+                                             task invocations and their CPU
 
 Same driver contract as bench.py ($SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS),
 same noop-sink methodology (guide §1.4), interleaved reps because this host's
@@ -105,6 +107,63 @@ def cmd_profile(name: str) -> None:
     spark.stop()
 
 
+def _pytasks_read(log: str, timeout_s: float = 5.0) -> tuple[int, float]:
+    """(task invocations, their worker CPU s) in the wrapper's log. A
+    worker writes its end line just after the JVM has its output, so wait
+    until every started task has ended."""
+    deadline = time.time() + timeout_s
+    while True:
+        with open(log) as f:
+            lines = [ln.split() for ln in f]
+        starts = sum(1 for ln in lines if ln[0] == "S")
+        ends = [float(ln[2]) for ln in lines if ln[0] == "E"]
+        if len(ends) >= starts or time.time() > deadline:
+            return starts, sum(ends)
+        time.sleep(0.05)
+
+
+def cmd_pytasks(names: list[str]) -> None:
+    """Python worker task invocations per query, REPS times in one session:
+    for each rep and query, how many Python worker tasks building the
+    DataFrame (eager jobs included) and executing it into the noop sink
+    started, and their summed worker-process CPU. Spark runs every Python
+    task through ``tools/pyspark_pytasks.py`` (``spark.python.worker.module``),
+    which logs each invocation. A driver-built table scanned through
+    ``parallelize`` shows up here, not in the plan's Python nodes."""
+    import tempfile
+
+    import __spark_entry__ as E
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    tools = os.path.join(here, "tools")
+    workdir = tempfile.mkdtemp(prefix="pytasks-")
+    log = os.path.join(workdir, "tasks.log")
+    # the daemon and its workers inherit this process's environment
+    os.environ["NTS_PYTASKS_LOG"] = log
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (tools, here, os.environ.get("PYTHONPATH")) if p
+    )
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.python.worker.module=pyspark_pytasks "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    )
+    qs = E.queries()
+    spark = _spark()
+    try:
+        for rep in range(REPS):
+            for name in names:
+                open(log, "w").close()
+                df = qs[name](spark, SF_DIR)
+                df.write.format("noop").mode("overwrite").save()
+                spark.catalog.clearCache()
+                tasks, cpu = _pytasks_read(log)
+                print(f"rep{rep} {name}: python tasks {tasks}  cpu {cpu:.3f}s", flush=True)
+    finally:
+        spark.stop()
+        os.remove(log)
+        os.rmdir(workdir)
+
+
 def cmd_bwprobe(n_rows: int = 64_000_000) -> None:
     """Pure-bandwidth control for the scaling protocol (round-5 verdict #5):
     a no-kernel shuffle job (range → hash key → repartition → count) with
@@ -152,6 +211,8 @@ if __name__ == "__main__":
         cmd_plans(sys.argv[2], sys.argv[3:])
     elif mode == "profile":
         cmd_profile(sys.argv[2])
+    elif mode == "pytasks":
+        cmd_pytasks(sys.argv[2:])
     elif mode == "bwprobe":
         cmd_bwprobe(int(sys.argv[2]) if len(sys.argv) > 2 else 64_000_000)
     else:

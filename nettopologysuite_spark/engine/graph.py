@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .session import local_frame
+
 #: largest edge count solved on the driver; above it the graph contracts
 #: on the cluster first (200k id pairs are a few MB of driver memory)
 LOCAL_MAX_EDGES = 200_000
@@ -83,8 +85,8 @@ def _solve_local(edges: DataFrame, pdf: pd.DataFrame) -> DataFrame:
     )
     ids = np.asarray(ids)
     root = _min_roots(codes[:n], codes[n:], len(ids))
-    return edges.sparkSession.createDataFrame(
-        pd.DataFrame({"node": ids, "label": ids[root]}), schema
+    return local_frame(
+        edges.sparkSession, pd.DataFrame({"node": ids, "label": ids[root]}), schema
     )
 
 

@@ -6,9 +6,11 @@ Physical strategy (SURVEY.md §7, BASELINE.json north rule):
 1. Tile assignment is a native projection (points) or an envelope-cover
    explode (extended geometries) — see ``tiling.py``.
 2. Candidate pairs come from an equi-join on ``cell_id``. The polygon pack's
-   (cell_id, poly_id) cover relation is tiny → ``broadcast()`` join, no
-   shuffle of the big side. At 100 TB the big side is scanned once,
-   partition-pruned by cell range when the storage is curve-ordered.
+   (cell_id, poly_id) cover relation is tiny and built on the driver as an
+   Arrow ``LocalRelation`` (``session.local_frame``) → ``broadcast()`` join
+   without a Python worker task and without a shuffle of the big side. At
+   100 TB the big side is scanned once, partition-pruned by cell range when
+   the storage is curve-ordered.
 3. Exact refinement runs inside a scalar pandas UDF over Arrow batches:
    per-executor lazily-built prepared structures (PreparedConvex /
    PreparedPolygon) probe whole numpy arrays — the batched analog of
@@ -33,6 +35,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..kernels.cells import Grid
 from .polygons import PolygonPack
+from .session import local_frame
 from .tiling import (
     cell_col,
     cell_xy,
@@ -99,8 +102,10 @@ def pip_refine_udf(pack: PolygonPack, predicate: str = "covers"):
 
 def cover_cells_df(spark: SparkSession, pack: PolygonPack, grid: Grid) -> DataFrame:
     """The (cell_id, poly_id) cover relation of the pack — every cell whose
-    box meets a polygon's envelope; the small side of the PIP joins."""
-    return spark.createDataFrame(pack.cover_rows(grid), "cell_id long, poly_id string")
+    box meets a polygon's envelope; the small side of the PIP joins. It is
+    built on the driver as an Arrow ``LocalRelation``, so broadcasting it
+    runs no Python worker task."""
+    return local_frame(spark, pack.cover_rows(grid), "cell_id long, poly_id string")
 
 
 def pip_join_points(
@@ -241,8 +246,8 @@ def pip_join_points_adaptive(
         raise ValueError(f"the adaptive PIP join does not answer {predicate!r}")
     spark = points.sparkSession
     rows = _adaptive_cover_rows(pack, grid)
-    cover = spark.createDataFrame(
-        rows, "level int, cell long, poly_id string, interior boolean"
+    cover = local_frame(
+        spark, rows, "level int, cell long, poly_id string, interior boolean"
     )
     levels = sorted({r[0] for r in rows})  # ≤ grid.level + 1 values
     if not levels:
@@ -306,8 +311,8 @@ def within_distance_join_points(
             continue
         for c in grid.cover_envelope(cx - r, cy - r, cx + r, cy + r):
             rows.append((int(c), q_id, float(cx), float(cy), float(r)))
-    cover = spark.createDataFrame(
-        rows, "cell_id long, q_id string, cx double, cy double, r double"
+    cover = local_frame(
+        spark, rows, "cell_id long, q_id string, cx double, cy double, r double"
     )
     pts = with_cell_id(points, grid, x, y)
     cand = pts.join(F.broadcast(cover), "cell_id")
@@ -699,7 +704,8 @@ def spatial_join_wkb(
     _check_predicate(predicate)
     spark = geoms.sparkSession
     env_by_pid = {e.poly_id: wkb_loads(e.wkb).envelope() for e in pack.entries}
-    cover = spark.createDataFrame(
+    cover = local_frame(
+        spark,
         [(cell, pid, *map(float, env_by_pid[pid])) for cell, pid in pack.cover_rows(grid)],
         "cell_id long, poly_id string, " + ", ".join(f"_p{k} double" for k in _ENV),
     )

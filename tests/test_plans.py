@@ -5,6 +5,8 @@ whole-stage-codegen tiling, sort-merge with salting where requested."""
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E  # noqa: E402
@@ -12,6 +14,27 @@ import __spark_entry__ as E  # noqa: E402
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _python_rdd_scans(df) -> list[str]:
+    """Lineages of the plan's RDD scans that hold a Python RDD. A list of
+    rows handed to ``createDataFrame`` becomes ``parallelize`` → ``Scan
+    ExistingRDD``, and every scan of it re-runs Python worker tasks. A
+    checkpoint prints as ``Scan ExistingRDD`` too, but its lineage is cut
+    at the stored blocks, so only the lineage tells the two apart."""
+    found = []
+
+    def walk(node):
+        if node.getClass().getSimpleName() == "LogicalRDD":
+            lineage = node.rdd().toDebugString()
+            if "PythonRDD" in lineage:
+                found.append(lineage)
+        children = node.children().iterator()
+        while children.hasNext():
+            walk(children.next())
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return found
 
 
 def test_pip_join_is_broadcast(spark, sf_dir):
@@ -26,6 +49,7 @@ def test_tile_assign_is_pure_codegen(spark, sf_dir):
     plan = _plan(df)
     # no Python evaluation anywhere in the tiling projection
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "ExistingRDD" not in plan
     # '*(n)' prefixes mark whole-stage-codegen stages in the compact form
     assert "*(" in plan
 
@@ -44,8 +68,10 @@ def test_scan_pushdown(spark, sf_dir):
 def test_within_distance_refine_is_native(spark, sf_dir):
     df = E.q_within_dist_join(spark, sf_dir)
     plan = _plan(df)
-    # the squared-distance refinement stays JVM-side
+    # the squared-distance refinement stays JVM-side, and the centre list
+    # is a LocalRelation, not a Python-fed RDD scan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "ExistingRDD" not in plan
 
 
 def test_poly_poly_join_shape(spark, sf_dir):
@@ -69,6 +95,7 @@ def test_within_dist_df_join_is_native(spark, sf_dir):
     codegen distance refine — zero Python in the whole plan."""
     plan = _plan(E.q_within_dist_join_df(spark, sf_dir))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "ExistingRDD" not in plan
     assert "sequence(" in plan  # native cover explode
 
 
@@ -133,3 +160,26 @@ def test_poly_poly_touches_shape(spark, sf_dir):
     assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan, plan[:800]
     assert plan.count("ArrowEvalPython") == 3
     assert "sequence(greatest(" in plan, plan[:800]
+
+
+def test_python_rdd_scan_gate_sees_a_list_built_frame(spark):
+    """The gate below is only as good as its detector: a list of rows is a
+    Python-fed RDD scan, an Arrow-built table and a checkpoint are not."""
+    from nettopologysuite_spark.engine.session import local_frame
+
+    listed = spark.createDataFrame([(1, "a")], "k long, v string")
+    assert "Scan ExistingRDD" in _plan(listed)
+    assert _python_rdd_scans(listed)
+    assert not _python_rdd_scans(local_frame(spark, [(1, "a")], "k long, v string"))
+    assert not _python_rdd_scans(spark.range(3).localCheckpoint())
+
+
+@pytest.mark.parametrize("name", list(E.queries()))
+def test_no_python_fed_rdd_scan(spark, sf_dir, name):
+    """No query scans a driver-built table through Python worker tasks:
+    every such table is an Arrow ``LocalRelation`` (``local_frame``)."""
+    df = E.queries()[name](spark, sf_dir)
+    try:
+        assert _python_rdd_scans(df) == []
+    finally:
+        spark.catalog.clearCache()
