@@ -404,7 +404,7 @@ def q_poly_poly_touches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Big×big TOUCHES join (DE-9IM boundary-only contact): integer-snapped
     event rectangles × nation rectangles — same native cell equi-join
     machinery, refine through the BATCHED DE-9IM composition
-    (touches = batch_intersects ∧ ¬batch_interiors_intersect, whole-array
+    (touches = batch_intersects ∧ ¬_batch_interiors_intersect, whole-array
     PIP/parity/crossing passes; zero per-pair Python — the round-5 close of
     the last relate fallback, `Operation/RelateNG/TopologyComputer.cs`
     semantics batched)."""

@@ -51,7 +51,7 @@ def distributed_union(df: DataFrame, wkb_col: str = "geom_wkb",
     n = (df.sparkSession.sparkContext.defaultParallelism
          if reduce_partitions is None else reduce_partitions)
 
-    def reduce_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def reduce_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         geoms = [wkb_loads(bytes(b)) for b in pdf["w"]]
         return pd.DataFrame({"w": [wkb_dumps(cascaded_union(geoms))]})
 
@@ -90,7 +90,7 @@ def distributed_convex_hull(df: DataFrame, x: str = "x", y: str = "y") -> DataFr
 
     partials = df.select(x, y).mapInPandas(partial, "hx double, hy double")
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         from ..kernels.geom import Geom, MULTIPOINT, POINT

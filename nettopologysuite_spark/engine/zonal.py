@@ -154,7 +154,7 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
         ], dtype=np.float64)
         return Geom(POLYGON, rings=[ring])
 
-    def tile_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile_partial(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         squares = [_square(int(r.ix), int(r.iy)) for r in pdf.itertuples()]
         return pd.DataFrame({
             "region_id": [key[0]],
@@ -178,7 +178,7 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
         tile_partial, part_schema
     )
 
-    def merge_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_partial(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         # fan-in bound holds by construction (tile DIV fanin per round);
         # the assert turns a violated bound into a loud failure
         assert len(pdf) <= fanin, f"fan-in bound violated: {len(pdf)}"
@@ -201,7 +201,7 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
         ).groupBy("region_id", "tile").applyInPandas(merge_partial, part_schema)
         groups = -(-groups // fanin)
 
-    def region_final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def region_final(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         assert len(pdf) <= fanin, f"fan-in bound violated: {len(pdf)}"
         parts = [wkb_loads(bytes(b)) for b in pdf["w"]]
         n_px = int(pdf["n_px"].sum())

@@ -23,10 +23,10 @@ little-endian points / linestrings / single-ring polygons — the shape
 synthetic tiles and rects take) with one numpy buffer reinterpretation,
 zero per-row Python; mixed batches fall back to the per-row parser.
 
-The join refines call one entry point, ``batch_predicate``: it routes each
-DE-9IM predicate to these passes (intersects, covers/contains, the
-interior/interior and line-probe compositions) and leaves only mixed or
-ambiguous rows to the exact relate kernel.
+The join refines call one entry point, ``batch_predicate``: it batches
+intersects, covers, contains, touches and crosses in these passes (the
+covers, interior/interior and line-probe compositions) and leaves every
+other predicate, and mixed or ambiguous rows, to the exact relate kernel.
 """
 
 from __future__ import annotations
@@ -447,7 +447,7 @@ def batch_intersects(gb: GeomBatch, lefts: np.ndarray, right: Geom | PreparedRig
 
 
 # ---------------------------------------------------------------------------
-# vectorized covers / contains (both orientations)
+# vectorized covers / contains (one polygonal container, a batch of rows)
 # ---------------------------------------------------------------------------
 
 def _proper_cross_per_seg(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
@@ -478,7 +478,7 @@ def _proper_cross_per_seg(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
     return out
 
 
-def batch_covers_rights(
+def _batch_covers_rights(
     gb: GeomBatch,
     rights: np.ndarray,
     left: Geom | PreparedRight,
@@ -488,10 +488,9 @@ def batch_covers_rights(
     """Vectorized covers(left, gb[i]) — or contains — for every right index
     in ``rights`` (ONE polygonal left, a batch of rights).
 
-    Pass-for-pass mirror of ``kernels.predicates.covers``/``contains``
-    (vertex coverage + strict-crossing + midpoint probes, the
+    Vertex coverage + strict-crossing + midpoint probes, the
     ``Geometries/Prepared/AbstractPreparedPolygonContains.cs:150-200``
-    structure), so results are bit-identical to the scalar kernels:
+    structure:
 
       covers(a, b)   = all b vertices in/on a's polygonal leaves
                      ∧ no strict proper crossing (a segs × b segs)
@@ -502,9 +501,12 @@ def batch_covers_rights(
     The interior-point residue (covers holds yet every probed point sits ON
     a's boundary — b's boundary embedded in a's) decodes the few affected
     rights via ``geom_of(idx)``; it is empty for any pair whose containment
-    is strict anywhere. Requires a polygonal left: callers fall back to the
-    scalar kernel otherwise (a non-polygonal left can cover only
-    lower-dimensional geometry — not this module's batch shape).
+    is strict anywhere. Requires a polygonal left.
+
+    The midpoint of a DIAGONAL edge that b shares with a's boundary can
+    round an ulp outside a, which reads as not covered (a regular polygon
+    against itself). ``batch_predicate`` sends rows sharing such an edge to
+    the relate kernel (``_shares_segment``); call it, not this pass.
     """
     from .pip import INTERIOR
     from .predicates import interior_point
@@ -516,8 +518,7 @@ def batch_covers_rights(
         return res
     rights = np.asarray(rights, dtype=np.int64)
 
-    # ---- pass 1: ALL b vertices in/on a (polygonal leaves, scalar
-    #      _points_in_polygonal semantics); empty b → not covered ----------
+    # ---- pass 1: ALL b vertices in/on a; empty b → not covered ----------
     vcnt = gb.v_start[rights + 1] - gb.v_start[rights]
     ok = vcnt > 0
     has_int = np.zeros(n, dtype=bool)
@@ -585,146 +586,20 @@ def batch_covers_rights(
     return res
 
 
-def _locate_probe_rows(gb: GeomBatch, ls: np.ndarray, qx: float, qy: float):
-    """(on_boundary, inside_parity) of one probe point against the polygonal
-    part of every row in ``ls`` — whole-array over the batch's ring
-    segments (even-odd parity per leaf, OR-ed; on-segment detected
-    exactly)."""
-    cnt = gb.p_start[ls + 1] - gb.p_start[ls]
-    pidx, powner = _ranges_concat(gb.p_start[ls], cnt)
-    on_b = np.zeros(len(ls), dtype=bool)
-    inside = np.zeros(len(ls), dtype=bool)
-    if not len(pidx):
-        return on_b, inside
-    x1 = gb.pax[pidx]; y1 = gb.pay[pidx]
-    x2 = gb.pbx[pidx]; y2 = gb.pby[pidx]
-    d = (x2 - x1) * (qy - y1) - (y2 - y1) * (qx - x1)
-    on_seg = (
-        (d == 0.0)
-        & (qx >= np.minimum(x1, x2)) & (qx <= np.maximum(x1, x2))
-        & (qy >= np.minimum(y1, y2)) & (qy <= np.maximum(y1, y2))
-    )
-    on_b |= np.bincount(powner[on_seg], minlength=len(ls)) > 0
-    # even-odd parity per (owner, leaf), OR-ed across leaves
-    okey = powner * np.int64(gb.p_leaf.max() + 1 if len(gb.p_leaf) else 1) \
-        + gb.p_leaf[pidx]
-    ukey, key_inv = np.unique(okey, return_inverse=True)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        straddle = (y1 > qy) != (y2 > qy)
-        xint = x1 + (qy - y1) * (x2 - x1) / (y2 - y1)
-        crossed = straddle & (qx < xint)
-    cnt_leaf = np.bincount(key_inv[crossed], minlength=len(ukey))
-    leaf_inside = (cnt_leaf & 1).astype(bool)
-    inside |= np.bincount(powner[leaf_inside[key_inv]], minlength=len(ls)) > 0
-    return on_b, inside
-
-
-def batch_covers_right(
-    gb: GeomBatch,
-    lefts: np.ndarray,
-    right: Geom,
-    contains: bool = False,
-) -> np.ndarray:
-    """Vectorized covers(gb[i], right) — or contains — for every left index
-    in ``lefts`` (a batch of lefts, ONE right whose vertex count is small).
-
-    Scalar-kernel mirror with roles flipped: each probe point of the right
-    (vertices, segment midpoints, and — for contains — its interior point,
-    all computed ONCE) is located against every left via per-leaf even-odd
-    parity + on-ring-segment tests over the columnar batch, and the strict
-    proper-crossing pass reuses the same chunked orientation arithmetic.
-    Lefts without polygonal parts report False, exactly like the scalar
-    kernel whenever the right's dimension exceeds theirs — callers must
-    ensure the right is polygonal (the pack-join shape).
-    """
-    from .predicates import interior_point
-
-    n = len(lefts)
-    res = np.zeros(n, dtype=bool)
-    if n == 0 or right.is_empty:
-        return res
-    lefts = np.asarray(lefts, dtype=np.int64)
-    pcnt = gb.p_start[lefts + 1] - gb.p_start[lefts]
-    ok = pcnt > 0  # non-polygonal left cannot cover an areal right
-
-    b_pts = right.all_coords()
-    s1 = np.empty((0, 2)); s2 = np.empty((0, 2))
-    segs_a, segs_b = [], []
-    for leaf in right.flatten():
-        if leaf.gtype == LINESTRING and leaf.coords is not None and len(leaf.coords) >= 2:
-            segs_a.append(leaf.coords[:-1]); segs_b.append(leaf.coords[1:])
-        elif leaf.gtype == POLYGON:
-            for r in leaf.rings:
-                if len(r) >= 2:
-                    segs_a.append(r[:-1]); segs_b.append(r[1:])
-    if segs_a:
-        s1 = np.concatenate(segs_a); s2 = np.concatenate(segs_b)
-    probes = [b_pts]
-    if len(s1):
-        probes.append((s1 + s2) * 0.5)
-    cover_probes = np.concatenate(probes) if probes else np.empty((0, 2))
-    int_probes = cover_probes
-    if contains:
-        ip = interior_point(right) if len(right.all_coords()) else None
-        if ip is not None:
-            int_probes = np.concatenate([cover_probes, np.array([[ip[0], ip[1]]])])
-
-    def _locate_probe(qx: float, qy: float, sub: np.ndarray):
-        return _locate_probe_rows(gb, lefts[sub], qx, qy)
-
-    # ---- pass 1 + 3: every cover probe in/on each left ------------------
-    has_int = np.zeros(n, dtype=bool)
-    for qx, qy in cover_probes:
-        sub = np.flatnonzero(ok)
-        if not len(sub):
-            break
-        on_b, inside = _locate_probe(float(qx), float(qy), sub)
-        ok[sub[~(on_b | inside)]] = False
-        if contains:
-            has_int[sub[inside & ~on_b]] = True
-    if contains and len(int_probes) > len(cover_probes):
-        # interior-point probe: only strict-interior credit, no cover demand
-        sub = np.flatnonzero(ok & ~has_int)
-        if len(sub):
-            qx, qy = int_probes[-1]
-            on_b, inside = _locate_probe(float(qx), float(qy), sub)
-            has_int[sub[inside & ~on_b]] = True
-
-    # ---- pass 2: no strict proper crossing (left segs × right segs) -----
-    if len(s1):
-        pend = ok
-        if pend.any():
-            sub = np.flatnonzero(pend)
-            ls = lefts[sub]
-            scnt = gb.s_start[ls + 1] - gb.s_start[ls]
-            sidx, sowner = _ranges_concat(gb.s_start[ls], scnt)
-            if len(sidx):
-                crossed = _proper_cross_per_seg(
-                    gb.sax[sidx], gb.say[sidx], gb.sbx[sidx], gb.sby[sidx],
-                    np.ascontiguousarray(s1[:, 0]), np.ascontiguousarray(s1[:, 1]),
-                    np.ascontiguousarray(s2[:, 0]), np.ascontiguousarray(s2[:, 1]),
-                )
-                bad = np.bincount(sowner[crossed], minlength=len(sub)) > 0
-                ok[sub[bad]] = False
-
-    return (ok & has_int) if contains else ok
-
-
 # ---------------------------------------------------------------------------
 # vectorized interior/interior test (the DE-9IM II entry for areal pairs)
 # ---------------------------------------------------------------------------
 
-def batch_interiors_intersect(
+def _batch_interiors_intersect(
     gb: GeomBatch,
     lefts: np.ndarray,
     other: Geom | PreparedRight,
     geom_of=None,
 ) -> np.ndarray:
     """Vectorized int(gb[i]) ∩ int(other) ≠ ∅ for PURE-POLYGONAL pairs —
-    the II entry of the DE-9IM, which decides touches (= intersects ∧ ¬II),
-    overlaps and areal equality for the join predicates without running the
-    per-pair relate kernel (``Operation/RelateNG/TopologyComputer.cs`` area
-    reasoning, batched).
+    the II entry of the DE-9IM, which decides touches (= intersects ∧ ¬II)
+    for the join predicates without running the per-pair relate kernel
+    (``Operation/RelateNG/TopologyComputer.cs`` area reasoning, batched).
 
     Jordan evidence in whole-array passes (valid Simple-Features inputs):
 
@@ -736,7 +611,7 @@ def batch_interiors_intersect(
       E. residue: rows with no strict evidence probe their OWN interior
          point against other — non-empty only when a row's boundary is
          embedded in other's (equal / hole-filling pairs), mirroring the
-         ``batch_covers_rights`` residue.
+         ``_batch_covers_rights`` residue.
 
     Exact except for the measure-zero configuration where boundaries cross
     transversally ONLY through shared vertices with every vertex/midpoint
@@ -745,7 +620,9 @@ def batch_interiors_intersect(
     ``evaluate_predicate`` still answers exactly. The join workloads'
     snapped rectangles and octagons never produce it (corners properly
     cross or a midpoint lands interior); property-tested against the
-    scalar kernel through ``batch_predicate``.
+    scalar kernel through ``batch_predicate``, which also sends rows sharing
+    a diagonal edge with other to the relate kernel (their midpoints round
+    off the shared edge, as in ``_batch_covers_rights``).
     """
     from .pip import INTERIOR
     from .predicates import interior_point
@@ -799,10 +676,14 @@ def batch_interiors_intersect(
     # ---- pass D: other's probes strictly inside gb rows -----------------
     # ring vertices + ring midpoints + other's interior point; a probe in
     # int(other) strictly inside a row IS II, a boundary probe strictly
-    # inside a row implies int(other) reaches in locally (valid input)
-    pend = ~res
-    if pend.any():
-        sub = np.flatnonzero(pend)
+    # inside a row implies int(other) reaches in locally (valid input).
+    # Each probe is located against every pending row's rings at once:
+    # exactly on a ring segment, else inside by even-odd parity per
+    # polygon leaf, OR-ed over the row's leaves.
+    sub = np.flatnonzero(~res)
+    ls = lefts[sub]
+    pidx, powner = _ranges_concat(gb.p_start[ls], gb.p_start[ls + 1] - gb.p_start[ls])
+    if len(pidx):
         probes = [np.stack([pr.rvx, pr.rvy], axis=1)] if len(pr.rvx) else []
         if len(pr.pgax):
             probes.append(np.stack([
@@ -811,13 +692,29 @@ def batch_interiors_intersect(
         ip = interior_point(pr.geom)
         if ip is not None:
             probes.append(np.array([[ip[0], ip[1]]]))
+        x1 = gb.pax[pidx]; y1 = gb.pay[pidx]
+        x2 = gb.pbx[pidx]; y2 = gb.pby[pidx]
+        # parity per (pending row, leaf): a row index may repeat in lefts
+        okey = powner * np.int64(gb.p_leaf.max() + 1) + gb.p_leaf[pidx]
+        ukey, seg_leaf = np.unique(okey, return_inverse=True)
+        hit = np.zeros(len(sub), dtype=bool)
         for qx, qy in (np.concatenate(probes) if probes else ()):
-            if not len(sub):
+            d = (x2 - x1) * (qy - y1) - (y2 - y1) * (qx - x1)
+            on_seg = (
+                (d == 0.0)
+                & (qx >= np.minimum(x1, x2)) & (qx <= np.maximum(x1, x2))
+                & (qy >= np.minimum(y1, y2)) & (qy <= np.maximum(y1, y2))
+            )
+            on_b = np.bincount(powner[on_seg], minlength=len(sub)) > 0
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xint = x1 + (qy - y1) * (x2 - x1) / (y2 - y1)
+                crossed = ((y1 > qy) != (y2 > qy)) & (qx < xint)
+            leaf_in = (np.bincount(seg_leaf[crossed], minlength=len(ukey)) & 1).astype(bool)
+            inside = np.bincount(powner[leaf_in[seg_leaf]], minlength=len(sub)) > 0
+            hit |= inside & ~on_b
+            if hit.all():
                 break
-            on_b, inside = _locate_probe_rows(gb, lefts[sub], float(qx), float(qy))
-            hit = inside & ~on_b
-            res[sub[hit]] = True
-            sub = sub[~hit]
+        res[sub[hit]] = True
 
     # ---- pass E: per-row interior-point residue -------------------------
     residue = np.flatnonzero(~res)
@@ -1097,8 +994,8 @@ def batch_line_im_probes(
          ``amb`` instead (the sub-segment-noding cases of
          ``kernels/relate.py``).
 
-    Mirrors the evidence structure of ``batch_covers_rights`` /
-    ``batch_interiors_intersect`` (vertex + crossing + midpoint passes,
+    Mirrors the evidence structure of ``_batch_covers_rights`` /
+    ``_batch_interiors_intersect`` (vertex + crossing + midpoint passes,
     AbstractPreparedPolygonContains.cs:150-200) extended with the
     explicit ambiguity escape so callers stay bit-exact.
     """
@@ -1179,7 +1076,7 @@ def batch_line_im_probes(
 # one batched predicate: predicate(container, row) for the WKB join refines
 # ---------------------------------------------------------------------------
 
-_IM_PREDICATES = ("touches", "overlaps", "equalstopo", "equals", "crosses")
+_BATCHED = ("covers", "contains", "touches", "crosses")
 
 
 def _shares_segment(gb: GeomBatch, rows: np.ndarray, pc: PreparedRight) -> np.ndarray:
@@ -1213,25 +1110,6 @@ def _shares_segment(gb: GeomBatch, rows: np.ndarray, pc: PreparedRight) -> np.nd
     return out
 
 
-def _areal_im(gb: GeomBatch, rows: np.ndarray, pc: PreparedRight,
-              predicate: str, geom_of) -> np.ndarray:
-    """predicate(pc, gb[i]) for pure-polygonal rows against a pure-polygonal
-    container, composed from the batched II and covers passes."""
-    res = np.zeros(len(rows), dtype=bool)
-    if predicate == "touches":
-        hit = np.flatnonzero(batch_intersects(gb, rows, pc))
-        res[hit] = ~batch_interiors_intersect(gb, rows[hit], pc, geom_of=geom_of)
-    elif predicate in ("equalstopo", "equals"):
-        hit = np.flatnonzero(batch_covers_rights(gb, rows, pc))
-        res[hit] = batch_covers_right(gb, rows[hit], pc.geom)
-    elif predicate == "overlaps":
-        hit = np.flatnonzero(batch_interiors_intersect(gb, rows, pc, geom_of=geom_of))
-        res[hit] = (~batch_covers_rights(gb, rows[hit], pc)
-                    & ~batch_covers_right(gb, rows[hit], pc.geom))
-    # crosses(areal, areal) ≡ False by the dimension rule
-    return res
-
-
 def batch_predicate(
     gb: GeomBatch,
     idx: np.ndarray,
@@ -1247,24 +1125,21 @@ def batch_predicate(
 
     - ``intersects``          → ``batch_intersects``
     - ``covers``/``contains`` against a pure-polygonal container →
-      ``batch_covers_rights``
-    - ``touches``/``overlaps``/``equalstopo``/``crosses`` against a
-      pure-polygonal container:
+      ``_batch_covers_rights``
+    - ``touches``/``crosses`` against a pure-polygonal container:
 
-      - pure-polygonal rows compose from the II and covers passes:
-        touches = intersects ∧ ¬II, overlaps = II ∧ ¬covers either way,
-        equalstopo = covers both ways, crosses = False (dimension rule);
-      - pure-line rows: overlaps/equalstopo = False (dimension rule);
-        touches = intersects ∧ ¬II and crosses = II ∧ EI decide through
-        ``batch_line_im_probes``.
+      - pure-polygonal rows: touches = intersects ∧ ¬II
+        (``_batch_interiors_intersect``), crosses = False (dimension rule);
+      - pure-line rows: touches = intersects ∧ ¬II and crosses = II ∧ EI
+        decide through ``batch_line_im_probes``.
 
-    Everything else — mixed or point rows, probe-ambiguous lines, rows
-    sharing a diagonal edge with the container (``_shares_segment``), a
-    non-polygonal or mixed container, any other predicate — is answered by
-    the exact relate kernel, ``evaluate_predicate(predicate, container.geom,
-    geom_of(i))``; a row whose ``geom_of`` is None stays False. The
-    touches, overlaps, equalstopo and crosses answers are symmetric, so
-    callers may put either side of a pair in the container role.
+    Everything else — overlaps, equals and equalstopo, mixed or point rows,
+    probe-ambiguous lines, rows sharing a diagonal edge with the container
+    (``_shares_segment``), a non-polygonal or mixed container — is answered
+    by the exact relate kernel, ``evaluate_predicate(predicate,
+    container.geom, geom_of(i))``; a row whose ``geom_of`` is None stays
+    False. The touches and crosses answers are symmetric, so callers may
+    put either side of a pair in the container role.
     """
     from .predicates import evaluate_predicate
 
@@ -1273,19 +1148,23 @@ def batch_predicate(
         return batch_intersects(gb, idx, container)
     out = np.zeros(len(idx), dtype=bool)
     scalar = np.ones(len(idx), dtype=bool)  # rows left to the relate kernel
-    if container.pure_poly and predicate in ("covers", "contains", *_IM_PREDICATES):
+    if container.pure_poly and predicate in _BATCHED:
         batched = ~_shares_segment(gb, idx, container)
         if predicate in ("covers", "contains"):
             k = np.flatnonzero(batched)
-            out[k] = batch_covers_rights(gb, idx[k], container,
-                                         contains=predicate == "contains", geom_of=geom_of)
+            out[k] = _batch_covers_rights(gb, idx[k], container,
+                                          contains=predicate == "contains", geom_of=geom_of)
             scalar[k] = False
         else:
             poly = np.flatnonzero(gb.pure_poly[idx] & batched)
-            out[poly] = _areal_im(gb, idx[poly], container, predicate, geom_of)
+            if predicate == "touches":
+                hit = poly[batch_intersects(gb, idx[poly], container)]
+                out[hit] = ~_batch_interiors_intersect(gb, idx[hit], container,
+                                                       geom_of=geom_of)
+            # crosses(areal, areal) ≡ False by the dimension rule
             line = np.flatnonzero(gb.pure_line[idx])
             scalar[poly] = scalar[line] = False
-            if len(line) and predicate in ("touches", "crosses"):
+            if len(line):
                 ii, ei, amb = batch_line_im_probes(gb, idx[line], container)
                 dec = line[~amb]
                 if predicate == "touches":

@@ -134,9 +134,6 @@ class PreparedPolygon:
     def contains_points(self, px, py) -> np.ndarray:
         return self.locate(px, py) == INTERIOR
 
-    def intersects_points(self, px, py) -> np.ndarray:
-        return self.locate(px, py) != EXTERIOR
-
 
 class PreparedConvex:
     """Half-plane prepared test for convex CCW rings.

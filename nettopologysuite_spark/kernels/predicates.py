@@ -1,11 +1,11 @@
 """Pairwise topological predicates over Geom values.
 
-Round-1 engine: exact for the point×polygonal hot path (delegates to the
-prepared PIP kernel) and for segment-based ``intersects``/``disjoint``;
-``contains``/``covers`` on extended×extended pairs use the standard
-vertex-coverage + proper-crossing test (exact for valid simple inputs; the
-full DE-9IM RelateNG-style matrix builder replaces this in a later round —
-reference semantics: ``Operation/RelateNG/RelatePredicate.cs:33-613``).
+Every named predicate has one answer: ``evaluate_predicate``, the DE-9IM
+relate kernel (``kernels/relate.py``) with the patterns of
+``Operation/RelateNG/RelatePredicate.cs:33-613``. This module keeps the
+primitives other kernels build on: ``intersects`` (point membership, then
+segment contact, then containment without boundary contact — exact for
+points, lines and polygons), ``segs_intersect_any`` and ``interior_point``.
 
 Orientation/segment-intersection follow ``Algorithm/RobustLineIntersector.cs``
 test structure (sign-of-cross-product cases + collinear overlap), evaluated
@@ -18,7 +18,7 @@ from __future__ import annotations
 import numpy as np
 
 from .geom import LINESTRING, POINT, POLYGON, Geom
-from .pip import EXTERIOR, INTERIOR, PreparedPolygon
+from .pip import EXTERIOR, PreparedPolygon
 
 
 def _orient(ax, ay, bx, by, cx, cy):
@@ -78,12 +78,11 @@ def _polygon_leaves(g: Geom) -> list[Geom]:
     return [l for l in g.flatten() if l.gtype == POLYGON]
 
 
-def _points_in_polygonal(g: Geom, pts: np.ndarray, mode: str) -> np.ndarray:
-    """mode 'covers' → loc != EXT; 'interior' → loc == INT; per point, any leaf."""
+def _points_in_polygonal(g: Geom, pts: np.ndarray) -> np.ndarray:
+    """Per point: in or on some polygonal leaf of g."""
     out = np.zeros(len(pts), dtype=bool)
     for leaf in _polygon_leaves(g):
-        loc = PreparedPolygon(leaf).locate(pts[:, 0], pts[:, 1])
-        out |= (loc != EXTERIOR) if mode == "covers" else (loc == INTERIOR)
+        out |= PreparedPolygon(leaf).locate(pts[:, 0], pts[:, 1]) != EXTERIOR
     return out
 
 
@@ -114,9 +113,9 @@ def intersects(a: Geom, b: Geom) -> bool:
     if segs_intersect_any(sa1, sa2, sb1, sb2):
         return True
     # containment without boundary contact
-    if _polygon_leaves(b) and len(a_pts) and _points_in_polygonal(b, a_pts[:1], "covers")[0]:
+    if _polygon_leaves(b) and len(a_pts) and _points_in_polygonal(b, a_pts[:1])[0]:
         return True
-    if _polygon_leaves(a) and len(b_pts) and _points_in_polygonal(a, b_pts[:1], "covers")[0]:
+    if _polygon_leaves(a) and len(b_pts) and _points_in_polygonal(a, b_pts[:1])[0]:
         return True
     return False
 
@@ -146,47 +145,6 @@ def _points_on_geom(g: Geom, pts: np.ndarray) -> np.ndarray:
             loc = PreparedPolygon(leaf).locate(pts[:, 0], pts[:, 1])
             out |= loc != EXTERIOR
     return out
-
-
-def _proper_crossing(a: Geom, b: Geom) -> bool:
-    """Any strictly-proper segment crossing between a's and b's segments."""
-    sa1, sa2 = _segs(a)
-    sb1, sb2 = _segs(b)
-    if len(sa1) == 0 or len(sb1) == 0:
-        return False
-    ax1 = sa1[:, 0][:, None]; ay1 = sa1[:, 1][:, None]
-    ax2 = sa2[:, 0][:, None]; ay2 = sa2[:, 1][:, None]
-    bx1 = sb1[:, 0][None, :]; by1 = sb1[:, 1][None, :]
-    bx2 = sb2[:, 0][None, :]; by2 = sb2[:, 1][None, :]
-    d1 = _orient(bx1, by1, bx2, by2, ax1, ay1)
-    d2 = _orient(bx1, by1, bx2, by2, ax2, ay2)
-    d3 = _orient(ax1, ay1, ax2, ay2, bx1, by1)
-    d4 = _orient(ax1, ay1, ax2, ay2, bx2, by2)
-    proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
-        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
-    )
-    return bool(proper.any())
-
-
-def covers(a: Geom, b: Geom) -> bool:
-    """a covers b (boundary-inclusive containment)."""
-    if a.is_empty or b.is_empty:
-        return False
-    b_pts = b.all_coords()
-    if not _polygon_leaves(a):
-        # lower-dim cover: every b point must lie on a; only exact for points
-        return bool(_points_on_geom(a, b_pts).all()) and b.dimension() <= a.dimension()
-    if not _points_in_polygonal(a, b_pts, "covers").all():
-        return False
-    if b.dimension() >= 1 and _proper_crossing(a, b):
-        return False
-    if b.dimension() >= 1:
-        # midpoint probe guards concave gaps between covered vertices
-        s1, s2 = _segs(b)
-        mids = (s1 + s2) * 0.5
-        if len(mids) and not _points_in_polygonal(a, mids, "covers").all():
-            return False
-    return True
 
 
 def interior_point(g: Geom) -> tuple[float, float] | None:
@@ -243,33 +201,9 @@ def _ring_area2(r: np.ndarray) -> float:
     return float(np.sum(r[:-1, 0] * r[1:, 1] - r[1:, 0] * r[:-1, 1]))
 
 
-def contains(a: Geom, b: Geom) -> bool:
-    """OGC contains: covers + some interior-interior intersection."""
-    if not covers(a, b):
-        return False
-    b_pts = b.all_coords()
-    if _polygon_leaves(a):
-        if _points_in_polygonal(a, b_pts, "interior").any():
-            return True
-        s1, s2 = _segs(b)
-        if len(s1):
-            mids = (s1 + s2) * 0.5
-            if bool(_points_in_polygonal(a, mids, "interior").any()):
-                return True
-        if _polygon_leaves(b):
-            # b has positive area; probe a guaranteed-interior point of b
-            ip = interior_point(b)
-            if ip is not None:
-                pt = np.array([[ip[0], ip[1]]])
-                return bool(_points_in_polygonal(a, pt, "interior")[0])
-        return False
-    return True
-
-
 def evaluate_predicate(name: str, a: Geom, b: Geom) -> bool:
     """Exact predicate evaluation via the DE-9IM relate kernel (the corpus-
-    verified engine); the direct intersects/covers fast paths above remain
-    available for callers that have already proven their preconditions."""
+    verified engine) — the one answer for every named predicate."""
     from .relate import relate_predicate
 
     return relate_predicate(a, b, name)

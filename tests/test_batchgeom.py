@@ -148,93 +148,7 @@ def test_batch_intersects_mixed_right_collection():
 # vectorized covers / contains
 # ---------------------------------------------------------------------------
 
-from nettopologysuite_spark.kernels.batchgeom import (  # noqa: E402
-    batch_covers_right,
-    batch_covers_rights,
-)
-from nettopologysuite_spark.kernels.predicates import (  # noqa: E402
-    contains as p_contains,
-)
-from nettopologysuite_spark.kernels.predicates import covers as p_covers  # noqa: E402
-
-
-def test_batch_covers_rights_matches_scalar_kernel():
-    """covers/contains(one polygonal left, batch of rights) must agree with
-    the scalar fast kernels on random mixed batches (points, lines, rects,
-    octagons, holed polygons) against rect / octagon / holed lefts."""
-    rng = np.random.default_rng(23)
-    total = 0
-    for trial in range(30):
-        rights = [_rand_geom(rng, rng.integers(0, 4)) for _ in range(40)]
-        if trial % 3 == 0:
-            rights += [_poly_with_hole(rng) for _ in range(4)]
-        left = _poly_with_hole(rng) if trial % 4 == 0 else _rand_geom(rng, 2 + trial % 2)
-        blobs = [wkb_dumps(g) for g in rights]
-        gb = GeomBatch.from_wkb(blobs)
-        idx = np.arange(len(rights), dtype=np.int64)
-        geom_of = lambda k: rights[k]  # noqa: E731
-        got_cov = batch_covers_rights(gb, idx, left)
-        got_con = batch_covers_rights(gb, idx, left, contains=True, geom_of=geom_of)
-        for i, g in enumerate(rights):
-            assert bool(got_cov[i]) == p_covers(left, g), (trial, i, g.type_name)
-            assert bool(got_con[i]) == p_contains(left, g), (trial, i, g.type_name)
-            total += 2
-    assert total > 2000
-
-
-def test_batch_covers_right_matches_scalar_kernel():
-    """covers/contains(batch of lefts, one polygonal right): the pack-join
-    orientation."""
-    rng = np.random.default_rng(31)
-    total = 0
-    for trial in range(30):
-        lefts = [_rand_geom(rng, rng.integers(0, 4)) for _ in range(40)]
-        if trial % 3 == 0:
-            lefts += [_poly_with_hole(rng) for _ in range(4)]
-        # right polygonal (the batch path's precondition), varied sizes so
-        # both big-covers-small and never-covers shapes occur
-        right = _rand_geom(rng, 2 + trial % 2)
-        gb = GeomBatch.from_wkb([wkb_dumps(g) for g in lefts])
-        idx = np.arange(len(lefts), dtype=np.int64)
-        got_cov = batch_covers_right(gb, idx, right)
-        got_con = batch_covers_right(gb, idx, right, contains=True)
-        for i, g in enumerate(lefts):
-            assert bool(got_cov[i]) == p_covers(g, right), (trial, i, g.type_name)
-            assert bool(got_con[i]) == p_contains(g, right), (trial, i, g.type_name)
-            total += 2
-    assert total > 2000
-
-
-def test_batch_covers_exact_edge_cases():
-    a = polygon([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)])
-    cases = [
-        # (right, covers, contains)
-        (polygon([(2, 2), (8, 2), (8, 8), (2, 8), (2, 2)]), True, True),
-        (polygon([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)]), True, True),
-        (polygon([(5, 5), (15, 5), (15, 15), (5, 15), (5, 5)]), False, False),
-        (point(5, 5), True, True),
-        (point(0, 5), True, False),        # on boundary: covered, not contained
-        (point(11, 5), False, False),
-        (linestring([(0, 0), (10, 10)]), True, True),
-        (linestring([(0, 0), (0, 10)]), True, False),   # along boundary
-        (linestring([(-1, 5), (11, 5)]), False, False),
-        (polygon([(-1, -1), (11, -1), (11, 11), (-1, 11), (-1, -1)]), False, False),
-    ]
-    gb = GeomBatch.from_wkb([wkb_dumps(g) for g, _, _ in cases])
-    idx = np.arange(len(cases), dtype=np.int64)
-    geoms = [g for g, _, _ in cases]
-    cov = batch_covers_rights(gb, idx, a)
-    con = batch_covers_rights(gb, idx, a, contains=True, geom_of=lambda k: geoms[k])
-    for (g, ec, en), gc, gn in zip(cases, cov, con):
-        assert bool(gc) == ec == p_covers(a, g), g.type_name
-        assert bool(gn) == en == p_contains(a, g), g.type_name
-    # flipped orientation: which of these geometries cover/contain a small rect
-    b = polygon([(4, 4), (6, 4), (6, 6), (4, 6), (4, 4)])
-    cov2 = batch_covers_right(gb, idx, b)
-    con2 = batch_covers_right(gb, idx, b, contains=True)
-    for g, gc, gn in zip(geoms, cov2, con2):
-        assert bool(gc) == p_covers(g, b), g.type_name
-        assert bool(gn) == p_contains(g, b), g.type_name
+from nettopologysuite_spark.kernels.batchgeom import _batch_covers_rights  # noqa: E402
 
 
 def test_batch_covers_hole_boundary_residue():
@@ -243,9 +157,9 @@ def test_batch_covers_hole_boundary_residue():
     a = polygon([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)])
     b = polygon([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)])  # identical
     gb = GeomBatch.from_wkb([wkb_dumps(b)])
-    got = batch_covers_rights(gb, np.array([0]), a, contains=True,
-                              geom_of=lambda k: b)
-    assert bool(got[0]) == p_contains(a, b) is True
+    got = _batch_covers_rights(gb, np.array([0]), a, contains=True,
+                               geom_of=lambda k: b)
+    assert bool(got[0]) == evaluate_predicate("contains", a, b) is True
 
 
 def test_batch_within_distance_matches_facet_distance():
@@ -301,7 +215,7 @@ def test_batch_distance2_matches_facet_distance():
 # ---------------------------------------------------------------------------
 
 from nettopologysuite_spark.kernels.batchgeom import (  # noqa: E402
-    batch_interiors_intersect,
+    _batch_interiors_intersect,
     batch_predicate,
 )
 from nettopologysuite_spark.kernels.geom import MULTIPOLYGON, wkt_dumps  # noqa: E402
@@ -335,7 +249,7 @@ def test_batch_interiors_intersect_matches_relate_kernel():
         lefts = [_rand_poly(rng, trial) for _ in range(30)]
         right = _rand_poly(rng, trial)
         gb = GeomBatch.from_wkb([wkb_dumps(g) for g in lefts])
-        got = batch_interiors_intersect(
+        got = _batch_interiors_intersect(
             gb, np.arange(len(lefts), dtype=np.int64), right,
             geom_of=lambda k: lefts[k],
         )
@@ -403,35 +317,97 @@ def _planted_rows(c):
     ]
 
 
+def _regular_polygon(rng):
+    """Regular polygon with 5-12 vertices and a random centre and radius:
+    its diagonal edges have non-representable midpoints, so a self-pair
+    shares diagonal edges whose midpoints round off the boundary."""
+    k = int(rng.integers(5, 13))
+    cx, cy = rng.uniform(0, 20, 2)
+    r = rng.uniform(1, 5)
+    ang = np.linspace(0, 2 * np.pi, k + 1)[:-1]
+    ring = np.column_stack([cx + r * np.cos(ang), cy + r * np.sin(ang)])
+    return polygon(np.vstack([ring, ring[:1]]))
+
+
+_SQUARE = polygon([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)])
+_SQUARE_ROWS = [  # (row, covers(_SQUARE, row), contains(_SQUARE, row))
+    (polygon([(2, 2), (8, 2), (8, 8), (2, 8), (2, 2)]), True, True),
+    (polygon([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)]), True, True),
+    (polygon([(5, 5), (15, 5), (15, 15), (5, 15), (5, 5)]), False, False),
+    (point(5, 5), True, True),
+    (point(0, 5), True, False),        # on boundary: covered, not contained
+    (point(11, 5), False, False),
+    (linestring([(0, 0), (10, 10)]), True, True),
+    (linestring([(0, 0), (0, 10)]), True, False),   # along boundary
+    (linestring([(-1, 5), (11, 5)]), False, False),
+    (polygon([(-1, -1), (11, -1), (11, 11), (-1, 11), (-1, -1)]), False, False),
+]
+
+
+def _predicate_cases():
+    """(name, container, rows) batches for ``batch_predicate``:
+
+    - every row kind against every container kind, plus rows planted in
+      exact contact with the container;
+    - random mixed batches (points, lines, rects, octagons, holed
+      polygons) against rect / octagon / holed containers;
+    - the hand-made square cases of ``_SQUARE_ROWS``;
+    - regular polygons paired with themselves, which share every
+      (diagonal) edge with the container.
+    """
+    rng = np.random.default_rng(67)
+    for trial in range(3):
+        for cname, make in _CONTAINERS.items():
+            c = make(rng)
+            rows = [kind(rng) for _ in range(3) for kind in _ROW_KINDS.values()]
+            yield cname, c, rows + _planted_rows(c)
+    rng = np.random.default_rng(23)
+    for trial in range(30):
+        rows = [_rand_geom(rng, rng.integers(0, 4)) for _ in range(40)]
+        if trial % 3 == 0:
+            rows += [_poly_with_hole(rng) for _ in range(4)]
+        c = _poly_with_hole(rng) if trial % 4 == 0 else _rand_geom(rng, 2 + trial % 2)
+        yield "mixed", c, rows
+    yield "square", _SQUARE, [g for g, _, _ in _SQUARE_ROWS]
+    rng = np.random.default_rng(71)
+    for _ in range(4):
+        g = _regular_polygon(rng)
+        yield "regular-self", g, [g]
+
+
 @pytest.mark.parametrize("predicate", [
     "intersects", "covers", "contains", "touches", "overlaps", "equalstopo", "crosses",
 ])
 def test_batch_predicate_matches_relate(predicate):
     """batch_predicate(container, row) ≡ relate_predicate(container, row)
-    for every row kind (point, line, polygon, holed polygon, multipolygon,
-    mixed collection) against polygonal and non-polygonal containers; the
-    symmetric predicates also equal relate_predicate(row, container). Folds
-    in the pure-polygonal compositions (touches = intersects ∧ ¬II,
-    overlaps = II ∧ ¬covers either way, equalstopo = covers both ways)."""
-    rng = np.random.default_rng(67)
+    on every row of ``_predicate_cases`` (point, line, polygon, holed
+    polygon, multipolygon, mixed collection rows; polygonal and
+    non-polygonal containers; regular-polygon self-pairs); the symmetric
+    predicates also equal relate_predicate(row, container). Folds in the
+    batched compositions (covers/contains passes, touches = intersects ∧
+    ¬II) and the reroute of overlaps/equalstopo and shared-diagonal rows
+    to relate; the square cases also pin their covers/contains answers."""
     hits = total = 0
-    for trial in range(3):
-        for cname, make in _CONTAINERS.items():
-            c = make(rng)
-            rows = [kind(rng) for _ in range(3) for kind in _ROW_KINDS.values()]
-            rows += _planted_rows(c)
-            gb = GeomBatch.from_wkb([wkb_dumps(g) for g in rows])
-            got = batch_predicate(
-                gb, np.arange(len(rows), dtype=np.int64), PreparedRight(c),
-                predicate, lambda k: rows[k],
-            )
-            for i, g in enumerate(rows):
-                exp = relate_predicate(c, g, predicate)
-                assert bool(got[i]) == exp, (predicate, cname, i, wkt_dumps(g), wkt_dumps(c))
-                if predicate in _SYMMETRIC:
-                    assert relate_predicate(g, c, predicate) == exp, (cname, wkt_dumps(g))
-                hits += exp
-                total += 1
+    for cname, c, rows in _predicate_cases():
+        gb = GeomBatch.from_wkb([wkb_dumps(g) for g in rows])
+        got = batch_predicate(
+            gb, np.arange(len(rows), dtype=np.int64), PreparedRight(c),
+            predicate, lambda k: rows[k],
+        )
+        for i, g in enumerate(rows):
+            exp = relate_predicate(c, g, predicate)
+            assert bool(got[i]) == exp, (predicate, cname, i, wkt_dumps(g), wkt_dumps(c))
+            if predicate in _SYMMETRIC:
+                assert relate_predicate(g, c, predicate) == exp, (cname, wkt_dumps(g))
+            hits += exp
+            total += 1
+        if cname == "regular-self":
+            # g covers, contains, intersects and equals itself
+            assert bool(got[0]) == (predicate in ("intersects", "covers", "contains",
+                                                  "equalstopo")), predicate
+        if cname == "square" and predicate in ("covers", "contains"):
+            col = 1 if predicate == "covers" else 2
+            assert list(got) == [case[col] for case in _SQUARE_ROWS]
     assert hits >= 5, (predicate, hits, total)
 
 
@@ -448,7 +424,7 @@ def test_batch_interiors_intersect_edge_cases():
     ]
     geoms = [g for g, _ in cases]
     gb = GeomBatch.from_wkb([wkb_dumps(g) for g in geoms])
-    got = batch_interiors_intersect(
+    got = _batch_interiors_intersect(
         gb, np.arange(len(geoms), dtype=np.int64), a,
         geom_of=lambda k: geoms[k])
     assert list(got) == [e for _, e in cases]
@@ -458,7 +434,7 @@ def test_batch_interiors_intersect_edge_cases():
                     [[(3, 3), (3, 7), (7, 7), (7, 3), (3, 3)]])
     plug = polygon([(3, 3), (7, 3), (7, 7), (3, 7), (3, 3)])
     gb2 = GeomBatch.from_wkb([wkb_dumps(plug)])
-    got2 = batch_interiors_intersect(gb2, np.array([0]), donut,
-                                     geom_of=lambda k: plug)
+    got2 = _batch_interiors_intersect(gb2, np.array([0]), donut,
+                                      geom_of=lambda k: plug)
     assert not bool(got2[0])
     assert evaluate_predicate("touches", plug, donut)

@@ -45,21 +45,20 @@ def test_mixed_docs_join_matches_bruteforce(spark, sf_dir):
 
 def test_mixed_docs_join_covers_contains_matches_bruteforce(spark, sf_dir):
     """covers/contains (pack polygon ⟶ row geometry, the container-first
-    convention of pip_refine_udf) through the vectorized batch_covers_rights
-    path vs the scalar fast kernels per pair."""
+    convention of pip_refine_udf) through the batched covers/contains path
+    vs the relate kernel per pair."""
     from nettopologysuite_spark.engine.docs import (
         docs_spatial_join_mixed,
         extract_geom_wkb,
         synthesize_docs_mixed,
     )
     from nettopologysuite_spark.kernels.geom import wkb_loads
-    from nettopologysuite_spark.kernels.predicates import contains as p_contains
-    from nettopologysuite_spark.kernels.predicates import covers as p_covers
+    from nettopologysuite_spark.kernels.predicates import evaluate_predicate
 
     pack = E._octagon_pack(E._nation_keys(spark, sf_dir))
     rows = extract_geom_wkb(synthesize_docs_mixed(spark, sf_dir)).collect()
     pgeoms = pack.geoms()
-    for predicate, kern in (("covers", p_covers), ("contains", p_contains)):
+    for predicate in ("covers", "contains"):
         got = {
             (r["doc_id"], r["span_idx"], r["poly_id"])
             for r in docs_spatial_join_mixed(
@@ -70,6 +69,6 @@ def test_mixed_docs_join_covers_contains_matches_bruteforce(spark, sf_dir):
         for r in rows:
             g = wkb_loads(bytes(r["geom_wkb"]))
             for pid, poly in pgeoms.items():
-                if kern(poly, g):
+                if evaluate_predicate(predicate, poly, g):
                     expect.add((r["doc_id"], r["span_idx"], pid))
         assert got == expect, predicate

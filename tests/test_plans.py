@@ -183,3 +183,24 @@ def test_no_python_fed_rdd_scan(spark, sf_dir, name):
         assert _python_rdd_scans(df) == []
     finally:
         spark.catalog.clearCache()
+
+
+def test_grouped_pandas_functions_infer_their_eval_type(spark, sf_dir):
+    """Every ``applyInPandas`` function annotates all its parameters, so
+    PySpark does not warn "Cannot infer the eval type from type hints"
+    while it builds hull_agg, union_area and raster_polygonize; the union
+    over more partials than its fan-in also builds the tree-round reduce."""
+    import warnings
+
+    from nettopologysuite_spark.engine.aggregates import distributed_union
+    from nettopologysuite_spark.engine.session import local_frame
+
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        for name in ("hull_agg", "union_area", "raster_polygonize"):
+            E.queries()[name](spark, sf_dir)
+        distributed_union(local_frame(spark, [(b"",)], "geom_wkb binary"),
+                          reduce_partitions=64)
+    spark.catalog.clearCache()
+    assert [str(w.message) for w in seen
+            if "Cannot infer the eval type" in str(w.message)] == []

@@ -3,7 +3,7 @@
 import pytest
 
 from nettopologysuite_spark.kernels.geom import wkt_loads as W
-from nettopologysuite_spark.kernels.predicates import contains, covers, intersects
+from nettopologysuite_spark.kernels.predicates import evaluate_predicate, intersects
 
 SQ = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
 SQ_HOLE = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (3 3, 7 3, 7 7, 3 7, 3 3))"
@@ -54,5 +54,5 @@ def test_intersects(a, b, expect):
     ],
 )
 def test_covers_contains(a, b, cov, cont):
-    assert covers(W(a), W(b)) is cov
-    assert contains(W(a), W(b)) is cont
+    assert evaluate_predicate("covers", W(a), W(b)) is cov
+    assert evaluate_predicate("contains", W(a), W(b)) is cont
