@@ -151,6 +151,66 @@ def test_batch_intersects_mixed_right_collection():
 from nettopologysuite_spark.kernels.batchgeom import _batch_covers_rights  # noqa: E402
 
 
+def test_batch_covers_rights_matches_scalar_kernel():
+    """covers/contains(one polygonal left, batch of rights) must agree with
+    the scalar predicate on random mixed batches (points, lines, rects,
+    octagons, holed polygons) against rect / octagon / holed lefts."""
+    rng = np.random.default_rng(23)
+    total = 0
+    for trial in range(30):
+        rights = [_rand_geom(rng, rng.integers(0, 4)) for _ in range(40)]
+        if trial % 3 == 0:
+            rights += [_poly_with_hole(rng) for _ in range(4)]
+        left = _poly_with_hole(rng) if trial % 4 == 0 else _rand_geom(rng, 2 + trial % 2)
+        blobs = [wkb_dumps(g) for g in rights]
+        gb = GeomBatch.from_wkb(blobs)
+        idx = np.arange(len(rights), dtype=np.int64)
+        geom_of = lambda k: rights[k]  # noqa: E731
+        got_cov = _batch_covers_rights(gb, idx, left)
+        got_con = _batch_covers_rights(gb, idx, left, contains=True, geom_of=geom_of)
+        for i, g in enumerate(rights):
+            assert bool(got_cov[i]) == evaluate_predicate("covers", left, g), (
+                trial, i, g.type_name)
+            assert bool(got_con[i]) == evaluate_predicate("contains", left, g), (
+                trial, i, g.type_name)
+            total += 2
+    assert total > 2000
+
+
+def test_batch_covers_exact_edge_cases():
+    a = polygon([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)])
+    cases = [
+        # (right, covers, contains)
+        (polygon([(2, 2), (8, 2), (8, 8), (2, 8), (2, 2)]), True, True),
+        (polygon([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)]), True, True),
+        (polygon([(5, 5), (15, 5), (15, 15), (5, 15), (5, 5)]), False, False),
+        (point(5, 5), True, True),
+        (point(0, 5), True, False),        # on boundary: covered, not contained
+        (point(11, 5), False, False),
+        (linestring([(0, 0), (10, 10)]), True, True),
+        (linestring([(0, 0), (0, 10)]), True, False),   # along boundary
+        (linestring([(-1, 5), (11, 5)]), False, False),
+        (polygon([(-1, -1), (11, -1), (11, 11), (-1, 11), (-1, -1)]), False, False),
+    ]
+    gb = GeomBatch.from_wkb([wkb_dumps(g) for g, _, _ in cases])
+    idx = np.arange(len(cases), dtype=np.int64)
+    geoms = [g for g, _, _ in cases]
+    cov = _batch_covers_rights(gb, idx, a)
+    con = _batch_covers_rights(gb, idx, a, contains=True, geom_of=lambda k: geoms[k])
+    for (g, ec, en), gc, gn in zip(cases, cov, con):
+        assert bool(gc) == ec == evaluate_predicate("covers", a, g), g.type_name
+        assert bool(gn) == en == evaluate_predicate("contains", a, g), g.type_name
+    # flipped orientation: which of these geometries cover/contain a small
+    # rect — each geometry in the container role, the rect as the one row
+    b = polygon([(4, 4), (6, 4), (6, 6), (4, 6), (4, 4)])
+    gb_b = GeomBatch.from_wkb([wkb_dumps(b)])
+    for g in geoms:
+        for pred in ("covers", "contains"):
+            got = batch_predicate(gb_b, np.array([0], dtype=np.int64), PreparedRight(g),
+                                  pred, lambda k: b)
+            assert bool(got[0]) == evaluate_predicate(pred, g, b), (pred, g.type_name)
+
+
 def test_batch_covers_hole_boundary_residue():
     """contains where every vertex/midpoint of b sits ON a's boundary —
     the interior-point residue path must decide via geom_of."""
