@@ -250,39 +250,23 @@ def _event_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from nettopologysuite_spark.kernels.geom import polygon, wkb_dumps
-
     # narrow rows widened before the WKB-assembly UDF when the source scan
     # is truly degenerate (1-2 partitions): the vectorized assembly is
     # cheap, so beyond that the exchange outweighs the serialization
     # (threshold_div=4 — measured at 1 and ~10 scan partitions)
     from nettopologysuite_spark.engine.text import widen_input
+    from nettopologysuite_spark.kernels.geom import POLYGON, uniform_wkb
 
     pts = widen_input(_event_points(spark, sf_dir), threshold_div=4)
 
     @pandas_udf("binary")
     def _rect_wkb(pid: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        # vectorized WKB assembly: every rect is a fixed-length (93-byte)
-        # little-endian single-ring polygon — one numpy buffer, no per-row
-        # encoder
+        # fixed-length (93-byte) single-ring polygons, assembled by
+        # uniform_wkb in one numpy buffer — no per-row encoder
         w, h = derive.event_rect_dims(pid.to_numpy(np.int64))
         xs = x.to_numpy(np.float64)
         ys = y.to_numpy(np.float64)
-        n = len(xs)
-        buf = np.zeros((n, 93), dtype=np.uint8)
-        buf[:, 0] = 1  # little-endian
-        buf[:, 1] = 3  # POLYGON
-        buf[:, 5] = 1  # one ring
-        buf[:, 9] = 5  # five points (closed)
-        coords = np.empty((n, 10), dtype=np.float64)
-        coords[:, 0::2] = np.stack(
-            [xs - w, xs + w, xs + w, xs - w, xs - w], axis=1
-        )
-        coords[:, 1::2] = np.stack(
-            [ys - h, ys - h, ys + h, ys + h, ys - h], axis=1
-        )
-        buf[:, 13:] = coords.view(np.uint8).reshape(n, 80)
-        return pd.Series([r.tobytes() for r in buf])
+        return pd.Series(uniform_wkb(POLYGON, derive.rect_rings(xs - w, ys - h, xs + w, ys + h)))
 
     return pts.select("pid", _rect_wkb(F.col("pid"), F.col("x"), F.col("y")).alias("geom_wkb"))
 
@@ -296,28 +280,20 @@ def _event_segs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
     from nettopologysuite_spark.engine.text import widen_input
+    from nettopologysuite_spark.kernels.geom import LINESTRING, uniform_wkb
 
     pts = widen_input(_event_points(spark, sf_dir), threshold_div=4)
 
     @pandas_udf("binary")
     def _seg_wkb(pid: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        # vectorized WKB assembly: fixed-length (41-byte) little-endian
-        # 2-point linestring — one numpy buffer, no per-row encoder
+        # fixed-length (41-byte) 2-point linestrings, assembled by
+        # uniform_wkb in one numpy buffer — no per-row encoder
         w = 1 + (pid.to_numpy(np.int64) % 3)
         xs = x.to_numpy(np.float64)
         ys = y.to_numpy(np.float64)
-        n = len(xs)
-        buf = np.zeros((n, 41), dtype=np.uint8)
-        buf[:, 0] = 1  # little-endian
-        buf[:, 1] = 2  # LINESTRING
-        buf[:, 5] = 2  # two points
-        coords = np.empty((n, 4), dtype=np.float64)
-        coords[:, 0] = xs - w
-        coords[:, 1] = ys
-        coords[:, 2] = xs + w
-        coords[:, 3] = ys
-        buf[:, 9:] = coords.view(np.uint8).reshape(n, 32)
-        return pd.Series([r.tobytes() for r in buf])
+        xy = np.stack([np.stack([xs - w, xs + w], axis=1),
+                       np.stack([ys, ys], axis=1)], axis=2)
+        return pd.Series(uniform_wkb(LINESTRING, xy))
 
     return pts.select(
         "pid", _seg_wkb(F.col("pid"), F.col("x"), F.col("y")).alias("geom_wkb")
@@ -332,25 +308,16 @@ def _event_rects_snapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
     from nettopologysuite_spark.engine.text import widen_input
+    from nettopologysuite_spark.kernels.geom import POLYGON, uniform_wkb
 
     pts = widen_input(_event_points(spark, sf_dir), threshold_div=4)
 
     @pandas_udf("binary")
     def _rect_wkb(pid: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        x1, y1, x2, y2 = derive.snapped_rect_corners(
+        corners = derive.snapped_rect_corners(
             pid.to_numpy(np.int64), x.to_numpy(np.float64), y.to_numpy(np.float64)
         )
-        n = len(x1)
-        buf = np.zeros((n, 93), dtype=np.uint8)
-        buf[:, 0] = 1  # little-endian
-        buf[:, 1] = 3  # POLYGON
-        buf[:, 5] = 1  # one ring
-        buf[:, 9] = 5  # five points (closed)
-        coords = np.empty((n, 10), dtype=np.float64)
-        coords[:, 0::2] = np.stack([x1, x2, x2, x1, x1], axis=1)
-        coords[:, 1::2] = np.stack([y1, y1, y2, y2, y1], axis=1)
-        buf[:, 13:] = coords.view(np.uint8).reshape(n, 80)
-        return pd.Series([r.tobytes() for r in buf])
+        return pd.Series(uniform_wkb(POLYGON, derive.rect_rings(*corners)))
 
     return pts.select("pid", _rect_wkb(F.col("pid"), F.col("x"), F.col("y")).alias("geom_wkb"))
 
@@ -1487,7 +1454,8 @@ def oracle_sql() -> dict[str, str]:
         ),
         "decontaminate": (
             "WITH w AS (SELECT doc_id, source, "
-            "regexp_split_to_array(TRIM(text), '\\s+') AS ws FROM documents), "
+            "regexp_split_to_array(TRIM(text), '\\s+') AS ws FROM documents "
+            "WHERE text IS NOT NULL), "
             "g AS (SELECT DISTINCT doc_id, source, "
             "CASE WHEN LEN(ws) < 3 THEN array_to_string(ws, ' ') "
             "ELSE ws[i.i] || ' ' || ws[i.i + 1] || ' ' || ws[i.i + 2] END AS gram "

@@ -405,6 +405,13 @@ def snapped_rect_corners(pid: np.ndarray, x: np.ndarray, y: np.ndarray):
     return x1, y1, x1 + (1 + pid % 3), y1 + (1 + pid % 2)
 
 
+def rect_rings(x1, y1, x2, y2) -> np.ndarray:
+    """(n, 5, 2) closed rings (x1,y1)→(x2,y1)→(x2,y2)→(x1,y2)→(x1,y1) of
+    the axis-aligned rects with the given corner arrays."""
+    return np.stack([np.stack([x1, x2, x2, x1, x1], axis=1),
+                     np.stack([y1, y1, y2, y2, y1], axis=1)], axis=2)
+
+
 def rects_touch_sql_pred(ax1: str, ay1: str, ax2: str, ay2: str,
                          bx1: str, by1: str, bx2: str, by2: str) -> str:
     """SQL predicate: axis-aligned rects a and b TOUCH (boundaries meet,

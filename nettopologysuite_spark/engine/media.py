@@ -314,28 +314,18 @@ def decode_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
         yield out
 
 
-def media_features(docs: DataFrame, fused: bool = True) -> DataFrame:
+def media_features(docs: DataFrame) -> DataFrame:
     """Distributed fetch → decode → feature pipeline over media spans:
     refs → Arrow batches → synthesized bytes (fetch stand-in) → REAL
     PPM/BMP decode → typed feature rows.
 
-    ``fused=True`` (default) runs fetch+decode in ONE mapInPandas stage so
-    the raw image bytes never cross the Arrow boundary — the right default
-    whenever fetch and decode co-locate on the executor (measured ~2× at
-    sf0.1: the blob column dominates the Arrow traffic). ``fused=False``
-    keeps them as two stages that can be repartitioned independently —
-    the shape for production pipelines that widen the CPU-bound decode
-    beyond the I/O-bound fetch."""
-    refs = media_refs(docs)
-    if fused:
-        def fetch_decode(batches):
-            yield from decode_media_batches(fetch_media_batches(batches))
+    Fetch and decode run in ONE mapInPandas stage, so the raw image bytes
+    never cross the Arrow boundary (measured ~2× over two stages at sf0.1:
+    the blob column dominates the Arrow traffic)."""
+    def fetch_decode(batches):
+        yield from decode_media_batches(fetch_media_batches(batches))
 
-        return refs.mapInPandas(fetch_decode, MEDIA_FEATURE_SCHEMA)
-    blobs = refs.mapInPandas(
-        fetch_media_batches, "doc_id string, span_idx int, blob binary"
-    )
-    return blobs.mapInPandas(decode_media_batches, MEDIA_FEATURE_SCHEMA)
+    return media_refs(docs).mapInPandas(fetch_decode, MEDIA_FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -22,8 +22,7 @@ LANG_MARKERS = {
 }
 
 
-def widen_input(df: DataFrame, min_parts: int | None = None,
-                threshold_div: int = 1) -> DataFrame:
+def widen_input(df: DataFrame, threshold_div: int = 1) -> DataFrame:
     """Raise the parallelism of a narrow-file scan before CPU-heavy per-row
     stages (shingle explodes, hashing, decode): a small corpus arrives as
     one or two scan partitions, which serializes the whole map side in one
@@ -36,7 +35,7 @@ def widen_input(df: DataFrame, min_parts: int | None = None,
     measured at 1 scan partition (win) and ~10 scan partitions (loss) on
     the within-distance geometry join."""
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= max(1, target // threshold_div):
         return df
     return df.repartition(target)
@@ -199,7 +198,10 @@ def word_ngrams(docs: DataFrame, n: int = 3, text_col: str = "text",
     vs 1.3-1.6 s fused+widen warm at sf0.1)."""
     concat_expr = " || ' ' || ".join(f"_ws[_i + {j}]" for j in range(n))
     return (
-        docs.select(
+        # NULL text has no grams (the index sequence below would still
+        # yield one NULL gram for it)
+        docs.where(F.col(text_col).isNotNull())
+        .select(
             F.col(id_col).alias("_id"),
             F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"),
         )

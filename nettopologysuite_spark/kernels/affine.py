@@ -37,10 +37,6 @@ class AffineTransformation:
         )
 
     @staticmethod
-    def shear(shx: float, shy: float) -> "AffineTransformation":
-        return AffineTransformation(1, shx, 0, shy, 1, 0)
-
-    @staticmethod
     def reflection(x0: float, y0: float, x1: float, y1: float) -> "AffineTransformation":
         """Reflection about the line (x0,y0)→(x1,y1)."""
         dx, dy = x1 - x0, y1 - y0

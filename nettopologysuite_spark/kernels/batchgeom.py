@@ -18,10 +18,10 @@ short-circuit structure as the reference's prepared predicates
 (``Geometries/Prepared/PreparedPolygonIntersects.cs:38-60``: PIP first,
 then segment intersection).
 
-``GeomBatch.from_wkb`` decodes UNIFORM simple WKB batches (equal-length
+``GeomBatch.from_wkb`` fills UNIFORM simple WKB batches (same-layout
 little-endian points / linestrings / single-ring polygons — the shape
-synthetic tiles and rects take) with one numpy buffer reinterpretation,
-zero per-row Python; mixed batches fall back to the per-row parser.
+synthetic tiles and rects take) from ``geom.uniform_wkb_coords``, zero
+per-row Python; every other batch takes the per-row parser.
 
 The join refines call one entry point, ``batch_predicate``: it batches
 intersects, covers, contains, touches and crosses in these passes (the
@@ -39,6 +39,7 @@ from .geom import (
     POINT,
     POLYGON,
     Geom,
+    uniform_wkb_coords,
     wkb_loads,
 )
 from .pip import EXTERIOR, PreparedPolygon
@@ -151,61 +152,19 @@ class GeomBatch:
     # -- constructors ------------------------------------------------------
     @classmethod
     def from_wkb(cls, blobs) -> "GeomBatch":
-        """Decode a batch of WKB blobs; uniform simple batches take the
-        single-buffer fast path (no per-row parse)."""
-        n = len(blobs)
-        fast = cls._uniform_fast(blobs) if n >= 16 else None
-        if fast is not None:
-            return fast
-        return cls([wkb_loads(bytes(b)) if b else None for b in blobs])
+        """Decode a batch of WKB blobs; uniform simple batches
+        (``uniform_wkb_coords``) fill the arrays from one decoded buffer,
+        everything else takes the per-row parser."""
+        uniform = uniform_wkb_coords(blobs)
+        if uniform is None:
+            return cls([wkb_loads(bytes(b)) if b else None for b in blobs])
+        return cls._fill_uniform(*uniform)
 
     @classmethod
-    def _uniform_fast(cls, blobs) -> "GeomBatch | None":
-        first = blobs[0]
-        L = len(first) if first else 0
-        if L < 5 or any(b is None or len(b) != L for b in blobs):
-            return None
-        n = len(blobs)
-        buf = np.frombuffer(b"".join(bytes(b) for b in blobs), dtype=np.uint8)
-        buf = buf.reshape(n, L)
-        # every row must share endianness AND the full 4-byte type code
-        if not ((buf[:, 0] == 1).all() and (buf[:, 1:5] == buf[0, 1:5]).all()):
-            return None
-        gtype = int.from_bytes(bytes(first[1:5]), "little")
+    def _fill_uniform(cls, gtype: int, xy: np.ndarray) -> "GeomBatch":
+        n, npts, _ = xy.shape
         out = cls.__new__(cls)
         out.n = n
-        if gtype == POINT and L == 21:
-            xy = buf[:, 5:21].copy().view("<f8").reshape(n, 2)
-            out.vx = np.ascontiguousarray(xy[:, 0])
-            out.vy = np.ascontiguousarray(xy[:, 1])
-            out.v_start = np.arange(n + 1, dtype=np.int64)
-            z = np.empty(0, dtype=np.float64)
-            zi = np.zeros(n + 1, dtype=np.int64)
-            out.sax = out.say = out.sbx = out.sby = z
-            out.pax = out.pay = out.pbx = out.pby = z
-            out.s_start = out.p_start = zi
-            out.p_leaf = np.empty(0, dtype=np.int64)
-            out.pure_poly = np.zeros(n, dtype=bool)
-            out.pure_line = np.zeros(n, dtype=bool)
-            return out
-        if gtype == LINESTRING and L >= 9 + 32 and (L - 9) % 16 == 0:
-            npts = int.from_bytes(bytes(first[5:9]), "little")
-            if L != 9 + 16 * npts or not (buf[:, 5:9] == buf[0, 5:9]).all():
-                return None
-            xy = buf[:, 9:].copy().view("<f8").reshape(n, npts, 2)
-            return cls._fill_uniform(out, xy, polygonal=False)
-        if gtype == POLYGON and L >= 13 + 64 and (L - 13) % 16 == 0:
-            nrings = int.from_bytes(bytes(first[5:9]), "little")
-            npts = int.from_bytes(bytes(first[9:13]), "little")
-            if nrings != 1 or L != 13 + 16 * npts or not (buf[:, 5:13] == buf[0, 5:13]).all():
-                return None
-            xy = buf[:, 13:].copy().view("<f8").reshape(n, npts, 2)
-            return cls._fill_uniform(out, xy, polygonal=True)
-        return None
-
-    @staticmethod
-    def _fill_uniform(out: "GeomBatch", xy: np.ndarray, polygonal: bool) -> "GeomBatch":
-        n, npts, _ = xy.shape
         out.vx = np.ascontiguousarray(xy[:, :, 0].reshape(-1))
         out.vy = np.ascontiguousarray(xy[:, :, 1].reshape(-1))
         out.v_start = np.arange(n + 1, dtype=np.int64) * npts
@@ -214,7 +173,7 @@ class GeomBatch:
         out.sbx = np.ascontiguousarray(xy[:, 1:, 0].reshape(-1))
         out.sby = np.ascontiguousarray(xy[:, 1:, 1].reshape(-1))
         out.s_start = np.arange(n + 1, dtype=np.int64) * (npts - 1)
-        if polygonal:
+        if gtype == POLYGON:
             out.pax, out.pay = out.sax, out.say
             out.pbx, out.pby = out.sbx, out.sby
             out.p_start = out.s_start
@@ -227,7 +186,7 @@ class GeomBatch:
             out.p_start = np.zeros(n + 1, dtype=np.int64)
             out.p_leaf = np.empty(0, dtype=np.int64)
             out.pure_poly = np.zeros(n, dtype=bool)
-            out.pure_line = np.ones(n, dtype=bool)
+            out.pure_line = np.full(n, gtype == LINESTRING)
         return out
 
 

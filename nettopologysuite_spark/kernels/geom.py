@@ -11,9 +11,12 @@ Only 2-D (XY) is modelled: the reference's own topology ops ignore Z/M
 ("RelateNG operates in 2D only", ``Operation/RelateNG/RelateNG.cs:34``).
 WKB Z/M inputs are accepted on read and projected to XY.
 
-Batch-level fast paths (``points_to_wkb`` / ``wkb_to_points``) handle the
-all-points case with zero per-row Python — this is the hot path of the
-document spatial join.
+``uniform_wkb_coords`` / ``uniform_wkb`` are the one batch codec for
+same-layout simple WKB (points, linestrings, single-ring polygons of one
+vertex count): a whole Arrow batch decodes or encodes as one numpy buffer,
+with no per-row Python. The envelope and ``GeomBatch`` decoders and the
+entry's rect/segment builders use it; everything else, and every batch it
+declines, goes through ``wkb_loads`` / ``wkb_dumps``.
 """
 
 from __future__ import annotations
@@ -541,49 +544,66 @@ def wkb_loads(buf: bytes) -> Geom:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized all-points batch codecs (the hot path)
+# Uniform-layout batch codec: one numpy buffer per batch, no per-row parse
 # ---------------------------------------------------------------------------
 
-_PT_HEADER = b"\x01\x01\x00\x00\x00"
+_UNIFORM_MIN_ROWS = 16  # smaller batches take the per-row parser
 
 
-def points_to_wkb(xy: np.ndarray) -> list[bytes]:
-    """(n, 2) float64 → list of 21-byte WKB point blobs, via one buffer build."""
-    xy = np.ascontiguousarray(xy, dtype="<f8")
-    n = len(xy)
-    buf = np.empty((n, 21), dtype=np.uint8)
-    buf[:, 0:5] = np.frombuffer(_PT_HEADER, dtype=np.uint8)
-    buf[:, 5:21] = xy.view(np.uint8).reshape(n, 16)
-    b = buf.tobytes()
-    return [b[i * 21 : (i + 1) * 21] for i in range(n)]
+def _uniform_header(gtype: int, npts: int) -> bytes:
+    """Little-endian WKB header of a simple geometry with ``npts`` vertices:
+    byte order and type, then the ring count (polygon) and vertex count."""
+    if gtype == POINT:
+        return struct.pack("<BI", 1, POINT)
+    if gtype == LINESTRING:
+        return struct.pack("<BII", 1, LINESTRING, npts)
+    return struct.pack("<BIII", 1, POLYGON, 1, npts)
 
 
-def wkb_to_points(blobs) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a sequence of WKB blobs to (xy (n,2), is_point mask).
-
-    All-21-byte-point batches decode with a single frombuffer (no per-row
-    parse). Mixed batches fall back per-row for the non-point entries,
-    whose xy is the envelope center and mask False.
-    """
+def uniform_wkb_coords(blobs) -> tuple[int, np.ndarray] | None:
+    """(gtype, xy (n, npts, 2)) for a batch of at least 16 blobs that share
+    one little-endian layout: all 2-D POINTs, or all LINESTRINGs or all
+    single-ring POLYGONs of one vertex count. The batch is joined into one
+    buffer and reinterpreted as float64. Anything else — small, mixed or
+    big-endian batches, other types, NULL rows, a NaN point (POINT EMPTY) —
+    returns None and takes the per-row parser."""
     n = len(blobs)
-    xy = np.full((n, 2), np.nan, dtype=np.float64)
-    mask = np.zeros(n, dtype=bool)
-    lens = np.fromiter((len(b) if b is not None else 0 for b in blobs), count=n, dtype=np.int64)
-    if n and (lens == 21).all():
-        joined = b"".join(blobs)
-        raw = np.frombuffer(joined, dtype=np.uint8).reshape(n, 21)
-        if (raw[:, 0] == 1).all() and (raw[:, 1] == 1).all():
-            xy = np.ascontiguousarray(raw[:, 5:21]).view("<f8").astype(np.float64).reshape(n, 2)
-            mask[:] = True
-            return xy, mask
-    for i, b in enumerate(blobs):
-        if not b:
-            continue
-        g = wkb_loads(bytes(b))
-        if g.gtype == POINT and not g.is_empty:
-            xy[i] = g.coords[0]
-            mask[i] = True
-        else:
-            e = g.envelope()
-            xy[i] = ((e[0] + e[2]) * 0.5, (e[1] + e[3]) * 0.5)
-    return xy, mask
+    if n < _UNIFORM_MIN_ROWS or not blobs[0]:
+        return None
+    first = blobs[0]
+    size = len(first)
+    if size < 5 or any(b is None or len(b) != size for b in blobs):
+        return None
+    gtype = int.from_bytes(bytes(first[1:5]), "little")
+    if gtype == POINT:
+        npts = 1
+    elif gtype in (LINESTRING, POLYGON) and size >= 13:
+        at = 5 if gtype == LINESTRING else 9  # the vertex count
+        npts = int.from_bytes(bytes(first[at:at + 4]), "little")
+    else:
+        return None
+    head = np.frombuffer(_uniform_header(gtype, npts), dtype=np.uint8)
+    if npts < 1 or size != len(head) + 16 * npts:
+        return None
+    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8).reshape(n, size)
+    if not (buf[:, :len(head)] == head).all():
+        return None
+    xy = buf[:, len(head):].copy().view("<f8").reshape(n, npts, 2)
+    if gtype == POINT and np.isnan(xy).any():
+        return None
+    return gtype, xy
+
+
+def uniform_wkb(gtype: int, xy: np.ndarray) -> list[bytes]:
+    """Inverse of ``uniform_wkb_coords``: one little-endian blob per row of
+    ``xy`` (n, npts, 2) — a POINT (npts 1), LINESTRING or single-ring
+    POLYGON — assembled in one numpy buffer."""
+    xy = np.ascontiguousarray(xy, dtype="<f8")
+    n, npts, _ = xy.shape
+    head = np.frombuffer(_uniform_header(gtype, npts), dtype=np.uint8)
+    size = len(head) + 16 * npts
+    buf = np.empty((n, size), dtype=np.uint8)
+    buf[:, :len(head)] = head
+    buf[:, len(head):] = xy.reshape(n, 2 * npts).view(np.uint8)
+    b = buf.tobytes()
+    return [b[i * size:(i + 1) * size] for i in range(n)]

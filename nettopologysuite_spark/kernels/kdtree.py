@@ -26,9 +26,6 @@ class KdNode:
     def point(self) -> tuple[float, float]:
         return (self.x, self.y)
 
-    def is_repeated(self) -> bool:
-        return self.count > 1
-
 
 class KdTree:
     def __init__(self, tolerance: float = 0.0):

@@ -38,12 +38,6 @@ class Tri:
         self.alive = True
 
     # -- Tri.cs accessor analogs -----------------------------------------
-    def index_of_vertex(self, vid: int) -> int:
-        for i in range(3):
-            if self.v[i] == vid:
-                return i
-        return -1
-
     def index_of_adjacent(self, tri: "Tri") -> int:
         for i in range(3):
             if self.adj[i] is tri:

@@ -248,6 +248,23 @@ def test_char_ngrams_null_text_has_no_grams(spark):
     assert got == [(3, 4, 1, 3)]
 
 
+def test_word_ngrams_null_text_has_no_grams(spark):
+    """A NULL-text doc yields no word n-gram rows (it used to yield one NULL
+    gram), so decontaminate reports no row for it instead of n_grams = 1."""
+    from nettopologysuite_spark.engine.text import decontaminate, word_ngrams
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, None), (3, "solo")],
+        "doc_id long, text string",
+    )
+    got = sorted((r["_id"], r["gram"]) for r in word_ngrams(docs).collect())
+    assert got == [(1, "alpha beta gamma"), (1, "beta gamma delta"), (3, "solo")]
+    bench = spark.createDataFrame([(100, "solo")], "doc_id long, text string")
+    got = {r["doc_id"]: (r["n_grams"], r["n_contaminated"])
+           for r in decontaminate(docs, bench).collect()}
+    assert got == {1: (2, 0), 3: (1, 1)}
+
+
 def test_sample_and_quantiles_semantics(spark):
     from nettopologysuite_spark.engine.text import length_quantiles, sample_per_source
 

@@ -46,11 +46,11 @@ def test_wkt_z_dropped():
 
 
 def test_points_wkb_fast_path():
-    xy = np.array([[1.5, 2.5], [3.0, 4.0], [-7.25, 0.125]])
-    blobs = G.points_to_wkb(xy)
-    xy2, mask = G.wkb_to_points(blobs)
-    assert mask.all()
-    assert np.array_equal(xy, xy2)
+    xy = np.tile([[1.5, 2.5], [3.0, 4.0], [-7.25, 0.125]], (6, 1))  # 18 ≥ 16 rows
+    blobs = G.uniform_wkb(G.POINT, xy[:, None, :])
+    decoded = G.uniform_wkb_coords(blobs)
+    assert decoded is not None and decoded[0] == G.POINT
+    assert np.array_equal(xy, decoded[1][:, 0, :])
     # round-trips through the generic decoder too
     for i, b in enumerate(blobs):
         g = G.wkb_loads(b)

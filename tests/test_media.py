@@ -76,13 +76,6 @@ def test_media_pipeline_preserves_span_invariant(spark, sf_dir):
     assert {r["span_idx"] for r in refs.select("span_idx").distinct().collect()} == {1}
 
 
-def test_media_features_two_stage_equals_fused(spark, sf_dir):
-    docs = synthesize_docs(spark, sf_dir)
-    fused = {tuple(r) for r in media_features(docs, fused=True).collect()}
-    staged = {tuple(r) for r in media_features(docs, fused=False).collect()}
-    assert fused == staged and len(fused) > 0
-
-
 def test_resize_nn_semantics():
     import numpy as np
 
