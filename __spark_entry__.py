@@ -60,6 +60,8 @@ def _nation_keys(spark: SparkSession, sf_dir: str) -> list[int]:
 
 
 def _rect_pack(keys: list[int]) -> PolygonPack:
+    # generic on purpose: pip_rect_join keeps one oracle-checked query on
+    # the ray-crossing refine UDF (convex packs refine natively)
     return PolygonPack.from_geoms(
         [(f"rect-{k}", nation_rect_geom(k)) for k in keys], kind="generic"
     )
@@ -115,9 +117,10 @@ def q_pip_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pip_join_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIP join through the adaptive multi-level cover (S2 RegionCoverer /
     H3 polyfill-with-compaction analog, ``kernels/adaptive.py``): interior
-    cover cells accept candidates with ZERO Python — only boundary-cell
-    candidates pay the exact refine. Same result set as the single-level
-    broadcast path — same oracle."""
+    cover cells accept candidates with no refine — only boundary-cell
+    candidates pay the exact one, here the native half-plane test of the
+    convex octagons. Same result set as the single-level broadcast path —
+    same oracle."""
     from nettopologysuite_spark.engine.joins import pip_join_points_adaptive
 
     pts = _event_points(spark, sf_dir)
@@ -227,6 +230,9 @@ def q_centroid_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_docs_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship: geom spans extracted from the docs, tiled, joined to
+    the octagon pack's broadcast cover and refined by the native
+    half-plane test — no Python worker anywhere in the plan."""
     pack = _octagon_pack(_nation_keys(spark, sf_dir))
     out = docs_spatial_join(spark, sf_dir, pack, GRID, predicate="covers")
     return out.select("doc_id", "poly_id")

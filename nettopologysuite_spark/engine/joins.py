@@ -11,9 +11,14 @@ Physical strategy (SURVEY.md §7, BASELINE.json north rule):
    without a Python worker task and without a shuffle of the big side. At
    100 TB the big side is scanned once, partition-pruned by cell range when
    the storage is curve-ordered.
-3. Exact refinement runs inside a scalar pandas UDF over Arrow batches:
-   per-executor lazily-built prepared structures (PreparedConvex /
-   PreparedPolygon) probe whole numpy arrays — the batched analog of
+3. Exact refinement of a point join against a pack whose every polygon is
+   convex is one native expression: the cover rows carry each polygon's
+   edges, and the half-plane test of ``PreparedConvex`` (the analog of
+   NTS's ``RectangleContains.cs`` fast path) runs JVM-side as a
+   ``forall`` over them, so the join starts no Python worker. Every other
+   refine runs inside a scalar pandas UDF over Arrow batches:
+   per-executor lazily-built prepared structures (PreparedPolygon) probe
+   whole numpy arrays — the batched analog of
    ``PreparedPolygonIntersects.cs:38-60`` (PIP first, then segments).
 4. Pair dedup: a point lies in exactly one cell, so point joins emit
    uniques by construction. Extended-geometry joins use the reference-cell
@@ -60,20 +65,65 @@ def _check_predicate(predicate: str) -> None:
         raise ValueError(f"a candidate join does not answer {predicate!r}")
 
 
+def _point_predicate(predicate: str, covers, contains, false):
+    """predicate(polygon, point) composed from a polygon's covers and
+    contains probes — the one map of a predicate onto the prepared probes
+    (NTS ``PreparedGeometryFactory``'s one contract): intersects / covers →
+    covers, contains → contains, touches → covers ∧ ¬contains; within,
+    coveredby, crosses, overlaps and equals(topo) are ``false`` by the
+    dimension rule. The probes are thunks returning numpy masks
+    (``_probe_points``) or Spark columns (``_convex_refine``), so only the
+    ones a predicate needs are built."""
+    if predicate in ("intersects", "covers"):
+        return covers()
+    if predicate == "contains":
+        return contains()
+    if predicate == "touches":
+        return covers() & ~contains()
+    return false()
+
+
 def _probe_points(prep, xs: np.ndarray, ys: np.ndarray, predicate: str) -> np.ndarray:
     """predicate(polygon, point) for point arrays against one pack polygon's
-    ``PreparedPolygon`` / ``PreparedConvex`` — the one map of a predicate
-    onto the prepared probes (NTS ``PreparedGeometryFactory``'s one
-    contract): intersects / covers → covers, contains → contains, touches →
-    covers ∧ ¬contains; within, coveredby, crosses, overlaps and equals(topo)
-    are False by the dimension rule."""
-    if predicate in ("intersects", "covers"):
-        return prep.covers_points(xs, ys)
-    if predicate == "contains":
-        return prep.contains_points(xs, ys)
-    if predicate == "touches":
-        return prep.covers_points(xs, ys) & ~prep.contains_points(xs, ys)
-    return np.zeros(len(xs), dtype=bool)
+    ``PreparedPolygon`` / ``PreparedConvex``."""
+    return _point_predicate(
+        predicate,
+        lambda: prep.covers_points(xs, ys),
+        lambda: prep.contains_points(xs, ys),
+        lambda: np.zeros(len(xs), dtype=bool),
+    )
+
+
+def _convex_refine(predicate: str, x: str, y: str) -> Column:
+    """predicate(polygon, point) as one native expression over the
+    candidate row's ``_edges`` (``_cover_frame``): ``PreparedConvex``'s
+    half-plane test, cross = dx·(y − y1) − dy·(x − x1) ≥ 0 on every edge
+    for covers, > 0 for contains. dx and dy are the doubles numpy computes
+    and the JVM fuses no multiply-add, so every cross product is the one
+    the kernel computes. A NULL coordinate gives NULL, which the filter
+    drops."""
+    px, py = F.col(x), F.col(y)
+
+    def half_planes(strict: bool):
+        def inside(e: Column) -> Column:
+            # numpy compares a NaN cross product False, Spark orders NaN
+            # above every double (NaN >= 0 holds): read NaN as outside
+            cross = F.nanvl(e["dx"] * (py - e["y1"]) - e["dy"] * (px - e["x1"]),
+                            F.lit(-1.0))
+            return cross > 0.0 if strict else cross >= 0.0
+        return lambda: F.forall("_edges", inside)
+
+    return _point_predicate(predicate, half_planes(False), half_planes(True),
+                            lambda: F.lit(False))
+
+
+def _point_refine(pack: PolygonPack, predicate: str, x: str, y: str) -> Column:
+    """The refine filter of the point joins: native (``_convex_refine``)
+    when every pack polygon is convex, else ``pip_refine_udf``."""
+    _check_predicate(predicate)
+    if pack.convex:
+        return _convex_refine(predicate, x, y)
+    return pip_refine_udf(pack, predicate)(F.col(x), F.col(y), F.col("poly_id"))
 
 
 def pip_refine_udf(pack: PolygonPack, predicate: str = "covers"):
@@ -100,12 +150,31 @@ def pip_refine_udf(pack: PolygonPack, predicate: str = "covers"):
     return _refine
 
 
+def _cover_frame(spark: SparkSession, pack: PolygonPack, rows: list[tuple],
+                 schema: str, pid_at: int) -> DataFrame:
+    """A cover relation of the pack — ``rows`` typed by the DDL ``schema``,
+    the poly_id at index ``pid_at`` — as an Arrow ``LocalRelation``, so
+    broadcasting it runs no Python worker task. When every pack polygon is
+    convex, each row also carries its polygon's ``_edges`` (x1, y1, dx, dy),
+    taken from ``PreparedConvex.vx``/``vy`` as ``covers_points`` takes
+    them: the candidate join then brings each polygon's half-planes to its
+    candidates (``_convex_refine``) with no second join."""
+    if pack.convex:
+        edges = {}
+        for pid, prep in pack.prepared().items():
+            x1, y1 = prep.vx[:-1], prep.vy[:-1]
+            edges[pid] = list(zip(x1.tolist(), y1.tolist(),
+                                  (prep.vx[1:] - x1).tolist(), (prep.vy[1:] - y1).tolist()))
+        rows = [r + (edges[r[pid_at]],) for r in rows]
+        schema += ", _edges array<struct<x1:double,y1:double,dx:double,dy:double>>"
+    return local_frame(spark, rows, schema)
+
+
 def cover_cells_df(spark: SparkSession, pack: PolygonPack, grid: Grid) -> DataFrame:
     """The (cell_id, poly_id) cover relation of the pack — every cell whose
-    box meets a polygon's envelope; the small side of the PIP joins. It is
-    built on the driver as an Arrow ``LocalRelation``, so broadcasting it
-    runs no Python worker task."""
-    return local_frame(spark, pack.cover_rows(grid), "cell_id long, poly_id string")
+    box meets a polygon's envelope; the small side of the PIP joins, built
+    on the driver (``_cover_frame``)."""
+    return _cover_frame(spark, pack, pack.cover_rows(grid), "cell_id long, poly_id string", 1)
 
 
 def pip_join_points(
@@ -121,7 +190,7 @@ def pip_join_points(
     pts = with_cell_id(points, grid, x, y)
     cover = cover_cells_df(spark, pack, grid)
     cand = pts.join(F.broadcast(cover), "cell_id")
-    return cand.filter(pip_refine_udf(pack, predicate)(F.col(x), F.col(y), F.col("poly_id")))
+    return cand.filter(_point_refine(pack, predicate, x, y)).drop("_edges")
 
 
 def pip_join_points_sortmerge(
@@ -183,10 +252,7 @@ def pip_join_points_sortmerge(
     )
     # 4. shuffle join on (cell_id, salt) — sort-merge, no broadcast
     cand = pts_salted.hint("merge").join(cover, ["cell_id", "salt"])
-    out = cand.filter(
-        pip_refine_udf(pack, predicate)(F.col(x), F.col(y), F.col("poly_id"))
-    )
-    return out.drop("salt")
+    return cand.filter(_point_refine(pack, predicate, x, y)).drop("salt", "_edges")
 
 
 def _adaptive_cover_rows(pack: PolygonPack, grid: Grid) -> list[tuple]:
@@ -218,7 +284,9 @@ def pip_join_points_adaptive(
 ) -> DataFrame:
     """PIP join through the adaptive multi-level cover: candidates falling
     in INTERIOR cover cells are accepted with zero Python — only boundary-
-    cell candidates pay the exact refine UDF.
+    cell candidates pay the exact refine: native for a convex pack
+    (``_convex_refine``, so the join starts no Python worker), the refine
+    UDF otherwise.
 
     Point side: the finest-level (ix, iy) is computed once (native floor
     projection), then shifted down to each level present in the cover —
@@ -229,7 +297,7 @@ def pip_join_points_adaptive(
 
     At 100 TB this converts the refine cost from O(all candidates) to
     O(boundary-cell candidates) — for large polygons the overwhelming
-    majority of matches are interior and never cross into Python — while
+    majority of matches are interior and skip the refine — while
     bounding the cover size of arbitrarily large polygons to
     ``adaptive_cover``'s 1024-cell budget (the envelope cover grows with
     polygon area).
@@ -246,8 +314,8 @@ def pip_join_points_adaptive(
         raise ValueError(f"the adaptive PIP join does not answer {predicate!r}")
     spark = points.sparkSession
     rows = _adaptive_cover_rows(pack, grid)
-    cover = local_frame(
-        spark, rows, "level int, cell long, poly_id string, interior boolean"
+    cover = _cover_frame(
+        spark, pack, rows, "level int, cell long, poly_id string, interior boolean", 2
     )
     levels = sorted({r[0] for r in rows})  # ≤ grid.level + 1 values
     if not levels:
@@ -277,10 +345,8 @@ def pip_join_points_adaptive(
     )
     fast = F.col("interior") & in_extent
     accepted = cand.filter(fast)
-    refined = cand.filter(~fast).filter(
-        pip_refine_udf(pack, predicate)(F.col(x), F.col(y), F.col("poly_id"))
-    )
-    drop = ["level", "cell", "interior", "_ix", "_iy"]
+    refined = cand.filter(~fast).filter(_point_refine(pack, predicate, x, y))
+    drop = ["level", "cell", "interior", "_ix", "_iy", "_edges"]
     return accepted.drop(*drop).unionByName(refined.drop(*drop))
 
 

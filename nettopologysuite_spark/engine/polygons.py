@@ -40,6 +40,8 @@ class PolygonPack:
             h.update(e.wkb)
             h.update(e.kind.encode())
         self.version = h.hexdigest()
+        # every polygon takes the half-plane fast path
+        self.convex = all(e.kind == "convex" for e in self.entries)
 
     @staticmethod
     def from_geoms(items: list[tuple[str, Geom]], kind: str = "generic") -> "PolygonPack":

@@ -310,10 +310,10 @@ def stream_pip_join(
     broadcast polygon pack — ``engine.joins.pip_join_points`` applied to
     the stream reader, the most common ingest shape (tag each arriving
     event with its containing zones). Stateless: the tile-assign
-    projection, broadcast cover relation and prepared-PIP refine are the
-    batch path's own, so batch and stream agree row-for-row (pytest gate),
-    and a restart resumes from the source offsets with no state store at
-    all."""
+    projection, broadcast cover relation and exact refine (native for a
+    convex pack, the prepared-PIP UDF otherwise) are the batch path's own,
+    so batch and stream agree row-for-row (pytest gate), and a restart
+    resumes from the source offsets with no state store at all."""
     from ..engine.joins import pip_join_points
 
     reader = spark.readStream.schema(schema)

@@ -9,11 +9,13 @@ import numpy as np
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E  # noqa: E402
+from nettopologysuite_spark.engine.derive import nation_octagon_geom  # noqa: E402
 from nettopologysuite_spark.engine.joins import (  # noqa: E402
     _adaptive_cover_rows,
     pip_join_points,
     pip_join_points_adaptive,
 )
+from nettopologysuite_spark.engine.polygons import PolygonPack  # noqa: E402
 from nettopologysuite_spark.kernels.adaptive import (  # noqa: E402
     adaptive_cover,
     boundary_segments,
@@ -121,23 +123,36 @@ def test_adaptive_cover_budget():
         assert found
 
 
-def test_adaptive_join_equals_broadcast(spark, sf_dir):
+def _adaptive_equals_broadcast(spark, sf_dir, pack, python_nodes):
     pts = E._event_points(spark, sf_dir)
-    pack = E._octagon_pack(E._nation_keys(spark, sf_dir))
     base = {
         (r["pid"], r["poly_id"])
         for r in pip_join_points(pts, pack, E.GRID, "covers").collect()
     }
     ada = pip_join_points_adaptive(pts, pack, E.GRID, "covers")
-    # the refine UDF appears once (boundary branch only) — the interior
-    # branch is pure native acceptance. Plan captured BEFORE execution: the
-    # post-AQE string repeats subtrees across query stages.
+    # Plan captured BEFORE execution: the post-AQE string repeats subtrees
+    # across query stages.
     plan = ada._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1, plan[:800]
+    assert plan.count("ArrowEvalPython") == python_nodes, plan[:800]
     assert "BatchEvalPython" not in plan
     got = [(r["pid"], r["poly_id"]) for r in ada.collect()]
     assert len(got) == len(set(got)), "adaptive cover must not duplicate pairs"
     assert set(got) == base
+
+
+def test_adaptive_join_equals_broadcast(spark, sf_dir):
+    """Octagons are convex: both branches are native, the plan holds no
+    Python node."""
+    pack = E._octagon_pack(E._nation_keys(spark, sf_dir))
+    _adaptive_equals_broadcast(spark, sf_dir, pack, python_nodes=0)
+
+
+def test_adaptive_generic_join_equals_broadcast(spark, sf_dir):
+    """Against a generic pack the refine UDF appears once (boundary branch
+    only) — the interior branch is pure native acceptance."""
+    keys = E._nation_keys(spark, sf_dir)
+    pack = PolygonPack.from_geoms([(f"oct-{k}", nation_octagon_geom(k)) for k in keys])
+    _adaptive_equals_broadcast(spark, sf_dir, pack, python_nodes=1)
 
 
 def test_adaptive_interior_fraction(spark, sf_dir):

@@ -168,16 +168,24 @@ PIP_JOINS = {
 }
 
 
-@pytest.mark.parametrize("join", PIP_JOINS.values(), ids=PIP_JOINS.keys())
-def test_pip_joins_degenerate_points(spark, join):
-    pack = PolygonPack.from_geoms([("sq", SQUARE), ("big", BIG)])
+# every join against a generic pack (the refine UDF) and a convex one (the
+# native half-plane refine)
+PIP_CASES = [
+    pytest.param(join, kind, id=name if kind == "generic" else f"{name}-convex")
+    for kind in ("generic", "convex") for name, join in PIP_JOINS.items()
+]
+
+
+@pytest.mark.parametrize("join, kind", PIP_CASES)
+def test_pip_joins_degenerate_points(spark, join, kind):
+    pack = PolygonPack.from_geoms([("sq", SQUARE), ("big", BIG)], kind=kind)
     got = [(r["pid"], r["poly_id"]) for r in join(_points(spark), pack).collect()]
     assert sorted(got) == [(1, "sq"), (4, "big")]
 
 
-@pytest.mark.parametrize("join", PIP_JOINS.values(), ids=PIP_JOINS.keys())
-def test_pip_joins_empty_sides(spark, join):
-    pack = PolygonPack.from_geoms([("sq", SQUARE), ("big", BIG)])
+@pytest.mark.parametrize("join, kind", PIP_CASES)
+def test_pip_joins_empty_sides(spark, join, kind):
+    pack = PolygonPack.from_geoms([("sq", SQUARE), ("big", BIG)], kind=kind)
     assert join(_points(spark, []), pack).collect() == []
     assert join(_points(spark), PolygonPack([])).collect() == []
 

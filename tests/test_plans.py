@@ -44,6 +44,22 @@ def test_pip_join_is_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+@pytest.mark.parametrize("name", ["docs_pip_join", "pip_convex_join", "pip_join_adaptive",
+                                  "pip_join_salted", "centroid_agg"])
+def test_convex_pip_refine_is_native(spark, sf_dir, name):
+    """Against the convex octagon pack the half-plane refine is a native
+    expression: no point-PIP join plan holds a Python node."""
+    plan = _plan(E.queries()[name](spark, sf_dir))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan[:800]
+
+
+def test_generic_pip_refine_is_one_udf(spark, sf_dir):
+    """The rectangle pack is generic: its refine stays the one pandas UDF."""
+    plan = _plan(E.q_pip_rect_join(spark, sf_dir))
+    assert plan.count("ArrowEvalPython") == 1, plan[:800]
+    assert "BatchEvalPython" not in plan
+
+
 def test_tile_assign_is_pure_codegen(spark, sf_dir):
     df = E.q_tile_assign(spark, sf_dir)
     plan = _plan(df)
