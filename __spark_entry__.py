@@ -911,8 +911,8 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_geo_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN(eps=0.5, minPts=3) over the event points — the PostGIS
     ST_ClusterDBSCAN analog (deterministic min-label border assignment).
-    eps-grid candidate join + star-dataflow connected components, all
-    native."""
+    eps-grid candidate join + ``graph.connected_components`` (its core
+    edges fit the exact driver solve at this size), all native."""
     from nettopologysuite_spark.engine.cluster import dbscan
 
     pts = _event_points(spark, sf_dir)

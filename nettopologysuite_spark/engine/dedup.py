@@ -6,22 +6,24 @@ All hot paths are native Spark expressions (JVM, whole-stage codegen):
 - ``ngram_jaccard_pairs``: character n-gram Jaccard over blocked candidate
   pairs (shingle → explode → distinct → self-join → count), the exact
   verification primitive.
-- ``minhash_lsh_pairs``: MinHash signatures as ``min(xxhash64(seed, gram))``
-  aggregates (one column per hash — pure JVM), banded into LSH buckets,
-  candidate pairs from ``lsh.bucket_pairs`` (a bucket self-join),
-  exact-Jaccard verification. At 100 TB this is the
-  standard near-dup sweep: one shuffle to signatures, one to buckets, the
-  bucket self-join, one verify join over candidates only.
+- ``minhash_lsh_pairs``: MinHash over each doc's word-bigram set, built
+  in-row (``word_bigram_set``) into one persisted (id, set) table:
+  signatures are ``min(pmod(h1 + i·h2, P))`` aggregates over the exploded
+  set, banded into LSH buckets, candidates from ``lsh.bucket_pairs`` (a
+  bucket self-join), exact Jaccard by ``array_intersect`` of the two sets.
+  At 100 TB: no gram-row table, one shuffle to signatures, one to buckets,
+  the bucket self-join, two id joins over candidates only.
 - ``dup_clusters``: connected components over the verified pair graph.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .graph import connected_components
-from .lsh import band_buckets, bucket_pairs
+from .lsh import _observed, band_buckets, bucket_pairs
 
 #: MinHash functions per signature
 NUM_HASHES = 64
@@ -75,79 +77,34 @@ def char_ngrams(docs: DataFrame, n: int = 3, text_col: str = "text",
     return out.distinct() if distinct else out
 
 
-def word_bigrams(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", distinct: bool = True) -> DataFrame:
-    """(id, gram) word bigrams — the discriminative shingle for
+def word_bigram_set(ws: str) -> Column:
+    """The distinct word bigrams of the token array ``ws``
+    (``split(trim(text), '\\s+')``, projected on its own so the split runs
+    once per row) as an ``array<string>``: the discriminative shingle for
     document-level near-dup detection (character n-grams degenerate on
-    small-vocabulary corpora: every doc shares most of them).
-
-    ``distinct=False`` skips the dedup shuffle — correct for consumers whose
-    aggregates are duplicate-insensitive (MinHash signatures: min over
-    repeated grams is unchanged)."""
-    from .text import widen_input
-
-    # project the split array ONCE, then shingle from it (the naive inline
-    # form re-evaluates split(trim(text)) 4× per row)
-    out = (
-        widen_input(docs).select(
-            F.col(id_col).alias("_id"),
-            F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"),
-        )
-        # NULL text has no grams (the index sequence below would still
-        # yield one NULL gram for it)
-        .where(F.col("_ws").isNotNull())
-        .select(
-            "_id", "_ws",
-            F.explode(
-                F.expr("sequence(0, greatest(size(_ws) - 2, 0))")
-            ).alias("_i"),
-        )
-        .select(
-            "_id",
-            F.expr(
-                "CASE WHEN size(_ws) < 2 THEN _ws[0] "
-                "ELSE concat(_ws[_i], ' ', _ws[_i + 1]) END"
-            ).alias("gram"),
-        )
+    small-vocabulary corpora: every doc shares most of them). A one-token
+    doc's set is that token; NULL tokens (NULL text) give NULL, not a set
+    with one NULL gram. Batch MinHash and ``stream_near_dedup`` both
+    shingle with it."""
+    w = F.col(ws)
+    n = F.size(w) - 1
+    pairs = F.zip_with(
+        F.slice(w, 1, n), F.slice(w, 2, n), lambda a, b: F.concat(a, F.lit(" "), b)
     )
-    return out.distinct() if distinct else out
-
-
-def _jaccard_counts(grams: DataFrame, pairs: DataFrame) -> DataFrame:
-    """(d1, d2, ni, nu) exact intersection/union gram counts per candidate
-    pair. The candidate ids semi-join the gram table first (at 100 TB
-    candidates are a vanishing fraction); each candidate doc's gram set
-    becomes ONE array (collect_set dedups, so ``grams`` may repeat), and a
-    native ``array_intersect`` scores each pair — two id equi-joins total.
-    Measured against a per-gram intersection join (round 6, sf0.1): 2.5 s
-    against 3.8 s on ngram_jaccard's 8.7k-pair blocked workload.
-
-    EAGER: this function executes the whole candidate pipeline at call time
-    (``localCheckpoint(eager=True)``) so the intermediate persist can be
-    released before returning — the returned frame is the small
-    materialized pair table, not a lazy plan. It also persists/unpersists
-    ``pairs`` internally; callers should pass an unpersisted frame (an
-    externally-cached ``pairs`` would be uncached on return).
-    """
-    # ``pairs``' producing plan may be the whole LSH pipeline — persist it
-    # so that pipeline runs ONCE, not once per reference (at 100 TB the
-    # analog is materializing candidates to storage between stages)
-    pairs = pairs.persist()
-    # no distinct: every consumer is a left_semi probe or a dedup-ing
-    # aggregate, so the duplicate ids cost nothing while the distinct was a
-    # full extra shuffle
-    cand_ids = (
-        pairs.select(F.col("d1").alias("_id"))
-        .union(pairs.select(F.col("d2").alias("_id")))
+    return F.when(F.size(w) >= 2, F.array_distinct(pairs)).when(
+        w.isNotNull(), F.array(w[0])
     )
-    docgrams = (
-        grams.join(cand_ids, "_id", "left_semi")
-        .groupBy("_id")
-        .agg(F.collect_set("gram").alias("_gs"))
-    )
-    g1 = docgrams.select(F.col("_id").alias("d1"), F.col("_gs").alias("_g1"))
-    g2 = docgrams.select(F.col("_id").alias("d2"), F.col("_gs").alias("_g2"))
-    out = (
+
+
+def _pair_counts(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """(d1, d2, ni, nu): intersection and union sizes of the gram sets of
+    each pair of ``pairs`` (d1, d2) whose docs both have a row in ``sets``
+    (_id key, _gs distinct grams). Two id equi-joins and a native
+    ``array_intersect``: 2.5 s against 3.8 s for a per-gram intersection
+    join on ngram_jaccard's 8.7k-pair blocked workload (round 6, sf0.1)."""
+    g1 = sets.select(F.col("_id").alias("d1"), F.col("_gs").alias("_g1"))
+    g2 = sets.select(F.col("_id").alias("d2"), F.col("_gs").alias("_g2"))
+    return (
         pairs.join(g1, "d1")
         .join(g2, "d2")
         .withColumn("ni", F.size(F.array_intersect("_g1", "_g2")).cast("long"))
@@ -156,11 +113,22 @@ def _jaccard_counts(grams: DataFrame, pairs: DataFrame) -> DataFrame:
         )
         .select("d1", "d2", "ni", "nu")
     )
-    # materialize the (small) verified-pair result, then RELEASE the
-    # intermediate cache — persisted frames must not outlive the query
-    out = out.localCheckpoint(eager=True)
-    pairs.unpersist()
-    return out
+
+
+def _char_gram_sets(docs: DataFrame, ids: DataFrame, n: int, text_col: str,
+                    id_col: str) -> DataFrame:
+    """(_id, _gs): the distinct character n-grams of each doc whose id is in
+    ``ids`` (_id). The ids semi-join the gram rows first (at 100 TB the
+    candidates are a vanishing fraction of the corpus) and ``collect_set``
+    dedups per doc, so the grams pass through non-distinct (a pre-distinct
+    would pay the full-corpus shuffle twice); an in-row set loses for
+    character grams (see ``char_ngrams``)."""
+    return (
+        char_ngrams(docs, n, text_col, id_col, distinct=False)
+        .join(ids, "_id", "left_semi")
+        .groupBy("_id")
+        .agg(F.collect_set("gram").alias("_gs"))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -171,16 +139,28 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(d1, d2, ni, nu): exact intersection/union n-gram counts per pair.
-    EAGER — executes at call time and returns the materialized pair table
-    (see ``_jaccard_counts``). A doc with NULL text has no grams, so no
-    pair of it is returned.
+    EAGER: executes at call time and returns the materialized pair table.
+    A doc with NULL text has no grams, so no pair of it is returned.
 
-    Grams pass through NON-distinct: ``_jaccard_counts`` dedups per doc
-    after its candidate semi-join anyway, so a pre-distinct here would pay
-    the full-corpus shuffle twice."""
-    return _jaccard_counts(
-        char_ngrams(docs, n, text_col, id_col, distinct=False), pairs
-    )
+    ``pairs`` is read three times (both id columns and the join), so an
+    uncached ``pairs`` is persisted for the call and released before
+    returning; a ``pairs`` the caller cached stays cached."""
+    own = pairs.storageLevel == StorageLevel.NONE
+    if own:
+        # ``pairs``' producing plan may be a whole candidate pipeline: run
+        # it ONCE, not once per reference
+        pairs = pairs.persist()
+    try:
+        # no distinct: the semi-join is duplicate-insensitive, and a
+        # distinct would cost a full extra shuffle
+        ids = pairs.select(F.col("d1").alias("_id")).union(
+            pairs.select(F.col("d2").alias("_id"))
+        )
+        sets = _char_gram_sets(docs, ids, n, text_col, id_col)
+        return _pair_counts(pairs, sets).localCheckpoint(eager=True)
+    finally:
+        if own:
+            pairs.unpersist()
 
 
 def blocked_pairs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -204,11 +184,14 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash over word-bigram shingles + banded
-    LSH, verified exactly.
+    LSH, verified exactly. ``id_col`` must be a key of ``docs``: a
+    repeated id raises ``ValueError`` before verification runs. EAGER:
+    executes at call time and returns the materialized pair table.
 
     Returns (d1, d2, ni, nu) for pairs with jaccard = ni/nu ≥ pct/100,
     compared in exact integer arithmetic (ni*100 >= nu*pct) so any SQL
-    engine reproduces the same set bit-for-bit.
+    engine reproduces the same set bit-for-bit. One (id, bigram set)
+    table, persisted once, feeds the signatures and the verification.
 
     The band count follows the threshold: high thresholds use b=16/r=4
     (S-curve knee at (1/b)^(1/r) = 0.5 — 2-row bands admitted 16% of ALL
@@ -219,10 +202,22 @@ def minhash_lsh_pairs(
     at j=0.6 is (1-0.36)^32 ≈ 6e-7 — r=4 there would silently drop ~11%
     of threshold-grazing pairs.
     """
+    from .text import widen_input
+
     bands = 16 if threshold_pct >= 75 else 32
-    # signatures are duplicate-insensitive → skip the full-corpus distinct;
-    # the exact verify below deduplicates candidate grams only. Persisted:
-    # the signature pass and the verify both shingle from this frame.
+    # the split projects on its own: ``word_bigram_set`` reads it 4 times.
+    # NULL text has no set; filtering on the set instead would push a
+    # second copy of the whole set expression down into the scan
+    sets = (
+        widen_input(docs)
+        .where(F.col(text_col).isNotNull())
+        .select(
+            F.col(id_col).alias("_id"),
+            F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"),
+        )
+        .select("_id", word_bigram_set("_ws").alias("_gs"))
+        .persist()
+    )
     # Signature functions use Kirsch-Mitzenmacher double hashing:
     # h_i = (h1 + i·h2) mod p from TWO independent seeded string hashes —
     # 2 string hashes + NUM_HASHES adds per row instead of NUM_HASHES full
@@ -230,22 +225,25 @@ def minhash_lsh_pairs(
     # per function, and a gram pair collides across ALL functions only if
     # both bases collide mod p (~2⁻⁶²). Candidates are verified with exact
     # jaccard regardless.
-    grams = word_bigrams(docs, text_col, id_col, distinct=False).persist()
     P = (1 << 31) - 1  # Mersenne prime; i·h2m + h1m < 2³⁷ — no overflow
-    hashed = grams.select(
-        "_id", "gram",
+    hashed = sets.select("_id", F.posexplode("_gs").alias("_pos", "gram")).select(
+        "_id", "_pos",
         F.pmod(F.xxhash64(F.col("gram")), F.lit(P)).alias("_h1"),
         F.pmod(F.xxhash64(F.lit(1), F.col("gram")), F.lit(P)).alias("_h2"),
     )
     # parsed SQL strings instead of Column-API composition — same
     # expressions, a fraction of the py4j plan-construction cost (see
-    # simhash_fingerprints note)
+    # simhash_fingerprints note). ``_rows`` counts the input rows of an id
+    # (each set has one position 0); its max is observed on the bucket-list
+    # checkpoint job, so the key check costs no job.
+    keys = Observation()
     sig = hashed.groupBy("_id").agg(
+        F.expr("count_if(_pos = 0)").alias("_rows"),
         *[
             F.expr(f"min(pmod(_h1 + {i} * _h2, {P}))").alias(f"h{i}")
             for i in range(NUM_HASHES)
-        ]
-    )
+        ],
+    ).observe(keys, F.max("_rows").alias("max_rows"))
     rows_per_band = NUM_HASHES // bands
     band_cols = [
         F.expr(
@@ -255,10 +253,19 @@ def minhash_lsh_pairs(
         )
         for bi in range(bands)
     ]
-    cand = bucket_pairs(band_buckets(sig, "_id", band_cols), "_id", MAX_BUCKET)
-    verified = _jaccard_counts(grams, cand)  # materializes, then releases caches
-    grams.unpersist()
-    return verified.where(F.col("ni") * 100 >= F.col("nu") * threshold_pct)
+    try:
+        cand = bucket_pairs(band_buckets(sig, "_id", band_cols), "_id", MAX_BUCKET)
+        if (_observed(keys).get("max_rows") or 0) > 1:
+            raise ValueError(
+                f"minhash_lsh_pairs: {id_col!r} repeats an id; it must be a key"
+            )
+        return (
+            _pair_counts(cand, sets)
+            .where(F.col("ni") * 100 >= F.col("nu") * threshold_pct)
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        sets.unpersist()
 
 
 def window_dedup(docs: DataFrame, k: int = 8, text_col: str = "text",

@@ -335,32 +335,24 @@ def stream_near_dedup(
     MinHash-LSH bucket within the watermark horizon passes; later
     bucket-mates (near-duplicates) are suppressed.
 
-    The signature is computed STATELESSLY in-row — word-bigram shingles via
-    zip_with over two token-array slices, Kirsch–Mitzenmacher double
-    hashing (two xxhash64 bases + i·h2 adds, exactly the batch
-    ``minhash_lsh_pairs`` functions), ``array_min`` per function — so the
-    only stateful operator is the built-in watermark-bounded dedup on the
-    single-band bucket key. Single-band identity is the streaming
-    trade: recall tunes with ``num_hashes`` (all r rows must match), and
-    the batch multi-band + exact-verify pipeline remains the offline
-    sweep; state is one entry per distinct bucket inside the watermark —
-    bounded regardless of stream length.
+    The signature is computed STATELESSLY in-row — the doc's word-bigram
+    set from ``dedup.word_bigram_set`` (the batch shingling), Kirsch–
+    Mitzenmacher double hashing (two xxhash64 bases + i·h2 adds, exactly
+    the batch ``minhash_lsh_pairs`` functions), ``array_min`` per
+    function — so the only stateful operator is the built-in
+    watermark-bounded dedup on the single-band bucket key. Single-band
+    identity is the streaming trade: recall tunes with ``num_hashes`` (all
+    r rows must match), and the batch multi-band + exact-verify pipeline
+    remains the offline sweep; state is one entry per distinct bucket
+    inside the watermark — bounded regardless of stream length.
     """
+    from ..engine.dedup import word_bigram_set
+
     P = (1 << 31) - 1
     src = (
         spark.readStream.schema(schema).parquet(src_dir)
         .withColumn("_ws", F.split(F.trim(F.col(text_col)), r"\s+"))
-        .withColumn(
-            "_grams",
-            F.when(
-                F.size("_ws") >= 2,
-                F.zip_with(
-                    F.slice(F.col("_ws"), 1, F.size("_ws") - 1),
-                    F.slice(F.col("_ws"), 2, F.size("_ws") - 1),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                ),
-            ).otherwise(F.array(F.array_join(F.col("_ws"), " "))),
-        )
+        .withColumn("_grams", word_bigram_set("_ws"))
         .withColumn("_h1", F.transform(F.col("_grams"),
                                        lambda g: F.pmod(F.xxhash64(g), F.lit(P))))
         .withColumn("_h2", F.transform(F.col("_grams"),

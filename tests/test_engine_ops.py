@@ -211,18 +211,22 @@ def test_dup_clusters_empty_and_self_pairs(spark):
 
 
 def test_word_bigrams_null_text_has_no_grams(spark):
-    """A NULL-text doc yields no gram rows (not one NULL gram), so it never
-    gets a MinHash signature or LSH candidacy."""
-    from nettopologysuite_spark.engine.dedup import word_bigrams
+    """A NULL-text doc has no bigram set (NULL, not a set holding one NULL
+    gram), so it gets no row in MinHash's set table, no signature and no
+    LSH candidacy; a one-word doc's set is that word."""
+    from pyspark.sql import functions as F
+
+    from nettopologysuite_spark.engine.dedup import word_bigram_set
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, None), (3, "solo")],
         "doc_id long, text string",
     )
-    for distinct in (True, False):
-        got = sorted((r["_id"], r["gram"])
-                     for r in word_bigrams(docs, distinct=distinct).collect())
-        assert got == [(1, "alpha beta"), (1, "beta gamma"), (3, "solo")]
+    sets = docs.select(
+        "doc_id", F.split(F.trim("text"), r"\s+").alias("_ws")
+    ).select("doc_id", word_bigram_set("_ws").alias("gs"))
+    got = sorted((r["doc_id"], r["gs"] and sorted(r["gs"])) for r in sets.collect())
+    assert got == [(1, ["alpha beta", "beta gamma"]), (2, None), (3, ["solo"])]
 
 
 def test_char_ngrams_null_text_has_no_grams(spark):

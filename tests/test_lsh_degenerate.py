@@ -4,11 +4,20 @@ neither crash an operator nor change its documented rows. A pair with a
 zero quantized norm (or a NULL embedding) scores sim NULL, as in the
 DuckDB oracles: it never passes a dedup threshold and ranks last."""
 
+import re
+from itertools import combinations
+
 import pytest
+from pyspark import StorageLevel
 
 from nettopologysuite_spark.engine import ann, dedup, lsh
 from nettopologysuite_spark.engine.ann import DIM, ann_lsh_topk, embed_cosine_dedup, knn_graph
-from nettopologysuite_spark.engine.dedup import dup_clusters, minhash_lsh_pairs
+from nettopologysuite_spark.engine.dedup import (
+    blocked_pairs,
+    dup_clusters,
+    minhash_lsh_pairs,
+    ngram_jaccard_pairs,
+)
 
 TEXT = "alpha beta gamma delta epsilon zeta eta theta"
 DOCS = {
@@ -59,6 +68,94 @@ def test_minhash_single_hot_bucket_over_the_cap(spark, monkeypatch):
     assert lsh.last_metrics["dropped_buckets"] == 16  # every band's one bucket
     assert lsh.last_metrics["max_bucket_size"] == 5
     assert dup_clusters(pairs).collect() == []
+
+
+#: shingling edge cases: one word, empty and blank text, tabs and
+#: newlines, leading/trailing blanks, a repeated bigram, NULL, a near-dup
+SHINGLE_DOCS = [
+    ("solo", "solo"),
+    ("solo-tab", "solo\t"),
+    ("empty", ""),
+    ("blank", "   "),
+    ("ws-mix", "alpha\tbeta\ngamma  delta"),
+    ("ws-plain", "alpha beta gamma delta"),
+    ("ws-lead", "  alpha beta gamma delta  "),
+    ("ws-tab-lead", "\talpha beta gamma delta"),
+    ("rep", "a b a b a b"),
+    ("rep-short", "a b a"),
+    ("rep-tail", "a b a b c"),
+    ("null", None),
+    ("near-1", TEXT),
+    ("near-2", TEXT.replace("theta", "iota")),
+]
+
+
+def _bigram_set(text):
+    """The word-bigram set as the oracles define it: split TRIM(text) (which
+    trims spaces only) on whitespace runs; one token is its own gram."""
+    if text is None:
+        return None
+    ws = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
+    return {ws[0]} if len(ws) < 2 else {f"{a} {b}" for a, b in zip(ws, ws[1:])}
+
+
+def test_minhash_equals_bruteforce_bigram_jaccard(spark):
+    sets = {d: _bigram_set(t) for d, t in SHINGLE_DOCS}
+    want = []
+    for (d1, s1), (d2, s2) in combinations(sorted(sets.items()), 2):
+        if s1 is None or s2 is None:
+            continue
+        ni, nu = len(s1 & s2), len(s1 | s2)
+        if ni * 100 >= nu * 60:
+            want.append((d1, d2, ni, nu))
+    got = sorted(tuple(r) for r in minhash_lsh_pairs(
+        _docs(spark, SHINGLE_DOCS), threshold_pct=60).collect())
+    assert got == sorted(want)
+    # every edge case is represented: the blanks pair, the whitespace
+    # variants, the repeated bigrams (counted once) and the near-dup
+    assert ("blank", "empty", 1, 1) in got
+    assert ("rep", "rep-short", 2, 2) in got
+    assert ("rep", "rep-tail", 2, 3) in got
+    assert ("ws-lead", "ws-mix", 3, 3) in got
+    assert ("near-1", "near-2", 6, 8) in got
+
+
+def test_minhash_rejects_a_repeated_id(spark):
+    """The bigram sets are built per row, so ``doc_id`` must be a key: a
+    repeated id raises instead of scoring each row pair on its own, and the
+    set table is released all the same."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    docs = _docs(spark, [("d-1", TEXT), ("d-1", "one two three"), ("d-2", TEXT)])
+    with pytest.raises(ValueError, match="'doc_id'"):
+        minhash_lsh_pairs(docs)
+    assert cache.isEmpty()
+    # a NULL-text row has no set, so it repeats no id
+    docs = _docs(spark, [("d-1", TEXT), ("d-1", None), ("d-2", TEXT)])
+    assert [(r.d1, r.d2) for r in minhash_lsh_pairs(docs).collect()] == [("d-1", "d-2")]
+
+
+def test_dedup_operators_leave_no_cache(spark):
+    """The eager dedup operators release every cache they take before they
+    return, and never one their caller holds."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    docs = spark.createDataFrame(
+        [(f"d-{i}", TEXT if i % 2 else TEXT + " omega", "src0", 50)
+         for i in range(6)],
+        "doc_id string, text string, source string, n_chars int",
+    )
+    pairs = minhash_lsh_pairs(docs)
+    assert cache.isEmpty()
+    dup_clusters(pairs)
+    assert cache.isEmpty()
+    ngram_jaccard_pairs(docs, blocked_pairs(docs))
+    assert cache.isEmpty()
+    held = blocked_pairs(docs).persist()
+    ngram_jaccard_pairs(docs, held)
+    assert held.storageLevel != StorageLevel.NONE
+    held.unpersist()
+    assert cache.isEmpty()
 
 
 @pytest.mark.parametrize("rows", [[], [(0, V)]], ids=["empty", "one_row"])
