@@ -8,22 +8,28 @@ point is a BORDER member of that core's cluster (ties → the minimum
 cluster label, which makes the assignment deterministic — PostGIS leaves
 it arbitrary); everything else is noise (NULL cluster).
 
-Distributed shape (every stage native Spark, zero Python):
+Shape (every Spark stage native, zero Python):
 
 1. eps-grid cells (``floor(x/eps)``, ``floor(y/eps)``) — any eps-neighbor
    pair is in the same or an adjacent cell.
-2. Ordered candidate pairs from ONE equi-join: the left side explodes to
-   its 3×3 neighbor cells (a 9-row native explode), the right side keeps
-   its own cell — each ordered pair appears exactly once, the exact
-   ``dist² ≤ eps²`` refine stays in whole-stage codegen.
-3. Degrees / core flags: one groupBy count over the pairs.
-4. Cluster labels: ``graph.connected_components`` over the core–core
-   edges (an exact driver solve when they fit, contraction levels and
-   star rounds above that — a giant percolation cluster at high density
-   cannot make the round count explode). Label = min core id in the
-   component.
-5. Border assignment: min neighbor-core label per non-core point — one
-   join + groupBy min.
+2. Each unordered within-eps pair once (``_eps_pairs_half``) from ONE
+   equi-join: the left side explodes to its own cell and 4 forward
+   neighbours (a 5-row native explode, ``a <= b`` in the own cell), the
+   right side keeps its own cell; the exact ``dist² ≤ eps²`` refine stays
+   in whole-stage codegen. The pair table is written to one eager
+   checkpoint whose ``observe`` counts it at no extra job.
+3. Size rule — the one ``graph.connected_components`` applies (*To
+   Partition, or Not to Partition*): up to ``graph.LOCAL_MAX_EDGES``
+   pairs, one collect and an exact numpy solve on the driver (degrees,
+   core flags, core–core components by ``graph._min_roots``, the border
+   rule) whose (id, cluster, is_core) rows go back as a local relation.
+4. Above the bound, the same steps on the cluster over the checkpoint:
+   degrees by one groupBy, labels by ``graph.connected_components`` over
+   the core–core edges (contraction levels and star rounds — a giant
+   percolation cluster at high density cannot make the round count
+   explode), borders by one join + groupBy min.
+5. Either way the assignments left-join back to the points. Label = min
+   core id in the component.
 
 At 100 TB the candidate join shuffles on eps-cell ids (partition-pruned
 when storage is curve-ordered); dense hot cells are the same skew problem
@@ -33,10 +39,15 @@ if a workload needs it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
-from .graph import connected_components
+from . import graph
+from .lsh import _observed
+from .session import local_frame
 
 
 def kmeans(points: DataFrame, k: int, max_iters: int = 10,
@@ -46,7 +57,8 @@ def kmeans(points: DataFrame, k: int, max_iters: int = 10,
     ids 0..k−1 (the init order).
 
     Determinism (PostGIS leaves seeding unspecified; this pins it):
-    * init: the k points with the smallest ids (one tiny sorted limit);
+    * init: the k points with the smallest ids (one tiny sorted limit;
+      NULL ids last);
     * assignment: argmin of squared distance, ties to the LOWER cluster
       id (strict < on a running minimum);
     * update: centroid of the assigned set; an emptied cluster keeps its
@@ -70,8 +82,12 @@ def kmeans(points: DataFrame, k: int, max_iters: int = 10,
     # re-reading parquet + re-deriving coordinates each round (guide §5:
     # persist exactly the reused frame; released before returning)
     pts = pts.persist()
-    init = pts.orderBy("_id").limit(k).collect()
+    # a NULL id is no id: such a point is assigned, never a seed
+    init = pts.orderBy(F.col("_id").asc_nulls_last()).limit(k).collect()
     centers = [(float(r["_x"]), float(r["_y"])) for r in init]
+    if not centers:  # empty input: no centre to assign to
+        pts.unpersist()
+        return points.select(F.col(id_col), F.lit(0).alias("cluster_id"))
 
     def assign_col(cs):
         # one parsed SQL expression per iteration instead of ~90 py4j
@@ -135,9 +151,11 @@ def _eps_pairs_half(points: DataFrame, eps: float, id_col: str, x: str,
     (guide §2.3: shuffle/join fewer rows) while the produced pair set is
     identical after orientation expansion. Shared candidate stage of
     ``dbscan`` and ``cluster_within``."""
+    # a NULL id names no pair (and ``a <= b`` would drop it only from its
+    # own cell); a NULL coordinate's cell is NULL and joins nothing
     pts = points.select(
         F.col(id_col).alias("_id"), F.col(x).alias("_x"), F.col(y).alias("_y")
-    ).withColumn(
+    ).where(F.col("_id").isNotNull()).withColumn(
         "_cx", F.floor(F.col("_x") / F.lit(eps)).cast("long")
     ).withColumn(
         "_cy", F.floor(F.col("_y") / F.lit(eps)).cast("long")
@@ -152,8 +170,10 @@ def _eps_pairs_half(points: DataFrame, eps: float, id_col: str, x: str,
         .select(
             F.col("_id").alias("a"), F.col("_x").alias("ax"),
             F.col("_y").alias("ay"), F.col("_o.fwd").alias("_fwd"),
-            (F.col("_cx") + F.col("_o.dx")).alias("jx"),
-            (F.col("_cy") + F.col("_o.dy")).alias("jy"),
+            # an infinite or huge coordinate floors to the long range's
+            # end; its neighbour cell past the end is NULL, not an overflow
+            F.try_add("_cx", "_o.dx").alias("jx"),
+            F.try_add("_cy", "_o.dy").alias("jy"),
         )
     )
     right = pts.select(
@@ -184,7 +204,7 @@ def cluster_within(points: DataFrame, eps: float, id_col: str = "pid",
     half = _eps_pairs_half(points, eps, id_col, x, y).filter(
         F.col("a") != F.col("b")
     ).localCheckpoint(eager=True)
-    lab = connected_components(half)
+    lab = graph.connected_components(half)
     return (
         points.select(F.col(id_col).alias("_id"))
         .join(lab.withColumnRenamed("node", "_id"), "_id", "left")
@@ -199,31 +219,103 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
            id_col: str = "pid", x: str = "x", y: str = "y") -> DataFrame:
     """→ (id, cluster_id nullable, is_core) — one row per input point.
 
+    The ε-pair table materializes once (an eager checkpoint whose
+    ``observe`` counts its rows at no extra job). Up to
+    ``graph.LOCAL_MAX_EDGES`` pairs — the connected-components operator's
+    own driver bound — degrees, cores, components and borders are solved
+    exactly on the driver from one collect (``_assign_local``); above it
+    they run distributed over the same checkpoint
+    (``_assign_distributed``). Both return the same rows.
+
+    A point with a NULL id, or a NULL or non-finite coordinate, is within
+    ``eps`` of no point (itself included), so it is noise. Rows sharing an
+    id are one point set: its neighbourhood is every id one of its rows
+    reaches, each counted once.
+
     ``eps`` should be a dyadic rational when oracle-exact floor-grid
     parity with an external SQL engine matters (the division then stays
     exact in IEEE doubles).
     """
-    pts = points.select(F.col(id_col).alias("_id"))
-    # unordered candidates materialize once (half the join volume); the
-    # full ordered pair multiset — identical to the former 3x3 join output —
-    # derives from the cached narrow table
-    half = _eps_pairs_half(points, eps, id_col, x, y).persist()
+    size = Observation()
+    half = (
+        _eps_pairs_half(points, eps, id_col, x, y)
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    # adaptive execution prunes an empty input's observed node: no row
+    if _observed(size).get("n", 0) <= graph.LOCAL_MAX_EDGES:
+        assigned = _assign_local(half, min_pts)
+    else:
+        assigned = _assign_distributed(half, min_pts)
+    return (
+        points.select(F.col(id_col).alias("a"))
+        .join(assigned, "a", "left")
+        .select(
+            F.col("a").alias(id_col),
+            F.col("cluster_id"),
+            F.coalesce(F.col("is_core"), F.lit(False)).alias("is_core"),
+        )
+    )
+
+
+def _assign_local(half: DataFrame, min_pts: int) -> DataFrame:
+    """(a, cluster_id, is_core) of every core and border point, solved on
+    the driver from the collected half-pair table: ids factorized in
+    sorted order, so the smallest code of a component is its min id."""
+    pdf = half.toPandas()
+    n = len(pdf)
+    codes, ids = pd.factorize(
+        pd.concat([pdf["a"], pdf["b"]], ignore_index=True), sort=True
+    )
+    ids = np.asarray(ids)
+    k = len(ids)
+    # each id pair once (a repeated id may reach a neighbour twice), in
+    # the half table's form: self-pairs (a, a) once, others one orientation
+    key = np.unique(np.minimum(codes[:n], codes[n:]) * k
+                    + np.maximum(codes[:n], codes[n:]))
+    a, b = key // k, key % k
+    loop = a == b
+    deg = np.bincount(a, minlength=k) + np.bincount(b[~loop], minlength=k)
+    core = deg >= min_pts
+    cc = core[a] & core[b] & ~loop
+    root = graph._min_roots(a[cc], b[cc], k)
+    # border rule: the min component label over a non-core point's core
+    # neighbours, both orientations of every pair
+    border = np.full(k, k)
+    for u, v in ((a, b), (b, a)):
+        m = ~core[u] & core[v]
+        np.minimum.at(border, u[m], root[v[m]])
+    keep = core | (border < k)
+    label = np.where(core, root, border)
+    typ = half.schema["a"].dataType
+    schema = StructType([
+        StructField("a", typ), StructField("cluster_id", typ),
+        StructField("is_core", BooleanType()),
+    ])
+    return local_frame(half.sparkSession, pd.DataFrame({
+        "a": ids[keep], "cluster_id": ids[label[keep]], "is_core": core[keep],
+    }), schema)
+
+
+def _assign_distributed(half: DataFrame, min_pts: int) -> DataFrame:
+    """``_assign_local``'s rows, computed on the cluster: degrees by one
+    groupBy over the ordered pairs, the core–core components by
+    ``connected_components``, borders by one join + groupBy min."""
+    # the full ordered pair multiset derives from the checkpointed half
     pairs = half.union(
         half.filter(F.col("a") != F.col("b"))
         .select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    deg = pairs.groupBy("a").agg(F.count(F.lit(1)).alias("_deg"))
+    deg = pairs.groupBy("a").agg(F.count_distinct("b").alias("_deg"))
     core = deg.filter(F.col("_deg") >= min_pts).select("a").persist()
 
-    # each core-core pair once: it derives from the CACHED half-pair table
-    # through two cheap semi-joins, so the CC re-reads the cache instead of
-    # paying an eager checkpoint write of the (quadratic) core-edge set
+    # each core-core pair once: two cheap semi-joins over the checkpoint
     core_edges = (
         half.join(core, "a", "left_semi")
         .join(core.select(F.col("a").alias("b")), "b", "left_semi")
         .filter(F.col("a") != F.col("b"))
     )
-    cc = connected_components(core_edges).select(
+    cc = graph.connected_components(core_edges).select(
         F.col("node").alias("a"), F.col("label").alias("_cl")
     )
     # singleton cores (no core neighbor) label themselves
@@ -241,21 +333,11 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     assigned = (
         core_labels.withColumn("is_core", F.lit(True))
         .unionByName(border.withColumn("is_core", F.lit(False)))
-        # one row per assigned point — materialize it so the persisted
-        # intermediates can be RELEASED before returning (they previously
-        # outlived the query) and the final action replays a small
-        # checkpoint instead of the whole candidate pipeline
+        # one row per assigned point — materialized so the persisted
+        # intermediates are released before returning and the final
+        # action replays a small checkpoint, not the candidate pipeline
         .localCheckpoint(eager=True)
     )
-    for df in (half, core, core_labels):
+    for df in (core, core_labels):
         df.unpersist()
-    out = (
-        pts.select(F.col("_id").alias("a"))
-        .join(assigned, "a", "left")
-        .select(
-            F.col("a").alias(id_col),
-            F.col("cluster_id"),
-            F.coalesce(F.col("is_core"), F.lit(False)).alias("is_core"),
-        )
-    )
-    return out
+    return assigned

@@ -303,9 +303,14 @@ def window_dedup(docs: DataFrame, k: int = 8, text_col: str = "text",
     # the fused projection — no per-row array of window strings (the same
     # Generate+Project fusion win as the gram ops; measured ~2×)
     win_expr = " || ' ' || ".join(f"_ws[_i + {j}]" for j in range(k))
-    wh = toks.filter(F.size("_ws") >= k).select(
+    # the size test sits inside the explode's array: a Filter on it would
+    # be pushed below widen_input's repartition as a second split of the
+    # text (sequence(0, n - k) is not empty for n < k, so it is needed)
+    wh = toks.select(
         "_id", "_ws",
-        F.explode(F.expr(f"sequence(0, size(_ws) - {k})")).alias("_i"),
+        F.explode(F.expr(
+            f"IF(size(_ws) >= {k}, sequence(0, size(_ws) - {k}), array())"
+        )).alias("_i"),
     ).select(
         "_id",
         F.expr(

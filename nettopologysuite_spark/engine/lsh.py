@@ -88,10 +88,15 @@ def bucket_pairs(buckets: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
             "lsh: dropped %s bucket(s) over max_bucket=%s (largest bucket: %s ids)",
             m["dropped_buckets"], max_bucket, m["max_bucket_size"],
         )
-    rows = lists.select("band", "sig", F.explode("ids").alias("d1"))
-    pairs = rows.join(
-        rows.select("band", "sig", F.col("d1").alias("d2")), ["band", "sig"]
-    )
+    # both join sides are the same plan, so a shuffle on (band, sig) runs
+    # once and the other side reuses it; renaming a side before the join
+    # made the two plans differ and shuffled the rows twice
+    rows = lists.select("band", "sig", F.explode("ids").alias("d"))
+    left, right = rows.alias("l"), rows.alias("r")
+    pairs = left.join(
+        right,
+        (F.col("l.band") == F.col("r.band")) & (F.col("l.sig") == F.col("r.sig")),
+    ).select(F.col("l.d").alias("d1"), F.col("r.d").alias("d2"))
     # the self-join yields both orders and self-pairs; the oracles pair
     # d1 < d2 only
     return pairs.where(F.col("d1") < F.col("d2")).select("d1", "d2").distinct()

@@ -244,3 +244,36 @@ def test_eps_pairs_half_matches_brute_force(spark):
     got = [(min(r["a"], r["b"]), max(r["a"], r["b"])) for r in rows]
     assert len(got) == len(set(got)), "pair emitted more than once"
     assert set(got) == want
+
+
+def _group_jobs(spark, group, action):
+    """Spark jobs ``action()`` starts, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dbscan_spark_job_budget(spark):
+    """DBSCAN over ~1k points (10 per unit², so one large component and
+    about 4k ε-pairs, far below ``graph.LOCAL_MAX_EDGES``) takes the
+    driver path. Building the frame runs 5 jobs (the adaptive query
+    stages of the eager pair checkpoint, then one collect of it) and
+    collecting it 2 more, on ``local[4]`` with 8 shuffle partitions. An
+    eager job added to either fails here rather than only in a traced
+    benchmark run."""
+    rng = np.random.default_rng(1501)
+    pts = rng.uniform(0, 10, (1000, 2))
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "pid long, x double, y double",
+    ).localCheckpoint(eager=True)
+    out = []
+    jobs = _group_jobs(spark, "dbscan-budget",
+                       lambda: out.extend(dbscan(df, 0.5, 3).collect()))
+    assert len(out) == 1000
+    assert jobs == 7, jobs

@@ -220,3 +220,46 @@ def test_grouped_pandas_functions_infer_their_eval_type(spark, sf_dir):
     spark.catalog.clearCache()
     assert [str(w.message) for w in seen
             if "Cannot infer the eval type" in str(w.message)] == []
+
+
+def _is_filter_node(line: str) -> bool:
+    return line.lstrip(" :+-").lstrip("*(0123456789) ").startswith("Filter ")
+
+
+def test_window_dedup_splits_each_text_once(spark, sf_dir):
+    """window_dedup's window-count test is part of the explode's array, so
+    no Filter evaluates ``split`` next to the scan: a Filter on the token
+    count would be pushed below widen_input's repartition as a second split
+    of every text."""
+    plan = _plan(E.q_window_dedup(spark, sf_dir))
+    assert [ln for ln in plan.splitlines()
+            if _is_filter_node(ln) and "split(" in ln] == [], plan[:1500]
+
+
+def test_minhash_bucket_rows_shuffle_once(spark, sf_dir, monkeypatch):
+    """bucket_pairs' self-join reads one shuffle of the exploded bucket
+    rows: when the join shuffles (broadcasts are switched off here; the
+    test corpus is small enough to broadcast), the final adaptive plan of a
+    MinHash call's candidate pairs holds one hashpartitioning(band, sig)
+    Exchange, and its other side reuses it."""
+    from nettopologysuite_spark.engine import dedup
+
+    seen = []
+    real = dedup._pair_counts
+    monkeypatch.setattr(dedup, "_pair_counts",
+                        lambda pairs, sets: seen.append(pairs) or real(pairs, sets))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        dedup.minhash_lsh_pairs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        cand = seen[0]
+        assert cand.collect()
+    finally:
+        spark.conf.set(key, old)
+    plan = _plan(cand)
+    assert plan.startswith("AdaptiveSparkPlan isFinalPlan=true"), plan[:200]
+    final = plan.split("== Initial Plan ==")[0]
+    shuffles = [ln for ln in final.splitlines() if "hashpartitioning(band" in ln]
+    assert sum("ReusedExchange" not in ln for ln in shuffles) == 1, final
+    assert sum("ReusedExchange" in ln for ln in shuffles) == 1, final
