@@ -57,12 +57,12 @@ def kmeans(points: DataFrame, k: int, max_iters: int = 10,
     ids 0..k−1 (the init order).
 
     Determinism (PostGIS leaves seeding unspecified; this pins it):
-    * init: the k points with the smallest ids (one tiny sorted limit;
-      NULL ids last);
+    * init: the k points with the smallest ids among those with both
+      coordinates (one tiny sorted limit; NULL ids last);
     * assignment: argmin of squared distance, ties to the LOWER cluster
       id (strict < on a running minimum);
-    * update: centroid of the assigned set; an emptied cluster keeps its
-      previous center.
+    * update: centroid of the assigned set; an emptied cluster, or one
+      whose points all have a NULL coordinate, keeps its previous center.
 
     Distributed shape: centers live in a k-row broadcast; each iteration
     is ONE map over the points (k distance expressions folded into a
@@ -82,10 +82,14 @@ def kmeans(points: DataFrame, k: int, max_iters: int = 10,
     # re-reading parquet + re-deriving coordinates each round (guide §5:
     # persist exactly the reused frame; released before returning)
     pts = pts.persist()
-    # a NULL id is no id: such a point is assigned, never a seed
-    init = pts.orderBy(F.col("_id").asc_nulls_last()).limit(k).collect()
+    # a NULL id is no id: such a point is assigned, never a seed; a NULL
+    # coordinate is no position, so its point never seeds either
+    init = (
+        pts.where(F.col("_x").isNotNull() & F.col("_y").isNotNull())
+        .orderBy(F.col("_id").asc_nulls_last()).limit(k).collect()
+    )
     centers = [(float(r["_x"]), float(r["_y"])) for r in init]
-    if not centers:  # empty input: no centre to assign to
+    if not centers:  # no point with a position: no centre to assign to
         pts.unpersist()
         return points.select(F.col(id_col), F.lit(0).alias("cluster_id"))
 
@@ -123,7 +127,10 @@ def kmeans(points: DataFrame, k: int, max_iters: int = 10,
         )  # k rows — bounded driver traffic
         new_centers = list(centers)
         for r in agg:
-            new_centers[int(r["cluster_id"])] = (float(r["cx"]), float(r["cy"]))
+            # a cluster whose points all lack a coordinate averages to
+            # NULL and keeps its centre, like an emptied one
+            if r["cx"] is not None and r["cy"] is not None:
+                new_centers[int(r["cluster_id"])] = (float(r["cx"]), float(r["cy"]))
         moved = max(
             math.hypot(a[0] - b[0], a[1] - b[1])
             for a, b in zip(centers, new_centers)

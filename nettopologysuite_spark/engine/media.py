@@ -2,24 +2,34 @@
 
 The docs table (BASELINE.json input_hint) interleaves text / geom / media
 spans; media content is an opaque reference (``media://<source>/<id>``).
-The FETCH stage is the only stand-in (``fetch_media_batches`` synthesizes
-deterministic PPM/BMP bytes from the ref — in production it is the
-object-store read); the DECODE stage is real: pure-numpy PPM (P6) and
-24-bit BMP parsers feed exact channel statistics, and the whole pipeline —
-span filtering, schema, binary column, two independent mapInPandas stages,
-fingerprint dedup — is oracle-gated:
+Every decoding operator runs the same path, each step written once:
+
+- FETCH (``_fetch``) is the only stand-in: it synthesizes deterministic
+  PPM/BMP bytes (or a multi-frame container) from the ref — in production
+  it is the object-store read;
+- DECODE (``_decode``) is real: one format sniff in front of pure-numpy PPM
+  (P6) and 24-bit BMP parsers;
+- STATS (``_channel_means``) is the one exact channel-mean reduction
+  (integer sums divided once — deterministic doubles any engine
+  reproduces);
+- ``_map_refs`` is the one mapInPandas stage: it widens the narrow
+  (keys…, media_ref) rows across the session's cores and emits each
+  ref's rows from a per-ref function, so fetched bytes never cross the
+  Arrow boundary.
+
+``media_features``, ``media_resized_features``, ``media_frame_samples`` and
+``media_perceptual_stats`` (behind ``media_dedup``) are per-ref functions
+handed to that stage; ``media_stats`` is pure native expressions over the
+spans array. Every operator is oracle-gated:
 
 - ``media_stats``: per-doc media span counts + normalized-ref fingerprint
-  (pure native expressions over the spans array — the span column is never
-  exploded-and-regrouped, preserving the span-sequence invariant).
-- ``media_dedup``: exact media-level dedup on the content fingerprint (the
-  sandbox analog of perceptual-hash dedup; swap the fingerprint column for
-  a pHash UDF output in production).
+  (the span column is never exploded-and-regrouped, preserving the
+  span-sequence invariant).
+- ``media_dedup``: media-level dedup on a perceptual fingerprint of the
+  decoded pixels of each doc's first media span.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,130 +37,80 @@ from pyspark.sql import functions as F
 
 
 def media_refs(docs: DataFrame) -> DataFrame:
-    """(doc_id, span_idx, media_ref) for media spans — array filter before
-    explode (only media spans materialize as rows)."""
+    """(doc_id, span_idx, media_ref) for media spans with a ref — array
+    filter before explode (only those spans materialize as rows), so
+    span_idx keeps each span's position in the doc."""
     ex = docs.select(
         "doc_id",
         F.explode(
             F.expr(
                 "filter(transform(spans, (s, i) -> "
                 "struct(s.kind AS kind, s.media_ref AS media_ref, i AS idx)), "
-                "x -> x.kind = 'media')"
+                "x -> x.kind = 'media' AND x.media_ref IS NOT NULL)"
             )
         ).alias("m"),
     )
-    refs = ex.select(
+    return ex.select(
         "doc_id", F.col("m.idx").alias("span_idx"), F.col("m.media_ref").alias("media_ref")
     )
-    # widen the CPU-bound fetch/decode stage: the refs table is tiny rows
-    # (a ref string per media span) but every downstream consumer does
-    # real per-ref work in Python — a small source file otherwise funnels
-    # the whole decode through 1-2 tasks (guide §2.5 input parallelism).
-    # The repartition shuffles only the narrow ref rows, never image bytes,
-    # and scales with the session's core count rather than a constant.
-    sc = docs.sparkSession.sparkContext
-    return refs.repartition(sc.defaultParallelism)
+
+
+def _map_refs(refs: DataFrame, per_ref, schema: str) -> DataFrame:
+    """The one Python stage behind the decoding operators. ``refs`` rows
+    are (key columns…, media_ref); ``per_ref(ref)`` returns the rows
+    (tuples of the schema's remaining columns) that ref contributes, each
+    emitted after its row's keys. Python ints land as int64 and
+    mapInPandas casts them to the declared ``int`` fields.
+
+    The refs are widened first: they are tiny rows (a ref string per
+    span) but every one costs real per-ref work in Python, and a small
+    source file otherwise funnels the whole decode through 1-2 tasks
+    (guide §2.5 input parallelism). The repartition shuffles only the
+    narrow ref rows, never image bytes, and scales with the session's
+    core count rather than a constant."""
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def run(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(*keys, *row)
+                 for *keys, ref in pdf.itertuples(index=False, name=None)
+                 for row in per_ref(ref)],
+                columns=names,
+            )
+
+    sc = refs.sparkSession.sparkContext
+    return refs.repartition(sc.defaultParallelism).mapInPandas(run, schema)
+
+
+_MEDIA_SPANS = "filter(spans, s -> s.kind = 'media')"
+
+
+def _first_ref():
+    """media_ref of a doc's first media span; NULL when the doc has no
+    media span (``try_element_at``: an empty array is not an error)."""
+    return F.try_element_at(F.expr(_MEDIA_SPANS), F.lit(1))["media_ref"]
 
 
 def media_stats(docs: DataFrame) -> DataFrame:
     """Per-doc media stats: span count, source host of the first ref, and a
     content fingerprint (md5 of the normalized ref — deterministic pHash
-    stand-in). All JVM-side array expressions; spans stay untouched."""
-    refs = F.expr("filter(spans, s -> s.kind = 'media')")
-    first_ref = F.element_at(refs, 1)["media_ref"]
+    stand-in). All JVM-side array expressions; spans stay untouched. A
+    media span without a ref still counts; a doc whose first media span
+    has none gets NULL host and fingerprint."""
+    first_ref = _first_ref()
     host = F.regexp_extract(first_ref, r"^media://([^/]+)/", 1)
     return docs.select(
         "doc_id",
-        F.size(refs).alias("n_media"),
+        F.size(F.expr(_MEDIA_SPANS)).alias("n_media"),
         host.alias("media_src"),
         F.md5(F.lower(F.trim(first_ref))).alias("media_fp"),
     ).filter(F.col("n_media") > 0)
 
 
-def dhash64(img: "np.ndarray") -> int:
-    """64-bit difference hash over REAL decoded pixels: channel-sum
-    luminance, 8×9 nearest-neighbour thumbnail (same gather as
-    :func:`resize_nn`), bit = left pixel strictly brighter than its right
-    neighbour, packed row-major MSB-first. Encoding-invariant (PPM and BMP
-    of the same pixels hash identically); content perturbations that
-    change local gradient direction flip bits."""
-    import numpy as np
-
-    h, w, _ = img.shape
-    lum = img.sum(axis=2, dtype=np.int32)
-    rows = (np.arange(8, dtype=np.int64) * h) // 8
-    cols = (np.arange(9, dtype=np.int64) * w) // 9
-    t = lum[rows[:, None], cols[None, :]]
-    bits = (t[:, :-1] > t[:, 1:]).ravel()
-    v = 0
-    for b in bits:
-        v = (v << 1) | int(b)
-    return v
-
-
-def perceptual_fp(blob: bytes) -> str:
-    """Perceptual fingerprint of an encoded image: decode (PPM or BMP),
-    then ``<dhash64 hex>|<w>x<h>|<round(mean_blue)>`` — the dHash carries
-    the luminance structure, the dims + blue-channel mean cut hash
-    collisions between structurally-flat images (the standard
-    pHash-plus-metadata dedup key). Identical pixels re-encoded PPM↔BMP
-    produce the same fingerprint."""
-    import numpy as np
-
-    b = bytes(blob)
-    img = decode_ppm(b) if b[:2] == b"P6" else decode_bmp(b)
-    h, w, _ = img.shape
-    mb = round(int(img[:, :, 2].sum(dtype=np.int64)) / (h * w))
-    return f"{dhash64(img):016x}|{w}x{h}|{mb}"
-
-
-def media_perceptual_stats(docs: DataFrame) -> DataFrame:
-    """(doc_id, media_fp) with media_fp the PERCEPTUAL fingerprint of each
-    doc's first media span, computed from the real decoded pixels in one
-    fused fetch→decode→dhash mapInPandas stage (the raw bytes never cross
-    the Arrow boundary)."""
-    refs = F.expr("filter(spans, s -> s.kind = 'media')")
-    first = docs.select(
-        "doc_id", F.element_at(refs, 1)["media_ref"].alias("media_ref")
-    ).filter(F.col("media_ref").isNotNull())
-    # widen the decode+dhash stage across the session's cores (same
-    # narrow-rows repartition rationale as media_refs)
-    first = first.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-
-    def fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fps = []
-            for ref in pdf["media_ref"]:
-                fmt, w, h, seed = _ref_params(ref)
-                img = _test_image(w, h, seed)
-                blob = encode_ppm(img) if fmt == "ppm" else encode_bmp(img)
-                fps.append(perceptual_fp(blob))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "media_fp": fps})
-
-    return first.mapInPandas(fp_batches, "doc_id string, media_fp string")
-
-
-def media_dedup(docs: DataFrame) -> DataFrame:
-    """Media-level perceptual dedup: group by the dHash-based fingerprint
-    of the real decoded pixels (:func:`media_perceptual_stats`), keep the
-    smallest doc id. On the deterministic gradient corpus the dHash term
-    is provably 0 for every image (luminance strictly increases left to
-    right, so no left>right bit fires) — the oracle exploits that closed
-    form; the pytest suite exercises non-degenerate pixels where the dHash
-    alone separates re-encoded identical from perturbed content."""
-    stats = media_perceptual_stats(docs)
-    return (
-        stats.groupBy("media_fp")
-        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dups"))
-        .select("keep_id", "n_dups")
-    )
-
-
-MEDIA_FEATURE_SCHEMA = (
-    "doc_id string, span_idx int, fmt string, width int, height int, "
-    "mean_r double, mean_g double, mean_b double, r_first int, r_last int"
-)
-
+# ---------------------------------------------------------------------------
+# fetch → decode → stats: each step once
+# ---------------------------------------------------------------------------
 
 def _ref_params(ref: str) -> tuple[str, int, int, int]:
     """(fmt, width, height, seed) derived from md5 of the media ref — the
@@ -181,6 +141,43 @@ def _test_image(w: int, h: int, seed: int) -> "np.ndarray":
     img[:, :, 1] = np.arange(w, dtype=np.uint8)[None, :]
     img[:, :, 2] = seed
     return img
+
+
+def _fetch(ref: str, video: bool = False) -> bytes:
+    """FETCH: media_ref → encoded bytes. In production the object-store
+    read; here the bytes are synthesized deterministically from the ref's
+    md5 (``_ref_params`` + ``_test_image``), PPM or BMP by the ref so both
+    decoders exercise. ``video`` reads the ref as a multi-frame container
+    instead: n_frames = 2 + h15 % 7 PPM frames, frame f the gradient image
+    with seed (seed+f) % 256."""
+    import hashlib
+
+    fmt, w, h, seed = _ref_params(ref)
+    if video:
+        nf = 2 + int(hashlib.md5(ref.encode()).hexdigest()[15], 16) % 7
+        return encode_video([_test_image(w, h, (seed + f) % 256) for f in range(nf)])
+    img = _test_image(w, h, seed)
+    return encode_ppm(img) if fmt == "ppm" else encode_bmp(img)
+
+
+def _decode(blob: bytes) -> tuple[str, "np.ndarray"]:
+    """DECODE: (fmt, (h, w, 3) uint8 RGB) from PPM (P6) or 24-bit BMP
+    bytes — the one format sniff."""
+    b = bytes(blob)
+    if b[:2] == b"P6":
+        return "ppm", decode_ppm(b)
+    return "bmp", decode_bmp(b)
+
+
+def _channel_means(img: "np.ndarray") -> tuple[float, float, float]:
+    """Exact (mean_r, mean_g, mean_b): integer channel sums divided once,
+    so the doubles match any engine's closed form. One strided sum per
+    channel: summing a (pixels, 3) view along its long axis runs ~8×
+    slower."""
+    import numpy as np
+
+    h, w, _ = img.shape
+    return tuple(int(img[:, :, c].sum(dtype=np.int64)) / (w * h) for c in range(3))
 
 
 def encode_ppm(img: "np.ndarray") -> bytes:
@@ -255,82 +252,85 @@ def decode_bmp(blob: bytes) -> "np.ndarray":
     return img[:, :, ::-1]  # BGR → RGB
 
 
-def fetch_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the FETCH stage: media_ref → raw bytes.
+# ---------------------------------------------------------------------------
+# the operators: one per-ref function each
+# ---------------------------------------------------------------------------
 
-    In production this is the object-store read; here the bytes are
-    synthesized deterministically from the ref (``_ref_params`` +
-    ``_test_image``), alternating PPM/BMP so both decoders exercise. The
-    blob column is a real ``binary`` column — schema, batching, and memory
-    shape match the production operator."""
-    for pdf in batches:
-        blobs = []
-        for ref in pdf["media_ref"]:
-            fmt, w, h, seed = _ref_params(ref)
-            img = _test_image(w, h, seed)
-            blobs.append(encode_ppm(img) if fmt == "ppm" else encode_bmp(img))
-        out = pdf[["doc_id", "span_idx"]].copy()
-        out["span_idx"] = out["span_idx"].astype("int32")
-        out["blob"] = blobs
-        yield out
+MEDIA_FEATURE_SCHEMA = (
+    "doc_id string, span_idx int, fmt string, width int, height int, "
+    "mean_r double, mean_g double, mean_b double, r_first int, r_last int"
+)
 
 
-def decode_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the decode → feature-extract stage: REAL
-    pure-numpy PPM (P6) / BMP (24-bit) decoders over the blob column, then
-    exact channel statistics (integer sums divided once — deterministic
-    doubles any engine reproduces)."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = {k: [] for k in ("fmt", "width", "height", "mean_r", "mean_g",
-                                "mean_b", "r_first", "r_last")}
-        for blob in pdf["blob"]:
-            b = bytes(blob)
-            if b[:2] == b"P6":
-                fmt, img = "ppm", decode_ppm(b)
-            else:
-                fmt, img = "bmp", decode_bmp(b)
-            h, w, _ = img.shape
-            npx = w * h
-            sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-            rows["fmt"].append(fmt)
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["mean_r"].append(float(sums[0]) / npx)
-            rows["mean_g"].append(float(sums[1]) / npx)
-            rows["mean_b"].append(float(sums[2]) / npx)
-            rows["r_first"].append(int(img[0, 0, 0]))
-            rows["r_last"].append(int(img[h - 1, 0, 0]))
-        out = pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "span_idx": pdf["span_idx"].astype("int32"),
-            **rows,
-        })
-        out["width"] = out["width"].astype("int32")
-        out["height"] = out["height"].astype("int32")
-        out["r_first"] = out["r_first"].astype("int32")
-        out["r_last"] = out["r_last"].astype("int32")
-        yield out
+def _features(ref: str) -> list[tuple]:
+    fmt, img = _decode(_fetch(ref))
+    h, w, _ = img.shape
+    return [(fmt, w, h, *_channel_means(img), int(img[0, 0, 0]), int(img[h - 1, 0, 0]))]
 
 
 def media_features(docs: DataFrame) -> DataFrame:
-    """Distributed fetch → decode → feature pipeline over media spans:
-    refs → Arrow batches → synthesized bytes (fetch stand-in) → REAL
-    PPM/BMP decode → typed feature rows.
-
-    Fetch and decode run in ONE mapInPandas stage, so the raw image bytes
-    never cross the Arrow boundary (measured ~2× over two stages at sf0.1:
-    the blob column dominates the Arrow traffic)."""
-    def fetch_decode(batches):
-        yield from decode_media_batches(fetch_media_batches(batches))
-
-    return media_refs(docs).mapInPandas(fetch_decode, MEDIA_FEATURE_SCHEMA)
+    """fetch → REAL PPM/BMP decode → exact channel stats, one row per media
+    span with a ref: (doc_id, span_idx, fmt, width, height, mean_r/g/b,
+    r_first, r_last), where r_first/r_last are the R values at the top-
+    and bottom-left pixels (they expose a row-order decode bug)."""
+    return _map_refs(media_refs(docs), _features, MEDIA_FEATURE_SCHEMA)
 
 
-# ---------------------------------------------------------------------------
-# resize + frame-sample (the remaining multimodal pipeline stages)
-# ---------------------------------------------------------------------------
+def dhash64(img: "np.ndarray") -> int:
+    """64-bit difference hash over REAL decoded pixels: channel-sum
+    luminance of the 8×9 :func:`resize_nn` thumbnail (taken before the
+    channel sum, so only 72 pixels are summed), bit = left pixel strictly
+    brighter than its right neighbour, packed row-major MSB-first.
+    Encoding-invariant (PPM and BMP of the same pixels hash identically);
+    content perturbations that change local gradient direction flip
+    bits."""
+    import numpy as np
+
+    t = resize_nn(img, 9, 8).sum(axis=2, dtype=np.int32)
+    bits = (t[:, :-1] > t[:, 1:]).ravel()
+    return int.from_bytes(np.packbits(bits).tobytes(), "big")
+
+
+def perceptual_fp(blob: bytes) -> str:
+    """Perceptual fingerprint of an encoded image: decode (PPM or BMP),
+    then ``<dhash64 hex>|<w>x<h>|<round(mean_blue)>`` — the dHash carries
+    the luminance structure, the dims + blue-channel mean cut hash
+    collisions between structurally-flat images (the standard
+    pHash-plus-metadata dedup key). Identical pixels re-encoded PPM↔BMP
+    produce the same fingerprint."""
+    _, img = _decode(blob)
+    h, w, _ = img.shape
+    return f"{dhash64(img):016x}|{w}x{h}|{round(_channel_means(img)[2])}"
+
+
+def _perceptual(ref: str) -> list[tuple]:
+    return [(perceptual_fp(_fetch(ref)),)]
+
+
+def media_perceptual_stats(docs: DataFrame) -> DataFrame:
+    """(doc_id, media_fp) with media_fp the PERCEPTUAL fingerprint of each
+    doc's first media span, computed from the real decoded pixels. A doc
+    whose first media span has no ref has no row."""
+    first = docs.select("doc_id", _first_ref().alias("media_ref")) \
+        .filter(F.col("media_ref").isNotNull())
+    return _map_refs(first, _perceptual, "doc_id string, media_fp string")
+
+
+def media_dedup(docs: DataFrame) -> DataFrame:
+    """Media-level perceptual dedup: group by the dHash-based fingerprint
+    of the real decoded pixels (:func:`media_perceptual_stats`), keep the
+    smallest doc id. On the deterministic gradient corpus the dHash term
+    is provably 0 for every image (luminance strictly increases left to
+    right, so no left>right bit fires) — the oracle exploits that closed
+    form; the pytest suite exercises non-degenerate pixels where the dHash
+    alone separates re-encoded identical from perturbed content."""
+    stats = media_perceptual_stats(docs)
+    return (
+        stats.groupBy("media_fp")
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dups"))
+        .select("keep_id", "n_dups")
+    )
+
 
 def resize_nn(img: "np.ndarray", rw: int, rh: int) -> "np.ndarray":
     """Nearest-neighbor resize to (rh, rw, 3) — one numpy fancy-index
@@ -355,34 +355,12 @@ def media_resized_features(docs: DataFrame, rw: int = 32, rh: int = 32) -> DataF
     resized pixels — each has a closed form on the gradient test image
     (mean_r = Σ_i floor(i·h/rh)/rh etc.), which is what the oracle
     recomputes."""
-    import numpy as np
+    def resized(ref: str) -> list[tuple]:
+        _, img = _decode(_fetch(ref))
+        h, w, _ = img.shape
+        return [(w, h, *_channel_means(resize_nn(img, rw, rh)))]
 
-    def fetch_decode_resize(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("width", "height", "mean_r", "mean_g", "mean_b")}
-            for ref in pdf["media_ref"]:
-                fmt, w, h, seed = _ref_params(ref)
-                img = _test_image(w, h, seed)
-                blob = encode_ppm(img) if fmt == "ppm" else encode_bmp(img)
-                dec = decode_ppm(blob) if blob[:2] == b"P6" else decode_bmp(blob)
-                small = resize_nn(dec, rw, rh)
-                npx = rw * rh
-                sums = small.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["mean_r"].append(float(sums[0]) / npx)
-                rows["mean_g"].append(float(sums[1]) / npx)
-                rows["mean_b"].append(float(sums[2]) / npx)
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "span_idx": pdf["span_idx"].astype("int32"),
-                **rows,
-            })
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            yield out
-
-    return media_refs(docs).mapInPandas(fetch_decode_resize, MEDIA_RESIZE_SCHEMA)
+    return _map_refs(media_refs(docs), resized, MEDIA_RESIZE_SCHEMA)
 
 
 # -- deterministic multi-frame container ("video") --------------------------
@@ -429,48 +407,21 @@ MEDIA_FRAMES_SCHEMA = (
 
 
 def media_frame_samples(docs: DataFrame, stride: int = 2) -> DataFrame:
-    """fetch (synthesized multi-frame container) → FRAME-SAMPLE every
+    """fetch (a multi-frame container per ref) → FRAME-SAMPLE every
     ``stride``-th frame (skipping unsampled frames without decoding) →
-    decode → per-frame channel stats. Frame f of a ref's video is the
-    gradient image with seed (seed+f) % 256 and n_frames = 2 + h15 % 7,
-    so every emitted row has a closed-form oracle."""
-    import numpy as np
+    decode → per-frame channel stats, one row per sampled frame. The
+    container's frames have closed forms (:func:`_fetch`), so every
+    emitted row has an oracle."""
+    import struct
 
-    def fetch_sample(batches):
-        for pdf in batches:
-            cols = {k: [] for k in ("doc_id", "span_idx", "frame_idx", "n_frames",
-                                    "width", "height", "mean_r", "mean_g", "mean_b")}
-            for doc_id, span_idx, ref in zip(
-                pdf["doc_id"], pdf["span_idx"], pdf["media_ref"]
-            ):
-                fmt, w, h, seed = _ref_params(ref)
-                nf = 2 + _ref_nibble(ref, 15) % 7
-                video = encode_video(
-                    [_test_image(w, h, (seed + f) % 256) for f in range(nf)]
-                )
-                for f, fb in iter_video_frames(video, stride):
-                    img = decode_ppm(fb)
-                    fh, fw, _ = img.shape
-                    sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    npx = fw * fh
-                    cols["doc_id"].append(doc_id)
-                    cols["span_idx"].append(span_idx)
-                    cols["frame_idx"].append(f)
-                    cols["n_frames"].append(nf)
-                    cols["width"].append(fw)
-                    cols["height"].append(fh)
-                    cols["mean_r"].append(float(sums[0]) / npx)
-                    cols["mean_g"].append(float(sums[1]) / npx)
-                    cols["mean_b"].append(float(sums[2]) / npx)
-            out = pd.DataFrame(cols)
-            for c in ("span_idx", "frame_idx", "n_frames", "width", "height"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def frames(ref: str) -> list[tuple]:
+        video = _fetch(ref, video=True)
+        (nf,) = struct.unpack_from("<I", video, len(_NTSV_MAGIC))
+        rows = []
+        for f, fb in iter_video_frames(video, stride):
+            _, img = _decode(fb)
+            h, w, _ = img.shape
+            rows.append((f, nf, w, h, *_channel_means(img)))
+        return rows
 
-    return media_refs(docs).mapInPandas(fetch_sample, MEDIA_FRAMES_SCHEMA)
-
-
-def _ref_nibble(ref: str, pos: int) -> int:
-    import hashlib
-
-    return int(hashlib.md5(ref.encode()).hexdigest()[pos], 16)
+    return _map_refs(media_refs(docs), frames, MEDIA_FRAMES_SCHEMA)

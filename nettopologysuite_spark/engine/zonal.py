@@ -136,11 +136,7 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
     # each 4-adjacency appears once (right/up edges have b > a); the CC
     # re-reads its input, so the window passes run once into a checkpoint
     edges = e_right.union(e_up).localCheckpoint(eager=True)
-    # labels materialize once: both downstream consumers (stats and the
-    # tile-union pass) re-read this small table instead of re-joining the
-    # CC output pieces per consumer
-    lab = connected_components(edges).withColumnRenamed("node", "pid") \
-        .localCheckpoint(eager=True)
+    lab = connected_components(edges).withColumnRenamed("node", "pid")
     reg = base.join(lab, "pid", "left").withColumn(
         "region_id", F.coalesce(F.col("label"), F.col("pid"))
     )

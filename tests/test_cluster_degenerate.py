@@ -44,6 +44,8 @@ CASES = {
                     (7, 0.2, NAN), (8, 1e300, 0.0), (9, 1e300, 0.0)], 2),
     "null_coordinate": ([(1, 0.0, 0.0), (2, 0.1, 0.0), (3, None, 0.0),
                          (4, 0.2, None)], 2),
+    # k-means' smallest id has no x: it must neither seed nor crash
+    "null_coordinate_seed": ([(1, None, 0.0), (2, 1.0, 0.0), (3, 5.0, 5.0)], 2),
     # the NULL-id point at 0.5 would make 1 and 2 cores if it counted
     "null_id": ([(None, 0.0, 0.0), (1, 0.1, 0.0), (None, 0.5, 0.0),
                  (2, 0.9, 0.0)], 2),
@@ -130,7 +132,8 @@ def test_cluster_within_degenerate(spark, name):
 def test_kmeans_degenerate(spark, name):
     """One row per input point, cluster ids within 0..k−1; a NULL id is
     assigned but never seeds a centre, so both clusters stay in use when
-    two non-NULL ids exist."""
+    two non-NULL ids exist; nor does a point with a NULL coordinate, which
+    has no distance to any centre and lands in cluster 0."""
     rows, _ = CASES[name]
     got = _rows(kmeans(_df(spark, rows), k=2))
     ids = sorted((i for i, _, _ in rows), key=repr)
@@ -138,3 +141,5 @@ def test_kmeans_degenerate(spark, name):
     assert {c for _, c in got} <= {0, 1}
     if name == "null_id":
         assert dict(got)[1] == 0 and dict(got)[2] == 1
+    if name == "null_coordinate_seed":
+        assert dict(got) == {1: 0, 2: 0, 3: 1}

@@ -593,3 +593,25 @@ def test_raster_polygonize_partial_edge_tiles(spark):
     r = out[0]
     assert (r["region_id"], r["value"], r["n_pixels"]) == (0, 3, n * n)
     assert abs(karea(wkb_loads(bytes(r["geom_wkb"]))) - n * n * w * w) < 1e-6
+
+
+def test_raster_polygonize_spark_job_budget(spark):
+    """Polygonizing the 64×64 striped raster (4 regions, far below
+    ``graph.LOCAL_MAX_EDGES`` adjacency edges) runs 8 Spark jobs on
+    ``local[4]`` with 8 shuffle partitions, building and collecting
+    together. The CC labels have one consumer (the tile-union pass), so
+    they are not checkpointed (that eager job made it 9); an eager job
+    added back fails here rather than only in a traced benchmark run."""
+    from nettopologysuite_spark.engine.zonal import (
+        raster_polygonize,
+        synthetic_striped_raster,
+    )
+    from tests.test_cluster import _group_jobs
+
+    n = 64
+    px = synthetic_striped_raster(spark, n=n)
+    out = []
+    jobs = _group_jobs(spark, "polygonize-budget",
+                       lambda: out.extend(raster_polygonize(px, n=n).collect()))
+    assert sorted(r["n_pixels"] for r in out) == [1024] * 4
+    assert jobs == 8, jobs
